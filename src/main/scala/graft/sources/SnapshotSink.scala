@@ -463,12 +463,15 @@ object SnapshotSink {
   }
 
   /** Prune manifest history to the newest `keepLast` versions (HEAD `manifest.json`
-    * is untouched — it is the current table either way). TAGGED versions ([[tag]])
-    * are always retained regardless of age — the Iceberg `expireSnapshots` ref
-    * semantics: a named ref pins its snapshot's METADATA against expiration (the
-    * data files remain subject to the usual eager-GC points, and a tagged version
-    * whose files were reclaimed still fails loudly on read). Returns pruned
-    * versions. */
+    * is untouched — it is the current table either way). HEAD's own version is
+    * always retained: after a branch commit HEAD is not the newest version, and
+    * dropping it would leave HEAD resolving to no version at all (so [[branch]] and
+    * [[fastForward]] could no longer record or check a fork point). TAGGED versions
+    * ([[tag]]) are always retained regardless of age — the Iceberg
+    * `expireSnapshots` ref semantics: a named ref pins its snapshot's METADATA
+    * against expiration (the data files remain subject to the usual eager-GC
+    * points, and a tagged version whose files were reclaimed still fails loudly on
+    * read). Returns pruned versions. */
   def expireVersions(outDir: String, keepLast: Int): Seq[Long] = {
     // >= 1, not >= 0: expiring the NEWEST version would let writeManifest re-issue
     // its number with different content, silently corrupting every time-travel /
@@ -476,9 +479,10 @@ object SnapshotSink {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast — version " +
       "numbers are never reused, so the newest history file must survive")
     val out = Paths.get(outDir)
-    // tags AND branches pin their versions: expiring a live branch's manifest
-    // would orphan every commit staged on it
-    val pinned = tags(outDir).values.toSet ++ branches(outDir).values.toSet
+    // HEAD, tags AND branches pin their versions: expiring a live branch's
+    // manifest would orphan every commit staged on it
+    val pinned = tags(outDir).values.toSet ++ branches(outDir).values.toSet +
+      headVersion(outDir)
     val drop = versions(outDir).dropRight(keepLast).filterNot(pinned)
     drop.foreach(v => Files.deleteIfExists(versionPath(out, v)))
     drop
@@ -642,7 +646,7 @@ object SnapshotSink {
       s"branch name '$name' must match ${TagNameRe.regex}")
     require(versions(outDir).contains(v),
       s"cannot branch at version $v — not in history [${versions(outDir).mkString(", ")}]")
-    val base = headVersion(outDir)
+    val base = resolvedHead(outDir)
     writeBranches(Paths.get(outDir),
       branchRefs(outDir) + (name -> (v, base)), io)
   }
@@ -665,6 +669,19 @@ object SnapshotSink {
     versions(outDir).reverse
       .find(v => Files.readString(versionPath(out, v)) == body)
       .getOrElse(0L)
+  }
+
+  /** [[headVersion]] for the ref operations that record or check a fork point:
+    * HEAD must resolve to a history version, or a branch base (and with it the
+    * fast-forward lost-update guard) would be meaningless — refuse loudly. */
+  private def resolvedHead(outDir: String): Long = {
+    val head = headVersion(outDir)
+    if (head == 0L)
+      throw new IllegalStateException(
+        s"main HEAD under $outDir resolves to no history version (its manifest " +
+          "version was pruned or never published) — a fork point cannot be " +
+          "recorded or checked; restore() a retained version to re-anchor HEAD")
+    head
   }
 
   private def resolveBranch(outDir: String, name: String): Long =
@@ -701,7 +718,7 @@ object SnapshotSink {
       throw new IllegalArgumentException(
         s"no branch '$name' under $outDir — available: " +
           s"[${refs.keys.toSeq.sorted.mkString(", ")}]"))
-    val head = headVersion(outDir)
+    val head = resolvedHead(outDir)
     if (head != base)
       throw new IllegalStateException(
         s"not a fast-forward: main HEAD is at version $head but branch '$name' " +
@@ -776,9 +793,16 @@ object SnapshotSink {
    *
    * Scale shape: the bucket function routes each requested id to exactly one bucket
    * driver-side (no scan), so a takedown of k documents over a 10^12-doc snapshot
-   * reads and rewrites at most k buckets' bytes — never the table. Buckets whose
-   * files contain NO matching rows (id never existed, or already deleted) are left
-   * byte-identical, verified cheaply by one pruned count per affected bucket.
+   * reads and rewrites at most k buckets' bytes — never the table. ONE grouped count
+   * over the affected buckets' committed files finds the buckets that actually hold
+   * a match; buckets whose files contain NO matching rows (id never existed, or
+   * already deleted) are left byte-identical. The matched buckets are then rewritten
+   * in ONE commit wave, so the job count is constant in the number of buckets
+   * touched.
+   *
+   * A takedown is ATOMIC: it publishes exactly one manifest version (or none, when
+   * nothing matched). A crash before that publish leaves the previous version live
+   * and every data file in place; re-running the takedown is the heal.
    *
    * Deletion is PHYSICAL by design: the rewrite deletes the bucket's old data files,
    * which EXPIRES every history version that referenced them ([[readCommittedAt]]
@@ -807,42 +831,40 @@ object SnapshotSink {
       "manifest is not canonical (multiple generations per base bucket — an " +
         "un-compacted stream): run compact() first, a document's rows may " +
         "straddle generations")
-    val idOfBase = existing.map(e => (e.bucket % nBuckets) -> e.bucket).toMap
+    val entryOfBase = existing.map(e => (e.bucket % nBuckets) -> e).toMap
     // the same bucket arithmetic as bucketOf, driver-side: numeric doc_id suffix
     val targets = docIds.toSet
     val affected = targets.toSeq
       .map(d => java.lang.Long.parseLong(
         d.drop(4).take(Interleave.DocIdDigits)) % nBuckets)
-      .distinct.flatMap(idOfBase.get)
-      .filter(b => existing.find(_.bucket == b).exists(_.rows > 0))
-      .sorted
+      .distinct.flatMap(entryOfBase.get)
+      .filter(_.rows > 0)
+      .sortBy(_.bucket)
+    def scan(entries: Seq[ManifestEntry]): DataFrame =
+      spark.read.option("basePath", out.resolve("data").toString)
+        .parquet(entries.flatMap(e =>
+          e.files.map(f => bucketDir(out, e.bucket).resolve(f).toString)): _*)
+        .withColumn("bucket", col("bucket").cast("long"))
 
-    var manifest = existing.sortBy(_.bucket)
-    var deleted = 0L
-    val rewritten = Seq.newBuilder[Long]
-    affected.foreach { b =>
-      val entry = manifest.find(_.bucket == b).get
-      val files = entry.files.map(f => bucketDir(out, b).resolve(f).toString)
-      val cur = spark.read.option("basePath", out.resolve("data").toString)
-        .parquet(files: _*)
-      val matches = cur.filter(col("doc_id").isInCollection(targets)).count()
-      if (matches > 0) {
-        val t0 = System.nanoTime()
-        // NULL-id bystanders survive (NOT(NULL IN ...) is NULL — a bare filter
-        // would drop them from the rewrite; same guard as TableSnapshot.deleteIds)
-        val kept = cur
-          .filter(col("doc_id").isNull || !col("doc_id").isInCollection(targets))
-          .withColumn("bucket", lit(b))
-        val (m2, _) = commitWaveFlat(spark, out, kept, Seq(b),
-          manifest.filterNot(_.bucket == b), t0, io = io,
-          layoutCols = rewriteLayout(kept), spanMetrics = hasSpanMetrics(kept))
-        manifest = m2
-        deleted += matches
-        rewritten += b
-      }
+    val hits: Map[Long, Long] =
+      if (affected.isEmpty) Map.empty
+      else scan(affected).filter(col("doc_id").isInCollection(targets))
+        .groupBy(col("bucket")).count()
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val matched = affected.filter(e => hits.contains(e.bucket))
+    val rewritten = matched.map(_.bucket)
+    if (matched.nonEmpty) {
+      val t0 = System.nanoTime()
+      // NULL-id bystanders survive (NOT(NULL IN ...) is NULL — a bare filter
+      // would drop them from the rewrite; same guard as TableSnapshot.deleteIds)
+      val kept = scan(matched)
+        .filter(col("doc_id").isNull || !col("doc_id").isInCollection(targets))
+      commitWaveFlat(spark, out, kept, rewritten,
+        existing.filterNot(e => rewritten.contains(e.bucket)).sortBy(_.bucket), t0,
+        io = io, layoutCols = rewriteLayout(kept), spanMetrics = hasSpanMetrics(kept))
     }
     deleteRecursively(out.resolve("staging"))
-    DeleteReport(deleted, rewritten.result())
+    DeleteReport(hits.values.sum, rewritten)
   }
 
   /** Outcome of an [[upsertDocs]] merge: documents whose rows were replaced
@@ -863,21 +885,27 @@ object SnapshotSink {
    * manifest-republish cycle as every other write. The reference archetype is
    * `_download_languague`'s replace-if-hash-differs idempotency
    * (uiucprescon/ocr/languages.py:135-175): re-delivering the same update set is a
-   * no-op in content (the rewrite regenerates byte-identical logical rows), so a
-   * merge that crashes mid-flight is healed by simply re-running it — already-merged
-   * buckets re-merge idempotently (the anti-join removes the previous upsert's rows
-   * by doc_id before re-adding them), un-merged buckets merge for the first time
-   * (SnapshotUpsertSpec drives a crash between waves through `crashAfterWaves`).
+   * no-op in content (the rewrite regenerates byte-identical logical rows).
+   *
+   * By default the whole merge is ONE commit wave, publishing exactly one manifest
+   * version: it is atomic, and a crash before the publish leaves the previous
+   * version live. An explicit `waveSize` splits the affected buckets into several
+   * waves, each an atomic commit of its own; a merge that crashes between such
+   * waves is healed by simply re-running it — already-merged buckets re-merge
+   * idempotently (the anti-join removes the previous upsert's rows by doc_id before
+   * re-adding them), un-merged buckets merge for the first time (SnapshotUpsertSpec
+   * drives a crash between waves through `crashAfterWaves`).
    *
    * Scale shape: affected buckets are discovered by ONE distributed distinct over
    * the update set's bucket keys (<= nBuckets rows reach the driver — never the doc
-   * ids themselves, which at daily-crawl scale are billions); each wave then reads
-   * and rewrites ONLY its buckets' committed bytes (manifest-resolved file list),
-   * anti-joins out the updated documents' old rows (null-keyed bystanders survive:
-   * an anti join never matches a null key), unions the wave's update rows, and
-   * commits. A merge touching k buckets reads/writes O(k buckets' bytes + updates),
-   * never the table. Unlike [[deleteDocs]] (bounded driver-side id list by design),
-   * the update set stays fully distributed.
+   * ids themselves, which at daily-crawl scale are billions); the wave then reads
+   * and rewrites ONLY the affected buckets' committed bytes (manifest-resolved file
+   * list), anti-joins out the updated documents' old rows (null-keyed bystanders
+   * survive: an anti join never matches a null key), unions the update rows, and
+   * commits. The report counters come from one aggregate per wave. A merge touching
+   * k buckets reads/writes O(k buckets' bytes + updates), never the table. Unlike
+   * [[deleteDocs]] (bounded driver-side id list by design), the update set stays
+   * fully distributed.
    *
    * DERIVED-TABLE CASCADE: a re-crawled document's committed derived rows (MinHash
    * signatures, window hashes, tf rows) are stale after the merge — cascade with
@@ -894,7 +922,7 @@ object SnapshotSink {
       outDir: String,
       updates: DataFrame,
       nBuckets: Int = DefaultBuckets,
-      waveSize: Int = 4,
+      waveSize: Int = Int.MaxValue,
       crashAfterWaves: Int = Int.MaxValue,
       io: CommitIo = PosixCommitIo): UpsertReport =
     mergeDocs(spark, outDir, updates, nBuckets, waveSize, crashAfterWaves, io,
@@ -905,11 +933,12 @@ object SnapshotSink {
     * bit-for-bit untouched: the base manifest is the branch head's, every rewritten
     * bucket lands at a FRESH generation (`gen * nBuckets + base` — the
     * compaction/stream composite-id space, reserved through the same sidecar ledger
-    * so a concurrent stream batch or compaction can never allocate into it), the
-    * wave publishes history versions WITHOUT the HEAD swap, and the branch pointer
-    * advances only after the last wave (a crashed merge leaves the pointer — and
-    * main — where they were; re-running heals at a new generation, and the
-    * abandoned partial generation is an unreferenced orphan for [[vacuum]]).
+    * so a concurrent stream batch or compaction can never allocate into it), each
+    * wave publishes a history version WITHOUT the HEAD swap, and the branch pointer
+    * advances only after the last wave — by one version for a default single-wave
+    * merge (a crashed merge leaves the pointer — and main — where they were;
+    * re-running heals at a new generation, and the abandoned partial generation is
+    * an unreferenced orphan for [[vacuum]]).
     * Audit the staged result with [[readCommittedAtBranch]] / [[verifySnapshot]],
     * then publish with [[fastForward]]. */
   def upsertDocsToBranch(
@@ -918,7 +947,7 @@ object SnapshotSink {
       name: String,
       updates: DataFrame,
       nBuckets: Int = DefaultBuckets,
-      waveSize: Int = 4,
+      waveSize: Int = Int.MaxValue,
       crashAfterWaves: Int = Int.MaxValue,
       io: CommitIo = PosixCommitIo): UpsertReport =
     mergeDocs(spark, outDir, updates, nBuckets, waveSize, crashAfterWaves, io,
@@ -1011,16 +1040,22 @@ object SnapshotSink {
         else spark.read.option("basePath", out.resolve("data").toString)
           .parquet(files: _*)
           .withColumn("bucket", col("bucket").cast("long"))
-      // report counters: two bounded aggregates per wave (rows replaced, docs
-      // matched / updated) — the same job class as the metrics re-read
-      val curHit = cur.join(updIds, Seq("doc_id"), "left_semi")
-        .agg(count(lit(1)), countDistinct(col("doc_id"))).head()
-      val updStat = updW
-        .agg(count(lit(1)), countDistinct(col("doc_id"))).head()
-      replacedRows += curHit.getLong(0)
-      matchedDocs += curHit.getLong(1)
-      insertedDocs += updStat.getLong(1) - curHit.getLong(1)
-      upsertRows += updStat.getLong(0)
+      // report counters in ONE aggregate per wave over the committed rows being
+      // replaced (side 0) and the update rows (side 1): rows and distinct docs of
+      // each. Update doc_ids are never null (refused above), and a semi join never
+      // matches a null key, so countDistinct sees no nulls it would skip.
+      val hit = col("side") === 0
+      val upd = col("side") === 1
+      val stat = cur.join(updIds, Seq("doc_id"), "left_semi")
+        .select(lit(0).as("side"), col("doc_id"))
+        .unionByName(updW.select(lit(1).as("side"), col("doc_id")))
+        .agg(count(when(hit, lit(1))), countDistinct(when(hit, col("doc_id"))),
+          count(when(upd, lit(1))), countDistinct(when(upd, col("doc_id"))))
+        .head()
+      replacedRows += stat.getLong(0)
+      matchedDocs += stat.getLong(1)
+      insertedDocs += stat.getLong(3) - stat.getLong(1)
+      upsertRows += stat.getLong(2)
 
       val targetOf = oldIds.zip(targetIds).toMap
       // branch mode re-keys the surviving rows to the fresh generation (a
@@ -1159,6 +1194,10 @@ object SnapshotSink {
    * a crash at any point leaves a fully readable snapshot; the worst case is orphan
    * directories, which [[vacuum]] removes (and which MUST be removed before
    * [[readBack]], which scans the whole data directory, is trusted again).
+   * Source directories a live BRANCH still reads are kept (the same referenced set
+   * as [[vacuum]]), and a branch forked at the pre-compaction HEAD has its fork
+   * base moved to the compacted HEAD — compaction changes no row, so the branch
+   * stays fast-forwardable.
    *
    * After compaction the manifest is canonical (one entry per base bucket), so
    * [[run]]'s generation-aware resume can still heal an invalidated bucket from the
@@ -1205,6 +1244,7 @@ object SnapshotSink {
         "verification — heal them first (re-deliver the stream batch / re-run the " +
         "batch sink); compacting unverified data would bake corruption into the new " +
         "generation")
+    val headBefore = headVersion(outDir)
     // next free generation over BOTH the manifest and the stream sidecar's
     // allocations — a batch that reserved a base but crashed before committing data
     // must not have its generation stolen by compaction (its re-delivery would then
@@ -1276,11 +1316,24 @@ object SnapshotSink {
       totalRows += waveRows
       // record the merged-away ids BEFORE reclaiming their bytes: once the log
       // holds an id, a re-delivered stream batch skips it ([[commitStreamBatch]]);
-      // a crash between the record and the GC leaves orphan dirs for [[vacuum]]
+      // a crash between the record and the GC leaves orphan dirs for [[vacuum]].
+      // Ids a live branch still reads keep their bytes; [[vacuum]] reclaims them
+      // once the branch is dropped or moves on.
       recordCompactedIds(out, io, readCompactedIds(out) ++ srcIds)
-      srcIds.foreach(b => deleteRecursively(bucketDir(out, b)))
+      val live = referencedBuckets(spark, outDir, manifest)
+      srcIds.filterNot(live).foreach(b => deleteRecursively(bucketDir(out, b)))
     }
     deleteRecursively(out.resolve("staging"))
+    // compaction preserves content, so a branch forked at the pre-compaction HEAD
+    // is still forked at the same logical table: move its base to the compacted
+    // HEAD, or [[fastForward]] would refuse it as if main had taken a commit
+    val refs = branchRefs(outDir)
+    if (headBefore > 0 && refs.values.exists(_._2 == headBefore)) {
+      val headAfter = versions(outDir).last
+      writeBranches(out, refs.map { case (n, (v, b)) =>
+        n -> (v, if (b == headBefore) headAfter else b)
+      }, io)
+    }
     CompactReport(gen, bases, valid.size.toLong, totalRows, noop = false)
   }
 
@@ -1292,14 +1345,7 @@ object SnapshotSink {
     * the removed directory names. */
   def vacuum(spark: SparkSession, outDir: String): Seq[String] = {
     val out = Paths.get(outDir)
-    // referenced = HEAD plus every live BRANCH head: a branch is a writable line
-    // of development, so its exclusive generations are live bytes, not orphans
-    // (tags deliberately do NOT pin bytes — they pin metadata against expiration
-    // only, and a tag over reclaimed data fails loudly at read, by contract)
-    val referenced = (readManifest(spark, outDir) ++
-      branches(outDir).values.toSeq.distinct
-        .flatMap(v => readManifestAt(spark, outDir, v)))
-      .map(_.bucket).toSet
+    val referenced = referencedBuckets(spark, outDir, readManifest(spark, outDir))
     val orphans = listPartitionDirs(out.resolve("data")).filter { p =>
       p.getFileName.toString.stripPrefix("bucket=").toLongOption
         .forall(!referenced(_))
@@ -1308,6 +1354,18 @@ object SnapshotSink {
     deleteRecursively(out.resolve("staging"))
     orphans.map(_.getFileName.toString)
   }
+
+  /** Bucket ids whose bytes a live ref reads: HEAD (`head`, the caller's current
+    * manifest) plus every live BRANCH head. A branch is a writable line of
+    * development, so its exclusive generations are live bytes, not orphans. Tags
+    * deliberately do NOT pin bytes — they pin metadata against expiration only,
+    * and a tag over reclaimed data fails loudly at read, by contract. Shared by
+    * [[vacuum]] and [[compact]]'s source GC, so neither reclaims a branch's bytes. */
+  private def referencedBuckets(spark: SparkSession, outDir: String,
+      head: Seq[ManifestEntry]): Set[Long] =
+    (head ++ branches(outDir).values.toSeq.distinct
+      .flatMap(v => readManifestAt(spark, outDir, v)))
+      .map(_.bucket).toSet
 
   /** The two verification tiers shared by batch [[run]] and [[commitStreamBatch]]:
     * tier 1 = driver-side names+sizes metadata ([[fastVerify]]); tier 2 (deep) =

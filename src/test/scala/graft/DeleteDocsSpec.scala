@@ -1,9 +1,12 @@
 package graft
 
 import java.nio.file.Paths
+import java.util.concurrent.atomic.AtomicInteger
 
 import graft.operators.ExtractPipeline
-import graft.sources.{Interleave, SnapshotSink}
+import graft.sources.{Interleave, SnapshotSink, TableSnapshot}
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,7 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * Takedown deletes ([[SnapshotSink.deleteDocs]]): bucket-granular copy-on-write —
  * only the requested ids' buckets are rewritten, untouched buckets stay
  * byte-identical, deletion is physical (pre-delete versions referencing the
- * rewritten bucket expire loudly), and non-canonical manifests are refused.
+ * rewritten bucket expire loudly), a takedown is one atomic commit whose job count
+ * does not grow with the buckets it rewrites, and non-canonical manifests are
+ * refused.
  */
 class DeleteDocsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -29,7 +34,8 @@ class DeleteDocsSpec extends AnyFunSuite {
 
   private def docIdsInBucket(out: String, b: Long, n: Int): Seq[String] =
     SnapshotSink.readBack(spark, out)
-      .filter(col("bucket") === b).select(col("doc_id")).distinct()
+      .filter(col("bucket") === b && col("doc_id").isNotNull)
+      .select(col("doc_id")).distinct()
       .orderBy(col("doc_id")).limit(n)
       .collect().map(_.getString(0)).toSeq
 
@@ -63,6 +69,73 @@ class DeleteDocsSpec extends AnyFunSuite {
     // the rewritten snapshot still verifies end-to-end (resume = full no-op)
     val resume = SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB)
     assert(resume.processed.isEmpty && resume.invalidated.isEmpty)
+  }
+
+  /** `body`'s result and the Spark jobs submitted while it ran (listener events
+    * drained both sides). */
+  private def withJobCount[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    val result =
+      try { val r = body; ListenerDrain(sc); r }
+      finally sc.removeSparkListener(listener)
+    (result, jobs.get)
+  }
+
+  test("a multi-bucket takedown is one version; bystanders survive; unmatched buckets stay") {
+    val out = tmpDir("onewave")
+    val flat = ExtractPipeline.extractFlat(docs)
+      .withColumn("bucket", SnapshotSink.bucketOf(col("doc_id"), NB))
+    // one NULL-id row per bucket: no takedown can name it, so every rewrite of its
+    // bucket must carry it over
+    val bystanders = flat.dropDuplicates("bucket")
+      .withColumn("doc_id", lit(null).cast("string"))
+      .withColumn("text", concat(lit("bystander:"), col("bucket").cast("string")))
+    TableSnapshot.run(flat.unionByName(bystanders), out, NB, waveSize = NB)
+    val v0 = SnapshotSink.versions(out).last
+    val before = SnapshotSink.readManifest(spark, out).map(e => e.bucket -> e).toMap
+
+    val rewrite = Seq(1L, 4L, 6L)
+    val victims = rewrite.flatMap(b => docIdsInBucket(out, b, 2))
+    // routes to bucket 3, which is therefore affected, but holds no such document
+    val absent = f"doc-${8000000000003L}%013d"
+    val victimRows = SnapshotSink.readCommitted(spark, out)
+      .filter(col("doc_id").isInCollection(victims)).count()
+    assert(victimRows > 0L)
+
+    val report = SnapshotSink.deleteDocs(spark, out, victims :+ absent, NB)
+    assert(report === SnapshotSink.DeleteReport(victimRows, rewrite))
+    assert(SnapshotSink.versions(out).last === v0 + 1, "a takedown publishes one version")
+
+    val after = SnapshotSink.readManifest(spark, out).map(e => e.bucket -> e).toMap
+    (0L until NB).filterNot(rewrite.contains).foreach { b =>
+      assert(after(b) === before(b), s"bucket $b must be byte-identical")
+    }
+    rewrite.foreach(b => assert(after(b).files !== before(b).files))
+    val back = SnapshotSink.readCommitted(spark, out)
+    assert(back.filter(col("doc_id").isInCollection(victims)).count() === 0L)
+    val kept = back.filter(col("doc_id").isNull)
+      .select(col("bucket").cast("long"), col("text")).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toSeq.sorted
+    assert(kept === (0L until NB).map(b => b -> s"bystander:$b"))
+    assert(SnapshotSink.verifySnapshot(spark, out) === Seq.empty)
+  }
+
+  test("a takedown's job count does not grow with the buckets it rewrites") {
+    val out = tmpDir("jobs")
+    SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB)
+    val one = docIdsInBucket(out, 0L, 1)
+    val four = Seq(2L, 3L, 5L, 7L).flatMap(b => docIdsInBucket(out, b, 1))
+    val (r1, jobs1) = withJobCount(SnapshotSink.deleteDocs(spark, out, one, NB))
+    val (r4, jobs4) = withJobCount(SnapshotSink.deleteDocs(spark, out, four, NB))
+    assert(r1.rewrittenBuckets === Seq(0L) && r4.rewrittenBuckets === Seq(2L, 3L, 5L, 7L))
+    assert(jobs1 > 0 && jobs4 === jobs1,
+      s"1-bucket takedown ran $jobs1 jobs, 4-bucket takedown $jobs4")
   }
 
   test("deletion is physical: pre-delete versions expire loudly; absent ids are free") {

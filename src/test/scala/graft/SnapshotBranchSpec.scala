@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import graft.operators.ExtractPipeline
 import graft.sources.{Interleave, SnapshotSink}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -128,6 +129,70 @@ class SnapshotBranchSpec extends AnyFunSuite {
       finally stream.close()
     }
     assert(bytesPostFf === bytesPreFf, "fast-forward must not touch a data file")
+  }
+
+  test("a default branch merge is one commit: the pointer advances by one version") {
+    val out = tmpDir("onewave")
+    SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB) // v1
+    SnapshotSink.branch(out, "audit", 1L)
+    val victims = Seq(0L, 3L, 6L, 7L).flatMap(b => docIdsInBucket(out, b, 1))
+    val report = SnapshotSink.upsertDocsToBranch(spark, out, "audit",
+      updateRows(victims :+ InsertId), NB)
+    assert(report.rewrittenBuckets.map(_ % NB).sorted === Seq(0L, 1L, 3L, 6L, 7L))
+    assert(SnapshotSink.versions(out) === Seq(1L, 2L))
+    assert(SnapshotSink.branches(out)("audit") === 2L)
+    assert(SnapshotSink.verifySnapshotAtBranch(spark, out, "audit") === Seq.empty)
+  }
+
+  test("retention never expires HEAD's version; a HEAD with no version is refused") {
+    val out = tmpDir("expirehead")
+    SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB) // v1 = HEAD
+    SnapshotSink.branch(out, "audit", 1L)
+    SnapshotSink.upsertDocsToBranch(spark, out, "audit",
+      updateRows(docIdsInBucket(out, 2L, 1)), NB) // v2 on the branch; HEAD stays v1
+    // keepLast = 1 would keep only v2 — but v1 is HEAD's version
+    assert(SnapshotSink.expireVersions(out, keepLast = 1) === Seq.empty)
+    assert(SnapshotSink.versions(out) === Seq(1L, 2L))
+    val br = contentOf(SnapshotSink.readCommittedAtBranch(spark, out, "audit"))
+    SnapshotSink.fastForward(spark, out, "audit")
+    assert(contentOf(SnapshotSink.readCommitted(spark, out)) === br)
+
+    // a table whose HEAD version is gone (pruned by hand, or by an older release
+    // without the pin) has no fork point: both ref operations refuse loudly. The
+    // fast-forward published v3 as a copy of v2, so both carry HEAD's content.
+    assert(SnapshotSink.versions(out) === Seq(1L, 2L, 3L))
+    Seq(2L, 3L).foreach(v => Files.delete(Paths.get(out, f"manifest-v$v%06d.json")))
+    Seq(
+      () => SnapshotSink.branch(out, "late", 1L),
+      () => SnapshotSink.fastForward(spark, out, "audit")).foreach { op =>
+      val ex = intercept[IllegalStateException](op())
+      assert(ex.getMessage.contains("resolves to no history version"))
+    }
+  }
+
+  test("compaction keeps the bytes a live branch reads; the branch still fast-forwards") {
+    val out = tmpDir("compact")
+    val numId = substring(col("doc_id"), 5, Interleave.DocIdDigits).cast("long")
+    val flat = ExtractPipeline.extractFlat(docs)
+    SnapshotSink.commitStreamBatch(flat.filter(numId < 250), out, 0L, NB)
+    SnapshotSink.commitStreamBatch(flat.filter(numId >= 250), out, 1L, NB)
+    val full = contentOf(SnapshotSink.readCommitted(spark, out))
+    SnapshotSink.branch(out, "pinned", SnapshotSink.versions(out).last)
+
+    val comp = SnapshotSink.compact(spark, out, NB)
+    assert(!comp.noop)
+    assert(contentOf(SnapshotSink.readCommitted(spark, out)) === full)
+    // the branch still reads the pre-compaction stream generations
+    assert(contentOf(SnapshotSink.readCommittedAtBranch(spark, out, "pinned")) === full)
+    assert(SnapshotSink.verifySnapshotAtBranch(spark, out, "pinned") === Seq.empty)
+    // compaction changed no row, so main has taken no commit the branch lacks
+    SnapshotSink.fastForward(spark, out, "pinned")
+    assert(contentOf(SnapshotSink.readCommitted(spark, out)) === full)
+
+    // once the branch is gone, vacuum reclaims the now-unreferenced generation
+    SnapshotSink.dropBranch(out, "pinned")
+    assert(SnapshotSink.vacuum(spark, out).nonEmpty)
+    assert(contentOf(SnapshotSink.readCommitted(spark, out)) === full)
   }
 
   test("a crashed branch merge leaves main AND the branch pointer untouched; re-run heals") {

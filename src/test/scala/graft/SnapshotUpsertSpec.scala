@@ -131,6 +131,18 @@ class SnapshotUpsertSpec extends AnyFunSuite {
       "crash+re-run must converge to the never-crashed result")
   }
 
+  test("a default merge is one commit: exactly one new version") {
+    val out = tmpDir("onewave")
+    SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB)
+    val v0 = SnapshotSink.versions(out).last
+    val victims = Seq(0L, 2L, 5L, 7L).flatMap(b => docIdsInBucket(out, b, 1))
+    val report = SnapshotSink.upsertDocs(spark, out, updateRows(victims :+ InsertId), NB)
+    assert(report.rewrittenBuckets === Seq(0L, 1L, 2L, 5L, 7L))
+    assert(report.matchedDocs === 4L && report.insertedDocs === 1L)
+    assert(SnapshotSink.versions(out) === Seq(v0, v0 + 1))
+    assert(SnapshotSink.verifySnapshot(spark, out) === Seq.empty)
+  }
+
   test("re-running the same merge is idempotent in content") {
     val out = tmpDir("idem")
     SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB)
