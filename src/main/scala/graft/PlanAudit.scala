@@ -23,9 +23,8 @@ object PlanAudit {
         graft.operators.ExtractPipeline.extractFlat(
           graft.sources.Interleave.materializedDocs(spark, sfDir))
       case "reassemble" =>
-        graft.operators.ExtractPipeline.reassemble(
-          graft.operators.ExtractPipeline.extractFlat(
-            graft.sources.Interleave.docs(spark, sfDir)))
+        graft.operators.ExtractPipeline.extractAndReassemble(
+          graft.sources.Interleave.docs(spark, sfDir))
       case "topk" =>
         graft.operators.Similarity.annTopK(
           spark.read.parquet(s"$sfDir/embeddings.parquet"))

@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
  * efficiency = tput(4N) / (4 x tput(N)).
  *
  * The measured job is the FULL flagship pipeline: corpus synthesis -> branch split ->
- * OCR island -> union -> salted re-assembly aggregation (the one shuffle) -> noop sink
+ * OCR island -> union -> sort-based re-assembly (the one shuffle) -> noop sink
  * (sink I/O excluded so the measurement is the engine, not the disk). Each level gets a
  * JIT/engine-pool warmup run, then takes the best of `reps` timed runs.
  *
@@ -26,7 +26,8 @@ object Scaling {
     runPhase(spark, sfDir, replicate, "full")
 
   /** Pipeline prefixes for per-phase attribution (SPARK_GRAFT_PHASE in the pinned
-    * worker): scan -> +extract (narrow) -> +sorted reassembly -> full skew-routed.
+    * worker): scan -> +extract (narrow) -> +sorted reassembly (= full, since
+    * `extractAndReassemble` is `reassembleSorted(extractFlat)`).
     * The PROTOCOL family (commit/takedown/changes) times the snapshot-commit
     * pipeline instead — the commit-heavy queries' cost shape (VERDICT r4 #7):
     * extraction -> staged write -> re-read metrics -> publish -> distributed hash
@@ -75,7 +76,6 @@ object Scaling {
       case "scan" => input
       case "flat" => ExtractPipeline.extractFlat(input)
       case "sorted" => ExtractPipeline.reassembleSorted(ExtractPipeline.extractFlat(input))
-      case "full2x" => ExtractPipeline.reassemble(ExtractPipeline.extractFlat(input))
       case _ => ExtractPipeline.extractAndReassemble(input)
     }
     df.write.format("noop").mode("overwrite").save()
@@ -225,10 +225,10 @@ object Scaling {
     val phase = sys.env.getOrElse("SPARK_GRAFT_PHASE", "full")
     // a typo'd phase would run SOMETHING, log it under the unknown tag, and be
     // silently excluded from every report — reject it before spending minutes
-    require(Set("scan", "flat", "sorted", "full", "full2x",
+    require(Set("scan", "flat", "sorted", "full",
         "commit", "takedown", "changes")(phase),
       s"unknown SPARK_GRAFT_PHASE '$phase' " +
-        "(expected scan|flat|sorted|full|full2x|commit|takedown|changes)")
+        "(expected scan|flat|sorted|full|commit|takedown|changes)")
     val pinned = new java.io.File("/usr/bin/taskset").exists() &&
       !sys.env.contains("SPARK_GRAFT_UNPINNED")
 
@@ -346,8 +346,8 @@ object Scaling {
          |North-rule two-cluster-size criterion, sandbox form (no real cluster; same job,
          |same input, two parallelism levels). Job = flagship extraction end to end:
          |synthesis -> posexplode -> OCR island (mapPartitions engine pool) + Catalyst
-         |text classifier -> unionByName -> skew-routed re-assembly (sorted-group path +
-         |salted agg for the heavy tail) -> noop sink.
+         |text classifier -> unionByName -> sort-based re-assembly (one doc_id shuffle,
+         |streaming group) -> noop sink.
          |Input: $sfDir documents x $replicate deterministic replicas = $nDocs docs
          |(count MEASURED from the materialized corpus, not assumed).
          |$levelDesc
@@ -388,8 +388,8 @@ object Scaling {
          |below-0.8 measurement into a pass. On a real 4x-executor cluster each executor
          |brings its own memory channels, GC headroom, and page cache — the regime the
          |north rule's >= 0.8 refers to; the per-stage design (no shuffle in the narrow
-         |phase, one shuffle for normal docs, salted agg for the tail, broadcast-only
-         |dimensions) has no serial bottleneck.
+         |phase, one shuffle for re-assembly, broadcast-only dimensions) has no serial
+         |bottleneck.
          |
          |Regenerate: `SPARK_GRAFT_SF_DIR=$sfDir sbt -batch "runMain graft.Scaling"`.
          |""".stripMargin
@@ -544,7 +544,7 @@ object Scaling {
     // were logged): where wall time and scaling loss live along the pipeline
     // every accepted SPARK_GRAFT_PHASE value has a row here — a phase that can be
     // run but never reported would be write-only telemetry (ADVICE r3)
-    val byPhase = Seq("scan", "flat", "sorted", "full", "full2x",
+    val byPhase = Seq("scan", "flat", "sorted", "full",
         "commit", "takedown", "changes")
       .map(ph => ph -> pairLines.filter(phaseOf(_) == ph))
       .filter(_._2.nonEmpty)
@@ -555,10 +555,7 @@ object Scaling {
           "scan" -> "corpus scan only",
           "flat" -> "scan -> posexplode -> classify/OCR (narrow, no shuffle)",
           "sorted" -> "flat + sort-based re-assembly (the one shuffle)",
-          "full" -> "flat + skew-routed re-assembly (headline job)",
-          "full2x" -> ("flat + COMPOSED re-assembly (same skew routing as full; " +
-            "differential vs full: the composed form's double extraction cost — " +
-            "NOT the routing gain)"),
+          "full" -> "extractAndReassemble (headline job)",
           "commit" -> ("PROTOCOL family: extraction -> 2-wave snapshot commit " +
             "(staged write, re-read metrics, publish, distributed hash, manifest)"),
           "takedown" -> ("commit + deleteDocs of ~1k victims (copy-on-write bucket " +

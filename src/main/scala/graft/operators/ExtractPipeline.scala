@@ -7,15 +7,19 @@ import org.apache.spark.sql.functions._
 /**
  * The flagship operator: interleaved documents -> extracted span sequences.
  *
- * Plan shape (all declarative except the OCR island):
+ * Plan shape (all declarative except the OCR island and the re-assembly group):
  *
  * {{{
  *   docs(doc_id, lang, spans)
- *     |- explode(spans)
- *     |- kind='image' --> typed mapPartitions over per-executor EnginePool  (OCR island)
- *     |- kind='text'  --> TextClassifier (pure Catalyst, whole-stage codegen)
- *     \- unionByName --> [optional salted re-assembly agg]
+ *     |- explode(kind, media_ref, offset) -- kind<>'text' --> typed mapPartitions over
+ *     |      per-executor EnginePool (OCR island; non-image kinds -> error spans)
+ *     |- explode(kind, text, offset) -- kind='text' --> TextClassifier (pure Catalyst,
+ *     |      whole-stage codegen)
+ *     \- unionByName --> repartition(doc_id) --> sortWithinPartitions --> groupSorted
  * }}}
+ *
+ * [[extractAndReassemble]] is exactly `reassembleSorted(extractFlat(docs))`: two scans
+ * of the input (one per branch), one OCR island, one shuffle, one group iterator.
  *
  * Scale notes (designed for 10^12 docs / 1000 executors, tested on local[32]):
  *  - The branch split means two scans of the input; with nested-schema pruning
@@ -25,24 +29,30 @@ import org.apache.spark.sql.functions._
  *    row-mapper pass would be, and the text branch keeps whole-stage codegen which a
  *    fused mapPartitions over all spans would forfeit.
  *  - The flat form has NO shuffle: explode, filter, mapPartitions and union are all
- *    narrow. The only shuffles in the doc form are the re-assembly aggregation (salted,
- *    two-stage, see [[reassemble]]) and any final repartitionByRange for balanced output.
+ *    narrow. The doc form adds exactly one: the doc_id repartition of
+ *    [[reassembleSorted]], which moves every span across the wire once.
  *  - `lang` rides through the typed boundary inside the task row, so no join is needed
  *    to restore document metadata after OCR.
  *  - Engine init happens once per (executor JVM, language) via [[EnginePool]], mirroring
  *    the reference's one TessBaseAPI::Init per Reader (uiucprescon/ocr/reader2.cpp:16).
+ *
+ * Skew note: the expensive work (decode + OCR) sits UPSTREAM of the shuffle, in the
+ * narrow island, where a multi-page document's spans spread over the scan's tasks like
+ * any other rows; no re-assembly salt touches it. After the shuffle a heavy document
+ * lands in one reducer, which streams its rows through an unsafe-row sort (spilling if
+ * needed) and builds its one output row — the same row a salted aggregation's final
+ * stage must build too, so a salt would buy a second shuffle of the tail, not a smaller
+ * reducer.
  */
 object ExtractPipeline {
 
-  /** Salt fan-out for the re-assembly of skewed (multi-page) documents. */
-  val SaltBuckets = 8
-
-  /** Documents with more spans than this take the salted two-stage re-assembly path;
-    * everything else aggregates in a single shuffle. */
+  /** Span count above which a document counts as heavy (multi-page) when benchmarks
+    * report the skew tail. Re-assembly does not route on it: every document takes
+    * the same sort-based path. */
   val SaltThreshold = 16
 
-  /** Flat extraction: one row per span, schema
-    * (doc_id, lang, offset, kind, text, media_ref, ok, error). */
+  /** Flat extraction: one row per span, schema (doc_id, lang, n_doc_spans, offset,
+    * kind, text, media_ref, ok, error, n_words, conf_sum). */
   def extractFlat(docs: DataFrame, config: EngineConfig = EngineConfig.default): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -68,9 +78,12 @@ object ExtractPipeline {
     val explodedText = explodedWith("text")
 
     // ---- media branch: the OCR island -------------------------------------------
+    // Every non-text span enters the island. Kinds other than image become EMPTY error
+    // spans there ("unknown span kind: ..."), Oracle.extract's contract — never a
+    // silent omission, which would also drop the span from its document's n_spans.
     val mediaTasks: Dataset[MediaTaskL] = explodedMedia
-      .filter(col("kind") === "image")
-      .select(col("doc_id"), col("lang"), col("n_doc_spans"), col("offset"),
+      .filter(col("kind") =!= "text")
+      .select(col("doc_id"), col("lang"), col("n_doc_spans"), col("offset"), col("kind"),
         col("media_ref"))
       .as[MediaTaskL]
 
@@ -101,144 +114,51 @@ object ExtractPipeline {
         lit(0).as("n_words"),
         lit(0.0).as("conf_sum"))
 
-    // ---- unknown-kind branch: contract parity with the golden oracle -------------
-    // Oracle.extract maps any kind other than text/image to an EMPTY error span
-    // ("unknown span kind: ..."), never silent omission — silently dropping the
-    // span would also break the n_doc_spans re-assembly invariant. Unreachable
-    // with the current synthesizer (two kinds); real corpora grow kinds.
-    val unknownOut = explodedMedia
-      .filter(col("kind") =!= "text" && col("kind") =!= "image")
-      .select(col("doc_id"), col("lang"), col("n_doc_spans"), col("offset"),
-        col("kind"),
-        lit("").as("text"),
-        col("media_ref"),
-        lit(false).as("ok"),
-        concat(lit("unknown span kind: "), col("kind")).as("error"),
-        lit(0).as("n_words"),
-        lit(0.0).as("conf_sum"))
-
-    mediaOut.unionByName(textOut).unionByName(unknownOut)
+    mediaOut.unionByName(textOut)
   }
 
-  /** OCR one media task. Decode runs BEFORE the engine-goodness check, mirroring
+  /** OCR one media task. A kind other than image is an error span without a decode.
+    * Decode runs BEFORE the engine-goodness check, mirroring
     * Reader2::get_ocr = load THEN get_ocr_from_image (uiucprescon/ocr/reader2.cpp:31-34):
     * a bad file errors even when the engine is bad. */
   private def ocrOne(
       t: MediaTaskL,
       config: EngineConfig,
       memo: java.util.Map[String, Either[String, Array[Byte]]]): OcrSpanWithLang = {
-    val eng = EnginePool.get(t.lang, config)
-    memo.computeIfAbsent(t.media_ref, StandardMediaDecoder.decode(_)) match {
-      case Left(err) =>
-        OcrSpanWithLang(t.doc_id, t.lang, t.n_doc_spans, t.offset, "image", "",
-          t.media_ref, ok = false, err, 0, 0.0)
-      case Right(payload) =>
-        if (!eng.isGood)
-          OcrSpanWithLang(t.doc_id, t.lang, t.n_doc_spans, t.offset, "image", "",
-            t.media_ref, ok = false, "engine not initialized: " + t.lang, 0, 0.0)
-        else {
-          val page = eng.recognize(payload)
-          OcrSpanWithLang(t.doc_id, t.lang, t.n_doc_spans, t.offset, "image", page.text,
-            t.media_ref, ok = true, null, page.wordConfidences.length,
-            page.wordConfidences.sum)
-        }
+    def failed(err: String) = OcrSpanWithLang(t.doc_id, t.lang, t.n_doc_spans, t.offset,
+      t.kind, "", t.media_ref, ok = false, err, 0, 0.0)
+    if (t.kind != "image") failed("unknown span kind: " + t.kind)
+    else {
+      val eng = EnginePool.get(t.lang, config)
+      memo.computeIfAbsent(t.media_ref, StandardMediaDecoder.decode(_)) match {
+        case Left(err) => failed(err)
+        case Right(payload) =>
+          if (!eng.isGood) failed("engine not initialized: " + t.lang)
+          else {
+            val page = eng.recognize(payload)
+            OcrSpanWithLang(t.doc_id, t.lang, t.n_doc_spans, t.offset, "image", page.text,
+              t.media_ref, ok = true, null, page.wordConfidences.length,
+              page.wordConfidences.sum)
+          }
+      }
     }
   }
 
-  /**
-   * Re-assemble the flat span stream into per-document span sequences
-   * (doc_id, spans, ok, error, n_spans).
-   *
-   * Skew-routed aggregation: documents are split by their span count (known per row —
-   * `n_doc_spans` is stamped at explode time, so routing needs NO counting pre-pass):
-   *
-   *  - normal documents (<= [[SaltThreshold]] spans, the overwhelming majority) take
-   *    the sort-based path ([[reassembleSorted]]): ONE shuffle, in-partition sort on
-   *    unsafe rows, streaming group emit — their span data moves across the wire once
-   *    and never sits in per-group aggregation buffers;
-   *  - the heavy tail (multi-page documents; 10^5+ spans at web scale, every 37th doc
-   *    in the synthetic corpus) takes the two-stage salted path: stage 1 groups on
-   *    (doc_id, salt = offset % [[SaltBuckets]]) collecting partial lists so no single
-   *    reducer materializes a giant collect_list — AQE cannot split one aggregation
-   *    key, salting is the only remedy — and stage 2 merges partials and re-sorts.
-   *
-   * Only the tail (a small, bounded fraction of bytes) pays the second shuffle; the
-   * earlier always-salt design shuffled EVERY document's text twice. The salt comes
-   * from the span offset (dense per doc) so spans spread evenly, and stage 2's
-   * array_sort makes the result independent of bucket placement. `salted=false` forces
-   * the single-shuffle plan for everything (skew-free inputs / correctness baseline —
-   * outputs are asserted identical in the test suites).
-   */
-  private def spanStruct = struct(
-    col("offset"), col("kind"),
-    coalesce(col("text"), lit("")).as("text"),
-    col("media_ref"))
-  private def errStruct = struct(col("offset"), col("error"))
-
-  private def singleStage(df: DataFrame): DataFrame =
-    df.groupBy(col("doc_id")).agg(
-      array_sort(collect_list(spanStruct)).as("spans"),
-      min(col("ok")).as("ok"),
-      array_sort(collect_list(when(col("error").isNotNull, errStruct))).as("errs"),
-      count(lit(1)).as("n_spans")
-    ).select(
-      col("doc_id"), col("spans"), col("ok"),
-      get(col("errs"), lit(0)).getField("error").as("error"), col("n_spans"))
-
-  private def twoStage(df: DataFrame): DataFrame =
-    df.withColumn("salt", pmod(col("offset"), lit(SaltBuckets)))
-      .groupBy(col("doc_id"), col("salt"))
-      .agg(
-        collect_list(spanStruct).as("part"),
-        min(col("ok")).as("ok_p"),
-        collect_list(when(col("error").isNotNull, errStruct)).as("errs_p"),
-        count(lit(1)).as("n_p"))
-      .groupBy(col("doc_id"))
-      .agg(
-        array_sort(flatten(collect_list(col("part")))).as("spans"),
-        min(col("ok_p")).as("ok"),
-        array_sort(flatten(collect_list(col("errs_p")))).as("errs"),
-        sum(col("n_p")).as("n_spans"))
-      .select(
-        col("doc_id"), col("spans"), col("ok"),
-        get(col("errs"), lit(0)).getField("error").as("error"), col("n_spans"))
-
-  def reassemble(flat: DataFrame, salted: Boolean = true): DataFrame =
-    if (!salted) singleStage(flat)
-    else if (!flat.columns.contains("n_doc_spans")) twoStage(flat)
-    else reassembleSorted(flat.filter(col("n_doc_spans") <= SaltThreshold))
-      .unionByName(twoStage(flat.filter(col("n_doc_spans") > SaltThreshold)))
-
-  /**
-   * One-pass extract + skew-routed reassembly: documents are routed by span count
-   * BEFORE the OCR island, on the cheap `size(spans)` of the still-nested input.
-   *
-   * This exists because `reassemble(extractFlat(docs))` evaluates the `flat` subtree
-   * once per routing branch — Catalyst cannot push the `n_doc_spans` filters below
-   * the opaque typed `mapPartitions`, so every media span is decoded and OCR'd
-   * TWICE (measured: the composed form runs ~1.8x the one-pass wall time at both
-   * 8 and 32 pinned cores). Filtering the nested input first makes the two
-   * extraction branches disjoint, so the expensive island runs exactly once per
-   * span while the routing semantics (sorted path for normal docs, salted two-stage
-   * agg for the heavy tail) stay identical — asserted equal in GoldenExtractionSpec.
-   */
+  /** Extract + re-assemble: per-document span sequences (doc_id, spans, ok, error,
+    * n_spans). The one re-assembly path; see the object scaladoc for the plan shape. */
   def extractAndReassemble(
-      docs: DataFrame, config: EngineConfig = EngineConfig.default): DataFrame = {
-    val n = size(col("spans"))
-    reassembleSorted(extractFlat(docs.filter(n <= SaltThreshold), config))
-      .unionByName(twoStage(extractFlat(docs.filter(n > SaltThreshold), config)))
-  }
+      docs: DataFrame, config: EngineConfig = EngineConfig.default): DataFrame =
+    reassembleSorted(extractFlat(docs, config))
 
   /**
-   * Sort-based re-assembly: one repartition on doc_id, an in-partition sort over
-   * compact binary rows (SortExec, cache-friendly, no per-group buffers), then a
-   * streaming group iterator that emits each document as its rows stream past.
-   * Produces EXACTLY the [[reassemble]] output (asserted in the test suites); exists
-   * because the collect_list object-aggregation path allocates a buffer per group and
-   * copies every span into it — at high core counts that allocation rate saturates the
-   * collector, while this path's sort runs on unsafe rows with near-zero garbage.
-   * Skew caveat: one giant document still lands in one task (same as single-stage agg);
-   * route the heavy tail through the salted agg when span counts are unbounded.
+   * Sort-based re-assembly of a flat span stream: one repartition on doc_id, an
+   * in-partition sort over compact binary rows (SortExec, cache-friendly, no per-group
+   * buffers), then a streaming group iterator that emits each document as its rows
+   * stream past. Spans come out in (offset, kind, text, media_ref) order; `ok` is the
+   * AND over spans and `error` the first error by (offset, error). A collect_list
+   * aggregation would allocate a buffer per group and copy every span into it — at
+   * high core counts that allocation rate saturates the collector, while this sort
+   * runs on unsafe rows with near-zero garbage.
    */
   def reassembleSorted(flat: DataFrame): DataFrame = {
     val spark = flat.sparkSession
@@ -272,8 +192,7 @@ object ExtractPipeline {
           if (!r.ok) ok = false
           if (r.error != null) {
             val cand = (r.offset, r.error)
-            // first error by (offset, error) — same tiebreak as array_sort on the
-            // (offset, error) struct in the aggregation path
+            // first error by (offset, error)
             if (err == null || cand._1 < err._1 || (cand._1 == err._1 && cand._2 < err._2))
               err = cand
           }
@@ -289,15 +208,16 @@ final case class FlatSpanRow(
     doc_id: String, offset: Int, kind: String, text: String, media_ref: String,
     ok: Boolean, error: String)
 
-/** Output row of the sort-based re-assembly — same shape as [[reassemble]]'s. */
+/** Output row of the sort-based re-assembly. */
 final case class ReassembledDoc(
     doc_id: String, spans: Seq[graft.model.OutSpan], ok: Boolean, error: String,
     n_spans: Long)
 
 /** Typed unit of work for the OCR island, with document lang and the document's span
-  * count (for skew routing at re-assembly) riding along. */
+  * count riding along. */
 final case class MediaTaskL(
-    doc_id: String, lang: String, n_doc_spans: Int, offset: Int, media_ref: String)
+    doc_id: String, lang: String, n_doc_spans: Int, offset: Int, kind: String,
+    media_ref: String)
 
 /** OCR result carrying lang + span count through the typed boundary (no re-join). */
 final case class OcrSpanWithLang(

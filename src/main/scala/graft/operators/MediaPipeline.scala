@@ -100,8 +100,12 @@ object ContainerCodec extends MediaCodec {
       while (i + 8 <= p.length) {
         val cc = fourcc(p, i)
         val sz = le32(p, i + 4)
-        if (sz < 0 || i + 8 + sz > p.length) bad(s"riff chunk '$cc' overruns")
-        if (cc == "dur ") dur = le32(p, i + 8)
+        // Long: a size near Int.MaxValue must not wrap past the bounds check
+        if (sz < 0 || i + 8L + sz > p.length) bad(s"riff chunk '$cc' overruns")
+        if (cc == "dur ") {
+          if (sz < 4) bad("dur chunk size")
+          dur = le32(p, i + 8)
+        }
         if (cc == "data") content = java.util.Arrays.copyOfRange(p, i + 8, i + 8 + sz)
         i += 8 + sz
       }
@@ -117,7 +121,7 @@ object ContainerCodec extends MediaCodec {
       while (i + 8 <= p.length) {
         val sz = be32(p, i)
         val cc = fourcc(p, i + 4)
-        if (sz < 8 || i + sz > p.length) bad(s"bmff box '$cc' overruns")
+        if (sz < 8 || i.toLong + sz > p.length) bad(s"bmff box '$cc' overruns")
         if (cc == "gmvh") {
           if (sz != 24) bad("gmvh box size")
           meta = Array(be32(p, i + 8), be32(p, i + 12), be32(p, i + 16), be32(p, i + 20))

@@ -19,8 +19,9 @@ import org.apache.spark.sql.functions._
  * window partition key, so no second exchange is needed — verify with PlanAudit).
  * The bot tail is the classic killer: one user with 10^8 events pins one window task
  * no matter how the rest of the corpus is partitioned (VERDICT r3 #2). Users above
- * [[BotEventThreshold]] therefore route through [[assignChunked]] — the same
- * count-threshold routing as document re-assembly (ExtractPipeline.extractAndReassemble):
+ * [[BotEventThreshold]] therefore route through [[assignChunked]] — count-threshold
+ * routing that pays off here because the window itself, not only a final row build,
+ * is split across tasks:
  *
  *   1. each bot's events are split into TIME CHUNKS sized from the user's own
  *      (span, count) stats to ~[[TargetChunkRows]] events/chunk — the window then

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
  *  - 'zh' documents route to a language with no traineddata ("bad engine" archetype,
  *    tests/test_basic.cpp:31-42);
  *  - every 37th doc has +24 media spans — the heavy-tailed "multi-page" skew population
- *    that the salted re-assembly aggregation exists for.
+ *    (benchmarks report it as the docs above ExtractPipeline.SaltThreshold spans).
  */
 object Interleave {
 

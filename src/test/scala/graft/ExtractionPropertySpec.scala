@@ -80,37 +80,33 @@ class ExtractionPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("giant document (5000 spans) routes through the salted path and stays exact") {
-    // far above SaltThreshold: exercises the two-stage salted aggregation deliberately
+  private def reassembled(docs: Seq[Doc], partitions: Int) = DocTuples.of(
+    ExtractPipeline.extractAndReassemble(
+      spark.createDataset(docs).repartition(partitions).toDF()))
+
+  private def oracle(docs: Seq[Doc]) = DocTuples.oracle(docs.map(Oracle.extract(_)))
+
+  test("giant document (5000 spans) re-assembles exactly vs the oracle") {
+    // far above SaltThreshold: one reducer streams the whole document
     val spans = (0 until 5000).map { i =>
       if (i % 3 == 0) Span("image", null, if (i % 41 == 0) s"missing-$i" else s"m-9-$i", i)
       else Span("text", s"<p>body $i</p><a href=\"u\">x</a>", null, i)
     }
     val doc = Doc("doc-900001", "en", spans)
     val small = Doc("doc-900002", "fr", Seq(Span("text", "<p>tiny</p>", null, 0)))
-    val flat = ExtractPipeline.extractFlat(spark.createDataset(Seq(doc, small)).toDF())
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("doc_id"), to_json(col("spans")), col("ok"), col("error"), col("n_spans"))
-        .collect().map(_.mkString("|")).sorted.toSeq
-    val salted = canon(ExtractPipeline.reassemble(flat, salted = true))
-    val plain = canon(ExtractPipeline.reassemble(flat, salted = false))
-    assert(salted === plain)
-    // and both equal the oracle
-    val expected = Seq(doc, small).map(d => Oracle.extract(d))
-    val got = ExtractPipeline.reassemble(flat).collect()
-      .map(r => r.getAs[String]("doc_id") -> r.getAs[Long]("n_spans")).toMap
-    expected.foreach(e => assert(got(e.doc_id) === e.spans.size.toLong, e.doc_id))
+    val docs = Seq(doc, small)
+    assert(reassembled(docs, 1) === oracle(docs))
+    assert(reassembled(docs.map(d => d.copy(spans = d.spans.reverse)), 3) === oracle(docs))
   }
 
-  test("salting never reorders: reassemble(salted) == reassemble(unsalted)") {
+  test("re-assembly == oracle on arbitrary docs, unknown kinds included") {
     (20L to 22L).foreach { seed =>
-      val docs = sampleDocs(seed, 6)
-      val flat = ExtractPipeline.extractFlat(spark.createDataset(docs).toDF())
-      def canon(df: org.apache.spark.sql.DataFrame) =
-        df.select(col("doc_id"), to_json(col("spans"))).collect()
-          .map(r => (r.getString(0), r.getString(1))).sortBy(_._1).toSeq
-      assert(canon(ExtractPipeline.reassemble(flat, salted = true))
-        === canon(ExtractPipeline.reassemble(flat, salted = false)), s"seed $seed")
+      // every fifth span becomes a kind the engine does not know
+      val docs = sampleDocs(seed, 6).map(d => d.copy(spans = d.spans.map(s =>
+        if (s.offset % 5 == 4) s.copy(kind = "table") else s)))
+      assert(reassembled(docs, 1) === oracle(docs), s"seed $seed")
+      assert(reassembled(docs.map(d => d.copy(spans = d.spans.reverse)), 7) === oracle(docs),
+        s"seed $seed, reversed spans, 7 partitions")
     }
   }
 }

@@ -3,7 +3,7 @@ package graft
 import graft.model._
 import graft.operators.{EngineConfig, EnginePool, ExtractPipeline, Oracle}
 import graft.sources.Interleave
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -63,8 +63,7 @@ class GoldenExtractionSpec extends AnyFunSuite {
 
   test("re-assembled docs match oracle (spans array, ok, first error)") {
     val golden = goldenByDoc()
-    val docsOut = ExtractPipeline
-      .reassemble(ExtractPipeline.extractFlat(Interleave.docs(spark, sfDir)))
+    val docsOut = ExtractPipeline.extractAndReassemble(Interleave.docs(spark, sfDir))
       .collect()
     assert(docsOut.length === golden.size)
     docsOut.foreach { r =>
@@ -77,31 +76,39 @@ class GoldenExtractionSpec extends AnyFunSuite {
       assert(r.getAs[Boolean]("ok") === exp.ok, s"doc ${exp.doc_id} ok flag")
       assert(Option(r.getAs[String]("error")) === Option(exp.error),
         s"doc ${exp.doc_id} error")
+      assert(r.getAs[Long]("n_spans") === exp.spans.size.toLong, s"doc ${exp.doc_id} n_spans")
     }
   }
 
-  private def canonDocs(df: org.apache.spark.sql.DataFrame) =
+  private def canonDocs(df: DataFrame) =
     df.select(col("doc_id"), to_json(col("spans")).as("s"), col("ok"),
         col("error"), col("n_spans"))
       .collect().map(r => (r.getString(0), r.getString(1), r.getBoolean(2),
         Option(r.getString(3)), r.getLong(4))).sortBy(_._1).toSeq
 
-  test("salted and unsalted re-assembly are identical") {
-    val flat = ExtractPipeline.extractFlat(Interleave.docs(spark, sfDir))
-    assert(canonDocs(ExtractPipeline.reassemble(flat, salted = true))
-      === canonDocs(ExtractPipeline.reassemble(flat, salted = false)))
-  }
-
-  test("one-pass extractAndReassemble == composed reassemble(extractFlat)") {
+  test("re-assembly == oracle for any input partitioning and span order") {
+    val expected = DocTuples.oracle(goldenByDoc().values)
     val docs = Interleave.docs(spark, sfDir)
-    assert(canonDocs(ExtractPipeline.extractAndReassemble(docs))
-      === canonDocs(ExtractPipeline.reassemble(ExtractPipeline.extractFlat(docs))))
+    val reversed = docs.withColumn("spans", reverse(col("spans")))
+    Seq(1, 7).foreach { n =>
+      assert(DocTuples.of(ExtractPipeline.extractAndReassemble(docs.repartition(n)))
+        === expected, s"$n partitions")
+      assert(DocTuples.of(ExtractPipeline.extractAndReassemble(reversed.repartition(n)))
+        === expected, s"$n partitions, reversed spans")
+    }
   }
 
-  test("pathological 5000-span mega-document routes through the salted tail correctly") {
-    // the heavy-tail shape the salted two-stage aggregation exists for: one document
-    // far past SaltThreshold, interleaved text/media, must reassemble bit-identically
-    // to the oracle with no reducer materializing the whole collect_list at once
+  test("extractAndReassemble == reassembleSorted(extractFlat) == oracle") {
+    val docs = Interleave.docs(spark, sfDir)
+    val out = ExtractPipeline.extractAndReassemble(docs)
+    assert(canonDocs(out)
+      === canonDocs(ExtractPipeline.reassembleSorted(ExtractPipeline.extractFlat(docs))))
+    assert(DocTuples.of(out) === DocTuples.oracle(goldenByDoc().values))
+  }
+
+  test("5000-span mega-document re-assembles exactly (spans, ok, error, n_spans)") {
+    // the heavy-tail shape: one document far past SaltThreshold, interleaved
+    // text/media, lands in one reducer and must reassemble bit-identically to the oracle
     val spans = (0 until 5000).map { i =>
       if (i % 2 == 0) Span("text", s"<nav>n</nav><p>w$i</p><a href=\"u\">m</a>", null, i)
       else Span("image", null, s"m-9$i-$i", i)
@@ -118,6 +125,7 @@ class GoldenExtractionSpec extends AnyFunSuite {
         s.getAs[String]("media_ref")))
     assert(act === exp.spans.map(s => (s.offset, s.kind, s.text, s.media_ref)))
     assert(row.getAs[Boolean]("ok") === exp.ok)
+    assert(Option(row.getAs[String]("error")) === Option(exp.error))
   }
 
   test("archetype semantics: bad engine => empty text, not a failure") {

@@ -63,6 +63,29 @@ class MediaPipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("sizes near Int.MaxValue hit the overrun row error, not an index exception") {
+    import graft.operators.ContainerCodec
+    import java.nio.{ByteBuffer, ByteOrder}
+    def le(v: Int) = ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN).putInt(v).array()
+    def be(v: Int) = ByteBuffer.allocate(4).putInt(v).array()
+    def a(s: String) = s.getBytes("US-ASCII")
+    val body = Array.fill[Byte](16)(1)
+    // offset + size wraps negative in Int arithmetic: an Int bounds check passes, the
+    // payload copy asks for ~2 GiB and the chunk walk resumes at a negative offset
+    val huge = Int.MaxValue - 7
+    val cases = Seq(
+      ("audio/wav", a("RIFF") ++ le(36) ++ a("WAVE") ++ a("data") ++ le(huge) ++ body,
+        "riff chunk 'data' overruns"),
+      ("video/mp4", be(16) ++ a("ftyp") ++ a("isom") ++ be(0) ++ be(huge) ++ a("mdat") ++ body,
+        "bmff box 'mdat' overruns"),
+      ("audio/wav", a("RIFF") ++ le(12) ++ a("WAVE") ++ a("dur ") ++ le(0),
+        "dur chunk size"))
+    cases.foreach { case (mime, bytes, msg) =>
+      val e = intercept[IllegalArgumentException](ContainerCodec.decode(mime, bytes))
+      assert(e.getMessage === s"bad container: $msg")
+    }
+  }
+
   test("the codec is strategy-injectable (dummyStrategy analogue): the stub skips validation") {
     import graft.operators.{MediaContainers, StubMediaCodec}
     // the injected fake peeks bytes without parsing, so even CORRUPT containers

@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
  *    equi-join respectively);
  *  - the flagship's per-branch nested-schema pruning must hold on a materialized
  *    corpus scan: the media branch never reads spans.text (the bulk of the bytes),
- *    the text branch never reads spans.media_ref.
+ *    the text branch never reads spans.media_ref;
+ *  - the flagship runs each input scan and the OCR island once: one re-assembly path.
  */
 class PlanSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -107,6 +108,18 @@ class PlanSpec extends AnyFunSuite {
       s"media branch scan must not read spans.text: $scans")
     assert(scans.exists(s => !s.contains("media_ref")),
       s"text branch scan must not read spans.media_ref: $scans")
+  }
+
+  test("flagship plans two scans, one OCR island and one re-assembly group") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, MapPartitionsExec}
+    // a re-assembly router that splits the input re-runs the scans and the island per
+    // route (the deleted skew router planned 6 scans and 3 MapPartitionsExec)
+    val plan = graft.operators.ExtractPipeline.extractAndReassemble(
+      graft.sources.Interleave.docs(spark, sfDir)).queryExecution.sparkPlan
+    val scans = plan.collect { case s: FileSourceScanExec => s }
+    val islands = plan.collect { case m: MapPartitionsExec => m }
+    assert(scans.size === 2, s"one scan per extraction branch:\n$plan")
+    assert(islands.size === 2, s"OCR island + groupSorted only:\n$plan")
   }
 
   // (the zero-Exchange bucketed-join property is asserted in BucketedJoinSpec, which
