@@ -18,7 +18,9 @@ import org.apache.spark.sql.SparkSession
  * (sink I/O excluded so the measurement is the engine, not the disk). Each level gets a
  * JIT/engine-pool warmup run, then takes the best of `reps` timed runs.
  *
- * Emits one JSON line on stdout and rewrites BENCH/BASELINE.md with the measured table.
+ * Every invocation appends its per-level best to BENCH/scaling_runs.jsonl and prints
+ * one JSON line on stdout: the phase line for a prefix phase, else the headline
+ * efficiency over all logged runs.
  */
 object Scaling {
 
@@ -220,11 +222,11 @@ object Scaling {
     val hi = sys.env.getOrElse("SPARK_GRAFT_HI", "32").toInt
     require(hi == 4 * lo, "north rule compares N vs 4N")
     // SPARK_GRAFT_PHASE times a pipeline PREFIX (scan/flat/sorted/full) at both
-    // levels — the per-phase attribution rows of the report. Phase lines are tagged
-    // in the log and NEVER mixed into the headline (full-pipeline) statistics.
+    // levels — the per-phase attribution rows. Phase lines are tagged in the log
+    // and NEVER mixed into the headline (full-pipeline) statistics.
     val phase = sys.env.getOrElse("SPARK_GRAFT_PHASE", "full")
     // a typo'd phase would run SOMETHING, log it under the unknown tag, and be
-    // silently excluded from every report — reject it before spending minutes
+    // silently excluded from the headline — reject it before spending minutes
     require(Set("scan", "flat", "sorted", "full",
         "commit", "takedown", "changes")(phase),
       s"unknown SPARK_GRAFT_PHASE '$phase' " +
@@ -303,8 +305,8 @@ object Scaling {
       .filter(_.contains(s""""docs":$nDocs,"""))
     val allRuns = pairLines.filter(phaseOf(_) == "full")
     if (phase != "full") {
-      // phase runs only contribute their attribution row; the headline and the
-      // markdown reports are regenerated by full-pipeline invocations
+      // phase runs only contribute their attribution row; the headline is
+      // recomputed by full-pipeline invocations
       println(s"""{"metric":"scaling_phase","phase":"$phase","cpus_lo":$lo,""" +
         s""""cpus_hi":$hi,"secs_lo":${times(lo).min},"secs_hi":${times(hi).min},""" +
         s""""docs":$nDocs}""")
@@ -329,261 +331,6 @@ object Scaling {
         s""""mem_bw_ceiling":${memScale / 4.0},"efficiency_vs_cpu_hw":$effHw,""" +
         s""""cpus_lo":$lo,"secs_lo":$tLo,"docs_per_sec_lo":$tputLo,""" +
         s""""cpus_hi":$hi,"secs_hi":$tHi,"docs_per_sec_hi":$tputHi}""")
-
-    val gateWord = if (gateMet) "MET" else "NOT met"
-    val levelDesc =
-      if (pinned)
-        """Each level runs in its OWN child JVM pinned to exactly N CPUs
-          |(`taskset -c 0-(N-1)`): an unpinned local[8] JVM still borrows all 32 vCPUs
-          |for GC/JIT/shuffle threads, inflating the small "cluster" — pinning is the
-          |faithful two-cluster-size stand-in.""".stripMargin
-      else
-        """Levels run in-process (taskset unavailable), interleaved across cycles so
-          |both sample the same host-load windows.""".stripMargin
-    val md =
-      s"""# BENCH / BASELINE — measured scaling evidence
-         |
-         |North-rule two-cluster-size criterion, sandbox form (no real cluster; same job,
-         |same input, two parallelism levels). Job = flagship extraction end to end:
-         |synthesis -> posexplode -> OCR island (mapPartitions engine pool) + Catalyst
-         |text classifier -> unionByName -> sort-based re-assembly (one doc_id shuffle,
-         |streaming group) -> noop sink.
-         |Input: $sfDir documents x $replicate deterministic replicas = $nDocs docs
-         |(count MEASURED from the materialized corpus, not assumed).
-         |$levelDesc
-         |
-         |## Headline: paired scaling efficiency
-         |
-         |**Efficiency N -> 4N = median over $nRuns invocation(s) of
-         |(best secs_lo / best secs_hi) / 4, both levels measured back-to-back in the
-         |SAME invocation = ${f"$eff%.3f"}.**
-         |
-         |**North-rule gate (>= 0.8 between two cluster sizes): $gateWord as measured
-         |on this single shared-memory VM.** No cross-invocation mixing: each ratio
-         |pairs a lo and hi time measured minutes apart under the same host load
-         |(all samples: BENCH/scaling_runs.jsonl, "v":${if (pinned) 3 else 2} lines).
-         |
-         |## Best-observed throughput (context, per-level minima across all runs)
-         |
-         || Level | Config | Wall time (s) | Throughput (docs/sec) |
-         ||---|---|---|---|
-         || N | local[$lo], shuffle.partitions=$lo | ${f"$tLo%.2f"} | ${f"$tputLo%.0f"} |
-         || 4N | local[$hi], shuffle.partitions=$hi | ${f"$tHi%.2f"} | ${f"$tputHi%.0f"} |
-         |
-         |These minima may come from different invocations — they bound single-level
-         |throughput, they are NOT the efficiency evidence.
-         |
-         |## Hardware-ceiling calibration (context only, NOT a substitute for the gate)
-         |
-         || Resource | $lo -> $hi-thread scaling on this VM | ceiling vs linear 4x |
-         ||---|---|---|
-         || pure-CPU (register-only burn) | ${f"${hwScale}%.2f"}x | ${f"${hwScale / 4.0}%.3f"} |
-         || DRAM bandwidth (32 MiB/thread stream) | ${f"${memScale}%.2f"}x | ${f"${memScale / 4.0}%.3f"} |
-         |
-         |A text-extraction pipeline is a string/row workload; a single shared-memory VM
-         |does not add DRAM channels with thread count, so its achievable $lo->$hi scaling
-         |sits between the two rows above. Against the pure-CPU ceiling the pipeline's
-         |paired efficiency corresponds to **${f"$effHw%.3f"}** of achievable. This
-         |explains WHY the VM number lands where it does; it does not convert a
-         |below-0.8 measurement into a pass. On a real 4x-executor cluster each executor
-         |brings its own memory channels, GC headroom, and page cache — the regime the
-         |north rule's >= 0.8 refers to; the per-stage design (no shuffle in the narrow
-         |phase, one shuffle for re-assembly, broadcast-only dimensions) has no serial
-         |bottleneck.
-         |
-         |Regenerate: `SPARK_GRAFT_SF_DIR=$sfDir sbt -batch "runMain graft.Scaling"`.
-         |""".stripMargin
-    Files.createDirectories(Paths.get("BENCH"))
-    // the primary 8->32 pair owns BASELINE.md; alternate pairs (supporting
-    // evidence) write their own file and never clobber the headline
-    val mdName =
-      if (lo == 8 && hi == 32) "BENCH/BASELINE.md" else s"BENCH/BASELINE_${lo}to$hi.md"
-
-    // supporting pairs (if measured): the same job at smaller N, where the VM's
-    // shared-DRAM ceiling binds progressively less — appended to the primary
-    // report so the headline and its context regenerate together. 2->8 is the
-    // engine-scaling pair (DRAM still scales); 4->16 is the intermediate rung
-    // that shows the efficiency ladder degrading SMOOTHLY with thread count
-    // (memory wall), not collapsing at one width (serial stage).
-    def supportingSection(supLo: Int, supHi: Int): (String, Option[Double]) = {
-        val supAll = Files.readAllLines(runsLog).toArray.toSeq.map(_.toString)
-          .filter(l => l.startsWith("""{"v":3,""") &&
-            l.contains(s""""lo":$supLo,"hi":$supHi,""") &&
-            l.contains(s""""docs":$nDocs,"""))
-        val sup = supAll.filter(phaseOf(_) == "full")
-        if (sup.isEmpty) ("", None)
-        else {
-          val effs = sup.map(l => (field(l, "secs_lo") / field(l, "secs_hi")) / 4.0).sorted
-          val supEff = effs(effs.size / 2)
-          val mems = sup.map(field(_, "mem_scale")).sorted
-          val supMem = mems(mems.size / 2) / 4.0
-          val supGate = if (supEff >= 0.8) "MET" else "NOT met"
-          // phase verdict computed FROM the logged phase samples of THIS pair —
-          // never a hardcoded conclusion (a future sample set could reveal a real
-          // serial stage, and the regenerated report must say so)
-          def phaseMedians(names: Seq[String]): Seq[(String, Double)] =
-            names.flatMap { ph =>
-              val rs = supAll.filter(phaseOf(_) == ph)
-              if (rs.isEmpty) None
-              else {
-                val es = rs.map(l => (field(l, "secs_lo") / field(l, "secs_hi")) / 4.0)
-                  .sorted
-                Some(ph -> es(es.size / 2))
-              }
-            }
-          val supPhases = phaseMedians(Seq("scan", "flat", "sorted"))
-          // the commit-heavy family is NOT a pipeline prefix — it gets its own
-          // clause, never the slowest-prefix-stage sentence (VERDICT r4 #7)
-          val protoPhases = phaseMedians(Seq("commit", "takedown", "changes"))
-          val protoVerdict =
-            if (protoPhases.isEmpty) ""
-            else {
-              val txt = protoPhases.map { case (p, e) => f"$p $e%.2f" }.mkString(", ")
-              s"; protocol-family medians ($txt) attribute the commit-heavy " +
-                "queries' scaling to the same shared-DRAM+write wall, not to a " +
-                "serial stage in the commit cycle"
-            }
-          val phaseVerdict = (
-            if (supPhases.isEmpty) ""
-            else {
-              val txt = supPhases.map { case (p, e) => f"$p $e%.2f" }.mkString(", ")
-              val slowest = supPhases.minBy(_._2)
-              if (supPhases.forall(_._2 >= supEff - 0.05))
-                s"; per-phase medians ($txt vs full ${f"$supEff%.2f"}) show no " +
-                  "stage scaling materially below the full job — no serial bottleneck"
-              else
-                s"; per-phase medians ($txt vs full ${f"$supEff%.2f"}) put the " +
-                  s"slowest-scaling stage at '${slowest._1}' " +
-                  f"(${slowest._2}%.2f) — detail in BENCH/BASELINE_${supLo}to$supHi.md"
-            }) + protoVerdict
-          val supRead =
-            if (supEff >= 0.8)
-              """the >= 0.8 gate is MET where the hardware is not the binding
-                |constraint — attributing the 8->32 shortfall to the VM's memory
-                |wall, not to any serial bottleneck in the plan""".stripMargin + phaseVerdict
-            else
-              s"""${effs.count(_ >= 0.8)} of ${effs.size} individual samples meet the
-                 |0.8 gate outright, and the per-invocation sample table ties the
-                 |spread to each invocation's own hardware probes on this shared
-                 |hypervisor""".stripMargin + phaseVerdict
-          (s"""
-             |## Supporting pair: N=$supLo -> 4N=$supHi
-             |
-             |Same job, same input, same pinned-JVM protocol at $supLo vs $supHi CPUs
-             |(median $supLo->$supHi DRAM-bandwidth ceiling ${f"$supMem%.2f"} of linear, vs
-             |${f"${memScale / 4.0}%.2f"} at 8->32): **median paired efficiency =
-             |${f"$supEff%.3f"} over ${effs.size} invocation(s) — gate $supGate at
-             |this pair; $supRead.** Full samples and per-phase rows:
-             |BENCH/BASELINE_${supLo}to$supHi.md.
-             |""".stripMargin, Some(supEff))
-        }
-      }
-    val supSection =
-      if (lo != 8 || hi != 32) ""
-      else {
-        val parts = Seq((2, 8), (4, 16)).map { case (l, h) => supportingSection(l, h) }
-        // the ladder verdict is COMPUTED from the three medians (same invariant as
-        // the per-phase verdicts: never a hardcoded conclusion — an inversion is
-        // exactly the serial-stage signature the monotone reading rules out)
-        val ladder = (parts(0)._2, parts(1)._2) match {
-          case (Some(e28), Some(e416)) =>
-            if (e28 > e416 && e416 > eff)
-              f"""
-                |The three pairs together form the efficiency LADDER this VM predicts
-                |for a bandwidth-bound row workload: efficiency degrades monotonically
-                |($e28%.3f at 2->8, $e416%.3f at 4->16, $eff%.3f at 8->32) as thread
-                |count saturates the shared DRAM channels — the signature of a memory
-                |wall, not of a serial stage (which would collapse at ONE width and
-                |stay flat elsewhere).
-                |""".stripMargin
-            else
-              f"""
-                |LADDER CHECK: the three medians ($e28%.3f at 2->8, $e416%.3f at
-                |4->16, $eff%.3f at 8->32) are NOT monotone in thread count — an
-                |inversion is NOT explained by the shared-DRAM memory wall alone and
-                |warrants a serial-stage investigation at the inverted width (see the
-                |per-phase attribution tables in the per-pair reports).
-                |""".stripMargin
-          case _ => ""
-        }
-        parts.map(_._1).mkString + ladder
-      }
-    // per-invocation sample table: each paired efficiency next to the SAME
-    // invocation's hardware probes (pure-CPU and DRAM scaling measured minutes
-    // apart from the job under the same host load). On a shared hypervisor the
-    // machine itself sometimes fails to deliver 4x the compute — the normalized
-    // column (eff / that invocation's CPU ceiling) separates engine scaling from
-    // host-load luck without discarding any sample.
-    val sampleRows = allRuns.map { l =>
-      val e = (field(l, "secs_lo") / field(l, "secs_hi")) / (hi.toDouble / lo)
-      val cpuC = field(l, "cpu_scale") / 4.0
-      val memC = field(l, "mem_scale") / 4.0
-      (e, cpuC, memC, e / cpuC)
-    }.sortBy(_._1)
-    val normSorted = sampleRows.map(_._4).sorted
-    val effNormMedian = normSorted(normSorted.size / 2)
-    val sampleSection = {
-      val rows = sampleRows.map { case (e, c, m, n) =>
-        f"| $e%.3f | $c%.3f | $m%.3f | $n%.3f |"
-      }.mkString("\n")
-      s"""
-         |## All paired samples vs their own host-load window ($lo -> $hi)
-         |
-         |Every sample, no selection: paired efficiency beside the SAME invocation's
-         |hardware probes. When the VM delivers its CPUs (ceiling near 1.0) the job
-         |scales near the gate; when even a register-only burn cannot scale (shared
-         |hypervisor), the job tracks the machine. **Median load-normalized
-         |efficiency (eff / own-invocation CPU ceiling) = ${f"$effNormMedian%.3f"}.**
-         |
-         || paired eff | CPU ceiling (that invocation) | DRAM ceiling | eff / CPU ceiling |
-         ||---|---|---|---|
-         |""".stripMargin + rows + "\n"
-    }
-
-    // per-phase attribution for THIS pair (rows exist once SPARK_GRAFT_PHASE runs
-    // were logged): where wall time and scaling loss live along the pipeline
-    // every accepted SPARK_GRAFT_PHASE value has a row here — a phase that can be
-    // run but never reported would be write-only telemetry (ADVICE r3)
-    val byPhase = Seq("scan", "flat", "sorted", "full",
-        "commit", "takedown", "changes")
-      .map(ph => ph -> pairLines.filter(phaseOf(_) == ph))
-      .filter(_._2.nonEmpty)
-    val phaseSection =
-      if (byPhase.size <= 1) ""
-      else {
-        val phaseDesc = Map(
-          "scan" -> "corpus scan only",
-          "flat" -> "scan -> posexplode -> classify/OCR (narrow, no shuffle)",
-          "sorted" -> "flat + sort-based re-assembly (the one shuffle)",
-          "full" -> "extractAndReassemble (headline job)",
-          "commit" -> ("PROTOCOL family: extraction -> 2-wave snapshot commit " +
-            "(staged write, re-read metrics, publish, distributed hash, manifest)"),
-          "takedown" -> ("commit + deleteDocs of ~1k victims (copy-on-write bucket " +
-            "rewrites; differential vs commit = the takedown cost)"),
-          "changes" -> ("commit + v1->v2 changelog read (differential vs commit = " +
-            "the incremental-diff cost)"))
-        val rows = byPhase.map { case (ph, rs) =>
-          val effs = rs
-            .map(l => (field(l, "secs_lo") / field(l, "secs_hi")) / (hi.toDouble / lo))
-            .sorted
-          f"| $ph | ${phaseDesc.getOrElse(ph, ph)} | ${rs.size} | " +
-            f"${rs.map(field(_, "secs_lo")).min}%.2f | " +
-            f"${rs.map(field(_, "secs_hi")).min}%.2f | ${effs(effs.size / 2)}%.3f |"
-        }.mkString("\n")
-        // rows are appended AFTER stripMargin: interpolating them into the template
-        // would let stripMargin eat each table row's leading '|'
-        s"""
-           |## Per-phase attribution ($lo -> $hi, same pinned protocol)
-           |
-           |Each row times a pipeline PREFIX, so differences between adjacent rows
-           |attribute wall time and scaling loss to one stage. Paired efficiency per
-           |phase = median of per-invocation (secs_lo/secs_hi)/4 ratios.
-           |
-           || Phase | prefix | runs | best secs_lo | best secs_hi | paired eff |
-           ||---|---|---|---|---|---|
-           |""".stripMargin + rows + "\n"
-      }
-    Files.writeString(Paths.get(mdName), md + supSection + sampleSection + phaseSection)
   }
 }
 

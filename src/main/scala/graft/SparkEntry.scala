@@ -512,7 +512,7 @@ object SparkEntry {
 
   /** Streamed ingest -> COMPACTION -> canonical generation, under the DuckDB gate:
     * commit the corpus as [[graft.functions.OracleSql.CompactBatches]] synthetic
-    * stream micro-batches (sidecar-allocated composite manifest ids `generation*nBuckets + bucket` — generation == batchId for this fresh sequential stream,
+    * stream micro-batches (ledger-allocated composite manifest ids `generation*nBuckets + bucket` — generation == batchId for this fresh sequential stream,
     * [[graft.sources.SnapshotSink.commitStreamBatch]]), then rewrite them into one
     * canonical generation ([[graft.sources.SnapshotSink.compact]]) and emit the
     * per-bucket lineage. The oracle predicts the merged per-base counts AND the

@@ -95,9 +95,10 @@ object Dedup {
       .select(col("doc_id"), col("bs.band"), col("bs.band_hash"))
 
   /** Signature-table format version — bumped with any change to [[NumPerms]],
-    * [[BandWidth]], [[ShingleN]], or the signature hash; part of the committed
-    * signature directory key so stale tables can never be read. */
-  val SigFormatVersion = 1
+    * [[BandWidth]], [[ShingleN]], the signature hash, or the committed-table
+    * metadata layout; part of the committed signature directory key so stale
+    * tables can never be read. */
+  val SigFormatVersion = 2
 
   /** Bucket count for the committed signature table (more than the extraction
     * sink's default: signatures are cheap to re-derive per bucket, so finer resume
@@ -201,9 +202,9 @@ object Dedup {
     windowDupFrom(windowHashes(docs).localCheckpoint(eager = false))
 
   /** Window-hash table format version — part of the committed directory key
-    * (bump with any change to [[graft.functions.WindowHashesExpr.WindowN]] or the
-    * window hash). */
-  val WinFormatVersion = 1
+    * (bump with any change to [[graft.functions.WindowHashesExpr.WindowN]], the
+    * window hash, or the committed-table metadata layout). */
+  val WinFormatVersion = 2
 
   /** [[windowDup]] over a window-hash table committed through the snapshot
     * protocol (same contract as [[committedBands]]: reruns skip verified buckets

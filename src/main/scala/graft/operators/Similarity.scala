@@ -512,8 +512,9 @@ object Similarity {
 
   /** Codebook-table format version — part of the committed-table directory key
     * (TableSnapshot's staleness contract); bump with any change to the PQ
-    * geometry, training constants, or the codebook schema. */
-  val PqFormatVersion = 1
+    * geometry, training constants, the codebook schema, or the committed-table
+    * metadata layout. */
+  val PqFormatVersion = 2
 
   /** Bucket count for the committed-embeddings snapshot the incremental
     * re-embedding consumer (`reembed_incremental`) diffs over; the bucket key is

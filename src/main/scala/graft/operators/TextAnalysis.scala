@@ -155,8 +155,8 @@ object TextAnalysis {
 
   /** tf-table format version — part of the committed-table directory key (see
     * [[graft.sources.TableSnapshot]]'s staleness contract); bump with any change to
-    * tokenization or the tf schema. */
-  val TfFormatVersion = 1
+    * tokenization, the tf schema, or the committed-table metadata layout. */
+  val TfFormatVersion = 2
 
   /** Terms kept per document by [[topTerms]] (oracle-interpolated). */
   val TopTermsK = 3
@@ -274,9 +274,10 @@ object TextAnalysis {
   val LmProbScale = 1000000L
 
   /** LM-model committed-table format version + bucket count (TableSnapshot key
-    * discipline — bump the version with any change to trigram extraction or the
-    * smoothing formula). The model is tiny (charset-bounded), so few buckets. */
-  val LmFormatVersion = 1
+    * discipline — bump the version with any change to trigram extraction, the
+    * smoothing formula, or the committed-table metadata layout). The model is tiny
+    * (charset-bounded), so few buckets. */
+  val LmFormatVersion = 2
   val LmBuckets = 4
 
   /** Character trigrams of the text, all occurrences in order. Spark's

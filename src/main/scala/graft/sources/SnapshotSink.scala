@@ -1,12 +1,16 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
 import java.security.MessageDigest
+import scala.annotation.tailrec
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
 import graft.operators.{EngineConfig, ExtractPipeline, SpanMetricsAgg}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.{DefaultFormats, Formats}
+import org.json4s.jackson.Serialization
 
 /**
  * Snapshot-committed, resumable extraction sink (SURVEY.md §7 step 5) — the Iceberg-style
@@ -27,11 +31,11 @@ import org.apache.spark.sql.functions._
  *           corruption surfaces here, not at some later consumer), and the manifest
  *           records an md5 over the bucket's data files;
  *   4. atomic rename to the final name           (languages.py:174-175)
- *        -> publish of the bucket directory and the manifest republish, both through
- *           the [[CommitIo]] seam (atomic rename on POSIX/HDFS; metadata-pointer swap
- *           on object stores — see [[CommitIo]]). A crash at ANY point leaves either
- *           a fully committed bucket (manifest + data agree) or an invisible one
- *           (staging only) — never a half-read state.
+ *        -> publish of the bucket directory, then of the next manifest version and
+ *           the state record naming it HEAD, all through the [[CommitIo]] seam
+ *           (atomic directory rename; create-new metadata files — see [[CommitIo]]).
+ *           A crash at ANY point leaves either a fully committed bucket (manifest +
+ *           data agree) or an invisible one (staging only) — never a half-read state.
  *
  * Scale design: work is keyed by `bucket = doc_num % nBuckets` (doc_id's numeric suffix,
  * so the assignment is reproducible in plain SQL and uniform by construction). Buckets
@@ -138,7 +142,7 @@ object SnapshotSink {
     // as ONE batched distributed job over every fast-passing bucket — at 100 TB the
     // driver never re-reads committed data and the job count stays O(1), not
     // O(buckets))
-    val existing = readManifest(spark, outDir)
+    val (head0, existing) = baseManifest(out)
 
     if (docs.columns.contains("bucket")) {
       // Layout guard, two tiers. (1) Range: the column MUST lie in [0, nBuckets). A
@@ -222,6 +226,7 @@ object SnapshotSink {
 
     val processed = Seq.newBuilder[Long]
     var totalRows = 0L
+    var head = head0
     val waves = todo.grouped(waveSize).toSeq
 
     waves.zipWithIndex.foreach { case (baseWave, wi) =>
@@ -253,10 +258,11 @@ object SnapshotSink {
         }
       val flat = ExtractPipeline.extractFlat(docsW, config)
         .withColumn("bucket", idCol)
-      val (newManifest, waveRows) =
-        commitWaveFlat(spark, out, flat, targetIds, manifest, t0,
+      val (newManifest, waveRows, v) =
+        commitWaveFlat(spark, out, flat, targetIds, manifest, t0, movesHead(head),
           expectNonEmpty = mustBeNonEmpty.intersect(targetIds.toSet), io = io)
       manifest = newManifest
+      head = v
       processed ++= targetIds
       totalRows += waveRows
       if (wi + 1 >= crashAfterWaves) throw new InjectedCrash(wi)
@@ -302,62 +308,148 @@ object SnapshotSink {
             "the schema from the producing pipeline instead", e)
     }
 
-  /** Parse the manifest (empty if none exists yet). Read through Spark's JSON source
-    * with the case-class schema — no extra JSON dependency. */
-  /** Sidecar transaction log for the streaming sink (`stream-batches.json`, JSON
-    * lines of {batch, base}): maps EXTERNAL micro-batch ids to their allocated
-    * composite base so (a) a re-delivered batch reuses its allocation and the
-    * skip-verify stays idempotent, and (b) allocations and compaction generations
-    * share one strictly-increasing id space. Written atomically through the same
-    * [[CommitIo]] seam as manifests; a crash between allocation and data commit
-    * just leaves a reserved generation the re-delivery fills in. */
-  private[sources] def readBatchBases(out: Path): Map[Long, Long] = {
-    val p = out.resolve("stream-batches.json")
-    if (!Files.exists(p)) return Map.empty
-    val Line = """\{"batch":(-?\d+),"base":(-?\d+)\}""".r
-    Files.readAllLines(p).asScala.flatMap {
-      case Line(b, base) => Some(b.toLong -> base.toLong)
-      case _ => None
-    }.toMap
+  // ---- table state ------------------------------------------------------------------
+  //
+  // A table root holds two metadata file kinds, both immutable and published
+  // create-new ([[CommitIo.publishFile]]): manifest versions `manifest-v%06d.json`
+  // and state records `state-%06d.json` ([[TableState]]). The newest state record
+  // IS the table's metadata, and every change is one [[updateState]] publish. An
+  // edit that moves HEAD refuses when HEAD is no longer the version the operation
+  // built on ([[movesHead]]), so writers on main never silently lose an update;
+  // tag, branch and ledger edits simply re-apply on top of a concurrent winner.
+
+  /** A branch ref: its head version and main's HEAD version when it forked. The
+    * base is what makes [[fastForward]] safe: publishing a branch whose base is
+    * behind main's current HEAD would silently discard every commit main took since
+    * the fork. */
+  private[graft] final case class BranchRef(version: Long, base: Long)
+
+  /** One state record. `head` is 0 until the first commit to main. `batchBases` is
+    * the ledger of [[allocateGeneration]]: batch id -> allocated composite base, so
+    * a re-delivered batch reuses its allocation (a crash between allocation and
+    * data commit leaves a reservation the re-delivery fills in). `schemas` is
+    * [[TableSnapshot]]'s schema history.
+    *
+    * `compactedIds` are the ids [[compact]] merged away, recorded in the publish
+    * that moves HEAD past them, before their bytes are GC'd. [[commitStreamBatch]]
+    * skips them: a batch replayed after an ill-timed compaction (crash between sink
+    * commit and checkpoint advance, then compact + takedown while the stream is
+    * down) would otherwise RE-COMMIT them — every row duplicated and
+    * takedown-deleted documents RESURRECTED (StreamingTakedownSpec). A batch that
+    * only reserved a generation is not listed, so its re-delivery still commits. */
+  private[graft] final case class TableState(
+      head: Long = 0L,
+      tags: Map[String, Long] = Map.empty,
+      branches: Map[String, BranchRef] = Map.empty,
+      batchBases: Map[Long, Long] = Map.empty,
+      compactedIds: Seq[Long] = Seq.empty,
+      schemas: Seq[TableSnapshot.SchemaVersion] = Seq.empty)
+
+  /** The state edit that commits a just-published manifest version: it names the
+    * ref that moves ([[movesHead]], [[advancesBranch]]). */
+  private[sources] type Commit = Long => TableState => TableState
+
+  /** The one metadata codec: state records and manifest lines. */
+  private implicit val formats: Formats = DefaultFormats
+
+  private val StateFileRe = "state-(\\d+)\\.json".r
+
+  private def statePath(out: Path, n: Long): Path = out.resolve(f"state-$n%06d.json")
+
+  /** Metadata files of the retired seven-file layout. A root holding one of them
+    * and no state record is an old-layout table: refused, never read as empty. */
+  private val RetiredFiles = Seq("manifest.json", "refs.json", "branches.json",
+    "stream-batches.json", "compacted-ids.json", "schema.json")
+
+  /** The newest state record and its number (0 and an empty state if none). */
+  private def latestState(out: Path): (Long, TableState) =
+    numberedFiles(out, StateFileRe).lastOption match {
+      case Some(n) =>
+        n -> Serialization.read[TableState](Files.readString(statePath(out, n)))
+      case None =>
+        RetiredFiles.find(f => Files.exists(out.resolve(f))).foreach { f =>
+          throw new IllegalStateException(
+            s"$out is an old-layout table: it holds the retired metadata file $f " +
+              "and no state record — rebuild it (a derived table: delete the " +
+              "directory and re-run)")
+        }
+        0L -> TableState()
+    }
+
+  private[graft] def readState(out: Path): TableState = latestState(out)._2
+
+  /** Apply `edit` to the newest state record and publish the result as the next
+    * record, create-new; re-read and re-apply when a concurrent writer took that
+    * number first. An edit that changes nothing publishes nothing. Returns the
+    * state as published. */
+  @tailrec private[graft] def updateState(out: Path, io: CommitIo)(
+      edit: TableState => TableState): TableState = {
+    val (n, cur) = latestState(out)
+    val next = edit(cur)
+    if (next == cur) cur
+    else if (publishNew(out, io, statePath(out, n + 1), Serialization.write(next))) next
+    else updateState(out, io)(edit)
   }
 
-  private def recordBatchBases(out: Path, io: CommitIo, m: Map[Long, Long]): Unit = {
-    val body = m.toSeq.sorted
-      .map { case (b, base) => s"""{"batch":$b,"base":$base}""" }
-      .mkString("", "\n", "\n")
-    val tmp = Files.createTempFile(out, ".batches", ".tmp")
-    Files.writeString(tmp, body)
-    io.publishFile(tmp, out.resolve("stream-batches.json"))
+  /** Write `body` to a temp file beside `dst` and publish it create-new; false when
+    * `dst` already exists. */
+  private def publishNew(out: Path, io: CommitIo, dst: Path, body: String): Boolean = {
+    val tmp = Files.createTempFile(out, ".meta", ".tmp")
+    try { Files.writeString(tmp, body); io.publishFile(tmp, dst); true }
+    catch { case _: FileAlreadyExistsException => false }
+    finally Files.deleteIfExists(tmp)
   }
 
-  /** Sidecar log of COMPACTED-AWAY composite ids (`compacted-ids.json`, JSON lines
-    * of {"bucket":N}): every id [[compact]] merges into a canonical generation is
-    * recorded here BEFORE its source directory is GC'd. [[commitStreamBatch]]
-    * skips these ids on re-delivery — without the log, a batch replayed after an
-    * ill-timed compaction (crash between sink commit and checkpoint advance, then
-    * compact + takedown while the stream is down) would find its ids missing from
-    * the manifest and RE-COMMIT them: every row duplicated against the canonical
-    * generation and, worse, takedown-deleted documents RESURRECTED
-    * (StreamingTakedownSpec drives exactly that interleave). A batch that merely
-    * reserved a generation but crashed before committing data is NOT in this log,
-    * so its re-delivery still commits — no data loss. */
-  private[graft] def readCompactedIds(out: Path): Set[Long] = {
-    val p = out.resolve("compacted-ids.json")
-    if (!Files.exists(p)) return Set.empty
-    val Line = """\{"bucket":(-?\d+)\}""".r
-    Files.readAllLines(p).asScala.flatMap {
-      case Line(b) => Some(b.toLong)
-      case _ => None
-    }.toSet
+  /** The state edit that commits version `v` to main: HEAD moves from `expected`,
+    * the version the operation built on. Refuses when HEAD moved meanwhile — a
+    * concurrent writer committed to main, and this result would silently discard
+    * that commit; `v` stays in history, unreferenced. */
+  private[sources] def movesHead(expected: Long)(v: Long)(s: TableState): TableState = {
+    if (s.head != expected)
+      throw new IllegalStateException(
+        s"lost update refused: main HEAD moved from version $expected to " +
+          s"${s.head} while this operation ran; its result (version $v) stays " +
+          "unreferenced in history — re-run it against the new HEAD")
+    s.copy(head = v)
   }
 
-  private def recordCompactedIds(out: Path, io: CommitIo, ids: Set[Long]): Unit = {
-    val body = ids.toSeq.sorted.map(b => s"""{"bucket":$b}""")
-      .mkString("", "\n", "\n")
-    val tmp = Files.createTempFile(out, ".compacted", ".tmp")
-    Files.writeString(tmp, body)
-    io.publishFile(tmp, out.resolve("compacted-ids.json"))
+  /** The state edit that commits version `v` to the named branch. */
+  private def advancesBranch(name: String)(v: Long)(s: TableState): TableState = {
+    val b = s.branches.getOrElse(name,
+      throw new IllegalStateException(
+        s"branch '$name' was dropped while a commit to it ran; its result " +
+          s"(version $v) stays unreferenced in history"))
+    s.copy(branches = s.branches + (name -> b.copy(version = v)))
   }
+
+  /** The one generation allocator (stream batches, branch merges, compaction): in
+    * ONE state publish — so concurrent allocators re-apply, never share — record
+    * the next free generation above every id of HEAD's manifest, of `base` (the
+    * manifest the caller builds on) and of the ledger under `key`, and return its
+    * composite base `gen * nBuckets`. A stream batch passes its batch id and gets
+    * its recorded allocation back on re-delivery; reservations pass None and are
+    * recorded under `-gen` (batch ids are >= 0). A fresh stream gets generation 0. */
+  private def allocateGeneration(out: Path, io: CommitIo, key: Option[Long],
+      base: Seq[ManifestEntry], nBuckets: Int): Long = {
+    var allocated = 0L // set by the edit that finally publishes
+    updateState(out, io) { s =>
+      key.flatMap(s.batchBases.get) match {
+        case Some(b) => allocated = b; s
+        case None =>
+          val head = if (s.head == 0L) Seq.empty else manifestAt(out, s.head)
+          val gens = (head ++ base).map(_.bucket / nBuckets) ++
+            s.batchBases.values.map(_ / nBuckets)
+          val g = if (gens.isEmpty) 0L else gens.max + 1
+          allocated = g * nBuckets
+          s.copy(batchBases = s.batchBases + (key.getOrElse(-g) -> allocated))
+      }
+    }
+    allocated
+  }
+
+  /** Composite ids [[compact]] merged away (see [[TableState]]). */
+  private[graft] def readCompactedIds(out: Path): Set[Long] =
+    readState(out).compactedIds.toSet
 
   /** Audit entry point: run the two verification tiers over the ENTIRE manifest
     * and return the bucket ids that FAIL (empty = every committed byte verifies).
@@ -381,14 +473,26 @@ object SnapshotSink {
     invalid.map(_.bucket).sorted
   }
 
+  /** HEAD's manifest (empty before the first commit to main). */
   def readManifest(spark: SparkSession, outDir: String): Seq[ManifestEntry] =
-    parseManifest(spark, Paths.get(outDir).resolve("manifest.json"))
+    baseManifest(Paths.get(outDir))._2
 
-  private def parseManifest(spark: SparkSession, p: Path): Seq[ManifestEntry] = {
-    if (!Files.exists(p)) return Seq.empty
-    val enc = Encoders.product[ManifestEntry]
-    spark.read.schema(enc.schema).json(p.toString).as[ManifestEntry](enc)
-      .collect().toSeq
+  /** The version a write builds on — the named branch's head, else HEAD (0 before
+    * the first commit) — and its manifest. */
+  private[sources] def baseManifest(out: Path, branch: Option[String] = None)
+      : (Long, Seq[ManifestEntry]) = {
+    val v = branch.fold(readState(out).head)(resolveBranch(out.toString, _))
+    v -> (if (v == 0L) Seq.empty else manifestAt(out, v))
+  }
+
+  /** The manifest of history version `v`; fails loudly when it is not retained. */
+  private def manifestAt(out: Path, v: Long): Seq[ManifestEntry] = {
+    val p = versionPath(out, v)
+    require(Files.exists(p),
+      s"no manifest version $v under $out — available: " +
+        s"[${versions(out.toString).mkString(", ")}]")
+    Files.readAllLines(p).asScala.toSeq.filter(_.nonEmpty)
+      .map(Serialization.read[ManifestEntry](_))
   }
 
   /** Manifest as a DataFrame (the lineage/metrics table surfaced to queries). */
@@ -399,43 +503,42 @@ object SnapshotSink {
 
   // ---- time travel ------------------------------------------------------------------
   //
-  // Every manifest publish ([[writeManifest]]) also writes an IMMUTABLE history copy
-  // `manifest-v%06d.json` before swapping `manifest.json` (the HEAD pointer) — the
-  // Iceberg metadata-version sequence, with the same retention contract: a historical
-  // version stays READABLE ([[readCommittedAt]]) for as long as the data files it
-  // references are retained. The protocol's eager GC points — [[compact]]'s post-swap
-  // source-directory delete, [[vacuum]], and [[run]]'s invalidated-bucket delete — are
-  // the `expireSnapshots` analogue: they reclaim bytes and thereby expire every version
-  // that referenced them. Reading an expired version fails LOUDLY with the missing-file
-  // count, never silently short. History files themselves are O(bytes-of-metadata);
-  // [[expireVersions]] prunes them when a bounded history is wanted.
+  // Every commit ([[writeManifest]]) publishes an IMMUTABLE manifest version
+  // `manifest-v%06d.json` and then the state record that names it HEAD (or a branch
+  // head) — the Iceberg metadata-version sequence, with the same retention contract:
+  // a historical version stays READABLE ([[readCommittedAt]]) for as long as the data
+  // files it references are retained. The protocol's eager GC points — [[compact]]'s
+  // post-swap source-directory delete, [[vacuum]], and [[run]]'s invalidated-bucket
+  // delete — are the `expireSnapshots` analogue: they reclaim bytes and thereby
+  // expire every version that referenced them. Reading an expired version fails
+  // LOUDLY with the missing-file count, never silently short. History files
+  // themselves are O(bytes-of-metadata); [[expireVersions]] prunes them when a
+  // bounded history is wanted.
 
   private val VersionFileRe = "manifest-v(\\d+)\\.json".r
 
   private def versionPath(out: Path, v: Long): Path =
     out.resolve(f"manifest-v$v%06d.json")
 
-  /** Available history versions, ascending (empty for a pre-history snapshot). */
-  def versions(outDir: String): Seq[Long] = {
-    val out = Paths.get(outDir)
-    if (!Files.isDirectory(out)) return Seq.empty
-    val stream = Files.list(out)
-    try stream.iterator().asScala.toSeq
-      .flatMap(p => p.getFileName.toString match {
-        case VersionFileRe(n) => Some(n.toLong)
-        case _ => None
-      }).sorted
-    finally stream.close()
-  }
+  /** Available history versions, ascending (empty before the first commit). */
+  def versions(outDir: String): Seq[Long] = numberedFiles(Paths.get(outDir), VersionFileRe)
+
+  /** The numbers of the files in `out` whose names match `re`, ascending. */
+  private def numberedFiles(out: Path, re: Regex): Seq[Long] =
+    if (!Files.isDirectory(out)) Seq.empty
+    else {
+      val stream = Files.list(out)
+      try stream.iterator().asScala.toSeq
+        .flatMap(p => p.getFileName.toString match {
+          case re(n) => Some(n.toLong)
+          case _ => None
+        }).sorted
+      finally stream.close()
+    }
 
   /** The manifest as of history version `v` (1-based, [[versions]]). */
-  def readManifestAt(spark: SparkSession, outDir: String, v: Long): Seq[ManifestEntry] = {
-    val p = versionPath(Paths.get(outDir), v)
-    require(Files.exists(p),
-      s"no manifest version $v under $outDir — available: " +
-        s"[${versions(outDir).mkString(", ")}]")
-    parseManifest(spark, p)
-  }
+  def readManifestAt(spark: SparkSession, outDir: String, v: Long): Seq[ManifestEntry] =
+    manifestAt(Paths.get(outDir), v)
 
   /** [[lineage]] as of history version `v`. */
   def lineageAt(spark: SparkSession, outDir: String, v: Long): DataFrame = {
@@ -447,23 +550,28 @@ object SnapshotSink {
     * data files that manifest version listed. Fails loudly when the version has been
     * EXPIRED — any referenced file reclaimed by compaction GC, [[vacuum]], or an
     * invalidated-bucket rebuild — rather than returning a silently short table. */
-  def readCommittedAt(spark: SparkSession, outDir: String, v: Long): DataFrame = {
+  def readCommittedAt(spark: SparkSession, outDir: String, v: Long): DataFrame =
+    readEntries(spark, outDir, readManifestAt(spark, outDir, v), s"snapshot version $v")
+
+  /** Scan exactly the data files `entries` list; `what` names the read in the loud
+    * failure when any of them was reclaimed. */
+  private def readEntries(spark: SparkSession, outDir: String,
+      entries: Seq[ManifestEntry], what: String): DataFrame = {
     val out = Paths.get(outDir)
-    val entries = readManifestAt(spark, outDir, v)
     val files = entries.flatMap(e => e.files.map(f => bucketDir(out, e.bucket).resolve(f)))
     val missing = files.filterNot(Files.isRegularFile(_))
     require(missing.isEmpty,
-      s"snapshot version $v is EXPIRED: ${missing.size} of ${files.size} data files " +
-        "it references were reclaimed (compaction GC / vacuum / bucket invalidation " +
-        "— the expireSnapshots analogue); time travel reaches only versions whose " +
-        s"files are retained. First missing: ${missing.head}")
+      s"$what is EXPIRED: ${missing.size} of ${files.size} data files it references " +
+        "were reclaimed (compaction GC / vacuum / bucket invalidation — the " +
+        "expireSnapshots analogue); time travel reaches only versions whose files " +
+        s"are retained. First missing: ${missing.head}")
     if (files.isEmpty) emptyCommitted(spark, outDir)
     else spark.read.option("basePath", out.resolve("data").toString)
       .parquet(files.map(_.toString): _*)
   }
 
-  /** Prune manifest history to the newest `keepLast` versions (HEAD `manifest.json`
-    * is untouched — it is the current table either way). HEAD's own version is
+  /** Prune manifest history to the newest `keepLast` versions, and every state
+    * record but the newest (it alone is the table's metadata). HEAD's own version is
     * always retained: after a branch commit HEAD is not the newest version, and
     * dropping it would leave HEAD resolving to no version at all (so [[branch]] and
     * [[fastForward]] could no longer record or check a fork point). TAGGED versions
@@ -481,10 +589,12 @@ object SnapshotSink {
     val out = Paths.get(outDir)
     // HEAD, tags AND branches pin their versions: expiring a live branch's
     // manifest would orphan every commit staged on it
-    val pinned = tags(outDir).values.toSet ++ branches(outDir).values.toSet +
-      headVersion(outDir)
+    val s = readState(out)
+    val pinned = s.tags.values.toSet ++ s.branches.values.map(_.version) + s.head
     val drop = versions(outDir).dropRight(keepLast).filterNot(pinned)
     drop.foreach(v => Files.deleteIfExists(versionPath(out, v)))
+    numberedFiles(out, StateFileRe).dropRight(1)
+      .foreach(n => Files.deleteIfExists(statePath(out, n)))
     drop
   }
 
@@ -505,6 +615,7 @@ object SnapshotSink {
     * rollback can never resurrect deleted bytes — the same contract as
     * [[readCommittedAt]]'s expired-version guard, checked against recorded sizes
     * (and, with `deepVerify`, a distributed re-hash of every referenced byte).
+    * Also refuses when another writer moved HEAD while the restore ran.
     *
     * Scale shape: O(metadata) driver work; `deepVerify` adds ONE batched
     * distributed hash job over the restored file set (the commit-time verify tier
@@ -521,10 +632,17 @@ object SnapshotSink {
       deepVerify: Boolean = false,
       io: CommitIo = PosixCommitIo): RestoreReport = {
     val out = Paths.get(outDir)
-    val hist = versions(outDir)
+    republish(spark, out, toVersion, deepVerify, io)(movesHead(readState(out).head))
+  }
+
+  /** Republish version `toVersion`'s manifest as a new version committed by
+    * `commit` — the shared body of [[restore]] and [[fastForward]]. */
+  private def republish(spark: SparkSession, out: Path, toVersion: Long,
+      deepVerify: Boolean, io: CommitIo)(commit: Commit): RestoreReport = {
+    val hist = versions(out.toString)
     require(hist.contains(toVersion),
       s"cannot restore to version $toVersion — not in history [${hist.mkString(", ")}]")
-    val entries = readManifestAt(spark, outDir, toVersion)
+    val entries = manifestAt(out, toVersion)
     val (valid, invalid) = verifyEntries(spark, out, entries, deepVerify)
     if (invalid.nonEmpty)
       throw new IllegalStateException(
@@ -532,31 +650,22 @@ object SnapshotSink {
           s"reference reclaimed or altered data files (buckets " +
           s"[${invalid.map(_.bucket).sorted.mkString(", ")}]) — takedown/compaction " +
           "GC is unrecoverable by design; a rollback cannot resurrect deleted bytes")
-    writeManifest(out, valid.sortBy(_.bucket), io)
-    RestoreReport(toVersion, versions(outDir).last, valid.size)
+    val v = writeManifest(out, valid.sortBy(_.bucket), io, commit)
+    RestoreReport(toVersion, v, valid.size)
   }
 
   // ---- named refs (tags) --------------------------------------------------------
   //
   // Iceberg-style named references into the version history: a tag is an immutable
   // name -> version pointer ("the snapshot training run 7 read from"), resolved at
-  // read time through the same time-travel machinery. Refs live in `refs.json`
-  // (JSON lines, one per tag) and publish through the CommitIo seam like every
-  // other metadata swap — a crash mid-retag leaves either the old or the new refs
-  // file, never a torn one.
+  // read time through the same time-travel machinery. Tags live in the state record,
+  // so a tag edit is one [[updateState]] publish: a crash leaves the old or the new
+  // record, and two concurrent tag edits both land.
 
   private val TagNameRe = "[A-Za-z0-9._-]{1,64}".r
 
   /** Current tags, name -> version (empty if none). */
-  def tags(outDir: String): Map[String, Long] = {
-    val p = Paths.get(outDir).resolve("refs.json")
-    if (!Files.exists(p)) return Map.empty
-    val TagLine = """\{"name":"([^"]+)","version":(\d+)\}""".r
-    Files.readAllLines(p).asScala.flatMap {
-      case TagLine(n, v) => Some(n -> v.toLong)
-      case _ => None
-    }.toMap
-  }
+  def tags(outDir: String): Map[String, Long] = readState(Paths.get(outDir)).tags
 
   /** Create or move the named tag to history version `v` (which must exist NOW —
     * a tag can never be born dangling; it can only dangle later if the version's
@@ -567,14 +676,12 @@ object SnapshotSink {
       s"tag name '$name' must match ${TagNameRe.regex}")
     require(versions(outDir).contains(v),
       s"cannot tag version $v — not in history [${versions(outDir).mkString(", ")}]")
-    writeTags(Paths.get(outDir), tags(outDir) + (name -> v), io)
+    updateState(Paths.get(outDir), io)(s => s.copy(tags = s.tags + (name -> v)))
   }
 
   /** Remove the named tag (idempotent), releasing its expiration pin. */
-  def dropTag(outDir: String, name: String, io: CommitIo = PosixCommitIo): Unit = {
-    val t = tags(outDir)
-    if (t.contains(name)) writeTags(Paths.get(outDir), t - name, io)
-  }
+  def dropTag(outDir: String, name: String, io: CommitIo = PosixCommitIo): Unit =
+    updateState(Paths.get(outDir), io)(s => s.copy(tags = s.tags - name))
 
   private def resolveTag(outDir: String, name: String): Long =
     tags(outDir).getOrElse(name,
@@ -590,15 +697,6 @@ object SnapshotSink {
   def lineageAtTag(spark: SparkSession, outDir: String, name: String): DataFrame =
     lineageAt(spark, outDir, resolveTag(outDir, name))
 
-  private def writeTags(out: Path, t: Map[String, Long], io: CommitIo): Unit = {
-    val body = t.toSeq.sortBy(_._1)
-      .map { case (n, v) => s"""{"name":"$n","version":$v}""" }
-      .mkString("", "\n", "\n")
-    val tmp = Files.createTempFile(out, ".refs", ".tmp")
-    Files.writeString(tmp, body)
-    io.publishFile(tmp, out.resolve("refs.json"))
-  }
-
   // ---- named refs (branches) ----------------------------------------------------
   //
   // Iceberg-style WRITABLE refs: a branch is a name -> version pointer that
@@ -610,31 +708,16 @@ object SnapshotSink {
   // branch commit publishes a normal immutable `manifest-v%06d.json`); isolation
   // comes from the DATA layout — a branch rewrite lands its buckets at a fresh
   // GENERATION (`gen * nBuckets + base`, the compaction/stream id space, reserved
-  // through the same sidecar ledger so streams and compactions can never collide
-  // with it) and main's files are never touched. Branches live in `branches.json`
-  // (same JSON-lines shape and CommitIo swap as tags — kept separate so a tag
-  // rewrite can never drop branch pointers). Like tags, a branch pins its version
-  // against [[expireVersions]]; unlike tags, a branch's referenced buckets also
-  // pin their BYTES against [[vacuum]] (a branch is a live line of development —
-  // reclaiming under it would destroy uncommitted-to-main work).
+  // through the same ledger so streams and compactions can never collide with it)
+  // and main's files are never touched. Branches live in the state record
+  // ([[BranchRef]]: head version and fork base). Like tags, a branch pins its
+  // version against [[expireVersions]]; unlike tags, a branch's referenced buckets
+  // also pin their BYTES against [[vacuum]] (a branch is a live line of development
+  // — reclaiming under it would destroy uncommitted-to-main work).
 
   /** Current branches, name -> version (empty if none). */
   def branches(outDir: String): Map[String, Long] =
-    branchRefs(outDir).view.mapValues(_._1).toMap
-
-  /** Branch refs with their recorded fork point: name -> (head version, the MAIN
-    * HEAD version when the branch was created). The base is what makes
-    * [[fastForward]] safe: publishing a branch whose base is behind main's current
-    * HEAD would silently discard everything main committed since the fork. */
-  private def branchRefs(outDir: String): Map[String, (Long, Long)] = {
-    val p = Paths.get(outDir).resolve("branches.json")
-    if (!Files.exists(p)) return Map.empty
-    val Line = """\{"name":"([^"]+)","version":(\d+),"base":(\d+)\}""".r
-    Files.readAllLines(p).asScala.flatMap {
-      case Line(n, v, b) => Some(n -> (v.toLong, b.toLong))
-      case _ => None
-    }.toMap
-  }
+    readState(Paths.get(outDir)).branches.view.mapValues(_.version).toMap
 
   /** Create (or move) the named branch at history version `v` — like [[tag]], a
     * branch can never be born dangling. Records main's CURRENT head version as the
@@ -646,49 +729,36 @@ object SnapshotSink {
       s"branch name '$name' must match ${TagNameRe.regex}")
     require(versions(outDir).contains(v),
       s"cannot branch at version $v — not in history [${versions(outDir).mkString(", ")}]")
-    val base = resolvedHead(outDir)
-    writeBranches(Paths.get(outDir),
-      branchRefs(outDir) + (name -> (v, base)), io)
+    val out = Paths.get(outDir)
+    updateState(out, io)(s =>
+      s.copy(branches = s.branches + (name -> BranchRef(v, resolvedHead(out, s)))))
   }
 
   /** Remove the named branch (idempotent), releasing its expiration AND vacuum
     * pins — the branch's exclusive generations become reclaimable orphans. */
-  def dropBranch(outDir: String, name: String, io: CommitIo = PosixCommitIo): Unit = {
-    val b = branchRefs(outDir)
-    if (b.contains(name)) writeBranches(Paths.get(outDir), b - name, io)
-  }
+  def dropBranch(outDir: String, name: String, io: CommitIo = PosixCommitIo): Unit =
+    updateState(Paths.get(outDir), io)(s => s.copy(branches = s.branches - name))
 
-  /** The version HEAD (manifest.json) currently points at — normally the newest
-    * history entry, but BRANCH commits publish history without moving HEAD, so
-    * this resolves by content identity against the immutable version files. */
-  private def headVersion(outDir: String): Long = {
-    val out = Paths.get(outDir)
-    val head = out.resolve("manifest.json")
-    if (!Files.exists(head)) return 0L
-    val body = Files.readString(head)
-    versions(outDir).reverse
-      .find(v => Files.readString(versionPath(out, v)) == body)
-      .getOrElse(0L)
-  }
-
-  /** [[headVersion]] for the ref operations that record or check a fork point:
-    * HEAD must resolve to a history version, or a branch base (and with it the
+  /** HEAD's version for the ref operations that record or check a fork point: it
+    * must resolve to a retained history version, or a branch base (and with it the
     * fast-forward lost-update guard) would be meaningless — refuse loudly. */
-  private def resolvedHead(outDir: String): Long = {
-    val head = headVersion(outDir)
-    if (head == 0L)
+  private def resolvedHead(out: Path, s: TableState): Long = {
+    if (s.head == 0L || !Files.exists(versionPath(out, s.head)))
       throw new IllegalStateException(
-        s"main HEAD under $outDir resolves to no history version (its manifest " +
+        s"main HEAD under $out resolves to no history version (its manifest " +
           "version was pruned or never published) — a fork point cannot be " +
           "recorded or checked; restore() a retained version to re-anchor HEAD")
-    head
+    s.head
   }
 
-  private def resolveBranch(outDir: String, name: String): Long =
-    branches(outDir).getOrElse(name,
+  private def branchRef(s: TableState, outDir: String, name: String): BranchRef =
+    s.branches.getOrElse(name,
       throw new IllegalArgumentException(
         s"no branch '$name' under $outDir — available: " +
-          s"[${branches(outDir).keys.toSeq.sorted.mkString(", ")}]"))
+          s"[${s.branches.keys.toSeq.sorted.mkString(", ")}]"))
+
+  private def resolveBranch(outDir: String, name: String): Long =
+    branchRef(readState(Paths.get(outDir)), outDir, name).version
 
   /** [[readCommittedAt]] resolved through a named branch. */
   def readCommittedAtBranch(spark: SparkSession, outDir: String, name: String): DataFrame =
@@ -707,38 +777,28 @@ object SnapshotSink {
     * commit main took since the fork (the classic write-audit-publish lost-update
     * pitfall; git's own fast-forward refuses identically). Recover by re-branching
     * from the current HEAD and re-applying the merge, or by an explicit [[restore]]
-    * if overwriting main is truly intended. After a successful publish the
-    * branch's base advances to the new HEAD version, so further branch commits can
-    * fast-forward again; the pointer itself stays (Iceberg fast-forward semantics)
-    * — drop it with [[dropBranch]] once merged, releasing its vacuum pin. */
+    * if overwriting main is truly intended. The same state publish that moves HEAD
+    * advances the branch's base to the new HEAD version, so further branch commits
+    * can fast-forward again; the pointer itself stays (Iceberg fast-forward
+    * semantics) — drop it with [[dropBranch]] once merged, releasing its vacuum
+    * pin. */
   def fastForward(spark: SparkSession, outDir: String, name: String,
       deepVerify: Boolean = false, io: CommitIo = PosixCommitIo): RestoreReport = {
-    val refs = branchRefs(outDir)
-    val (bv, base) = refs.getOrElse(name,
-      throw new IllegalArgumentException(
-        s"no branch '$name' under $outDir — available: " +
-          s"[${refs.keys.toSeq.sorted.mkString(", ")}]"))
-    val head = resolvedHead(outDir)
+    val out = Paths.get(outDir)
+    val s0 = readState(out)
+    val BranchRef(bv, base) = branchRef(s0, outDir, name)
+    val head = resolvedHead(out, s0)
     if (head != base)
       throw new IllegalStateException(
         s"not a fast-forward: main HEAD is at version $head but branch '$name' " +
           s"forked at version $base — publishing would discard main's commits " +
           s"since the fork; re-branch from the current HEAD and re-apply, or use " +
           "restore() to overwrite explicitly")
-    val report = restore(spark, outDir, bv, deepVerify, io)
-    writeBranches(Paths.get(outDir),
-      refs + (name -> (bv, report.newVersion)), io)
-    report
-  }
-
-  private def writeBranches(out: Path, b: Map[String, (Long, Long)],
-      io: CommitIo): Unit = {
-    val body = b.toSeq.sortBy(_._1)
-      .map { case (n, (v, base)) => s"""{"name":"$n","version":$v,"base":$base}""" }
-      .mkString("", "\n", "\n")
-    val tmp = Files.createTempFile(out, ".branches", ".tmp")
-    Files.writeString(tmp, body)
-    io.publishFile(tmp, out.resolve("branches.json"))
+    republish(spark, out, bv, deepVerify, io) { v => s =>
+      val moved = movesHead(head)(v)(s)
+      moved.copy(branches =
+        moved.branches.updatedWith(name)(_.map(_.copy(base = v))))
+    }
   }
 
   /** Buckets whose committed state DIFFERS between history versions `fromV` and
@@ -767,18 +827,10 @@ object SnapshotSink {
     * re-read. Same expiration contract as [[readCommittedAt]]. */
   def readChangesBetween(spark: SparkSession, outDir: String,
       fromV: Long, toV: Long): DataFrame = {
-    val out = Paths.get(outDir)
     val changed = changedBuckets(spark, outDir, fromV, toV).toSet
-    val entries = readManifestAt(spark, outDir, toV).filter(e => changed(e.bucket))
-    val files = entries.flatMap(e => e.files.map(f => bucketDir(out, e.bucket).resolve(f)))
-    val missing = files.filterNot(Files.isRegularFile(_))
-    require(missing.isEmpty,
-      s"incremental read $fromV -> $toV is EXPIRED: ${missing.size} of " +
-        s"${files.size} data files were reclaimed. First missing: " +
-        missing.headOption.getOrElse("-"))
-    if (files.isEmpty) emptyCommitted(spark, outDir)
-    else spark.read.option("basePath", out.resolve("data").toString)
-      .parquet(files.map(_.toString): _*)
+    readEntries(spark, outDir,
+      readManifestAt(spark, outDir, toV).filter(e => changed(e.bucket)),
+      s"incremental read $fromV -> $toV")
   }
 
   /** Outcome of a [[deleteDocs]] takedown: rows actually removed and the buckets
@@ -825,7 +877,7 @@ object SnapshotSink {
       io: CommitIo = PosixCommitIo): DeleteReport = {
     require(docIds.nonEmpty, "deleteDocs needs at least one doc_id")
     val out = Paths.get(outDir)
-    val existing = readManifest(spark, outDir)
+    val (head, existing) = baseManifest(out)
     require(existing.nonEmpty, s"no committed snapshot under $outDir")
     require(existing.map(_.bucket % nBuckets).distinct.size == existing.size,
       "manifest is not canonical (multiple generations per base bucket — an " +
@@ -861,7 +913,8 @@ object SnapshotSink {
         .filter(col("doc_id").isNull || !col("doc_id").isInCollection(targets))
       commitWaveFlat(spark, out, kept, rewritten,
         existing.filterNot(e => rewritten.contains(e.bucket)).sortBy(_.bucket), t0,
-        io = io, layoutCols = rewriteLayout(kept), spanMetrics = hasSpanMetrics(kept))
+        movesHead(head), io = io, layoutCols = rewriteLayout(kept),
+        spanMetrics = hasSpanMetrics(kept))
     }
     deleteRecursively(out.resolve("staging"))
     DeleteReport(hits.values.sum, rewritten)
@@ -932,10 +985,10 @@ object SnapshotSink {
     * staging op. Same MERGE semantics and crash-heal idempotency, but main is
     * bit-for-bit untouched: the base manifest is the branch head's, every rewritten
     * bucket lands at a FRESH generation (`gen * nBuckets + base` — the
-    * compaction/stream composite-id space, reserved through the same sidecar ledger
-    * so a concurrent stream batch or compaction can never allocate into it), each
-    * wave publishes a history version WITHOUT the HEAD swap, and the branch pointer
-    * advances only after the last wave — by one version for a default single-wave
+    * compaction/stream composite-id space, reserved through the same ledger so a
+    * concurrent stream batch or compaction can never allocate into it), each wave
+    * publishes a history version WITHOUT moving HEAD, and the branch pointer
+    * advances only with the last wave — by one version for a default single-wave
     * merge (a crashed merge leaves the pointer — and main — where they were;
     * re-running heals at a new generation, and the abandoned partial generation is
     * an unreferenced orphan for [[vacuum]]).
@@ -963,19 +1016,13 @@ object SnapshotSink {
       io: CommitIo,
       toBranch: Option[String]): UpsertReport = {
     val out = Paths.get(outDir)
-    val baseVersion = toBranch.map(resolveBranch(outDir, _))
-    val existing = baseVersion match {
-      case Some(v) => readManifestAt(spark, outDir, v)
-      case None => readManifest(spark, outDir)
-    }
+    val (baseVersion, existing) = baseManifest(out, toBranch)
     require(existing.nonEmpty, s"no committed snapshot under $outDir")
     require(existing.map(_.bucket % nBuckets).distinct.size == existing.size,
       "manifest is not canonical (multiple generations per base bucket — an " +
         "un-compacted stream): run compact() first, a document's rows may " +
         "straddle generations")
-    val committedCols = baseVersion
-      .map(readCommittedAt(spark, outDir, _))
-      .getOrElse(readCommitted(spark, outDir))
+    val committedCols = readCommittedAt(spark, outDir, baseVersion)
       .drop("bucket").columns
     require(updates.columns.sorted.sameElements(committedCols.sorted),
       s"updates schema ${updates.columns.sorted.mkString("(", ",", ")")} must match " +
@@ -998,20 +1045,11 @@ object SnapshotSink {
         s"wrong nBuckets for this snapshot?"))
 
     // BRANCH mode: reserve one fresh generation for every bucket this merge
-    // rewrites — through the stream sidecar's ledger (negative key: real batchIds
-    // are >= 0) so a concurrent [[commitStreamBatch]] allocation or [[compact]]
+    // rewrites, so a concurrent [[commitStreamBatch]] allocation or [[compact]]
     // sees the reservation and allocates above it. Main's dirs are never touched.
-    val gen: Long = toBranch match {
-      case None => -1L
-      case Some(_) if affectedBases.isEmpty => -1L
-      case Some(_) =>
-        val recorded = readBatchBases(out)
-        val g = (existing.map(_.bucket / nBuckets) ++
-          readManifest(spark, outDir).map(_.bucket / nBuckets) ++
-          recorded.values.map(_ / nBuckets)).foldLeft(0L)(math.max) + 1
-        recordBatchBases(out, io, recorded + (-g -> g * nBuckets))
-        g
-    }
+    val gen: Long =
+      if (toBranch.isEmpty || affectedBases.isEmpty) -1L
+      else allocateGeneration(out, io, None, existing, nBuckets) / nBuckets
 
     var manifest = existing.sortBy(_.bucket)
     var matchedDocs = 0L
@@ -1019,7 +1057,9 @@ object SnapshotSink {
     var replacedRows = 0L
     var upsertRows = 0L
     val rewritten = Seq.newBuilder[Long]
-    affectedBases.grouped(waveSize).zipWithIndex.foreach { case (wave, wi) =>
+    val waves = affectedBases.grouped(waveSize).toSeq
+    var head = baseVersion
+    waves.zipWithIndex.foreach { case (wave, wi) =>
       val t0 = System.nanoTime()
       val oldIds = wave.map(idOfBase)
       val targetIds =
@@ -1075,25 +1115,23 @@ object SnapshotSink {
       // prior-rows>0 buckets must not stage empty (same silent-loss refusal as
       // resume); every affected bucket receives >= 1 update row anyway
       val expectNonEmpty = entries.filter(_.rows > 0).map(e => targetOf(e.bucket)).toSet
-      val (m2, _) = commitWaveFlat(spark, out, merged, targetIds,
-        manifest.filterNot(e => oldIds.contains(e.bucket)), t0,
+      // the branch pointer advances ONLY with the last wave — a crashed branch
+      // merge leaves the pointer (and main) untouched; re-running heals
+      val commit: Commit = toBranch match {
+        case None => movesHead(head)
+        case Some(name) if wi == waves.size - 1 => advancesBranch(name)
+        case Some(_) => _ => s => s
+      }
+      val (m2, _, v) = commitWaveFlat(spark, out, merged, targetIds,
+        manifest.filterNot(e => oldIds.contains(e.bucket)), t0, commit,
         expectNonEmpty = expectNonEmpty, io = io,
-        layoutCols = rewriteLayout(merged), spanMetrics = hasSpanMetrics(merged),
-        headSwap = toBranch.isEmpty)
+        layoutCols = rewriteLayout(merged), spanMetrics = hasSpanMetrics(merged))
       manifest = m2
+      head = v
       rewritten ++= targetIds
       if (wi + 1 >= crashAfterWaves) throw new InjectedCrash(wi)
     }
     deleteRecursively(out.resolve("staging"))
-    // the branch pointer advances ONLY once every wave committed — a crashed
-    // branch merge leaves the pointer (and main) untouched; re-running heals.
-    // An empty update set committed nothing: the pointer must not move (the
-    // current history tail may be someone else's version entirely).
-    if (affectedBases.nonEmpty) toBranch.foreach { name =>
-      val refs = branchRefs(outDir)
-      val base = refs(name)._2
-      writeBranches(out, refs + (name -> (versions(outDir).last, base)), io)
-    }
     UpsertReport(matchedDocs, insertedDocs, replacedRows, upsertRows,
       rewritten.result())
   }
@@ -1104,7 +1142,7 @@ object SnapshotSink {
    * re-read metrics -> atomic per-bucket publish -> distributed hash -> manifest
    * republish). Manifest/bucket ids are `allocatedGeneration * nBuckets + bucket`
    * (Long arithmetic — no lifetime cap from Int overflow): the generation comes
-   * from the sidecar transaction log, NOT batchId itself, so batches and
+   * from the ledger ([[allocateGeneration]]), NOT batchId itself, so batches and
    * compaction rewrites share one strictly-increasing id space (generation ==
    * batchId for a fresh sequential stream); a RE-DELIVERED batchId (foreachBatch
    * replays the last uncommitted batch after a crash) resolves to its recorded
@@ -1124,39 +1162,28 @@ object SnapshotSink {
     val out = Paths.get(outDir)
     Files.createDirectories(out.resolve("data"))
     // BRANCH mode (streaming write-audit-publish): the batch builds on the BRANCH
-    // head's manifest, publishes history without the HEAD swap, and advances the
-    // branch pointer — main is untouched until [[fastForward]]. Generation
-    // allocation is unchanged (the sidecar ledger is branch-agnostic), so batches,
-    // branch merges, and compactions still share one strictly-increasing id space.
-    val branchVersion = toBranch.map(resolveBranch(outDir, _))
-    // Composite base comes from the sidecar transaction log, NOT batchId*nBuckets:
-    // compact() writes its canonical generation at max+1, which is exactly the id
-    // range `batchId * nBuckets` would hand the NEXT micro-batch — the skip-verify
-    // would then find the compacted generation "already committed" and silently
-    // swallow the whole batch. Allocating the next free generation at commit time
-    // (and recording batchId -> base so a re-delivered batch reuses its allocation)
+    // head's manifest and its commit advances the branch pointer instead of HEAD —
+    // main is untouched until [[fastForward]]. Generation allocation is unchanged
+    // (the ledger is branch-agnostic), so batches, branch merges, and compactions
+    // still share one strictly-increasing id space.
+    val (baseVersion, existing) = baseManifest(out, toBranch)
+    // Composite base comes from the ledger, NOT batchId*nBuckets: compact() writes
+    // its canonical generation at max+1, which is exactly the id range
+    // `batchId * nBuckets` would hand the NEXT micro-batch — the skip-verify would
+    // then find the compacted generation "already committed" and silently swallow
+    // the whole batch. Allocating the next free generation at commit time (and
+    // recording batchId -> base so a re-delivered batch reuses its allocation)
     // keeps ids strictly increasing across batches AND compactions. For a fresh
     // sequential stream the allocation degenerates to generation == batchId.
-    val recorded = readBatchBases(out)
-    val base = recorded.getOrElse(batchId, {
-      val maxKnown = (readManifest(spark, outDir).map(_.bucket) ++
-        recorded.values.map(_ + nBuckets - 1)).foldLeft(-1L)(math.max)
-      val b = if (maxKnown < 0) 0L else ((maxKnown / nBuckets) + 1) * nBuckets
-      recordBatchBases(out, io, recorded + (batchId -> b))
-      b
-    })
+    val base = allocateGeneration(out, io, Some(batchId), existing, nBuckets)
     val ids = (base until base + nBuckets)
-    val existing = branchVersion match {
-      case Some(v) => readManifestAt(spark, outDir, v)
-      case None => readManifest(spark, outDir)
-    }
     val (valid, _) = verifyEntries(spark, out,
       existing.filter(e => ids.contains(e.bucket)), deepVerify)
     val committed = valid.map(_.bucket).toSet
     // compacted-away ids are ALSO committed state (their rows live on in the
     // canonical generation): a re-delivery arriving after an ill-timed compaction
     // must skip them, or it would duplicate every row and resurrect takedown
-    // deletes (see [[readCompactedIds]])
+    // deletes (see [[TableState]])
     val compacted = readCompactedIds(out)
     val todo = ids.filterNot(committed).filterNot(compacted)
     if (todo.isEmpty) return Seq.empty
@@ -1166,13 +1193,8 @@ object SnapshotSink {
     val withBucket = flat
       .withColumn("bucket", lit(base) + bucketOf(col("doc_id"), nBuckets))
       .filter(col("bucket").isin(todo: _*))
-    commitWaveFlat(spark, out, withBucket, todo, kept, System.nanoTime(), io = io,
-      headSwap = toBranch.isEmpty)
-    toBranch.foreach { name =>
-      val refs = branchRefs(outDir)
-      val bs = refs(name)._2
-      writeBranches(out, refs + (name -> (versions(outDir).last, bs)), io)
-    }
+    commitWaveFlat(spark, out, withBucket, todo, kept, System.nanoTime(),
+      toBranch.fold(movesHead(baseVersion) _)(advancesBranch), io = io)
     todo
   }
 
@@ -1209,12 +1231,12 @@ object SnapshotSink {
    * `compactThreshold` hook runs exactly there). The pathological interleave — a
    * batch re-delivered AFTER its composite ids were compacted away (crash between
    * sink commit and checkpoint advance, compaction while the stream is down) — is
-   * additionally made safe by the compacted-ids sidecar ([[readCompactedIds]]):
+   * additionally made safe by the state record's compacted ids ([[TableState]]):
    * every merged-away id is recorded before its bytes are reclaimed, and
    * [[commitStreamBatch]] skips recorded ids on re-delivery, so the replay can
    * neither duplicate rows nor resurrect takedown-deleted documents
    * (StreamingTakedownSpec). The hook discipline remains the right deploy shape;
-   * the sidecar is the backstop that turns the scaladoc rule into a guarantee.
+   * the record is the backstop that turns the scaladoc rule into a guarantee.
    */
   /** `layout`: optional COMPUTED clustering keys for the rewritten files (e.g. a
     * [[graft.operators.Layout.zval]] z-order curve over (lang, offset)). Compaction
@@ -1232,7 +1254,7 @@ object SnapshotSink {
       io: CommitIo = PosixCommitIo,
       layout: Seq[Column] = Seq.empty): CompactReport = {
     val out = Paths.get(outDir)
-    val existing = readManifest(spark, outDir)
+    val (head0, existing) = baseManifest(out)
     val canonical = existing.map(_.bucket % nBuckets).distinct.size == existing.size
     if (existing.isEmpty || canonical)
       return CompactReport(
@@ -1244,17 +1266,15 @@ object SnapshotSink {
         "verification — heal them first (re-deliver the stream batch / re-run the " +
         "batch sink); compacting unverified data would bake corruption into the new " +
         "generation")
-    val headBefore = headVersion(outDir)
-    // next free generation over BOTH the manifest and the stream sidecar's
-    // allocations — a batch that reserved a base but crashed before committing data
-    // must not have its generation stolen by compaction (its re-delivery would then
-    // collide with the compacted ids)
-    val gen = (existing.map(_.bucket / nBuckets) ++
-      readBatchBases(out).values.map(_ / nBuckets)).max + 1
+    // the ledger's allocations count too — a batch that reserved a base but crashed
+    // before committing data must not have its generation stolen by compaction (its
+    // re-delivery would then collide with the compacted ids)
+    val gen = allocateGeneration(out, io, None, existing, nBuckets) / nBuckets
     val dataPath = out.resolve("data")
     val byBase = valid.groupBy(e => e.bucket % nBuckets)
     val bases = byBase.keys.toSeq.sorted
     var manifest = existing.sortBy(_.bucket)
+    var head = head0
     var totalRows = 0L
 
     bases.grouped(waveSize).foreach { baseWave =>
@@ -1264,7 +1284,19 @@ object SnapshotSink {
       val targetIds = baseWave.map(gen * nBuckets + _)
       val srcDirs = srcIds.map(bucketDir(out, _)).filter(listDataFiles(_).nonEmpty)
       val manifestLess = manifest.filterNot(e => srcIds.contains(e.bucket))
-      val (newManifest, waveRows) =
+      // ONE state publish per wave: HEAD moves, the merged-away ids are recorded
+      // (before their bytes are reclaimed below: once recorded, a re-delivered
+      // stream batch skips them), and a branch forked at the replaced HEAD moves
+      // its base along — compaction changes no row, so it is still forked at the
+      // same logical table, and [[fastForward]] must not refuse it
+      val prev = head
+      val commit: Commit = v => s =>
+        movesHead(prev)(v)(s).copy(
+          compactedIds = (s.compactedIds ++ srcIds).distinct.sorted,
+          branches = s.branches.map { case (n, b) =>
+            n -> (if (b.base == prev) b.copy(base = v) else b)
+          })
+      val (newManifest, waveRows, v) =
         if (srcDirs.isEmpty) {
           // every source bucket in this wave is EMPTY (a legal committed state) —
           // nothing to stage or read; publish empty merged directories THROUGH the
@@ -1285,8 +1317,7 @@ object SnapshotSink {
             n_spans = 0L, n_media = 0L, n_text = 0L, n_err = 0L, ocr_chars = 0L,
             n_words = 0L, conf_sum = 0.0, wall_ms = wallMs))
           val m2 = (manifestLess ++ entries).sortBy(_.bucket)
-          writeManifest(out, m2, io)
-          (m2, 0L)
+          (m2, 0L, writeManifest(out, m2, io, commit))
         } else {
           // basePath keeps the `bucket` partition column; inferred int for small ids,
           // long once composite stream ids grow — normalize through the long cast
@@ -1298,7 +1329,7 @@ object SnapshotSink {
           val expectNonEmpty = baseWave
             .filter(b => byBase(b).map(_.rows).sum > 0)
             .map(gen * nBuckets + _).toSet
-          commitWaveFlat(spark, out, merged, targetIds, manifestLess, t0,
+          commitWaveFlat(spark, out, merged, targetIds, manifestLess, t0, commit,
             expectNonEmpty = expectNonEmpty, io = io,
             layoutCols = rewriteLayout(merged),
             layoutExprs =
@@ -1313,27 +1344,15 @@ object SnapshotSink {
           s"but the source manifest entries recorded $expectRows — source " +
           "directories left in place for inspection")
       manifest = newManifest
+      head = v
       totalRows += waveRows
-      // record the merged-away ids BEFORE reclaiming their bytes: once the log
-      // holds an id, a re-delivered stream batch skips it ([[commitStreamBatch]]);
-      // a crash between the record and the GC leaves orphan dirs for [[vacuum]].
-      // Ids a live branch still reads keep their bytes; [[vacuum]] reclaims them
-      // once the branch is dropped or moves on.
-      recordCompactedIds(out, io, readCompactedIds(out) ++ srcIds)
+      // a crash before the GC leaves orphan dirs for [[vacuum]]. Ids a live branch
+      // still reads keep their bytes; [[vacuum]] reclaims them once the branch is
+      // dropped or moves on.
       val live = referencedBuckets(spark, outDir, manifest)
       srcIds.filterNot(live).foreach(b => deleteRecursively(bucketDir(out, b)))
     }
     deleteRecursively(out.resolve("staging"))
-    // compaction preserves content, so a branch forked at the pre-compaction HEAD
-    // is still forked at the same logical table: move its base to the compacted
-    // HEAD, or [[fastForward]] would refuse it as if main had taken a commit
-    val refs = branchRefs(outDir)
-    if (headBefore > 0 && refs.values.exists(_._2 == headBefore)) {
-      val headAfter = versions(outDir).last
-      writeBranches(out, refs.map { case (n, (v, b)) =>
-        n -> (v, if (b == headBefore) headAfter else b)
-      }, io)
-    }
     CompactReport(gen, bases, valid.size.toLong, totalRows, noop = false)
   }
 
@@ -1391,14 +1410,6 @@ object SnapshotSink {
 
   // ---- protocol internals -------------------------------------------------------
 
-  /**
-   * The shared wave-commit body (batch [[run]] waves AND streaming micro-batches):
-   * write `flat` (which must carry the `bucket` ids to commit) to staging with the
-   * north rule's range layout, derive lineage metrics by RE-READING the staged
-   * parquet, atomically publish each bucket, hash the wave's files in one
-   * distributed job, and republish the manifest. Returns (updated manifest, rows
-   * committed this wave).
-   */
   /** Per-bucket lineage metrics recorded in a wave commit. Extraction waves fill all
     * fields from [[SpanMetricsAgg]]; generic table commits ([[TableSnapshot]]) carry
     * row counts only, zeros elsewhere — one manifest format for both. */
@@ -1406,6 +1417,15 @@ object SnapshotSink {
       rows: Long, nMedia: Long = 0L, nText: Long = 0L, nErr: Long = 0L,
       ocrChars: Long = 0L, nWords: Long = 0L, confSum: Double = 0.0)
 
+  /**
+   * The shared wave-commit body (batch [[run]] waves AND streaming micro-batches):
+   * write `flat` (which must carry the `bucket` ids to commit) to staging with the
+   * north rule's range layout, derive lineage metrics by RE-READING the staged
+   * parquet, atomically publish each bucket, hash the wave's files in one
+   * distributed job, publish the next manifest version and commit it with the
+   * caller's state edit `commit` (which names the ref that moves). Returns (updated
+   * manifest, rows committed this wave, the published version).
+   */
   private[sources] def commitWaveFlat(
       spark: SparkSession,
       out: Path,
@@ -1413,12 +1433,12 @@ object SnapshotSink {
       wave: Seq[Long],
       manifest0: Seq[ManifestEntry],
       t0: Long,
+      commit: Commit,
       expectNonEmpty: Set[Long] = Set.empty,
       io: CommitIo = PosixCommitIo,
       layoutCols: Seq[String] = Seq("bucket", "doc_id", "offset"),
       layoutExprs: Option[Seq[Column]] = None,
-      spanMetrics: Boolean = true,
-      headSwap: Boolean = true): (Seq[ManifestEntry], Long) = {
+      spanMetrics: Boolean = true): (Seq[ManifestEntry], Long, Long) = {
     val dataDir = out.resolve("data")
     val staging = out.resolve("staging")
     deleteRecursively(staging)
@@ -1489,13 +1509,13 @@ object SnapshotSink {
         "the snapshot; delete the manifest entry to force a rebuild)")
     val wallMs = ((System.nanoTime() - t0) / 1e6).toLong
 
-    // per-bucket publish + manifest republish, through the CommitIo seam. For an
+    // per-bucket publish + manifest publish, through the CommitIo seam. For an
     // IN-PLACE rewrite (heal, deleteDocs/deleteIds, compact re-key) the live
     // destination is first MOVED ASIDE to a `.replaced` sibling, not deleted: a
     // crash between the move and the publish then leaves the pre-image on disk for
     // recovery instead of neither version (POSIX offers no atomic directory swap —
-    // the manifest republish below is the real commit point; on object stores the
-    // metadata-pointer swap IS the whole story, see [[CommitIo]]). The trash dir is
+    // the state publish below is the real commit point; on object stores the
+    // metadata publish IS the whole story, see [[CommitIo]]). The trash dir is
     // removed after a successful publish, and [[vacuum]] sweeps any crash leftovers.
     wave.foreach { b =>
       val src = staging.resolve(s"bucket=$b")
@@ -1540,8 +1560,7 @@ object SnapshotSink {
         wall_ms = wallMs)).sortBy(_.bucket)
       waveRows += m.rows
     }
-    writeManifest(out, manifest, io, headSwap)
-    (manifest, waveRows)
+    (manifest, waveRows, writeManifest(out, manifest, io, commit))
   }
 
   private[sources] def bucketDir(out: Path, bucket: Long): Path =
@@ -1557,10 +1576,10 @@ object SnapshotSink {
    * committed byte without ever pulling data through the driver.
    */
   private def fastVerify(out: Path, e: ManifestEntry): Boolean = {
-    // Manifests from an older format version read back with null parallel arrays
-    // (Spark's JSON source yields null for absent fields): a null or length-skewed
-    // array set is a FAILED verification — the bucket is invalidated and rebuilt —
-    // never an NPE that kills the advertised resume path (ADVICE r2).
+    // A manifest line with null or length-skewed parallel arrays (an older format
+    // version, a hand-edited file) is a FAILED verification — the bucket is
+    // invalidated and rebuilt — never an NPE that kills the advertised resume path
+    // (ADVICE r2).
     val arraysOk = e.files != null && e.file_sizes != null && e.file_hashes != null &&
       e.files.size == e.file_sizes.size && e.files.size == e.file_hashes.size
     val dir = bucketDir(out, e.bucket)
@@ -1669,41 +1688,22 @@ object SnapshotSink {
   private def hex(bytes: Array[Byte]): String =
     bytes.map(b => f"${b & 0xff}%02x").mkString
 
-  /** Publish the manifest: serialize all entries as JSON Lines to a temp file in the
-    * same directory, then swap it in through the [[CommitIo]] seam (atomic rename on
-    * POSIX/HDFS; on an object store this republish IS the metadata-pointer swap —
-    * see [[CommitIo]]'s scaladoc).
-    *
-    * The IMMUTABLE history copy (`manifest-v%06d.json`, the time-travel sequence) is
-    * published FIRST, the HEAD swap second: a crash between the two leaves an extra
-    * unreferenced history file (harmless; the next publish just takes the next
-    * number), never a HEAD whose version is missing from history. */
-  private def writeManifest(out: Path, entries: Seq[ManifestEntry],
-      io: CommitIo = PosixCommitIo, headSwap: Boolean = true): Long = {
-    val body = entries.map(jsonOf).mkString("", "\n", "\n")
-    val v = versions(out.toString).lastOption.getOrElse(0L) + 1
-    val tmpV = Files.createTempFile(out, ".manifest", ".tmp")
-    Files.writeString(tmpV, body)
-    io.publishFile(tmpV, versionPath(out, v))
-    // a BRANCH commit publishes history only — HEAD (main) must not move
-    if (headSwap) {
-      val tmp = Files.createTempFile(out, ".manifest", ".tmp")
-      Files.writeString(tmp, body)
-      io.publishFile(tmp, out.resolve("manifest.json"))
+  /** Publish `entries` as the next manifest version (JSON lines, create-new through
+    * the [[CommitIo]] seam; a number a concurrent writer took first is skipped),
+    * then commit it with one state publish of `commit(v)` — the commit point. A
+    * crash between the two leaves an extra unreferenced history file (harmless; the
+    * next publish just takes the next number), never a HEAD whose version is
+    * missing from history. Returns the version. */
+  private def writeManifest(out: Path, entries: Seq[ManifestEntry], io: CommitIo,
+      commit: Commit): Long = {
+    val body = entries.map(Serialization.write(_)).mkString("", "\n", "\n")
+    @tailrec def publish(): Long = {
+      val v = versions(out.toString).lastOption.getOrElse(0L) + 1
+      if (publishNew(out, io, versionPath(out, v), body)) v else publish()
     }
+    val v = publish()
+    updateState(out, io)(commit(v))
     v
-  }
-
-  private def jsonOf(e: ManifestEntry): String = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    s"""{"bucket":${e.bucket},"rows":${e.rows},"content_hash":${q(e.content_hash)},""" +
-      s""""files":[${e.files.map(q).mkString(",")}],""" +
-      s""""file_sizes":[${e.file_sizes.mkString(",")}],""" +
-      s""""file_hashes":[${e.file_hashes.map(q).mkString(",")}],""" +
-      s""""engine_version":${q(e.engine_version)},"n_spans":${e.n_spans},""" +
-      s""""n_media":${e.n_media},"n_text":${e.n_text},"n_err":${e.n_err},""" +
-      s""""ocr_chars":${e.ocr_chars},"n_words":${e.n_words},""" +
-      s""""conf_sum":${e.conf_sum},"wall_ms":${e.wall_ms}}"""
   }
 
   private[graft] def deleteRecursively(p: Path): Unit =

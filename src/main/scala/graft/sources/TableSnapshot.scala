@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -47,7 +46,7 @@ object TableSnapshot {
     Files.createDirectories(out.resolve("data"))
     recordSchema(out, df.schema, io)
 
-    val existing = SnapshotSink.readManifest(spark, outDir)
+    val (head0, existing) = SnapshotSink.baseManifest(out)
     val (valid, invalid) = SnapshotSink.verifyEntries(spark, out, existing, deepVerify)
     invalid.foreach(e => SnapshotSink.deleteRecursively(
       SnapshotSink.bucketDir(out, e.bucket)))
@@ -58,15 +57,17 @@ object TableSnapshot {
 
     val processed = Seq.newBuilder[Long]
     var totalRows = 0L
+    var head = head0
     todo.grouped(waveSize).foreach { wave =>
       val t0 = System.nanoTime()
       val waveDf = df.filter(col("bucket").isin(wave.map(_.toInt): _*))
-      val (newManifest, waveRows) = SnapshotSink.commitWaveFlat(
-        spark, out, waveDf, wave, manifest, t0,
+      val (newManifest, waveRows, v) = SnapshotSink.commitWaveFlat(
+        spark, out, waveDf, wave, manifest, t0, SnapshotSink.movesHead(head),
         expectNonEmpty = mustBeNonEmpty.intersect(wave.toSet), io = io,
         layoutCols = Seq("bucket") ++ df.columns.find(_ != "bucket").toSeq,
         spanMetrics = false)
       manifest = newManifest
+      head = v
       processed ++= wave
       totalRows += waveRows
     }
@@ -99,7 +100,7 @@ object TableSnapshot {
       io: CommitIo = PosixCommitIo): SnapshotSink.DeleteReport = {
     require(ids.nonEmpty, "deleteIds needs at least one id")
     val out = Paths.get(outDir)
-    val existing = SnapshotSink.readManifest(spark, outDir)
+    val (head0, existing) = SnapshotSink.baseManifest(out)
     require(existing.nonEmpty, s"no committed table under $outDir")
     require(existing.forall(e => e.bucket >= 0 && e.bucket < nBuckets),
       s"manifest buckets outside [0, $nBuckets) — wrong nBuckets for this table?")
@@ -121,6 +122,7 @@ object TableSnapshot {
       .map(_.bucket).sorted
 
     var manifest = existing.sortBy(_.bucket)
+    var head = head0
     var deleted = 0L
     val rewritten = Seq.newBuilder[Long]
     affected.foreach { b =>
@@ -135,10 +137,12 @@ object TableSnapshot {
         // which a bare filter would drop — silent data loss in the rewrite
         val kept = cur.filter(col(idCol).isNull || !col(idCol).isInCollection(ids))
           .withColumn("bucket", lit(b))
-        val (m2, _) = SnapshotSink.commitWaveFlat(
-          spark, out, kept, Seq(b), manifest.filterNot(_.bucket == b), t0, io = io,
+        val (m2, _, v) = SnapshotSink.commitWaveFlat(
+          spark, out, kept, Seq(b), manifest.filterNot(_.bucket == b), t0,
+          SnapshotSink.movesHead(head), io = io,
           layoutCols = SnapshotSink.rewriteLayout(kept), spanMetrics = false)
         manifest = m2
+        head = v
         deleted += matches
         rewritten += b
       }
@@ -189,7 +193,7 @@ object TableSnapshot {
 
   // ---- schema evolution ---------------------------------------------------------
   //
-  // Iceberg-style table-level schema history (`schema.json`, JSON lines of
+  // Iceberg-style table-level schema history (in the state record, as a list of
   // {version, ddl}): every commit records the writer's schema; an ADD-COLUMN
   // evolution (all previously-recorded columns still present with identical types —
   // nullability aside, which parquet's reader widens anyway) appends a new version,
@@ -201,37 +205,29 @@ object TableSnapshot {
 
   final case class SchemaVersion(version: Long, ddl: String)
 
-  /** Recorded schema versions, ascending (empty for a pre-evolution table). */
-  def schemaHistory(outDir: String): Seq[SchemaVersion] = {
-    val p = Paths.get(outDir).resolve("schema.json")
-    if (!Files.exists(p)) return Seq.empty
-    val Line = """\{"version":(\d+),"ddl":"(.*)"\}""".r
-    Files.readAllLines(p).asScala.toSeq.flatMap {
-      case Line(v, ddl) => Some(SchemaVersion(v.toLong, ddl.replace("\\\"", "\"")))
-      case _ => None
-    }
-  }
+  /** Recorded schema versions, ascending (empty before the first commit). */
+  def schemaHistory(outDir: String): Seq[SchemaVersion] =
+    SnapshotSink.readState(Paths.get(outDir)).schemas
 
   private def recordSchema(out: Path, schema: StructType, io: CommitIo): Unit = {
-    val hist = schemaHistory(out.toString)
     val ddl = schema.toDDL
-    if (hist.lastOption.exists(_.ddl == ddl)) return // unchanged — common case
-    hist.lastOption.foreach { head =>
-      val prev = StructType.fromDDL(head.ddl)
-      val cur = schema.fields.map(f => f.name -> f.dataType).toMap
-      val broken = prev.fields.filter(f => !cur.get(f.name).contains(f.dataType))
-      require(broken.isEmpty,
-        s"incompatible schema change for committed table $out: column(s) " +
-          broken.map(f => s"${f.name}:${f.dataType.sql}").mkString("[", ", ", "]") +
-          " dropped or retyped vs recorded schema version " + head.version +
-          " — add-column evolution only; drops/retypes need an explicit rewrite")
+    SnapshotSink.updateState(out, io) { s =>
+      s.schemas.lastOption match {
+        case Some(head) if head.ddl == ddl => s // unchanged — common case
+        case last =>
+          last.foreach { head =>
+            val prev = StructType.fromDDL(head.ddl)
+            val cur = schema.fields.map(f => f.name -> f.dataType).toMap
+            val broken = prev.fields.filter(f => !cur.get(f.name).contains(f.dataType))
+            require(broken.isEmpty,
+              s"incompatible schema change for committed table $out: column(s) " +
+                broken.map(f => s"${f.name}:${f.dataType.sql}").mkString("[", ", ", "]") +
+                " dropped or retyped vs recorded schema version " + head.version +
+                " — add-column evolution only; drops/retypes need an explicit rewrite")
+          }
+          s.copy(schemas =
+            s.schemas :+ SchemaVersion(last.map(_.version).getOrElse(0L) + 1, ddl))
+      }
     }
-    val entries = hist :+ SchemaVersion(hist.lastOption.map(_.version).getOrElse(0L) + 1, ddl)
-    val body = entries.map(e =>
-      s"""{"version":${e.version},"ddl":"${e.ddl.replace("\"", "\\\"")}"}""")
-      .mkString("", "\n", "\n")
-    val tmp = Files.createTempFile(out, ".schema", ".tmp")
-    Files.writeString(tmp, body)
-    io.publishFile(tmp, out.resolve("schema.json"))
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import graft.operators.Dedup
 import graft.sources.SnapshotSink
 import org.apache.spark.sql.functions._
@@ -35,12 +37,18 @@ class IncrementalDedupSpec extends AnyFunSuite {
     // old-old pairs (if any) must NOT leak into the incremental result
     assert(inc.forall(p => p._2 >= 100000L))
 
-    // rerun: base signatures come back from the committed table (manifest HEAD
-    // unchanged — no bucket was rewritten), result identical
-    val manifest = java.nio.file.Paths.get(sigDir, "manifest.json")
-    val before = java.nio.file.Files.readAllBytes(manifest)
+    // rerun: base signatures come back from the committed table (no new manifest
+    // version and no new state record — no bucket was rewritten), result identical
+    def metadataFiles(): Seq[String] = {
+      val stream = java.nio.file.Files.list(java.nio.file.Paths.get(sigDir))
+      try stream.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("manifest-v") || n.startsWith("state-")).toSeq.sorted
+      finally stream.close()
+    }
+    val before = metadataFiles()
+    assert(before.exists(_.startsWith("state-")))
     assert(pairs(Dedup.neardupIncremental(documents, delta, sigDir)) === inc)
-    assert(java.util.Arrays.equals(before, java.nio.file.Files.readAllBytes(manifest)),
+    assert(metadataFiles() === before,
       "second run must resume the committed signature table, not rewrite it")
   }
 }

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /**
  * Schema evolution on the committed table store (Iceberg add-column parity):
- * `schema.json` records an append-only version history; an add-column commit leaves
+ * the table's state record keeps an append-only schema history; an add-column commit leaves
  * old buckets' files untouched (new columns read back NULL via mergeSchema); a
  * dropped/retyped column is refused loudly. Resume composes with evolution: an
  * invalidated old-schema bucket heals in the new shape.

@@ -1,0 +1,194 @@
+package graft
+
+import java.io.IOException
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import graft.operators.ExtractPipeline
+import graft.sources.{CommitIo, Interleave, PosixCommitIo, SnapshotSink}
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+/**
+ * The table's metadata is two immutable file kinds — manifest versions and state
+ * records — and every metadata change is one create-new state publish
+ * ([[SnapshotSink.updateState]]). This spec races writers through the [[CommitIo]]
+ * seam (a competing operation runs right before the first state publish is
+ * delegated): ref edits re-apply and both land, a HEAD mover that lost refuses
+ * loudly. It also pins the atomicity of a fast-forward, the job-free metadata reads
+ * and the on-disk layout after every kind of write.
+ */
+class SnapshotStateSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestSession.spark
+  private val sfDir = "/root/testdata/sf0.001"
+  private val NB = 8
+
+  private def tmpDir(tag: String): String = {
+    val p = Paths.get(sys.props("java.io.tmpdir"), s"graft-state-$tag")
+    SnapshotSink.deleteRecursively(p)
+    p.toString
+  }
+
+  private def docs: DataFrame = Interleave.docs(spark, sfDir)
+
+  private def head(out: String): Long = SnapshotSink.readState(Paths.get(out)).head
+
+  private def isState(dst: Path): Boolean = dst.getFileName.toString.startsWith("state-")
+
+  /** Publishes through [[PosixCommitIo]], running `competitor` once, right before
+    * the first publish of a metadata file other than a manifest version — the
+    * operation's first state record. */
+  private def racing(competitor: => Unit): CommitIo = new CommitIo {
+    private var fired = false
+    override def publishDir(src: Path, dst: Path): Unit = PosixCommitIo.publishDir(src, dst)
+    override def publishFile(tmp: Path, dst: Path): Unit = {
+      if (!fired && !dst.getFileName.toString.startsWith("manifest-v")) {
+        fired = true
+        competitor
+      }
+      PosixCommitIo.publishFile(tmp, dst)
+    }
+  }
+
+  private def docIdsInBucket(out: String, b: Long, n: Int): Seq[String] =
+    SnapshotSink.readCommitted(spark, out)
+      .filter(col("bucket") === b).select(col("doc_id")).distinct()
+      .orderBy(col("doc_id")).limit(n)
+      .collect().map(_.getString(0)).toSeq
+
+  private def updateRows(ids: Seq[String]): DataFrame = {
+    import spark.implicits._
+    ids.map(id => (id, "en", 1, 0, "text", s"upd:$id",
+        null: String, true, null: String, 0, 0.0))
+      .toDF("doc_id", "lang", "n_doc_spans", "offset", "kind",
+        "text", "media_ref", "ok", "error", "n_words", "conf_sum")
+  }
+
+  private def textOf(out: String, id: String): Seq[String] =
+    SnapshotSink.readCommitted(spark, out).filter(col("doc_id") === id)
+      .select(col("text")).collect().map(_.getString(0)).toSeq
+
+  test("two racing tag edits both land") {
+    val out = tmpDir("tagtag")
+    SnapshotSink.run(docs, out, nBuckets = NB, waveSize = 4) // v1, v2
+    SnapshotSink.tag(out, "a", 1L, io = racing(SnapshotSink.tag(out, "b", 2L)))
+    assert(SnapshotSink.tags(out) === Map("a" -> 1L, "b" -> 2L))
+  }
+
+  test("a tag edit racing a takedown: both survive") {
+    val out = tmpDir("tagdelete")
+    SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB) // v1
+    val victims = docIdsInBucket(out, 3L, 2)
+    val report = SnapshotSink.deleteDocs(spark, out, victims, NB,
+      io = racing(SnapshotSink.tag(out, "seed", 1L)))
+    assert(report.deletedRows > 0L)
+    assert(SnapshotSink.tags(out) === Map("seed" -> 1L))
+    assert(head(out) === 2L)
+    assert(SnapshotSink.readCommitted(spark, out)
+      .filter(col("doc_id").isInCollection(victims)).count() === 0L)
+  }
+
+  test("restore racing an upsert on main: the losing HEAD mover refuses, HEAD stays") {
+    val out = tmpDir("restoreupsert")
+    SnapshotSink.run(docs, out, nBuckets = NB, waveSize = 4) // v1 = buckets 0-3, v2
+    val victim = docIdsInBucket(out, 5L, 1)
+    var winner = 0L
+    val ex = intercept[IllegalStateException] {
+      SnapshotSink.restore(spark, out, 1L, io = racing {
+        SnapshotSink.upsertDocs(spark, out, updateRows(victim), NB)
+        winner = head(out)
+      })
+    }
+    assert(ex.getMessage.contains("lost update refused"))
+    // the restore published its manifest (v3) before the upsert took v4, but only
+    // the upsert's commit is HEAD: the merge is not silently rolled back
+    assert(winner === 4L)
+    assert(head(out) === winner)
+    assert(SnapshotSink.readManifest(spark, out) ===
+      SnapshotSink.readManifestAt(spark, out, winner))
+    assert(SnapshotSink.readManifest(spark, out).size === NB)
+    assert(textOf(out, victim.head) === Seq(s"upd:${victim.head}"))
+  }
+
+  test("fastForward is one state publish: a failed publish moves neither HEAD nor the base") {
+    val out = tmpDir("ffatomic")
+    SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB) // v1
+    SnapshotSink.branch(out, "wap", 1L)
+    val victim = docIdsInBucket(out, 6L, 1)
+    SnapshotSink.upsertDocsToBranch(spark, out, "wap", updateRows(victim), NB) // v2
+    val failing = new CommitIo {
+      override def publishDir(src: Path, dst: Path): Unit =
+        PosixCommitIo.publishDir(src, dst)
+      override def publishFile(tmp: Path, dst: Path): Unit =
+        if (isState(dst)) throw new IOException("injected state publish failure")
+        else PosixCommitIo.publishFile(tmp, dst)
+    }
+    intercept[IOException](SnapshotSink.fastForward(spark, out, "wap", io = failing))
+    val s = SnapshotSink.readState(Paths.get(out))
+    assert(s.head === 1L)
+    assert(s.branches("wap") === SnapshotSink.BranchRef(2L, 1L))
+
+    val r = SnapshotSink.fastForward(spark, out, "wap")
+    val after = SnapshotSink.readState(Paths.get(out))
+    assert(after.head === r.newVersion)
+    assert(after.branches("wap") === SnapshotSink.BranchRef(2L, r.newVersion))
+    assert(textOf(out, victim.head) === Seq(s"upd:${victim.head}"))
+  }
+
+  test("manifest, tag and branch reads run no Spark job") {
+    val out = tmpDir("nojob")
+    SnapshotSink.run(docs, out, nBuckets = NB, waveSize = 4) // v1, v2
+    SnapshotSink.tag(out, "t", 1L)
+    SnapshotSink.branch(out, "b", 2L)
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      assert(SnapshotSink.readManifest(spark, out).size === NB)
+      assert(SnapshotSink.readManifestAt(spark, out, 1L).size === 4)
+      assert(SnapshotSink.tags(out) === Map("t" -> 1L))
+      assert(SnapshotSink.branches(out) === Map("b" -> 2L))
+      ListenerDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get === 0)
+  }
+
+  test("every kind of write leaves only manifest versions and state records in the root") {
+    val out = tmpDir("layout")
+    SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB) // v1
+    SnapshotSink.tag(out, "seed", 1L)
+    SnapshotSink.branch(out, "wap", 1L)
+    SnapshotSink.upsertDocsToBranch(spark, out, "wap",
+      updateRows(docIdsInBucket(out, 2L, 1)), NB)
+    SnapshotSink.fastForward(spark, out, "wap")
+    val key = substring(col("doc_id"), 5, Interleave.DocIdDigits).cast("long")
+    val fresh = docs.filter(key < 100)
+      .withColumn("doc_id", format_string(s"doc-%0${Interleave.DocIdDigits}d",
+        key + 700000))
+    assert(SnapshotSink.commitStreamBatch(ExtractPipeline.extractFlat(fresh), out,
+      batchId = 0L, NB).nonEmpty)
+    val rows = SnapshotSink.readCommitted(spark, out).count()
+    assert(!SnapshotSink.compact(spark, out, NB).noop)
+    assert(SnapshotSink.readCommitted(spark, out).count() === rows)
+
+    val stream = Files.list(Paths.get(out))
+    val files =
+      try stream.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(_.getFileName.toString).toSeq
+      finally stream.close()
+    val Metadata = """(manifest-v|state-)\d{6}\.json""".r
+    assert(files.nonEmpty && files.forall(Metadata.matches), files.sorted)
+    // HEAD is the record's explicit version: here the compaction's last commit
+    assert(head(out) === SnapshotSink.versions(out).last)
+    assert(SnapshotSink.verifySnapshot(spark, out) === Seq.empty)
+  }
+}

@@ -2,7 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.sources.{Interleave, SnapshotSink}
+import scala.jdk.CollectionConverters._
+
+import graft.sources.{Interleave, SnapshotSink, TableSnapshot}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -185,21 +187,28 @@ class SnapshotTimeTravelSpec extends AnyFunSuite {
     assert(SnapshotSink.versions(out) === Seq(3L)) // v3 still pinned by 'prod' + keepLast
   }
 
-  test("pre-history snapshots degrade gracefully") {
-    val out = tmpDir("prehist")
+  test("an old-layout table root is refused loudly, naming the retired file") {
+    val out = tmpDir("oldlayout")
     SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB)
-    // simulate a snapshot written before history existed: delete the version files
-    SnapshotSink.versions(out).foreach(v =>
-      Files.delete(Paths.get(out, f"manifest-v$v%06d.json")))
-    assert(SnapshotSink.versions(out) === Seq.empty)
-    assert(SnapshotSink.readManifest(spark, out).size === NB) // HEAD unaffected
-    val ex = intercept[IllegalArgumentException] {
-      SnapshotSink.readManifestAt(spark, out, 1L)
+    // the seven-file layout kept HEAD, refs and ledgers in replaced sidecar files;
+    // a root holding one of them and no state record must never read as empty
+    val stream = Files.list(Paths.get(out))
+    try stream.iterator().asScala
+      .filter(_.getFileName.toString.startsWith("state-")).foreach(Files.delete)
+    finally stream.close()
+    Seq("manifest.json", "refs.json", "branches.json", "stream-batches.json",
+        "compacted-ids.json", "schema.json").foreach { f =>
+      Files.writeString(Paths.get(out, f), "{}\n")
+      Seq[() => Any](
+        () => SnapshotSink.readManifest(spark, out),
+        () => SnapshotSink.tags(out),
+        () => SnapshotSink.branches(out),
+        () => TableSnapshot.schemaHistory(out),
+        () => SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB)).foreach { op =>
+        val ex = intercept[IllegalStateException](op())
+        assert(ex.getMessage.contains(s"retired metadata file $f"))
+      }
+      Files.delete(Paths.get(out, f))
     }
-    assert(ex.getMessage.contains("available: []"))
-    // the next commit starts history at 1
-    SnapshotSink.deleteRecursively(Paths.get(out, "data", "bucket=5"))
-    SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB)
-    assert(SnapshotSink.versions(out) === Seq(1L))
   }
 }

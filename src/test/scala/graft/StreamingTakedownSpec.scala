@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Paths
 
 import graft.operators.ExtractPipeline
-import graft.sources.{Interleave, SnapshotSink}
+import graft.sources.{Interleave, PosixCommitIo, SnapshotSink}
 import graft.streaming.StreamingExtract
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -13,9 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * Streaming × takedown interplay (VERDICT r4 #5): a takedown between stream drains
  * — including the pathological crash interleave where an already-committed batch
  * is RE-DELIVERED after its generation was compacted away — can never resurrect
- * deleted documents or duplicate rows. The compacted-ids sidecar is the backstop:
- * ids merged into a canonical generation are recorded before their bytes are
- * reclaimed, and a re-delivered batch skips them.
+ * deleted documents or duplicate rows. The state record's compacted ids are the
+ * backstop: ids merged into a canonical generation are recorded before their bytes
+ * are reclaimed, and a re-delivered batch skips them.
  */
 class StreamingTakedownSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -63,7 +63,7 @@ class StreamingTakedownSpec extends AnyFunSuite {
     // ---- the pathological replay: batch 0 re-delivered AFTER compact+takedown --
     // (crash between sink commit and checkpoint advance, compaction while the
     // stream was down). Its generation-0 ids are gone from the manifest; without
-    // the compacted-ids sidecar this would re-commit the whole batch — every row
+    // the recorded compacted ids this would re-commit the whole batch — every row
     // duplicated and the victims RESURRECTED. It must be a full skip.
     assert(SnapshotSink.commitStreamBatch(flatA1, out, batchId = 0L) === Seq.empty,
       "re-delivered compacted-away batch must skip, not re-commit")
@@ -99,12 +99,14 @@ class StreamingTakedownSpec extends AnyFunSuite {
     docs.filter(key >= 250).repartition(4).write.mode("append").parquet(table)
     StreamingExtract.drainOnceCommitted(spark, table, out, ckpt)
 
-    // batch 2 reserves its generation in the sidecar but "crashes" before any
+    // batch 2 reserves its generation in the ledger but "crashes" before any
     // data commits: the on-disk state of an allocation-only crash is exactly the
-    // recorded allocations plus one extra line — write it directly
+    // recorded allocations plus one more entry — publish it directly
     val base2 = 2L * NB
-    java.nio.file.Files.writeString(Paths.get(out, "stream-batches.json"),
-      s"""{"batch":0,"base":0}\n{"batch":1,"base":$NB}\n{"batch":2,"base":$base2}\n""")
+    SnapshotSink.updateState(Paths.get(out), PosixCommitIo)(s =>
+      s.copy(batchBases = s.batchBases + (2L -> base2)))
+    assert(SnapshotSink.readState(Paths.get(out)).batchBases ===
+      Map(0L -> 0L, 1L -> NB.toLong, 2L -> base2))
     val flatB = ExtractPipeline.extractFlat(
       docs.filter(key < 50).withColumn("doc_id",
         format_string(s"doc-%0${Interleave.DocIdDigits}d", key + 800000)))
