@@ -373,7 +373,8 @@ object SparkEntry {
     * single-sourced beside the SQL that predicts it). The oracle predicts per-bucket
     * lineage with exactly the non-victim spans AND `rewritten` = 1 precisely on
     * buckets that contained a victim — a takedown that rewrites untouched buckets,
-    * misses a victim's rows, or loses bystander rows hash-mismatches. */
+    * misses a victim's rows, or loses bystander rows hash-mismatches. A rewritten
+    * bucket lands at a fresh generation, so rows are grouped by base id. */
   private def snapshotTakedown(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.SnapshotSink
     val nb = SnapshotSink.DefaultBuckets
@@ -391,7 +392,8 @@ object SparkEntry {
     val report = SnapshotSink.deleteDocs(s, out.toString, victims, nb)
     val rw = report.rewrittenBuckets.map(java.lang.Long.valueOf)
     SnapshotSink.lineage(s, out.toString)
-      .select(col("bucket").cast("int").as("bucket"), col("rows").as("rows_"),
+      .select(pmod(col("bucket"), lit(nb.toLong)).cast("int").as("bucket"),
+        col("rows").as("rows_"),
         col("n_err"),
         when(col("bucket").isInCollection(rw), 1).otherwise(0).as("rewritten"))
       .orderBy(col("bucket"))
@@ -460,11 +462,12 @@ object SparkEntry {
       nBuckets = nb, waveSize = nb)
     val report = SnapshotSink.upsertDocs(s, out.toString,
       upsertUpdateSet(s, dir), nb)
-    val rw = report.rewrittenBuckets.map(java.lang.Long.valueOf)
+    // rewritten buckets land at a fresh generation: group by base id
+    val rwBases = report.rewrittenBuckets.map(b => java.lang.Long.valueOf(b % nb))
     contentAgg(SnapshotSink.readCommitted(s, out.toString),
-        col("bucket").cast("int"))
+        pmod(col("bucket").cast("long"), lit(nb.toLong)).cast("int"))
       .withColumn("rewritten",
-        when(col("bucket").cast("long").isInCollection(rw), 1).otherwise(0))
+        when(col("bucket").cast("long").isInCollection(rwBases), 1).otherwise(0))
       .orderBy(col("bucket"))
   }
 

@@ -9,9 +9,10 @@ import java.nio.file.{Files, Path, StandardCopyOption}
  * hash -> manifest version + state record, [[SnapshotSink]]) is storage-agnostic;
  * only these two operations depend on what the underlying store can do atomically.
  *
- * Metadata files are immutable and numbered, so [[publishFile]] is PUBLISH-IF-ABSENT:
- * nothing is ever replaced in place, and of two writers racing for one number only
- * one wins. Implementations:
+ * Nothing is ever replaced in place. Bucket directories are written once (a
+ * rewrite lands at a fresh generation), and metadata files are immutable and
+ * numbered, so [[publishFile]] is PUBLISH-IF-ABSENT: of two writers racing for one
+ * number only one wins. Implementations:
  *
  *  - [[PosixCommitIo]] (default): atomic directory RENAME and a no-replace file
  *    link — correct on any POSIX filesystem.
@@ -26,8 +27,10 @@ import java.nio.file.{Files, Path, StandardCopyOption}
  *    pointer that moves.
  */
 trait CommitIo {
-  /** Make a staged bucket DIRECTORY visible at its final path. Must be atomic with
-    * respect to readers: they see the whole directory or none of it. */
+  /** Make a staged bucket DIRECTORY visible at its final path, which does not exist
+    * yet: every commit lands at a fresh or cleared bucket id, so this never replaces
+    * a directory. Must be atomic with respect to readers: they see the whole
+    * directory or none of it. */
   def publishDir(src: Path, dst: Path): Unit
 
   /** Publish the fully-written temp file `tmp` at `dst` if `dst` does not exist yet;

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.matching.Regex
 
 import graft.operators.{EngineConfig, ExtractPipeline, SpanMetricsAgg}
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
@@ -134,8 +134,7 @@ object SnapshotSink {
       io: CommitIo = PosixCommitIo): SnapshotReport = {
     val spark = docs.sparkSession
     val out = Paths.get(outDir)
-    val dataDir = out.resolve("data")
-    Files.createDirectories(dataDir)
+    Files.createDirectories(out.resolve("data"))
 
     // -- step 1: idempotent skip via content hash ---------------------------------
     // (name+size check is driver-side METADATA only; the byte-level hash check runs
@@ -180,21 +179,26 @@ object SnapshotSink {
       }
     }
     val (valid, invalid) = verifyEntries(spark, out, existing, deepVerify)
-    // A NON-canonical manifest (multi-generation, mid-flight stream) with a
-    // failed-verify composite bucket must fail LOUDLY before anything is deleted:
-    // run() can only re-extract base buckets 0..nBuckets-1 from the source corpus,
-    // so deleting a composite id's data here would be unrecoverable (the stream
-    // checkpoint has advanced past that batch) while the manifest still lists it.
-    // Heal path for streams: re-deliver the batch, or compact() verified
-    // generations first.
-    require(
-      existing.map(_.bucket % nBuckets).distinct.size == existing.size
-        || invalid.isEmpty,
+    // Generation-aware resume: a rewritten or COMPACTED snapshot's entries live at
+    // `gen*nBuckets + base` ([[compact]]). Whenever each base bucket appears at most
+    // once in the manifest (canonical — true for batch manifests, where id == base,
+    // and true by construction after any rewrite), resume works per BASE and
+    // re-commits an invalidated bucket under its EXISTING manifest id, so rewrites
+    // never break the heal-from-source path. On a NON-canonical manifest (a
+    // mid-flight stream with several generations per base) run() extracts NOTHING:
+    // with multiple generations live, "base bucket b is missing" cannot be
+    // distinguished from "batch for b hasn't arrived yet", and committing a fresh
+    // extraction at the base ids would DUPLICATE every streamed row the moment both
+    // are read back. Verify-only + loud invalid refusal is the safe contract; a
+    // failed-verify composite id must fail LOUDLY before anything is deleted, since
+    // run() cannot re-extract it from the source corpus (the stream checkpoint has
+    // advanced past that batch) — healing belongs to re-delivery / compact().
+    val canonical = isCanonical(existing, nBuckets)
+    require(canonical || invalid.isEmpty,
       s"bucket(s) ${invalid.map(_.bucket).sorted.mkString(",")} fail verification " +
         "in a non-canonical (multi-generation stream) manifest — run() cannot " +
         "re-extract composite stream ids; re-deliver the stream batch or compact() " +
         "the verified generations first")
-    invalid.foreach(e => deleteRecursively(dataDir.resolve(s"bucket=${e.bucket}")))
     // Resume-side half of the layout guard: a bucket being RE-extracted whose prior
     // manifest entry recorded rows > 0 must not stage empty — that is the silent-loss
     // signature of an in-range wrong bucket column on a resume (the agreement scan
@@ -202,27 +206,15 @@ object SnapshotSink {
     // stay re-committable as empty.
     val mustBeNonEmpty = invalid.filter(_.rows > 0).map(_.bucket).toSet
     var manifest = valid.sortBy(_.bucket)
-    // Generation-aware resume: a COMPACTED snapshot's entries live at
-    // `gen*nBuckets + base` ([[compact]]). Whenever each base bucket appears at most
-    // once in the manifest (canonical — trivially true for fresh/batch manifests,
-    // where id == base, and true by construction after compaction), resume works per
-    // BASE and re-commits an invalidated bucket under its EXISTING manifest id, so
-    // compaction never breaks the heal-from-source path. On a NON-canonical manifest
-    // (a mid-flight stream with several generations per base) run() extracts
-    // NOTHING: with multiple generations live, "base bucket b is missing" cannot be
-    // distinguished from "batch for b hasn't arrived yet", and committing a fresh
-    // extraction at the base ids would DUPLICATE every streamed row the moment both
-    // are read back. Verify-only + loud invalid refusal (above) is the safe
-    // contract; healing composite ids belongs to stream re-delivery / compact().
-    val canonical = existing.map(_.bucket % nBuckets).distinct.size == existing.size
-    val idOfBase: Long => Long = {
-      val m = existing.map(e => (e.bucket % nBuckets) -> e.bucket).toMap
-      b => m.getOrElse(b, b)
-    }
+    val idOfBase = existing.map(e => (e.bucket % nBuckets) -> e.bucket).toMap
+      .withDefault(identity)
     val validIds = valid.map(_.bucket).toSet
     val todo =
       if (canonical) (0L until nBuckets).filterNot(b => validIds(idOfBase(b)))
       else Seq.empty[Long]
+    // failed-verify bytes and a crashed commit's unreferenced leftovers: a commit
+    // publishes only to absent paths
+    todo.foreach(b => deleteRecursively(bucketDir(out, idOfBase(b))))
 
     val processed = Seq.newBuilder[Long]
     var totalRows = 0L
@@ -246,20 +238,14 @@ object SnapshotSink {
         if (docs.columns.contains("bucket"))
           docs.filter(col("bucket").isin(waveInts: _*)).drop("bucket")
         else docs.filter(bucketOf(col("doc_id"), nBuckets).isin(waveInts: _*))
-      // Staged rows carry their MANIFEST id (== base for uncompacted snapshots; the
-      // compacted-generation id otherwise) so the commit lands at the id the
+      // Staged rows carry their MANIFEST id (== base for unrewritten snapshots; the
+      // rewritten generation's id otherwise) so the commit lands at the id the
       // manifest, readBack layout, and verification already use.
       val targetIds = baseWave.map(idOfBase)
-      val baseCol = bucketOf(col("doc_id"), nBuckets).cast("long")
-      val idCol =
-        if (targetIds == baseWave) baseCol
-        else baseWave.zip(targetIds).foldLeft(lit(-1L)) { case (acc, (b, id)) =>
-          when(baseCol === b, lit(id)).otherwise(acc)
-        }
-      val flat = ExtractPipeline.extractFlat(docsW, config)
-        .withColumn("bucket", idCol)
+      val flat = ExtractPipeline.extractFlat(docsW, config).withColumn("bucket",
+        rekey(bucketOf(col("doc_id"), nBuckets), baseWave.map(b => b -> idOfBase(b))))
       val (newManifest, waveRows, v) =
-        commitWaveFlat(spark, out, flat, targetIds, manifest, t0, movesHead(head),
+        commitWaveFlat(spark, out, Some(flat), targetIds, manifest, t0, movesHead(head),
           expectNonEmpty = mustBeNonEmpty.intersect(targetIds.toSet), io = io)
       manifest = newManifest
       head = v
@@ -275,23 +261,19 @@ object SnapshotSink {
   /** Read the committed span table back (flat schema + bucket partition column) by
     * scanning the whole data directory. Fast and planner-friendly (directory-level
     * partition discovery), but it trusts the directory listing — after a CRASHED
-    * [[compact]] (orphan source dirs not yet GC'd) it double-reads; run [[vacuum]]
-    * first, or use [[readCommitted]], which resolves files through the manifest. */
+    * rewrite (its fresh generation never published, or its sources not yet GC'd) it
+    * double-reads; run [[vacuum]] first, or use [[readCommitted]], which resolves
+    * files through the manifest. */
   def readBack(spark: SparkSession, outDir: String): DataFrame =
     spark.read.parquet(Paths.get(outDir).resolve("data").toString)
 
   /** Manifest-resolved read (Iceberg semantics: the manifest IS the table): scan
-    * exactly the data files the manifest lists, so orphan directories — a crashed
-    * [[compact]]'s un-GC'd sources, an abandoned write — are invisible without any
-    * vacuum. The `basePath` option keeps the `bucket` partition column. Falls back
-    * to an empty [[readBack]] frame when the manifest lists no files (all-empty
-    * buckets) so callers always get the committed schema. */
+    * exactly the data files HEAD's manifest lists, so orphan directories — a crashed
+    * rewrite's fresh generation, an abandoned write — are invisible without any
+    * vacuum. Fails loudly when a listed file is missing ([[readEntries]]). */
   def readCommitted(spark: SparkSession, outDir: String): DataFrame = {
-    val dataPath = Paths.get(outDir).resolve("data")
-    val files = readManifest(spark, outDir).flatMap(e =>
-      e.files.map(f => bucketDir(Paths.get(outDir), e.bucket).resolve(f).toString))
-    if (files.isEmpty) emptyCommitted(spark, outDir)
-    else spark.read.option("basePath", dataPath.toString).parquet(files: _*)
+    val (v, entries) = baseManifest(Paths.get(outDir))
+    readEntries(spark, outDir, entries, s"HEAD (version $v)")
   }
 
   /** Empty frame in the committed schema. When EVERY bucket is empty there is no
@@ -330,13 +312,14 @@ object SnapshotSink {
     * data commit leaves a reservation the re-delivery fills in). `schemas` is
     * [[TableSnapshot]]'s schema history.
     *
-    * `compactedIds` are the ids [[compact]] merged away, recorded in the publish
-    * that moves HEAD past them, before their bytes are GC'd. [[commitStreamBatch]]
-    * skips them: a batch replayed after an ill-timed compaction (crash between sink
-    * commit and checkpoint advance, then compact + takedown while the stream is
-    * down) would otherwise RE-COMMIT them — every row duplicated and
-    * takedown-deleted documents RESURRECTED (StreamingTakedownSpec). A batch that
-    * only reserved a generation is not listed, so its re-delivery still commits. */
+    * `compactedIds` are the ids a [[rewrite]] replaced (compaction, takedown,
+    * merge), recorded in the publish that commits the rewrite, before their bytes
+    * are GC'd. [[commitStreamBatch]] skips them: a batch replayed after an
+    * ill-timed rewrite (crash between sink commit and checkpoint advance, then
+    * compact or takedown while the stream is down) would otherwise RE-COMMIT them
+    * — every row duplicated and takedown-deleted documents RESURRECTED
+    * (StreamingTakedownSpec). A batch that only reserved a generation is not
+    * listed, so its re-delivery still commits. */
   private[graft] final case class TableState(
       head: Long = 0L,
       tags: Map[String, Long] = Map.empty,
@@ -485,6 +468,31 @@ object SnapshotSink {
     v -> (if (v == 0L) Seq.empty else manifestAt(out, v))
   }
 
+  /** One entry per base bucket: true for batch snapshots and after any rewrite;
+    * false mid-stream, where several generations share a base. */
+  private def isCanonical(entries: Seq[ManifestEntry], nBuckets: Int): Boolean =
+    entries.map(_.bucket % nBuckets).distinct.size == entries.size
+
+  /** [[baseManifest]] for a row-level rewrite, which must find a committed,
+    * canonical manifest: a document's rows may straddle generations mid-stream. */
+  private[sources] def canonicalBase(out: Path, branch: Option[String],
+      nBuckets: Int): (Long, Seq[ManifestEntry]) = {
+    val (v, entries) = baseManifest(out, branch)
+    require(entries.nonEmpty, s"no committed snapshot under $out")
+    require(isCanonical(entries, nBuckets),
+      "manifest is not canonical (multiple generations per base bucket — an " +
+        "un-compacted stream): run compact() first, a document's rows may " +
+        "straddle generations")
+    v -> entries
+  }
+
+  /** `base` (a base bucket id) re-keyed to its manifest id: one map lookup shared
+    * by resume waves and rewrites; a base `idOf` does not name maps to -1, which
+    * the stray-bucket gate of [[commitWaveFlat]] refuses. */
+  private[sources] def rekey(base: Column, idOf: Seq[(Long, Long)]): Column =
+    if (idOf.forall { case (b, id) => b == id }) base.cast("long")
+    else coalesce(element_at(typedLit(idOf.toMap), base.cast("long")), lit(-1L))
+
   /** The manifest of history version `v`; fails loudly when it is not retained. */
   private def manifestAt(out: Path, v: Long): Seq[ManifestEntry] = {
     val p = versionPath(out, v)
@@ -507,13 +515,13 @@ object SnapshotSink {
   // `manifest-v%06d.json` and then the state record that names it HEAD (or a branch
   // head) — the Iceberg metadata-version sequence, with the same retention contract:
   // a historical version stays READABLE ([[readCommittedAt]]) for as long as the data
-  // files it references are retained. The protocol's eager GC points — [[compact]]'s
-  // post-swap source-directory delete, [[vacuum]], and [[run]]'s invalidated-bucket
-  // delete — are the `expireSnapshots` analogue: they reclaim bytes and thereby
-  // expire every version that referenced them. Reading an expired version fails
-  // LOUDLY with the missing-file count, never silently short. History files
-  // themselves are O(bytes-of-metadata); [[expireVersions]] prunes them when a
-  // bounded history is wanted.
+  // files it references are retained. The protocol's eager GC points — every
+  // [[rewrite]]'s post-commit delete of the directories it replaced, [[vacuum]], and
+  // [[run]]'s invalidated-bucket delete — are the `expireSnapshots` analogue: they
+  // reclaim bytes and thereby expire every version that referenced them. Reading an
+  // expired version fails LOUDLY with the missing-file count, never silently short.
+  // History files themselves are O(bytes-of-metadata); [[expireVersions]] prunes
+  // them when a bounded history is wanted.
 
   private val VersionFileRe = "manifest-v(\\d+)\\.json".r
 
@@ -553,10 +561,15 @@ object SnapshotSink {
   def readCommittedAt(spark: SparkSession, outDir: String, v: Long): DataFrame =
     readEntries(spark, outDir, readManifestAt(spark, outDir, v), s"snapshot version $v")
 
-  /** Scan exactly the data files `entries` list; `what` names the read in the loud
-    * failure when any of them was reclaimed. */
-  private def readEntries(spark: SparkSession, outDir: String,
-      entries: Seq[ManifestEntry], what: String): DataFrame = {
+  /** Scan exactly the data files `entries` list — the one manifest-resolved scan of
+    * every read and rewrite. The `basePath` option keeps the `bucket` partition
+    * column; `mergeSchema` unions per-file schemas ([[TableSnapshot]]'s add-column
+    * evolution). `what` names the read in the loud failure when any listed file was
+    * reclaimed. Falls back to an empty frame in the committed schema when the
+    * entries list no files (all-empty buckets). */
+  private[sources] def readEntries(spark: SparkSession, outDir: String,
+      entries: Seq[ManifestEntry], what: String,
+      mergeSchema: Boolean = false): DataFrame = {
     val out = Paths.get(outDir)
     val files = entries.flatMap(e => e.files.map(f => bucketDir(out, e.bucket).resolve(f)))
     val missing = files.filterNot(Files.isRegularFile(_))
@@ -567,7 +580,7 @@ object SnapshotSink {
         s"are retained. First missing: ${missing.head}")
     if (files.isEmpty) emptyCommitted(spark, outDir)
     else spark.read.option("basePath", out.resolve("data").toString)
-      .parquet(files.map(_.toString): _*)
+      .option("mergeSchema", mergeSchema).parquet(files.map(_.toString): _*)
   }
 
   /** Prune manifest history to the newest `keepLast` versions, and every state
@@ -833,15 +846,16 @@ object SnapshotSink {
       s"incremental read $fromV -> $toV")
   }
 
-  /** Outcome of a [[deleteDocs]] takedown: rows actually removed and the buckets
-    * rewritten (requested ids absent from the snapshot cost nothing). */
+  /** Outcome of a [[deleteDocs]] takedown: rows actually removed and the new ids of
+    * the buckets rewritten (requested ids absent from the snapshot cost nothing). */
   final case class DeleteReport(deletedRows: Long, rewrittenBuckets: Seq[Long])
 
   /**
    * Row-level DELETE (takedown / right-to-be-forgotten): remove every span of the
    * given doc_ids from the committed snapshot by rewriting ONLY their buckets —
-   * copy-on-write at bucket granularity through the same staged-write -> re-read ->
-   * publish -> distributed-hash -> manifest-republish cycle as every other write.
+   * copy-on-write at bucket granularity through the one rewrite path ([[rewrite]]):
+   * the matched buckets land at a fresh generation, so their new ids are
+   * `gen * nBuckets + base`.
    *
    * Scale shape: the bucket function routes each requested id to exactly one bucket
    * driver-side (no scan), so a takedown of k documents over a 10^12-doc snapshot
@@ -854,20 +868,21 @@ object SnapshotSink {
    *
    * A takedown is ATOMIC: it publishes exactly one manifest version (or none, when
    * nothing matched). A crash before that publish leaves the previous version live
-   * and every data file in place; re-running the takedown is the heal.
+   * and every data file it lists in place; re-running the takedown is the heal.
    *
-   * Deletion is PHYSICAL by design: the rewrite deletes the bucket's old data files,
+   * Deletion is PHYSICAL by design: once the new version is HEAD, the replaced
+   * buckets' directories are deleted even when a live branch still reads them,
    * which EXPIRES every history version that referenced them ([[readCommittedAt]]
    * then fails loudly) — for a takedown that is the point; the bytes must actually
    * go away, not linger behind a time-travel read. Manifest history retains only
    * file NAMES and digests of the old state. The id list is driver-side
    * (`isInCollection` -> an in-filter in codegen), the right tool up to ~10^5 ids;
    * batch-scale purges (a whole source, a crawl slice) should instead filter at
-   * re-extraction or use an anti-join rewrite via [[compact]]-shaped machinery.
+   * re-extraction.
    *
    * Requires a canonical manifest (one entry per base bucket — true for batch
-   * snapshots and anything post-[[compact]]); a mid-stream multi-generation id
-   * space must compact first, because a doc's rows may straddle generations.
+   * snapshots and after any rewrite); a mid-stream multi-generation id space must
+   * compact first, because a doc's rows may straddle generations.
    */
   def deleteDocs(
       spark: SparkSession,
@@ -876,53 +891,40 @@ object SnapshotSink {
       nBuckets: Int = DefaultBuckets,
       io: CommitIo = PosixCommitIo): DeleteReport = {
     require(docIds.nonEmpty, "deleteDocs needs at least one doc_id")
-    val out = Paths.get(outDir)
-    val (head, existing) = baseManifest(out)
-    require(existing.nonEmpty, s"no committed snapshot under $outDir")
-    require(existing.map(_.bucket % nBuckets).distinct.size == existing.size,
-      "manifest is not canonical (multiple generations per base bucket — an " +
-        "un-compacted stream): run compact() first, a document's rows may " +
-        "straddle generations")
-    val entryOfBase = existing.map(e => (e.bucket % nBuckets) -> e).toMap
-    // the same bucket arithmetic as bucketOf, driver-side: numeric doc_id suffix
     val targets = docIds.toSet
-    val affected = targets.toSeq
-      .map(d => java.lang.Long.parseLong(
-        d.drop(4).take(Interleave.DocIdDigits)) % nBuckets)
-      .distinct.flatMap(entryOfBase.get)
-      .filter(_.rows > 0)
-      .sortBy(_.bucket)
-    def scan(entries: Seq[ManifestEntry]): DataFrame =
-      spark.read.option("basePath", out.resolve("data").toString)
-        .parquet(entries.flatMap(e =>
-          e.files.map(f => bucketDir(out, e.bucket).resolve(f).toString)): _*)
-        .withColumn("bucket", col("bucket").cast("long"))
+    // the same bucket arithmetic as bucketOf, driver-side: numeric doc_id suffix
+    val bases = targets.map(d =>
+      java.lang.Long.parseLong(d.drop(4).take(Interleave.DocIdDigits)) % nBuckets)
+    takedown(spark, Paths.get(outDir), nBuckets, io, bases,
+      col("doc_id").isInCollection(targets))
+  }
 
+  /** The takedown body of [[deleteDocs]] and [[TableSnapshot.deleteIds]]: one
+    * grouped count of `matches` over HEAD's entries for `bases`, then one
+    * [[rewrite]] of the buckets that hold a match, keeping every row where
+    * `matches` is not true (NULL-id bystanders included). */
+  private[sources] def takedown(spark: SparkSession, out: Path, nBuckets: Int,
+      io: CommitIo, bases: Set[Long], matches: Column,
+      mergeSchema: Boolean = false): DeleteReport = {
+    val (head, existing) = canonicalBase(out, None, nBuckets)
+    val affected = existing.filter(e => bases(e.bucket % nBuckets) && e.rows > 0)
     val hits: Map[Long, Long] =
       if (affected.isEmpty) Map.empty
-      else scan(affected).filter(col("doc_id").isInCollection(targets))
-        .groupBy(col("bucket")).count()
+      else readEntries(spark, out.toString, affected, "takedown source", mergeSchema)
+        .filter(matches).groupBy(col("bucket").cast("long")).count()
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val matched = affected.filter(e => hits.contains(e.bucket))
-    val rewritten = matched.map(_.bucket)
-    if (matched.nonEmpty) {
-      val t0 = System.nanoTime()
-      // NULL-id bystanders survive (NOT(NULL IN ...) is NULL — a bare filter
-      // would drop them from the rewrite; same guard as TableSnapshot.deleteIds)
-      val kept = scan(matched)
-        .filter(col("doc_id").isNull || !col("doc_id").isInCollection(targets))
-      commitWaveFlat(spark, out, kept, rewritten,
-        existing.filterNot(e => rewritten.contains(e.bucket)).sortBy(_.bucket), t0,
-        movesHead(head), io = io, layoutCols = rewriteLayout(kept),
-        spanMetrics = hasSpanMetrics(kept))
-    }
-    deleteRecursively(out.resolve("staging"))
+    val rewritten =
+      if (matched.isEmpty) Seq.empty
+      else rewrite(spark, out, io, nBuckets, existing, matched, movesHead(head),
+        takedown = true, mergeSchema = mergeSchema)(
+        _.map(_.filter(!coalesce(matches, lit(false)))))
     DeleteReport(hits.values.sum, rewritten)
   }
 
   /** Outcome of an [[upsertDocs]] merge: documents whose rows were replaced
     * (matched), documents newly inserted, the replaced-row count, the upsert-row
-    * count, and the buckets rewritten. */
+    * count, and the new ids of the buckets rewritten. */
   final case class UpsertReport(
       matchedDocs: Long,
       insertedDocs: Long,
@@ -934,20 +936,17 @@ object SnapshotSink {
    * Row-level UPSERT / MERGE (the daily-crawl ingest op): every document present in
    * `updates` has ALL of its committed rows REPLACED by its `updates` rows;
    * documents not yet in the snapshot are inserted — bucket-granular copy-on-write
-   * through the same staged-write -> re-read -> publish -> distributed-hash ->
-   * manifest-republish cycle as every other write. The reference archetype is
-   * `_download_languague`'s replace-if-hash-differs idempotency
-   * (uiucprescon/ocr/languages.py:135-175): re-delivering the same update set is a
-   * no-op in content (the rewrite regenerates byte-identical logical rows).
+   * through the one rewrite path ([[rewrite]]), so the rewritten buckets land at a
+   * fresh generation. The reference archetype is `_download_languague`'s
+   * replace-if-hash-differs idempotency (uiucprescon/ocr/languages.py:135-175):
+   * re-delivering the same update set is a no-op in content (the rewrite
+   * regenerates byte-identical logical rows).
    *
-   * By default the whole merge is ONE commit wave, publishing exactly one manifest
-   * version: it is atomic, and a crash before the publish leaves the previous
-   * version live. An explicit `waveSize` splits the affected buckets into several
-   * waves, each an atomic commit of its own; a merge that crashes between such
-   * waves is healed by simply re-running it — already-merged buckets re-merge
-   * idempotently (the anti-join removes the previous upsert's rows by doc_id before
-   * re-adding them), un-merged buckets merge for the first time (SnapshotUpsertSpec
-   * drives a crash between waves through `crashAfterWaves`).
+   * The whole merge is ONE commit wave, publishing exactly one manifest version (or
+   * none, when `updates` is empty): it is atomic, and a crash before the publish
+   * leaves the previous version live with every file it lists in place. Re-running
+   * the merge is the heal; the crashed attempt's generation is an unreferenced
+   * orphan for [[vacuum]].
    *
    * Scale shape: affected buckets are discovered by ONE distributed distinct over
    * the update set's bucket keys (<= nBuckets rows reach the driver — never the doc
@@ -955,8 +954,8 @@ object SnapshotSink {
    * and rewrites ONLY the affected buckets' committed bytes (manifest-resolved file
    * list), anti-joins out the updated documents' old rows (null-keyed bystanders
    * survive: an anti join never matches a null key), unions the update rows, and
-   * commits. The report counters come from one aggregate per wave. A merge touching
-   * k buckets reads/writes O(k buckets' bytes + updates), never the table. Unlike
+   * commits. The report counters come from one aggregate. A merge touching k
+   * buckets reads/writes O(k buckets' bytes + updates), never the table. Unlike
    * [[deleteDocs]] (bounded driver-side id list by design), the update set stays
    * fully distributed.
    *
@@ -975,23 +974,14 @@ object SnapshotSink {
       outDir: String,
       updates: DataFrame,
       nBuckets: Int = DefaultBuckets,
-      waveSize: Int = Int.MaxValue,
-      crashAfterWaves: Int = Int.MaxValue,
       io: CommitIo = PosixCommitIo): UpsertReport =
-    mergeDocs(spark, outDir, updates, nBuckets, waveSize, crashAfterWaves, io,
-      toBranch = None)
+    mergeDocs(spark, outDir, updates, nBuckets, io, toBranch = None)
 
   /** [[upsertDocs]] committed to a BRANCH instead of main — the write-audit-publish
-    * staging op. Same MERGE semantics and crash-heal idempotency, but main is
-    * bit-for-bit untouched: the base manifest is the branch head's, every rewritten
-    * bucket lands at a FRESH generation (`gen * nBuckets + base` — the
-    * compaction/stream composite-id space, reserved through the same ledger so a
-    * concurrent stream batch or compaction can never allocate into it), each wave
-    * publishes a history version WITHOUT moving HEAD, and the branch pointer
-    * advances only with the last wave — by one version for a default single-wave
-    * merge (a crashed merge leaves the pointer — and main — where they were;
-    * re-running heals at a new generation, and the abandoned partial generation is
-    * an unreferenced orphan for [[vacuum]]).
+    * staging op. Same MERGE semantics, atomicity and crash heal, but main is
+    * bit-for-bit untouched: the base manifest is the branch head's, the publish
+    * advances the branch pointer by one version instead of HEAD, and the replaced
+    * directories stay (main still reads them).
     * Audit the staged result with [[readCommittedAtBranch]] / [[verifySnapshot]],
     * then publish with [[fastForward]]. */
   def upsertDocsToBranch(
@@ -1000,35 +990,25 @@ object SnapshotSink {
       name: String,
       updates: DataFrame,
       nBuckets: Int = DefaultBuckets,
-      waveSize: Int = Int.MaxValue,
-      crashAfterWaves: Int = Int.MaxValue,
       io: CommitIo = PosixCommitIo): UpsertReport =
-    mergeDocs(spark, outDir, updates, nBuckets, waveSize, crashAfterWaves, io,
-      toBranch = Some(name))
+    mergeDocs(spark, outDir, updates, nBuckets, io, toBranch = Some(name))
 
   private def mergeDocs(
       spark: SparkSession,
       outDir: String,
       updates: DataFrame,
       nBuckets: Int,
-      waveSize: Int,
-      crashAfterWaves: Int,
       io: CommitIo,
       toBranch: Option[String]): UpsertReport = {
     val out = Paths.get(outDir)
-    val (baseVersion, existing) = baseManifest(out, toBranch)
-    require(existing.nonEmpty, s"no committed snapshot under $outDir")
-    require(existing.map(_.bucket % nBuckets).distinct.size == existing.size,
-      "manifest is not canonical (multiple generations per base bucket — an " +
-        "un-compacted stream): run compact() first, a document's rows may " +
-        "straddle generations")
+    val (baseVersion, existing) = canonicalBase(out, toBranch, nBuckets)
     val committedCols = readCommittedAt(spark, outDir, baseVersion)
       .drop("bucket").columns
     require(updates.columns.sorted.sameElements(committedCols.sorted),
       s"updates schema ${updates.columns.sorted.mkString("(", ",", ")")} must match " +
         s"the committed table ${committedCols.sorted.mkString("(", ",", ")")}")
     require(!updates.columns.contains("bucket"), "updates must not carry `bucket`")
-    val idOfBase = existing.map(e => (e.bucket % nBuckets) -> e.bucket).toMap
+    val entryOfBase = existing.map(e => (e.bucket % nBuckets) -> e).toMap
 
     // ONE distributed job discovers the affected buckets; only <= nBuckets bucket
     // ids reach the driver. A NULL doc_id in the updates has no bucket to route to
@@ -1040,100 +1020,35 @@ object SnapshotSink {
       .distinct().collect().map(_.getLong(0)).toSeq.sorted
     require(!affectedBases.contains(-1L),
       "updates contain NULL doc_id rows — an upsert row needs an identity")
-    affectedBases.foreach(b => require(idOfBase.contains(b),
+    affectedBases.foreach(b => require(entryOfBase.contains(b),
       s"update routes to base bucket $b but the manifest has no entry for it — " +
         s"wrong nBuckets for this snapshot?"))
+    if (affectedBases.isEmpty) return UpsertReport(0L, 0L, 0L, 0L, Seq.empty)
+    val affected = affectedBases.map(entryOfBase)
+    val updIds = updates.select(col("doc_id")).distinct()
 
-    // BRANCH mode: reserve one fresh generation for every bucket this merge
-    // rewrites, so a concurrent [[commitStreamBatch]] allocation or [[compact]]
-    // sees the reservation and allocates above it. Main's dirs are never touched.
-    val gen: Long =
-      if (toBranch.isEmpty || affectedBases.isEmpty) -1L
-      else allocateGeneration(out, io, None, existing, nBuckets) / nBuckets
-
-    var manifest = existing.sortBy(_.bucket)
-    var matchedDocs = 0L
-    var insertedDocs = 0L
-    var replacedRows = 0L
-    var upsertRows = 0L
-    val rewritten = Seq.newBuilder[Long]
-    val waves = affectedBases.grouped(waveSize).toSeq
-    var head = baseVersion
-    waves.zipWithIndex.foreach { case (wave, wi) =>
-      val t0 = System.nanoTime()
-      val oldIds = wave.map(idOfBase)
-      val targetIds =
-        if (gen >= 0) wave.map(gen * nBuckets + _) else oldIds
-      val idCol =
-        if (targetIds == wave) baseCol
-        else wave.zip(targetIds).foldLeft(lit(-1L)) { case (acc, (b, id)) =>
-          when(baseCol === b, lit(id)).otherwise(acc)
-        }
-      val updW = updates.filter(baseCol.isin(wave.map(_.toInt): _*))
-      val updIds = updW.select(col("doc_id")).distinct()
-      val entries = oldIds.map(id => manifest.find(_.bucket == id).get)
-      val files = entries.flatMap(e =>
-        e.files.map(f => bucketDir(out, e.bucket).resolve(f).toString))
-      val cur =
-        if (files.isEmpty)
-          updW.withColumn("bucket", lit(0L)).limit(0)
-        else spark.read.option("basePath", out.resolve("data").toString)
-          .parquet(files: _*)
-          .withColumn("bucket", col("bucket").cast("long"))
-      // report counters in ONE aggregate per wave over the committed rows being
-      // replaced (side 0) and the update rows (side 1): rows and distinct docs of
-      // each. Update doc_ids are never null (refused above), and a semi join never
-      // matches a null key, so countDistinct sees no nulls it would skip.
-      val hit = col("side") === 0
-      val upd = col("side") === 1
-      val stat = cur.join(updIds, Seq("doc_id"), "left_semi")
-        .select(lit(0).as("side"), col("doc_id"))
-        .unionByName(updW.select(lit(1).as("side"), col("doc_id")))
+    val hit = col("side") === 0
+    val upd = col("side") === 1
+    val updSide = updates.select(lit(1).as("side"), col("doc_id"))
+    val updRows = updates.withColumn("bucket", baseCol)
+    var stat: Row = null
+    val rewritten = rewrite(spark, out, io, nBuckets, existing, affected,
+      toBranch.fold(movesHead(baseVersion) _)(advancesBranch)) { cur =>
+      // report counters in ONE aggregate over the rewrite's own scan of the
+      // committed rows being replaced (side 0) and the update rows (side 1): rows
+      // and distinct docs of each. Update doc_ids are never null (refused above),
+      // and a semi join never matches a null key, so countDistinct sees no nulls
+      // it would skip.
+      stat = cur.fold(updSide)(_.join(updIds, Seq("doc_id"), "left_semi")
+          .select(lit(0).as("side"), col("doc_id")).unionByName(updSide))
         .agg(count(when(hit, lit(1))), countDistinct(when(hit, col("doc_id"))),
           count(when(upd, lit(1))), countDistinct(when(upd, col("doc_id"))))
         .head()
-      replacedRows += stat.getLong(0)
-      matchedDocs += stat.getLong(1)
-      insertedDocs += stat.getLong(3) - stat.getLong(1)
-      upsertRows += stat.getLong(2)
-
-      val targetOf = oldIds.zip(targetIds).toMap
-      // branch mode re-keys the surviving rows to the fresh generation (a
-      // bounded when-chain over the wave's <= waveSize ids; null-id bystanders
-      // keep their non-null bucket column, so none are dropped)
-      val keptRekeyed =
-        if (gen < 0) cur.join(updIds, Seq("doc_id"), "left_anti")
-        else {
-          val remap = oldIds.zip(targetIds).foldLeft(lit(-1L)) {
-            case (acc, (o, t)) =>
-              when(col("bucket").cast("long") === o, lit(t)).otherwise(acc)
-          }
-          cur.join(updIds, Seq("doc_id"), "left_anti")
-            .withColumn("bucket", remap)
-        }
-      val merged = keptRekeyed.unionByName(updW.withColumn("bucket", idCol))
-      // prior-rows>0 buckets must not stage empty (same silent-loss refusal as
-      // resume); every affected bucket receives >= 1 update row anyway
-      val expectNonEmpty = entries.filter(_.rows > 0).map(e => targetOf(e.bucket)).toSet
-      // the branch pointer advances ONLY with the last wave — a crashed branch
-      // merge leaves the pointer (and main) untouched; re-running heals
-      val commit: Commit = toBranch match {
-        case None => movesHead(head)
-        case Some(name) if wi == waves.size - 1 => advancesBranch(name)
-        case Some(_) => _ => s => s
-      }
-      val (m2, _, v) = commitWaveFlat(spark, out, merged, targetIds,
-        manifest.filterNot(e => oldIds.contains(e.bucket)), t0, commit,
-        expectNonEmpty = expectNonEmpty, io = io,
-        layoutCols = rewriteLayout(merged), spanMetrics = hasSpanMetrics(merged))
-      manifest = m2
-      head = v
-      rewritten ++= targetIds
-      if (wi + 1 >= crashAfterWaves) throw new InjectedCrash(wi)
+      Some(cur.fold(updRows)(
+        _.join(updIds, Seq("doc_id"), "left_anti").unionByName(updRows)))
     }
-    deleteRecursively(out.resolve("staging"))
-    UpsertReport(matchedDocs, insertedDocs, replacedRows, upsertRows,
-      rewritten.result())
+    UpsertReport(stat.getLong(1), stat.getLong(3) - stat.getLong(1), stat.getLong(0),
+      stat.getLong(2), rewritten)
   }
 
   /**
@@ -1193,7 +1108,7 @@ object SnapshotSink {
     val withBucket = flat
       .withColumn("bucket", lit(base) + bucketOf(col("doc_id"), nBuckets))
       .filter(col("bucket").isin(todo: _*))
-    commitWaveFlat(spark, out, withBucket, todo, kept, System.nanoTime(),
+    commitWaveFlat(spark, out, Some(withBucket), todo, kept, System.nanoTime(),
       toBranch.fold(movesHead(baseVersion) _)(advancesBranch), io = io)
     todo
   }
@@ -1203,18 +1118,17 @@ object SnapshotSink {
    * typically the composite ids a long-running stream accumulates
    * ([[commitStreamBatch]]: `batchId * nBuckets + bucket`, thousands of small bucket
    * directories at production batch cadence) — into ONE canonical generation of
-   * `nBuckets` buckets at `gen = max(bucket / nBuckets) + 1`.
+   * `nBuckets` buckets at the next free generation.
    *
-   * Per wave of base buckets: read ONLY the wave's source bucket directories
-   * (pruned — never the whole snapshot per wave), re-key each row to
-   * `gen*nBuckets + (bucket % nBuckets)`, and commit through the SAME staged-write ->
-   * re-read-metrics -> publish -> distributed-hash -> manifest-republish cycle as
-   * every other write ([[commitWaveFlat]]). The new generation's directories are NEW
-   * names — nothing is rewritten in place — and the manifest republish is the atomic
-   * swap (source entries out, merged entries in). Source directories are deleted only
-   * AFTER the swap and a row-count reconciliation against their manifest entries, so
-   * a crash at any point leaves a fully readable snapshot; the worst case is orphan
-   * directories, which [[vacuum]] removes (and which MUST be removed before
+   * One [[rewrite]] of every entry: read the verified source files, re-key each row
+   * to `gen*nBuckets + (bucket % nBuckets)`, and commit in ONE wave. Before anything
+   * is published, the staged rows of every new bucket must equal the rows its
+   * source entries recorded; on a mismatch HEAD, history and the compacted ids stay
+   * as they were. The new generation's directories are NEW names — nothing is
+   * rewritten in place — and the state publish is the atomic swap (source entries
+   * out, merged entries in). Source directories are deleted only AFTER that publish,
+   * so a crash at any point leaves a fully readable snapshot; the worst case is
+   * orphan directories, which [[vacuum]] removes (and which MUST be removed before
    * [[readBack]], which scans the whole data directory, is trusted again).
    * Source directories a live BRANCH still reads are kept (the same referenced set
    * as [[vacuum]]), and a branch forked at the pre-compaction HEAD has its fork
@@ -1237,131 +1151,105 @@ object SnapshotSink {
    * neither duplicate rows nor resurrect takedown-deleted documents
    * (StreamingTakedownSpec). The hook discipline remains the right deploy shape;
    * the record is the backstop that turns the scaladoc rule into a guarantee.
+   *
+   * `layout`: optional COMPUTED clustering keys for the rewritten files (e.g. a
+   * [[graft.operators.Layout.zval]] z-order curve over (lang, offset)). Compaction
+   * is THE moment to install a multi-dimensional layout — the data is being
+   * rewritten anyway, so the z-clustering is free, and every later scan's min/max
+   * file skipping prunes range predicates on BOTH curve dimensions
+   * (SnapshotCompactSpec proves the pruning with executed-scan metrics). The keys
+   * are shuffle/clustering expressions only; nothing derived is persisted.
    */
-  /** `layout`: optional COMPUTED clustering keys for the rewritten files (e.g. a
-    * [[graft.operators.Layout.zval]] z-order curve over (lang, offset)). Compaction
-    * is THE moment to install a multi-dimensional layout — the data is being
-    * rewritten anyway, so the z-clustering is free, and every later scan's min/max
-    * file skipping prunes range predicates on BOTH curve dimensions
-    * (SnapshotCompactSpec proves the pruning with executed-scan metrics). The keys
-    * are shuffle/clustering expressions only; nothing derived is persisted. */
   def compact(
       spark: SparkSession,
       outDir: String,
       nBuckets: Int = DefaultBuckets,
-      waveSize: Int = DefaultBuckets,
       deepVerify: Boolean = true,
       io: CommitIo = PosixCommitIo,
       layout: Seq[Column] = Seq.empty): CompactReport = {
     val out = Paths.get(outDir)
-    val (head0, existing) = baseManifest(out)
-    val canonical = existing.map(_.bucket % nBuckets).distinct.size == existing.size
-    if (existing.isEmpty || canonical)
+    val (head, existing) = baseManifest(out)
+    if (existing.isEmpty || isCanonical(existing, nBuckets))
       return CompactReport(
         existing.map(_.bucket / nBuckets).maxOption.getOrElse(0L),
         Seq.empty, 0L, 0L, noop = true)
-    val (valid, invalid) = verifyEntries(spark, out, existing, deepVerify)
+    val (_, invalid) = verifyEntries(spark, out, existing, deepVerify)
     require(invalid.isEmpty,
       s"refusing to compact: bucket(s) ${invalid.map(_.bucket).sorted} fail " +
         "verification — heal them first (re-deliver the stream batch / re-run the " +
         "batch sink); compacting unverified data would bake corruption into the new " +
         "generation")
-    // the ledger's allocations count too — a batch that reserved a base but crashed
-    // before committing data must not have its generation stolen by compaction (its
-    // re-delivery would then collide with the compacted ids)
-    val gen = allocateGeneration(out, io, None, existing, nBuckets) / nBuckets
-    val dataPath = out.resolve("data")
-    val byBase = valid.groupBy(e => e.bucket % nBuckets)
-    val bases = byBase.keys.toSeq.sorted
-    var manifest = existing.sortBy(_.bucket)
-    var head = head0
-    var totalRows = 0L
-
-    bases.grouped(waveSize).foreach { baseWave =>
-      val t0 = System.nanoTime()
-      val src = baseWave.flatMap(byBase)
-      val srcIds = src.map(_.bucket)
-      val targetIds = baseWave.map(gen * nBuckets + _)
-      val srcDirs = srcIds.map(bucketDir(out, _)).filter(listDataFiles(_).nonEmpty)
-      val manifestLess = manifest.filterNot(e => srcIds.contains(e.bucket))
-      // ONE state publish per wave: HEAD moves, the merged-away ids are recorded
-      // (before their bytes are reclaimed below: once recorded, a re-delivered
-      // stream batch skips them), and a branch forked at the replaced HEAD moves
-      // its base along — compaction changes no row, so it is still forked at the
-      // same logical table, and [[fastForward]] must not refuse it
-      val prev = head
-      val commit: Commit = v => s =>
-        movesHead(prev)(v)(s).copy(
-          compactedIds = (s.compactedIds ++ srcIds).distinct.sorted,
-          branches = s.branches.map { case (n, b) =>
-            n -> (if (b.base == prev) b.copy(base = v) else b)
-          })
-      val (newManifest, waveRows, v) =
-        if (srcDirs.isEmpty) {
-          // every source bucket in this wave is EMPTY (a legal committed state) —
-          // nothing to stage or read; publish empty merged directories THROUGH the
-          // CommitIo seam (raw local mkdirs would be invisible to a non-POSIX store)
-          targetIds.foreach { b =>
-            val staged = out.resolve("staging").resolve(s"bucket=$b")
-            deleteRecursively(staged)
-            Files.createDirectories(staged)
-            val dst = bucketDir(out, b)
-            deleteRecursively(dst)
-            io.publishDir(staged, dst)
-          }
-          val wallMs = ((System.nanoTime() - t0) / 1e6).toLong
-          val entries = targetIds.map(b => ManifestEntry(
-            bucket = b, rows = 0L, content_hash = combinedHash(Seq.empty),
-            files = Seq.empty, file_sizes = Seq.empty, file_hashes = Seq.empty,
-            engine_version = graft.operators.DeterministicOcrEngine.Version,
-            n_spans = 0L, n_media = 0L, n_text = 0L, n_err = 0L, ocr_chars = 0L,
-            n_words = 0L, conf_sum = 0.0, wall_ms = wallMs))
-          val m2 = (manifestLess ++ entries).sortBy(_.bucket)
-          (m2, 0L, writeManifest(out, m2, io, commit))
-        } else {
-          // basePath keeps the `bucket` partition column; inferred int for small ids,
-          // long once composite stream ids grow — normalize through the long cast
-          val merged = spark.read.option("basePath", dataPath.toString)
-            .parquet(srcDirs.map(_.toString): _*)
-            .withColumn("bucket",
-              lit(gen * nBuckets) +
-                pmod(col("bucket").cast("long"), lit(nBuckets.toLong)))
-          val expectNonEmpty = baseWave
-            .filter(b => byBase(b).map(_.rows).sum > 0)
-            .map(gen * nBuckets + _).toSet
-          commitWaveFlat(spark, out, merged, targetIds, manifestLess, t0, commit,
-            expectNonEmpty = expectNonEmpty, io = io,
-            layoutCols = rewriteLayout(merged),
-            layoutExprs =
-              if (layout.isEmpty) None else Some(col("bucket") +: layout),
-            spanMetrics = hasSpanMetrics(merged))
-        }
-      // reconcile BEFORE the GC: if the rewrite lost rows, the merged generation is
-      // already live (manifest swapped) but every source byte is still on disk
-      val expectRows = src.map(_.rows).sum
-      require(waveRows == expectRows,
-        s"compaction row mismatch for base buckets $baseWave: staged $waveRows rows " +
-          s"but the source manifest entries recorded $expectRows — source " +
-          "directories left in place for inspection")
-      manifest = newManifest
-      head = v
-      totalRows += waveRows
-      // a crash before the GC leaves orphan dirs for [[vacuum]]. Ids a live branch
-      // still reads keep their bytes; [[vacuum]] reclaims them once the branch is
-      // dropped or moves on.
-      val live = referencedBuckets(spark, outDir, manifest)
-      srcIds.filterNot(live).foreach(b => deleteRecursively(bucketDir(out, b)))
-    }
-    deleteRecursively(out.resolve("staging"))
-    CompactReport(gen, bases, valid.size.toLong, totalRows, noop = false)
+    // a branch forked at the replaced HEAD moves its base along — compaction
+    // changes no row, so it is still forked at the same logical table, and
+    // [[fastForward]] must not refuse it
+    val commit: Commit = v => s =>
+      movesHead(head)(v)(s).copy(branches = s.branches.map { case (n, b) =>
+        n -> (if (b.base == head) b.copy(base = v) else b)
+      })
+    val ids = rewrite(spark, out, io, nBuckets, existing, existing, commit,
+      preservesRows = true, layout = layout)(identity)
+    CompactReport(ids.head / nBuckets, ids.map(_ % nBuckets), existing.size.toLong,
+      existing.map(_.rows).sum, noop = false)
   }
 
-  /** Delete `bucket=*` data directories not referenced by the manifest — orphans left
-    * by a crash between a compaction wave's manifest swap and its source-directory GC
-    * (or by any abandoned write). The manifest is the source of truth (Iceberg
-    * semantics), but [[readBack]] scans the whole data directory, so orphans must be
-    * vacuumed after a crashed compaction before readBack is trusted again. Returns
-    * the removed directory names. */
+  /**
+   * The one rewrite path — [[deleteDocs]], [[upsertDocs]], [[upsertDocsToBranch]],
+   * [[compact]] and [[TableSnapshot.deleteIds]]. Write-once, like the reference's
+   * only durable write (stream to a temp name, check, rename;
+   * uiucprescon/ocr/languages.py:146-175): no live directory is touched until the
+   * state publish that retires it.
+   *
+   *   1. allocate a fresh generation ([[allocateGeneration]]);
+   *   2. scan `replaced`'s manifest-listed files (None when they list none) and
+   *      apply `transform`, whose rows keep their old or base `bucket` id;
+   *   3. re-key every row to `gen * nBuckets + base`;
+   *   4. commit ONE wave ([[commitWaveFlat]]) on top of `base` minus `replaced` —
+   *      with `preservesRows`, every new bucket's staged rows must equal what its
+   *      source entries recorded before anything publishes;
+   *   5. one state publish: `commit` moves the ref and the replaced ids join the
+   *      compacted ids, so a re-delivered stream batch never re-commits them;
+   *   6. GC the replaced directories: all of them for a `takedown` (deletion is
+   *      physical), else those no live ref reads ([[referencedBuckets]]).
+   *
+   * A crash or a lost race before step 5 leaves every live byte in place; the new
+   * generation is an orphan for [[vacuum]]. Returns the new ids.
+   */
+  private[sources] def rewrite(spark: SparkSession, out: Path, io: CommitIo,
+      nBuckets: Int, base: Seq[ManifestEntry], replaced: Seq[ManifestEntry],
+      commit: Commit, takedown: Boolean = false, mergeSchema: Boolean = false,
+      preservesRows: Boolean = false, layout: Seq[Column] = Seq.empty)(
+      transform: Option[DataFrame] => Option[DataFrame]): Seq[Long] = {
+    val t0 = System.nanoTime()
+    val genBase = allocateGeneration(out, io, None, base, nBuckets)
+    val newId = replaced.map(_.bucket % nBuckets).distinct.sorted.map(b => b -> (genBase + b))
+    val scan = Option.when(replaced.exists(_.files.nonEmpty))(
+      readEntries(spark, out.toString, replaced, "rewrite source", mergeSchema))
+    val rows = transform(scan).map(_.withColumn("bucket",
+      rekey(pmod(col("bucket").cast("long"), lit(nBuckets.toLong)), newId)))
+    val replacedIds = replaced.map(_.bucket)
+    val expectRows =
+      if (!preservesRows) Map.empty[Long, Long]
+      else replaced.groupMapReduce(e => genBase + e.bucket % nBuckets)(_.rows)(_ + _)
+    commitWaveFlat(spark, out, rows, newId.map(_._2),
+      base.filterNot(e => replacedIds.contains(e.bucket)), t0,
+      v => s => commit(v)(s).copy(
+        compactedIds = (s.compactedIds ++ replacedIds).distinct.sorted),
+      io = io, expectRows = expectRows,
+      layoutExprs = Option.when(layout.nonEmpty)(col("bucket") +: layout))
+    val live =
+      if (takedown) Set.empty[Long]
+      else referencedBuckets(spark, out.toString, readManifest(spark, out.toString))
+    replacedIds.filterNot(live).foreach(b => deleteRecursively(bucketDir(out, b)))
+    deleteRecursively(out.resolve("staging"))
+    newId.map(_._2)
+  }
+
+  /** Delete `bucket=*` data directories no live ref reads — orphans left by a
+    * [[rewrite]] that crashed or lost its commit (its fresh generation), by a crash
+    * between a rewrite's commit and its GC, or by any abandoned write. The manifest
+    * is the source of truth (Iceberg semantics), but [[readBack]] scans the whole
+    * data directory, so orphans must be vacuumed after a crashed rewrite before
+    * readBack is trusted again. Returns the removed directory names. */
   def vacuum(spark: SparkSession, outDir: String): Seq[String] = {
     val out = Paths.get(outDir)
     val referenced = referencedBuckets(spark, outDir, readManifest(spark, outDir))
@@ -1379,7 +1267,8 @@ object SnapshotSink {
     * development, so its exclusive generations are live bytes, not orphans. Tags
     * deliberately do NOT pin bytes — they pin metadata against expiration only,
     * and a tag over reclaimed data fails loudly at read, by contract. Shared by
-    * [[vacuum]] and [[compact]]'s source GC, so neither reclaims a branch's bytes. */
+    * [[vacuum]] and the GC of every merge and compaction ([[rewrite]]), so neither
+    * reclaims a branch's bytes. */
   private def referencedBuckets(spark: SparkSession, outDir: String,
       head: Seq[ManifestEntry]): Set[Long] =
     (head ++ branches(outDir).values.toSeq.distinct
@@ -1418,42 +1307,42 @@ object SnapshotSink {
       ocrChars: Long = 0L, nWords: Long = 0L, confSum: Double = 0.0)
 
   /**
-   * The shared wave-commit body (batch [[run]] waves AND streaming micro-batches):
-   * write `flat` (which must carry the `bucket` ids to commit) to staging with the
-   * north rule's range layout, derive lineage metrics by RE-READING the staged
-   * parquet, atomically publish each bucket, hash the wave's files in one
-   * distributed job, publish the next manifest version and commit it with the
-   * caller's state edit `commit` (which names the ref that moves). Returns (updated
-   * manifest, rows committed this wave, the published version).
+   * The shared wave-commit body (batch [[run]] waves, streaming micro-batches and
+   * every [[rewrite]]): write `flat` (which must carry the `bucket` ids to commit;
+   * None stages nothing) to staging with the north rule's range layout, derive
+   * lineage metrics by RE-READING the staged parquet, publish each bucket, hash the
+   * wave's files in one distributed job, publish the next manifest version and
+   * commit it with the caller's state edit `commit` (which names the ref that
+   * moves). Returns (updated manifest, rows committed this wave, the published
+   * version).
    */
   private[sources] def commitWaveFlat(
       spark: SparkSession,
       out: Path,
-      flat: DataFrame,
+      flat: Option[DataFrame],
       wave: Seq[Long],
       manifest0: Seq[ManifestEntry],
       t0: Long,
       commit: Commit,
       expectNonEmpty: Set[Long] = Set.empty,
+      expectRows: Map[Long, Long] = Map.empty,
       io: CommitIo = PosixCommitIo,
-      layoutCols: Seq[String] = Seq("bucket", "doc_id", "offset"),
-      layoutExprs: Option[Seq[Column]] = None,
-      spanMetrics: Boolean = true): (Seq[ManifestEntry], Long, Long) = {
-    val dataDir = out.resolve("data")
+      layoutExprs: Option[Seq[Column]] = None): (Seq[ManifestEntry], Long, Long) = {
     val staging = out.resolve("staging")
     deleteRecursively(staging)
 
     // Range repartitioning on (bucket, doc_id, offset) — the north rule's explicit
-    // layout: each output task covers a contiguous doc_id range (data files arrive
-    // sorted, so resume-time doc_id range predicates prune at file granularity),
-    // file sizes balance by sampled distribution, and the trailing `offset` key
-    // splits a pathological multi-page document across tasks instead of pinning
-    // its whole span set to one writer (the write-side form of salting).
-    // `layoutExprs` overrides with COMPUTED layout keys (a z-order curve from
-    // [[compact]]'s layout parameter): the expression is a shuffle key only —
+    // layout ([[rewriteLayout]]): each output task covers a contiguous doc_id range
+    // (data files arrive sorted, so resume-time doc_id range predicates prune at
+    // file granularity), file sizes balance by sampled distribution, and the
+    // trailing `offset` key splits a pathological multi-page document across tasks
+    // instead of pinning its whole span set to one writer (the write-side form of
+    // salting). `layoutExprs` overrides with COMPUTED layout keys (a z-order curve
+    // from [[compact]]'s layout parameter): the expression is a shuffle key only —
     // nothing derived is persisted into the data files.
-    flat.repartitionByRange(layoutExprs.getOrElse(layoutCols.map(col)): _*)
-      .write.partitionBy("bucket").mode("overwrite").parquet(staging.toString)
+    flat.foreach(f =>
+      f.repartitionByRange(layoutExprs.getOrElse(rewriteLayout(f).map(col)): _*)
+        .write.partitionBy("bucket").mode("overwrite").parquet(staging.toString))
 
     // verify + lineage by re-reading what was written (write-path corruption
     // surfaces here, not at some later consumer). An all-empty wave writes no
@@ -1467,7 +1356,7 @@ object SnapshotSink {
         // partition-column type is INFERRED from the directory names (int for small
         // batch ids, long once composite stream ids grow) — normalize to long
         val staged = spark.read.parquet(staging.toString)
-        if (spanMetrics)
+        if (hasSpanMetrics(staged))
           staged
             .groupBy(col("bucket").cast("long").as("bucket"))
             .agg(SpanMetricsAgg.spanMetrics(
@@ -1507,36 +1396,33 @@ object SnapshotSink {
         "manifest entries recorded rows > 0 — refusing to overwrite committed data " +
         "with empty buckets (wrong input `bucket` column, or input changed under " +
         "the snapshot; delete the manifest entry to force a rebuild)")
+    // A row-preserving rewrite (compaction) reconciles per bucket here, before any
+    // publish: a lost or duplicated row leaves HEAD where it was.
+    expectRows.foreach { case (b, n) =>
+      val staged = metrics.get(b).fold(0L)(_.rows)
+      require(staged == n,
+        s"row mismatch for bucket $b: staged $staged rows but the source manifest " +
+          s"entries recorded $n — nothing was published")
+    }
     val wallMs = ((System.nanoTime() - t0) / 1e6).toLong
 
-    // per-bucket publish + manifest publish, through the CommitIo seam. For an
-    // IN-PLACE rewrite (heal, deleteDocs/deleteIds, compact re-key) the live
-    // destination is first MOVED ASIDE to a `.replaced` sibling, not deleted: a
-    // crash between the move and the publish then leaves the pre-image on disk for
-    // recovery instead of neither version (POSIX offers no atomic directory swap —
-    // the state publish below is the real commit point; on object stores the
-    // metadata publish IS the whole story, see [[CommitIo]]). The trash dir is
-    // removed after a successful publish, and [[vacuum]] sweeps any crash leftovers.
+    // per-bucket publish + manifest publish, through the CommitIo seam. Every
+    // destination is ABSENT: rewrites land at a fresh generation, and resume /
+    // re-delivery clear a failed or unreferenced id before staging it, so no live
+    // directory is ever moved or replaced here — the state publish below is the
+    // commit point, and bytes it retires are GC'd only after it.
     wave.foreach { b =>
       val src = staging.resolve(s"bucket=$b")
-      val dst = dataDir.resolve(s"bucket=$b")
-      // outside data/: partition discovery (readBack) must never see the pre-image
-      val trash = dataDir.resolveSibling("trash").resolve(s"bucket=$b")
-      if (Files.exists(dst)) {
-        deleteRecursively(trash)
-        Files.createDirectories(trash.getParent)
-        Files.move(dst, trash)
-      }
+      val dst = bucketDir(out, b)
+      require(!Files.exists(dst), s"refusing to publish over existing $dst")
       if (!Files.exists(src)) Files.createDirectories(src) // empty bucket
       io.publishDir(src, dst)
-      deleteRecursively(trash)
     }
-    deleteRecursively(dataDir.resolveSibling("trash"))
     // per-file (name, size, md5) for the WHOLE wave in one distributed job —
     // executors hash, the driver records digests only (VERDICT r1: no driver-side
     // Files.readAllBytes, and O(1) jobs per wave, not O(buckets))
     val waveStats = batchedFileStats(spark,
-      wave.map(b => dataDir.resolve(s"bucket=$b")).filter(listDataFiles(_).nonEmpty))
+      wave.map(bucketDir(out, _)).filter(listDataFiles(_).nonEmpty))
     var manifest = manifest0
     var waveRows = 0L
     wave.foreach { b =>
@@ -1644,14 +1530,14 @@ object SnapshotSink {
         perDir.flatMap(_._2).toMap
     }
 
-  /** Range layout + metrics capability for a REWRITE of committed rows (deleteDocs,
-    * deleteIds, compact re-key) — shared so the three rewrite sites cannot drift. */
-  private[sources] def rewriteLayout(df: DataFrame): Seq[String] =
+  /** The range layout of every commit: (bucket, doc_id, offset) for span tables,
+    * else the bucket and the first other column. */
+  private def rewriteLayout(df: DataFrame): Seq[String] =
     if (df.columns.contains("doc_id") && df.columns.contains("offset"))
       Seq("bucket", "doc_id", "offset")
     else "bucket" +: df.columns.find(_ != "bucket").toSeq
 
-  private[sources] def hasSpanMetrics(df: DataFrame): Boolean =
+  private def hasSpanMetrics(df: DataFrame): Boolean =
     Seq("kind", "ok", "error", "text", "n_words", "conf_sum")
       .forall(df.columns.contains)
 

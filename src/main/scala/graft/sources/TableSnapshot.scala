@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /**
  * Generic committed-TABLE form of the snapshot protocol (VERDICT r3 #4): per-document
@@ -48,27 +48,31 @@ object TableSnapshot {
 
     val (head0, existing) = SnapshotSink.baseManifest(out)
     val (valid, invalid) = SnapshotSink.verifyEntries(spark, out, existing, deepVerify)
-    invalid.foreach(e => SnapshotSink.deleteRecursively(
-      SnapshotSink.bucketDir(out, e.bucket)))
     val mustBeNonEmpty = invalid.filter(_.rows > 0).map(_.bucket).toSet
     var manifest = valid.sortBy(_.bucket)
+    // a [[deleteIds]] rewrite moves a bucket to a composite id `gen * nBuckets +
+    // base`; resume keys on the base, as [[SnapshotSink.run]] does
+    val idOfBase = existing.map(e => (e.bucket % nBuckets) -> e.bucket).toMap
+      .withDefault(identity)
     val committed = valid.map(_.bucket).toSet
-    val todo = (0L until nBuckets).filterNot(committed)
+    val todo = (0L until nBuckets).filterNot(b => committed(idOfBase(b)))
+    todo.foreach(b => SnapshotSink.deleteRecursively(
+      SnapshotSink.bucketDir(out, idOfBase(b))))
 
     val processed = Seq.newBuilder[Long]
     var totalRows = 0L
     var head = head0
     todo.grouped(waveSize).foreach { wave =>
       val t0 = System.nanoTime()
+      val ids = wave.map(idOfBase)
       val waveDf = df.filter(col("bucket").isin(wave.map(_.toInt): _*))
+        .withColumn("bucket", SnapshotSink.rekey(col("bucket"), wave.zip(ids)))
       val (newManifest, waveRows, v) = SnapshotSink.commitWaveFlat(
-        spark, out, waveDf, wave, manifest, t0, SnapshotSink.movesHead(head),
-        expectNonEmpty = mustBeNonEmpty.intersect(wave.toSet), io = io,
-        layoutCols = Seq("bucket") ++ df.columns.find(_ != "bucket").toSeq,
-        spanMetrics = false)
+        spark, out, Some(waveDf), ids, manifest, t0, SnapshotSink.movesHead(head),
+        expectNonEmpty = mustBeNonEmpty.intersect(ids.toSet), io = io)
       manifest = newManifest
       head = v
-      processed ++= wave
+      processed ++= ids
       totalRows += waveRows
     }
     SnapshotSink.deleteRecursively(out.resolve("staging"))
@@ -79,12 +83,16 @@ object TableSnapshot {
   /**
    * TAKEDOWN CASCADE for derived tables: bucket-granular copy-on-write delete of
    * every row whose `idCol` is in `ids`, the [[SnapshotSink.deleteDocs]] analogue
-   * for hash-bucketed committed tables. A right-to-be-forgotten delete is not done
-   * when the extraction snapshot is clean — the doc's MinHash bands / term rows
-   * live on in committed derived tables; this rewrites exactly the buckets that can
-   * contain the ids (routed by the SAME `pmod(hash(id), nBuckets)` the writers use,
-   * computed by one tiny literal-Dataset job — no table scan), republishes through
-   * the same commit cycle, and leaves untouched buckets' bytes untouched.
+   * for hash-bucketed committed tables (the same takedown body and the same one
+   * rewrite path: one grouped match count, one commit wave, one manifest version,
+   * none when nothing matches). A right-to-be-forgotten delete is not done when
+   * the extraction snapshot is clean — the doc's MinHash bands / term rows live on
+   * in committed derived tables; this rewrites exactly the buckets that can contain
+   * the ids (routed by the SAME `pmod(hash(id), nBuckets)` the writers use,
+   * computed by one tiny literal-Dataset job — no table scan) to a fresh
+   * generation, and leaves untouched buckets' bytes untouched. The scan unions
+   * per-file schemas, so buckets committed under different schema versions
+   * rewrite in one wave.
    *
    * Same heal caveat as extraction takedown: a later invalidate->resume re-derives
    * the bucket FROM ITS SOURCE — cascade order is source corpus first, derived
@@ -99,79 +107,50 @@ object TableSnapshot {
       nBuckets: Int = SnapshotSink.DefaultBuckets,
       io: CommitIo = PosixCommitIo): SnapshotSink.DeleteReport = {
     require(ids.nonEmpty, "deleteIds needs at least one id")
-    val out = Paths.get(outDir)
-    val (head0, existing) = SnapshotSink.baseManifest(out)
-    require(existing.nonEmpty, s"no committed table under $outDir")
-    require(existing.forall(e => e.bucket >= 0 && e.bucket < nBuckets),
-      s"manifest buckets outside [0, $nBuckets) — wrong nBuckets for this table?")
     // the routing below hashes LONG ids; Murmur3 hashes Int and Long DIFFERENTLY,
     // so an INT-typed id column would route to the wrong buckets and this would
     // return a success-shaped DeleteReport(0, Nil) while the rows persist — refuse
-    val idType = readBack(spark, outDir).schema(idCol).dataType
-    require(idType == org.apache.spark.sql.types.LongType,
-      s"deleteIds routes buckets via hash(BIGINT); committed `$idCol` is $idType — " +
-        "pass ids in the column's own type family (extend deleteIds) or rewrite")
-
+    val idType = schemaHistory(outDir).lastOption
+      .map(v => StructType.fromDDL(v.ddl)(idCol).dataType)
+    require(idType.contains(LongType),
+      s"deleteIds routes buckets via hash(BIGINT); committed `$idCol` is " +
+        s"${idType.getOrElse("absent")} — pass ids in the column's own type family " +
+        "(extend deleteIds) or rewrite")
     // route ids -> buckets with the writers' own hash (Spark Murmur3), driver-side
     import spark.implicits._
-    val affectedBuckets = ids.toDS()
+    val bases = ids.toDS()
       .select(pmod(hash(col("value")), lit(nBuckets)).cast("long").as("b"))
       .distinct().collect().map(_.getLong(0)).toSet
-    val affected = existing
-      .filter(e => affectedBuckets.contains(e.bucket) && e.rows > 0)
-      .map(_.bucket).sorted
-
-    var manifest = existing.sortBy(_.bucket)
-    var head = head0
-    var deleted = 0L
-    val rewritten = Seq.newBuilder[Long]
-    affected.foreach { b =>
-      val entry = manifest.find(_.bucket == b).get
-      val files = entry.files.map(f => SnapshotSink.bucketDir(out, b).resolve(f).toString)
-      val cur = spark.read.option("basePath", out.resolve("data").toString)
-        .parquet(files: _*)
-      val matches = cur.filter(col(idCol).isInCollection(ids)).count()
-      if (matches > 0) {
-        val t0 = System.nanoTime()
-        // NULL-id bystanders must survive: NOT(NULL IN (...)) evaluates to NULL,
-        // which a bare filter would drop — silent data loss in the rewrite
-        val kept = cur.filter(col(idCol).isNull || !col(idCol).isInCollection(ids))
-          .withColumn("bucket", lit(b))
-        val (m2, _, v) = SnapshotSink.commitWaveFlat(
-          spark, out, kept, Seq(b), manifest.filterNot(_.bucket == b), t0,
-          SnapshotSink.movesHead(head), io = io,
-          layoutCols = SnapshotSink.rewriteLayout(kept), spanMetrics = false)
-        manifest = m2
-        head = v
-        deleted += matches
-        rewritten += b
-      }
-    }
-    SnapshotSink.deleteRecursively(out.resolve("staging"))
-    SnapshotSink.DeleteReport(deleted, rewritten.result())
+    SnapshotSink.takedown(spark, Paths.get(outDir), nBuckets, io, bases,
+      col(idCol).isInCollection(ids), mergeSchema = true)
   }
 
-  /** Read the committed table back (original schema + bucket partition column).
-    * `mergeSchema` unions the per-file schemas, so after an add-column evolution
-    * ([[recordSchema]]) buckets committed under an older schema version surface the
-    * new columns as NULL — the Iceberg add-column default — without any rewrite. */
-  def readBack(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.option("mergeSchema", "true")
-      .parquet(Paths.get(outDir).resolve("data").toString)
+  /** Read the committed table back (original schema + bucket partition column)
+    * through HEAD's manifest, so a crashed rewrite's unreferenced directories are
+    * never read. `mergeSchema` unions the per-file schemas, so after an add-column
+    * evolution ([[recordSchema]]) buckets committed under an older schema version
+    * surface the new columns as NULL — the Iceberg add-column default — without
+    * any rewrite. */
+  def readBack(spark: SparkSession, outDir: String): DataFrame = {
+    val (v, entries) = SnapshotSink.baseManifest(Paths.get(outDir))
+    SnapshotSink.readEntries(spark, outDir, entries, s"HEAD (version $v)",
+      mergeSchema = true)
+  }
 
-  /** True iff `outDir` holds a FULLY committed table: a manifest covering every
-    * bucket in [0, nBuckets) whose entries all pass the metadata verification
-    * tier. The skip-construction probe for derived tables whose CONSTRUCTION is
-    * itself expensive driver-side work (trained model state): [[runHashBucketed]]
-    * can lazily filter an ordinary plan down to invalid buckets, but a codebook
-    * frame cannot be built lazily — its construction runs the training — so the
-    * caller asks first and only trains when this is false. Metadata tier only, by
-    * the same read-path contract as [[runHashBucketed]]'s default. */
+  /** True iff `outDir` holds a FULLY committed table: a manifest with exactly one
+    * entry per base bucket in [0, nBuckets) whose entries all pass the metadata
+    * verification tier. The skip-construction probe for derived tables whose
+    * CONSTRUCTION is itself expensive driver-side work (trained model state):
+    * [[runHashBucketed]] can lazily filter an ordinary plan down to invalid
+    * buckets, but a codebook frame cannot be built lazily — its construction runs
+    * the training — so the caller asks first and only trains when this is false.
+    * Metadata tier only, by the same read-path contract as [[runHashBucketed]]'s
+    * default. */
   def isCommitted(spark: SparkSession, outDir: String, nBuckets: Int): Boolean = {
     val out = Paths.get(outDir)
     if (!Files.exists(out.resolve("data"))) return false
     val entries = SnapshotSink.readManifest(spark, outDir)
-    if (entries.map(_.bucket).toSet != (0L until nBuckets).toSet) return false
+    if (entries.map(_.bucket % nBuckets).sorted != (0L until nBuckets)) return false
     val (_, invalid) = SnapshotSink.verifyEntries(spark, out, entries,
       deepVerify = false)
     invalid.isEmpty

@@ -13,11 +13,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /**
  * Takedown deletes ([[SnapshotSink.deleteDocs]]): bucket-granular copy-on-write —
- * only the requested ids' buckets are rewritten, untouched buckets stay
- * byte-identical, deletion is physical (pre-delete versions referencing the
- * rewritten bucket expire loudly), a takedown is one atomic commit whose job count
- * does not grow with the buckets it rewrites, and non-canonical manifests are
- * refused.
+ * only the requested ids' buckets are rewritten (to a fresh generation, so their
+ * ids become `gen * NB + base`), untouched buckets stay byte-identical, deletion
+ * is physical (pre-delete versions referencing the rewritten bucket expire
+ * loudly), a takedown is one atomic commit whose job count does not grow with the
+ * buckets it rewrites, a takedown that fails at its commit point leaves every
+ * live byte in place, and non-canonical manifests are refused.
  */
 class DeleteDocsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -39,10 +40,19 @@ class DeleteDocsSpec extends AnyFunSuite {
       .orderBy(col("doc_id")).limit(n)
       .collect().map(_.getString(0)).toSeq
 
+  /** HEAD's manifest keyed by base bucket (a rewrite changes the id, not the base). */
+  private def byBase(out: String): Map[Long, SnapshotSink.ManifestEntry] =
+    SnapshotSink.readManifest(spark, out).map(e => (e.bucket % NB) -> e).toMap
+
+  private def logical(out: String): Seq[(String, Int, String)] =
+    SnapshotSink.readCommitted(spark, out)
+      .select(col("doc_id"), col("offset"), coalesce(col("text"), lit("")))
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSeq.sorted
+
   test("delete rewrites only the victims' buckets; other buckets stay byte-identical") {
     val out = tmpDir("cow")
     SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB)
-    val before = SnapshotSink.readManifest(spark, out).map(e => e.bucket -> e).toMap
+    val before = byBase(out)
     val rowsBefore = SnapshotSink.readBack(spark, out).count()
 
     val victims = docIdsInBucket(out, 2L, 2) ++ docIdsInBucket(out, 5L, 1)
@@ -51,10 +61,11 @@ class DeleteDocsSpec extends AnyFunSuite {
     assert(victimRows > 0)
 
     val report = SnapshotSink.deleteDocs(spark, out, victims, NB)
-    assert(report.rewrittenBuckets === Seq(2L, 5L))
+    // rewrites land at a fresh generation: new ids, same bases
+    assert(report.rewrittenBuckets === Seq(NB + 2L, NB + 5L))
     assert(report.deletedRows === victimRows)
 
-    val after = SnapshotSink.readManifest(spark, out).map(e => e.bucket -> e).toMap
+    val after = byBase(out)
     // untouched buckets: identical file lists AND hashes; victims: new files
     (0L until NB).filterNot(Seq(2L, 5L).contains).foreach { b =>
       assert(after(b) === before(b), s"bucket $b must be byte-identical")
@@ -98,7 +109,7 @@ class DeleteDocsSpec extends AnyFunSuite {
       .withColumn("text", concat(lit("bystander:"), col("bucket").cast("string")))
     TableSnapshot.run(flat.unionByName(bystanders), out, NB, waveSize = NB)
     val v0 = SnapshotSink.versions(out).last
-    val before = SnapshotSink.readManifest(spark, out).map(e => e.bucket -> e).toMap
+    val before = byBase(out)
 
     val rewrite = Seq(1L, 4L, 6L)
     val victims = rewrite.flatMap(b => docIdsInBucket(out, b, 2))
@@ -109,10 +120,10 @@ class DeleteDocsSpec extends AnyFunSuite {
     assert(victimRows > 0L)
 
     val report = SnapshotSink.deleteDocs(spark, out, victims :+ absent, NB)
-    assert(report === SnapshotSink.DeleteReport(victimRows, rewrite))
+    assert(report === SnapshotSink.DeleteReport(victimRows, rewrite.map(NB + _)))
     assert(SnapshotSink.versions(out).last === v0 + 1, "a takedown publishes one version")
 
-    val after = SnapshotSink.readManifest(spark, out).map(e => e.bucket -> e).toMap
+    val after = byBase(out)
     (0L until NB).filterNot(rewrite.contains).foreach { b =>
       assert(after(b) === before(b), s"bucket $b must be byte-identical")
     }
@@ -120,7 +131,7 @@ class DeleteDocsSpec extends AnyFunSuite {
     val back = SnapshotSink.readCommitted(spark, out)
     assert(back.filter(col("doc_id").isInCollection(victims)).count() === 0L)
     val kept = back.filter(col("doc_id").isNull)
-      .select(col("bucket").cast("long"), col("text")).collect()
+      .select(pmod(col("bucket").cast("long"), lit(NB.toLong)), col("text")).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toSeq.sorted
     assert(kept === (0L until NB).map(b => b -> s"bystander:$b"))
     assert(SnapshotSink.verifySnapshot(spark, out) === Seq.empty)
@@ -133,7 +144,8 @@ class DeleteDocsSpec extends AnyFunSuite {
     val four = Seq(2L, 3L, 5L, 7L).flatMap(b => docIdsInBucket(out, b, 1))
     val (r1, jobs1) = withJobCount(SnapshotSink.deleteDocs(spark, out, one, NB))
     val (r4, jobs4) = withJobCount(SnapshotSink.deleteDocs(spark, out, four, NB))
-    assert(r1.rewrittenBuckets === Seq(0L) && r4.rewrittenBuckets === Seq(2L, 3L, 5L, 7L))
+    assert(r1.rewrittenBuckets.map(_ % NB) === Seq(0L) &&
+      r4.rewrittenBuckets.map(_ % NB) === Seq(2L, 3L, 5L, 7L))
     assert(jobs1 > 0 && jobs4 === jobs1,
       s"1-bucket takedown ran $jobs1 jobs, 4-bucket takedown $jobs4")
   }
@@ -166,10 +178,32 @@ class DeleteDocsSpec extends AnyFunSuite {
       .filter(col("bucket") === 6).select(col("doc_id")).distinct()
       .collect().map(_.getString(0)).toSeq
     val report = SnapshotSink.deleteDocs(spark, out, all, NB)
-    assert(report.rewrittenBuckets === Seq(6L))
-    val entry = SnapshotSink.readManifest(spark, out).find(_.bucket == 6L).get
-    assert(entry.rows === 0L && entry.files.isEmpty)
-    assert(SnapshotSink.readBack(spark, out).filter(col("bucket") === 6).count() === 0L)
+    assert(report.rewrittenBuckets === Seq(NB + 6L))
+    val entry = byBase(out)(6L)
+    assert(entry.bucket === NB + 6L && entry.rows === 0L && entry.files.isEmpty)
+    assert(SnapshotSink.readBack(spark, out)
+      .filter(pmod(col("bucket"), lit(NB)) === 6).count() === 0L)
+  }
+
+  test("a takedown that fails at its manifest publish loses no byte; re-running converges") {
+    val out = tmpDir("crash")
+    SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB)
+    val victims = docIdsInBucket(out, 2L, 2) ++ docIdsInBucket(out, 5L, 1)
+    val head = SnapshotSink.readState(Paths.get(out)).head
+    val before = logical(out)
+    intercept[PublishFault.Injected] {
+      SnapshotSink.deleteDocs(spark, out, victims, NB, io = PublishFault.atManifest)
+    }
+    // HEAD has not moved and every file it lists is still there
+    assert(SnapshotSink.readState(Paths.get(out)).head === head)
+    assert(logical(out) === before)
+    assert(SnapshotSink.verifySnapshot(spark, out) === Seq.empty)
+
+    val report = SnapshotSink.deleteDocs(spark, out, victims, NB)
+    val expected = before.filterNot(r => victims.contains(r._1))
+    assert(report.deletedRows === (before.size - expected.size).toLong)
+    assert(logical(out) === expected)
+    assert(SnapshotSink.verifySnapshot(spark, out) === Seq.empty)
   }
 
   test("non-canonical (multi-generation) manifests are refused") {

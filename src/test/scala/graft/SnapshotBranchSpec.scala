@@ -17,8 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
  * land at a fresh generation; main's files are never moved aside), the branch
  * reads back as the merged table through the same manifest-resolved machinery,
  * fast-forward publishes the branch as the new HEAD version metadata-only, a
- * crashed branch merge leaves both pointers where they were and heals by
- * re-running, and branches pin their versions against [[SnapshotSink.expireVersions]]
+ * branch merge that fails at its commit point leaves both pointers where they were
+ * and heals by re-running, and branches pin their versions against [[SnapshotSink.expireVersions]]
  * AND their bytes against [[SnapshotSink.vacuum]] (unlike tags, which pin metadata
  * only). The oracle-gated form is `SparkEntry.snapshot_branch`; this spec covers
  * the byte-identity, crash, GC-pinning, and multi-commit claims a flat query
@@ -195,22 +195,27 @@ class SnapshotBranchSpec extends AnyFunSuite {
     assert(contentOf(SnapshotSink.readCommitted(spark, out)) === full)
   }
 
-  test("a crashed branch merge leaves main AND the branch pointer untouched; re-run heals") {
+  test("a branch merge failing its manifest publish moves no pointer; re-run heals") {
     val out = tmpDir("crash")
     SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB) // v1
     SnapshotSink.branch(out, "wip", 1L)
     val mainBytes = mainDirState(out)
+    val mainContent = contentOf(SnapshotSink.readCommitted(spark, out))
     val victims = docIdsInBucket(out, 0L, 1) ++ docIdsInBucket(out, 3L, 1) ++
       docIdsInBucket(out, 6L, 1)
     val updates = updateRows(victims :+ InsertId) // 4 base buckets: 0, 1, 3, 6
 
-    intercept[SnapshotSink.InjectedCrash] {
+    intercept[PublishFault.Injected] {
       SnapshotSink.upsertDocsToBranch(spark, out, "wip", updates, NB,
-        waveSize = 1, crashAfterWaves = 1)
+        io = PublishFault.atManifest)
     }
-    // neither pointer moved; main's bytes intact
+    // neither pointer moved; main's bytes and both refs' content intact
+    assert(SnapshotSink.readState(Paths.get(out)).head === 1L)
     assert(SnapshotSink.branches(out)("wip") === 1L)
     assert(mainDirState(out) === mainBytes)
+    assert(contentOf(SnapshotSink.readCommitted(spark, out)) === mainContent)
+    assert(contentOf(SnapshotSink.readCommittedAtBranch(spark, out, "wip")) === mainContent)
+    assert(SnapshotSink.verifySnapshotAtBranch(spark, out, "wip") === Seq.empty)
 
     // healing = re-running (a fresh generation; the partial one becomes orphans)
     val report = SnapshotSink.upsertDocsToBranch(spark, out, "wip", updates, NB)

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.operators.ExtractPipeline
-import graft.sources.{Interleave, SnapshotSink}
+import graft.sources.{Interleave, PosixCommitIo, SnapshotSink}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -106,7 +106,7 @@ class SnapshotCompactSpec extends AnyFunSuite {
     assert(before.size === 3 * NB) // three batches' composite entries
     val beforeRows = canon(SnapshotSink.readBack(spark, out))
 
-    val rep = SnapshotSink.compact(spark, out, nBuckets = NB, waveSize = 3)
+    val rep = SnapshotSink.compact(spark, out, nBuckets = NB)
     assert(!rep.noop)
     assert(rep.generation === 3L) // batch ids 0..2 occupied generations 0..2
     assert(rep.mergedEntries === 3 * NB)
@@ -234,6 +234,69 @@ class SnapshotCompactSpec extends AnyFunSuite {
     assert(!Files.exists(orphan))
     assert(canon(SnapshotSink.readBack(spark, out)) === pre)
     assert(SnapshotSink.vacuum(spark, out).isEmpty) // nothing left to remove
+  }
+
+  test("a compaction that fails at its manifest publish moves no ref; re-running converges") {
+    val out = tmpDir("crash")
+    commitAsStream(out, 2)
+    val path = Paths.get(out)
+    val head = SnapshotSink.readState(path).head
+    val compacted = SnapshotSink.readCompactedIds(path)
+    val before = canon(SnapshotSink.readCommitted(spark, out))
+    intercept[PublishFault.Injected] {
+      SnapshotSink.compact(spark, out, NB, io = PublishFault.atManifest)
+    }
+    assert(SnapshotSink.readState(path).head === head)
+    assert(SnapshotSink.readCompactedIds(path) === compacted)
+    assert(canon(SnapshotSink.readCommitted(spark, out)) === before)
+    assert(SnapshotSink.verifySnapshot(spark, out) === Seq.empty)
+
+    val rep = SnapshotSink.compact(spark, out, NB)
+    assert(!rep.noop && SnapshotSink.readManifest(spark, out).size === NB)
+    assert(canon(SnapshotSink.readCommitted(spark, out)) === before)
+    assert(SnapshotSink.verifySnapshot(spark, out) === Seq.empty)
+  }
+
+  test("a compaction whose staged rows miss the recorded rows publishes nothing") {
+    val out = tmpDir("reconcile")
+    commitAsStream(out, 2)
+    val path = Paths.get(out)
+    // HEAD becomes a republished manifest whose one entry claims a row too many
+    val entries = SnapshotSink.readManifest(spark, out)
+    val forgedId = entries.find(_.rows > 0).get.bucket
+    val forged = entries.map(e => if (e.bucket == forgedId) e.copy(rows = e.rows + 1) else e)
+    val v = SnapshotSink.versions(out).last + 1
+    implicit val formats: org.json4s.Formats = org.json4s.DefaultFormats
+    Files.writeString(path.resolve(f"manifest-v$v%06d.json"),
+      forged.map(org.json4s.jackson.Serialization.write(_)).mkString("", "\n", "\n"))
+    SnapshotSink.updateState(path, PosixCommitIo)(_.copy(head = v))
+    val versions = SnapshotSink.versions(out)
+    val compacted = SnapshotSink.readCompactedIds(path)
+
+    val ex = intercept[IllegalArgumentException](SnapshotSink.compact(spark, out, NB))
+    assert(ex.getMessage.contains("row mismatch"))
+    // checked before any publish: HEAD, history and the compacted ids are unchanged
+    assert(SnapshotSink.readState(path).head === v)
+    assert(SnapshotSink.versions(out) === versions)
+    assert(SnapshotSink.readCompactedIds(path) === compacted)
+    assert(SnapshotSink.readManifest(spark, out) === forged)
+  }
+
+  test("compacting an all-empty stream commits NB zero-row buckets at the new generation") {
+    val out = tmpDir("empty")
+    val none = ExtractPipeline.extractFlat(Interleave.docs(spark, sfDir)).limit(0)
+    SnapshotSink.commitStreamBatch(none, out, 0L, NB)
+    SnapshotSink.commitStreamBatch(none, out, 1L, NB)
+    val rep = SnapshotSink.compact(spark, out, NB)
+    assert(!rep.noop && rep.generation === 2L && rep.rows === 0L)
+    val after = SnapshotSink.readManifest(spark, out)
+    assert(after.map(_.bucket) === (0 until NB).map(2L * NB + _))
+    assert(after.forall(e => e.rows === 0L && e.files.isEmpty))
+    assert(SnapshotSink.verifySnapshot(spark, out) === Seq.empty)
+    // a resume finds every (empty) bucket committed and extracts nothing
+    val report = SnapshotSink.run(Interleave.materializedDocsBucketed(spark, sfDir, NB),
+      out, nBuckets = NB)
+    assert(report.processed.isEmpty && report.skipped === after.map(_.bucket))
   }
 
   test("compact refuses a snapshot with failed verification (corruption not baked in)") {

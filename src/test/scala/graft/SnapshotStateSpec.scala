@@ -55,6 +55,25 @@ class SnapshotStateSpec extends AnyFunSuite {
     }
   }
 
+  /** Publishes through [[PosixCommitIo]], running `competitor` once, right before
+    * the first metadata publish after a bucket directory was published — the
+    * operation's commit, once its new data is in place. */
+  private def racingAfterData(competitor: => Unit): CommitIo = new CommitIo {
+    private var published = false
+    private var fired = false
+    override def publishDir(src: Path, dst: Path): Unit = {
+      PosixCommitIo.publishDir(src, dst)
+      published = true
+    }
+    override def publishFile(tmp: Path, dst: Path): Unit = {
+      if (published && !fired) {
+        fired = true
+        competitor
+      }
+      PosixCommitIo.publishFile(tmp, dst)
+    }
+  }
+
   private def docIdsInBucket(out: String, b: Long, n: Int): Seq[String] =
     SnapshotSink.readCommitted(spark, out)
       .filter(col("bucket") === b).select(col("doc_id")).distinct()
@@ -113,6 +132,32 @@ class SnapshotStateSpec extends AnyFunSuite {
       SnapshotSink.readManifestAt(spark, out, winner))
     assert(SnapshotSink.readManifest(spark, out).size === NB)
     assert(textOf(out, victim.head) === Seq(s"upd:${victim.head}"))
+  }
+
+  test("a takedown racing an upsert on the same bucket: the loser refuses, HEAD is the winner's") {
+    val out = tmpDir("deleteupsert")
+    SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB) // v1
+    val Seq(victim, updated) = docIdsInBucket(out, 3L, 2)
+    def rows = SnapshotSink.readCommitted(spark, out)
+      .select(col("doc_id"), col("offset"), coalesce(col("text"), lit("")))
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSeq.sorted
+    val before = rows
+    // the upsert commits while the takedown's new bucket directory is published
+    // but its commit is not
+    val ex = intercept[IllegalStateException] {
+      SnapshotSink.deleteDocs(spark, out, Seq(victim), NB, io = racingAfterData {
+        SnapshotSink.upsertDocs(spark, out, updateRows(Seq(updated)), NB)
+      })
+    }
+    assert(ex.getMessage.contains("lost update refused"))
+    // HEAD reads exactly the upsert's result: the victim is still there (the
+    // takedown lost and must be re-run), and no byte of the winner was replaced
+    assert(rows === (before.filterNot(_._1 == updated) :+ ((updated, 0, s"upd:$updated"))).sorted)
+    assert(SnapshotSink.verifySnapshot(spark, out) === Seq.empty)
+    // re-running the takedown against the new HEAD lands it
+    SnapshotSink.deleteDocs(spark, out, Seq(victim), NB)
+    assert(rows === (before.filterNot(r => r._1 == updated || r._1 == victim) :+
+      ((updated, 0, s"upd:$updated"))).sorted)
   }
 
   test("fastForward is one state publish: a failed publish moves neither HEAD nor the base") {

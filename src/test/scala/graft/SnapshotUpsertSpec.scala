@@ -11,10 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /**
  * Row-level UPSERT/MERGE ([[SnapshotSink.upsertDocs]]): matched documents' rows are
  * REPLACED (never appended beside the old rows), new documents are inserted,
- * untouched buckets stay byte-identical, a merge that crashes between waves is
- * healed by re-running it (idempotent re-merge), and stale derived-table rows
- * cascade-invalidate through [[TableSnapshot.deleteIds]] exactly like the takedown
- * cascade. Reference archetype: the language pack download's
+ * untouched buckets stay byte-identical, a merge that fails at its commit point
+ * leaves every live byte in place and is healed by re-running it, and stale
+ * derived-table rows cascade-invalidate through [[TableSnapshot.deleteIds]]
+ * exactly like the takedown cascade. Reference archetype: the language pack download's
  * replace-if-hash-differs idempotency (uiucprescon/ocr/languages.py:135-175).
  */
 class SnapshotUpsertSpec extends AnyFunSuite {
@@ -54,13 +54,17 @@ class SnapshotUpsertSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getString(3)))
       .toSeq.sorted
 
+  /** HEAD's manifest keyed by base bucket (a rewrite changes the id, not the base). */
+  private def byBase(out: String): Map[Long, SnapshotSink.ManifestEntry] =
+    SnapshotSink.readManifest(spark, out).map(e => (e.bucket % NB) -> e).toMap
+
   // numeric suffix % 8 == 1; far outside the sf0.001 id space (0..499)
   private val InsertId = f"doc-${8000000000001L}%013d"
 
   test("merge replaces matched rows, inserts new docs, leaves other buckets byte-identical") {
     val out = tmpDir("merge")
     SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB)
-    val before = SnapshotSink.readManifest(spark, out).map(e => e.bucket -> e).toMap
+    val before = byBase(out)
     val rowsBefore = SnapshotSink.readBack(spark, out).count()
 
     val victims = docIdsInBucket(out, 2L, 2) ++ docIdsInBucket(out, 5L, 1)
@@ -70,13 +74,14 @@ class SnapshotUpsertSpec extends AnyFunSuite {
 
     val report = SnapshotSink.upsertDocs(spark, out,
       updateRows(victims :+ InsertId), NB)
-    assert(report.rewrittenBuckets === Seq(1L, 2L, 5L))
+    // rewrites land at a fresh generation: new ids, same bases
+    assert(report.rewrittenBuckets === Seq(1L, 2L, 5L).map(NB + _))
     assert(report.matchedDocs === 3L)
     assert(report.insertedDocs === 1L)
     assert(report.replacedRows === victimRows)
     assert(report.upsertRows === 4L)
 
-    val after = SnapshotSink.readManifest(spark, out).map(e => e.bucket -> e).toMap
+    val after = byBase(out)
     (0L until NB).filterNot(Seq(1L, 2L, 5L).contains).foreach { b =>
       assert(after(b) === before(b), s"bucket $b must be byte-identical")
     }
@@ -101,7 +106,7 @@ class SnapshotUpsertSpec extends AnyFunSuite {
     assert(resume.processed.isEmpty && resume.invalidated.isEmpty)
   }
 
-  test("a crashed merge heals by re-running; result equals a never-crashed merge") {
+  test("a merge failing at its manifest publish loses no byte; re-run converges") {
     val outCrash = tmpDir("crash")
     val outCtl = tmpDir("ctl")
     Seq(outCrash, outCtl).foreach(o =>
@@ -110,22 +115,20 @@ class SnapshotUpsertSpec extends AnyFunSuite {
       docIdsInBucket(outCtl, 6L, 1)
     val updates = updateRows(victims :+ InsertId) // 4 buckets: 0, 1, 3, 6
 
-    // crash after the FIRST single-bucket wave: one bucket merged, three pending
-    intercept[SnapshotSink.InjectedCrash] {
-      SnapshotSink.upsertDocs(spark, outCrash, updates, NB,
-        waveSize = 1, crashAfterWaves = 1)
+    // the merge's new directories are published, its commit is not
+    val head = SnapshotSink.readState(Paths.get(outCrash)).head
+    val before = logicalRows(outCrash)
+    intercept[PublishFault.Injected] {
+      SnapshotSink.upsertDocs(spark, outCrash, updates, NB, io = PublishFault.atManifest)
     }
-    // mid-crash state is fully readable (each wave commit is atomic), merged so far
-    val mid = SnapshotSink.readCommitted(spark, outCrash)
-    assert(mid.filter(col("doc_id") === victims.head).count() === 1L,
-      "wave 0's bucket must already be merged")
-    assert(mid.filter(col("doc_id") === victims.last)
-      .filter(col("kind") === "image").count() > 0L,
-      "unmerged buckets must still hold the OLD rows")
+    // HEAD has not moved and every file it lists is still there
+    assert(SnapshotSink.readState(Paths.get(outCrash)).head === head)
+    assert(logicalRows(outCrash) === before)
+    assert(SnapshotSink.verifySnapshot(spark, outCrash) === Seq.empty)
 
-    // heal = re-run the same merge; already-merged buckets re-merge idempotently
+    // heal = re-run the same merge, at a fresh generation
     val report = SnapshotSink.upsertDocs(spark, outCrash, updates, NB)
-    assert(report.rewrittenBuckets === Seq(0L, 1L, 3L, 6L))
+    assert(report.rewrittenBuckets.map(_ % NB) === Seq(0L, 1L, 3L, 6L))
     SnapshotSink.upsertDocs(spark, outCtl, updates, NB)
     assert(logicalRows(outCrash) === logicalRows(outCtl),
       "crash+re-run must converge to the never-crashed result")
@@ -137,10 +140,14 @@ class SnapshotUpsertSpec extends AnyFunSuite {
     val v0 = SnapshotSink.versions(out).last
     val victims = Seq(0L, 2L, 5L, 7L).flatMap(b => docIdsInBucket(out, b, 1))
     val report = SnapshotSink.upsertDocs(spark, out, updateRows(victims :+ InsertId), NB)
-    assert(report.rewrittenBuckets === Seq(0L, 1L, 2L, 5L, 7L))
+    assert(report.rewrittenBuckets.map(_ % NB) === Seq(0L, 1L, 2L, 5L, 7L))
     assert(report.matchedDocs === 4L && report.insertedDocs === 1L)
     assert(SnapshotSink.versions(out) === Seq(v0, v0 + 1))
     assert(SnapshotSink.verifySnapshot(spark, out) === Seq.empty)
+    // an empty update set publishes nothing
+    assert(SnapshotSink.upsertDocs(spark, out, updateRows(victims).limit(0), NB)
+      .rewrittenBuckets.isEmpty)
+    assert(SnapshotSink.versions(out) === Seq(v0, v0 + 1))
   }
 
   test("re-running the same merge is idempotent in content") {
@@ -161,16 +168,50 @@ class SnapshotUpsertSpec extends AnyFunSuite {
     val derived = (0L until 64L).map(i => (i, s"sig-$i")).toDF("doc_id", "sig")
     TableSnapshot.runHashBucketed(derived, "doc_id", out, NB)
     val touched = Seq(5L, 17L)
-    val before = SnapshotSink.readManifest(spark, out).map(e => e.bucket -> e).toMap
+    val before = byBase(out)
+    val v0 = SnapshotSink.versions(out).last
+    // an id no bucket holds publishes nothing
+    assert(TableSnapshot.deleteIds(spark, out, Seq(1000L), "doc_id", NB) ===
+      SnapshotSink.DeleteReport(0L, Seq.empty))
+    assert(SnapshotSink.versions(out).last === v0)
     val report = TableSnapshot.deleteIds(spark, out, touched, "doc_id", NB)
     assert(report.deletedRows === 2L)
-    val after = SnapshotSink.readManifest(spark, out).map(e => e.bucket -> e).toMap
-    (0L until NB).filterNot(report.rewrittenBuckets.contains).foreach { b =>
+    assert(report.rewrittenBuckets.nonEmpty && report.rewrittenBuckets.forall(_ >= NB))
+    assert(SnapshotSink.versions(out).last === v0 + 1, "one version per takedown")
+    val after = byBase(out)
+    (0L until NB).filterNot(report.rewrittenBuckets.map(_ % NB).contains).foreach { b =>
       assert(after(b) === before(b), s"derived bucket $b must be byte-identical")
     }
     val back = TableSnapshot.readBack(spark, out)
     assert(back.filter(col("doc_id").isInCollection(touched)).count() === 0L)
     assert(back.count() === 62L)
+    // the rewritten table resumes as a no-op: its composite ids key on the base
+    assert(TableSnapshot.isCommitted(spark, out, NB))
+    assert(TableSnapshot.runHashBucketed(derived, "doc_id", out, NB).count() === 62L)
+    assert(SnapshotSink.versions(out).last === v0 + 1)
+  }
+
+  test("a derived-table takedown that fails at its manifest publish loses no byte") {
+    val out = tmpDir("cascade-crash")
+    import spark.implicits._
+    val derived = (0L until 64L).map(i => (i, s"sig-$i")).toDF("doc_id", "sig")
+    TableSnapshot.runHashBucketed(derived, "doc_id", out, NB)
+    def rows = TableSnapshot.readBack(spark, out).select(col("doc_id"), col("sig"))
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+    val head = SnapshotSink.readState(Paths.get(out)).head
+    val before = rows
+    val touched = Seq(5L, 17L, 40L)
+    intercept[PublishFault.Injected] {
+      TableSnapshot.deleteIds(spark, out, touched, "doc_id", NB,
+        io = PublishFault.atManifest)
+    }
+    assert(SnapshotSink.readState(Paths.get(out)).head === head)
+    assert(rows === before)
+    assert(SnapshotSink.verifySnapshot(spark, out) === Seq.empty)
+
+    assert(TableSnapshot.deleteIds(spark, out, touched, "doc_id", NB).deletedRows === 3L)
+    assert(rows === before.filterNot(r => touched.contains(r._1)))
+    assert(SnapshotSink.verifySnapshot(spark, out) === Seq.empty)
   }
 
   test("null-id updates, schema drift, and non-canonical manifests are refused") {

@@ -90,6 +90,24 @@ class StreamingTakedownSpec extends AnyFunSuite {
     assert(SnapshotSink.verifySnapshot(spark, out, deepVerify = true) === Seq.empty)
   }
 
+  test("a batch re-delivered after a takedown re-commits nothing: no duplicate, no resurrection") {
+    val out = tmp("redeliver")
+    val flat = ExtractPipeline.extractFlat(Interleave.docs(spark, sfDir))
+    assert(SnapshotSink.commitStreamBatch(flat, out, batchId = 0L, NB).nonEmpty)
+    val victims = SnapshotSink.readCommitted(spark, out)
+      .select(col("doc_id")).distinct().orderBy(col("doc_id")).limit(2)
+      .collect().map(_.getString(0)).toSeq
+    assert(SnapshotSink.deleteDocs(spark, out, victims, NB).deletedRows > 0L)
+    val postTakedown = canon(SnapshotSink.readCommitted(spark, out))
+
+    // the takedown moved the victims' buckets to a fresh generation; their old
+    // ids are recorded as replaced, so the replay skips them instead of
+    // re-committing the whole bucket beside its rewrite
+    assert(SnapshotSink.commitStreamBatch(flat, out, batchId = 0L, NB) === Seq.empty)
+    assert(canon(SnapshotSink.readCommitted(spark, out)) === postTakedown)
+    assert(!postTakedown.exists(r => victims.exists(r.startsWith)))
+  }
+
   test("a crash-before-data-commit batch is NOT in the compacted log: re-delivery still commits") {
     val table = tmp("rtable"); val out = tmp("rout"); val ckpt = tmp("rckpt")
     val docs = Interleave.docs(spark, sfDir)
