@@ -542,7 +542,7 @@ object Similarity {
     case Some(dir) =>
       val spark = emb.sparkSession
       if (graft.sources.TableSnapshot.isCommitted(spark, dir, PqStoreBuckets))
-        graft.sources.TableSnapshot.readBack(spark, dir).drop("bucket")
+        graft.sources.SnapshotSink.readCommitted(spark, dir).drop("bucket")
       else graft.sources.TableSnapshot.runHashBucketed(
         pqTrain(emb, initMod, iters), "sub", dir, PqStoreBuckets)
   }

@@ -9,6 +9,7 @@ import scala.util.matching.Regex
 import graft.operators.{EngineConfig, ExtractPipeline, SpanMetricsAgg}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
 
@@ -132,18 +133,8 @@ object SnapshotSink {
       crashAfterWaves: Int = Int.MaxValue,
       deepVerify: Boolean = true,
       io: CommitIo = PosixCommitIo): SnapshotReport = {
-    val spark = docs.sparkSession
-    val out = Paths.get(outDir)
-    Files.createDirectories(out.resolve("data"))
-
-    // -- step 1: idempotent skip via content hash ---------------------------------
-    // (name+size check is driver-side METADATA only; the byte-level hash check runs
-    // as ONE batched distributed job over every fast-passing bucket — at 100 TB the
-    // driver never re-reads committed data and the job count stays O(1), not
-    // O(buckets))
-    val (head0, existing) = baseManifest(out)
-
-    if (docs.columns.contains("bucket")) {
+    val bucketed = docs.columns.contains("bucket")
+    if (bucketed) {
       // Layout guard, two tiers. (1) Range: the column MUST lie in [0, nBuckets). A
       // wrong nBuckets (e.g. a 16-bucket layout into an 8-bucket run) leaves values
       // >= nBuckets matching NO wave filter — documents silently never extracted,
@@ -168,8 +159,8 @@ object SnapshotSink {
       // (no manifest yet — the job reads the whole corpus anyway, and one extra
       // two-column pass is noise next to OCR) assert column == bucketOf(doc_id)
       // everywhere. Resumes skip this scan to keep partition pruning intact; they
-      // are covered by the non-empty refusal below.
-      if (existing.isEmpty) {
+      // are covered by the non-empty refusal of [[commitBuckets]].
+      if (readManifest(docs.sparkSession, outDir).isEmpty) {
         val mismatch = docs
           .filter(col("bucket") =!= bucketOf(col("doc_id"), nBuckets))
           .limit(1).count()
@@ -178,6 +169,45 @@ object SnapshotSink {
             "an in-range wrong bucket column would silently mis-route documents")
       }
     }
+    // The filter sits on the INPUT side of the pipeline: a resumed job never pays
+    // decode/OCR for committed work (the expensive step is the one being saved,
+    // exactly like the reference skipping a re-download on hash match). Against a
+    // bucket-PARTITIONED source this is a partition filter — the scan itself reads
+    // only the wave's buckets (SnapshotResumeSpec asserts PartitionFilters + the
+    // pruned partition count); otherwise it prunes post-scan. Int literals, not
+    // Long: a Long literal would type-coerce the int `bucket` partition column
+    // through a cast, defeating the scan-level pruning this filter exists for.
+    commitBuckets(Paths.get(outDir), nBuckets, waveSize, deepVerify, io,
+      crashAfterWaves) { wave =>
+      val docsW =
+        if (bucketed) docs.filter(col("bucket").isin(wave: _*)).drop("bucket")
+        else docs.filter(bucketOf(col("doc_id"), nBuckets).isin(wave: _*))
+      ExtractPipeline.extractFlat(docsW, config)
+        .withColumn("bucket", bucketOf(col("doc_id"), nBuckets))
+    }
+  }
+
+  /**
+   * The resume and wave body of [[run]] and [[TableSnapshot.run]]. `rowsOf(bases)`
+   * builds the rows of those base buckets, each carrying its base `bucket` id.
+   *
+   *   1. check the schema the waves write against the recorded one
+   *      ([[TableSnapshot.recordSchema]]; each wave's commit records it);
+   *   2. idempotent skip via content hash: verify HEAD's entries (the name+size
+   *      check is driver-side METADATA only; the byte-level hash runs as ONE batched
+   *      distributed job over every fast-passing bucket — at 100 TB the driver never
+   *      re-reads committed data and the job count stays O(1), not O(buckets));
+   *   3. commit every base bucket without a valid entry in waves of `waveSize`, one
+   *      Spark action and one manifest version per wave ([[commitWaveFlat]]).
+   */
+  private[sources] def commitBuckets(out: Path, nBuckets: Int, waveSize: Int,
+      deepVerify: Boolean, io: CommitIo, crashAfterWaves: Int = Int.MaxValue)(
+      rowsOf: Seq[Int] => DataFrame): SnapshotReport = {
+    val schemaOf = rowsOf(Seq.empty) // analysis only: the schema every wave writes
+    val spark = schemaOf.sparkSession
+    Files.createDirectories(out.resolve("data"))
+    TableSnapshot.recordSchema(out, schemaOf.schema)(readState(out))
+    val (head0, existing) = baseManifest(out)
     val (valid, invalid) = verifyEntries(spark, out, existing, deepVerify)
     // Generation-aware resume: a rewritten or COMPACTED snapshot's entries live at
     // `gen*nBuckets + base` ([[compact]]). Whenever each base bucket appears at most
@@ -185,7 +215,7 @@ object SnapshotSink {
     // and true by construction after any rewrite), resume works per BASE and
     // re-commits an invalidated bucket under its EXISTING manifest id, so rewrites
     // never break the heal-from-source path. On a NON-canonical manifest (a
-    // mid-flight stream with several generations per base) run() extracts NOTHING:
+    // mid-flight stream with several generations per base) this commits NOTHING:
     // with multiple generations live, "base bucket b is missing" cannot be
     // distinguished from "batch for b hasn't arrived yet", and committing a fresh
     // extraction at the base ids would DUPLICATE every streamed row the moment both
@@ -199,11 +229,11 @@ object SnapshotSink {
         "in a non-canonical (multi-generation stream) manifest — run() cannot " +
         "re-extract composite stream ids; re-deliver the stream batch or compact() " +
         "the verified generations first")
-    // Resume-side half of the layout guard: a bucket being RE-extracted whose prior
+    // Resume-side half of the layout guard: a bucket being RE-committed whose prior
     // manifest entry recorded rows > 0 must not stage empty — that is the silent-loss
     // signature of an in-range wrong bucket column on a resume (the agreement scan
-    // above only runs on initial commits). Legitimately-empty buckets (prior rows == 0)
-    // stay re-committable as empty.
+    // of [[run]] only runs on initial commits). Legitimately-empty buckets (prior
+    // rows == 0) stay re-committable as empty.
     val mustBeNonEmpty = invalid.filter(_.rows > 0).map(_.bucket).toSet
     var manifest = valid.sortBy(_.bucket)
     val idOfBase = existing.map(e => (e.bucket % nBuckets) -> e.bucket).toMap
@@ -219,37 +249,19 @@ object SnapshotSink {
     val processed = Seq.newBuilder[Long]
     var totalRows = 0L
     var head = head0
-    val waves = todo.grouped(waveSize).toSeq
-
-    waves.zipWithIndex.foreach { case (baseWave, wi) =>
+    todo.grouped(waveSize).zipWithIndex.foreach { case (baseWave, wi) =>
       val t0 = System.nanoTime()
-      // -- step 2: extract the wave's buckets into staging ------------------------
-      // The filter sits on the INPUT side of the pipeline: a resumed job never pays
-      // decode/OCR for committed work (the expensive step is the one being saved,
-      // exactly like the reference skipping a re-download on hash match). Against a
-      // bucket-PARTITIONED source this is a partition filter — the scan itself reads
-      // only the wave's buckets (SnapshotResumeSpec asserts PartitionFilters + the
-      // pruned partition count); otherwise it prunes post-scan.
-      // Int literals, not Long: base bucket ids always fit (< nBuckets), and a Long
-      // literal would type-coerce the int `bucket` partition column through a cast,
-      // defeating the scan-level partition pruning this filter exists for.
-      val waveInts = baseWave.map(_.toInt)
-      val docsW =
-        if (docs.columns.contains("bucket"))
-          docs.filter(col("bucket").isin(waveInts: _*)).drop("bucket")
-        else docs.filter(bucketOf(col("doc_id"), nBuckets).isin(waveInts: _*))
-      // Staged rows carry their MANIFEST id (== base for unrewritten snapshots; the
-      // rewritten generation's id otherwise) so the commit lands at the id the
-      // manifest, readBack layout, and verification already use.
-      val targetIds = baseWave.map(idOfBase)
-      val flat = ExtractPipeline.extractFlat(docsW, config).withColumn("bucket",
-        rekey(bucketOf(col("doc_id"), nBuckets), baseWave.map(b => b -> idOfBase(b))))
+      // staged rows carry their MANIFEST id (== base for unrewritten snapshots; the
+      // rewritten generation's id otherwise), the id verification already uses
+      val ids = baseWave.map(idOfBase)
+      val rows = rowsOf(baseWave.map(_.toInt))
+        .withColumn("bucket", rekey(col("bucket"), baseWave.zip(ids)))
       val (newManifest, waveRows, v) =
-        commitWaveFlat(spark, out, Some(flat), targetIds, manifest, t0, movesHead(head),
-          expectNonEmpty = mustBeNonEmpty.intersect(targetIds.toSet), io = io)
+        commitWaveFlat(spark, out, rows, ids, manifest, t0, movesHead(head),
+          expectNonEmpty = mustBeNonEmpty.intersect(ids.toSet), io = io)
       manifest = newManifest
       head = v
-      processed ++= targetIds
+      processed ++= ids
       totalRows += waveRows
       if (wi + 1 >= crashAfterWaves) throw new InjectedCrash(wi)
     }
@@ -258,37 +270,15 @@ object SnapshotSink {
       invalid.map(_.bucket).sorted, totalRows)
   }
 
-  /** Read the committed span table back (flat schema + bucket partition column) by
-    * scanning the whole data directory. Fast and planner-friendly (directory-level
-    * partition discovery), but it trusts the directory listing — after a CRASHED
-    * rewrite (its fresh generation never published, or its sources not yet GC'd) it
-    * double-reads; run [[vacuum]] first, or use [[readCommitted]], which resolves
-    * files through the manifest. */
-  def readBack(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(Paths.get(outDir).resolve("data").toString)
-
   /** Manifest-resolved read (Iceberg semantics: the manifest IS the table): scan
-    * exactly the data files HEAD's manifest lists, so orphan directories — a crashed
-    * rewrite's fresh generation, an abandoned write — are invisible without any
-    * vacuum. Fails loudly when a listed file is missing ([[readEntries]]). */
+    * exactly the data files HEAD's manifest lists, with the recorded schema, so
+    * orphan directories — a crashed rewrite's fresh generation, an abandoned write —
+    * are invisible without any vacuum. Fails loudly when a listed file is missing
+    * ([[readEntries]]). */
   def readCommitted(spark: SparkSession, outDir: String): DataFrame = {
     val (v, entries) = baseManifest(Paths.get(outDir))
     readEntries(spark, outDir, entries, s"HEAD (version $v)")
   }
-
-  /** Empty frame in the committed schema. When EVERY bucket is empty there is no
-    * parquet file to infer from — surface a precise error instead of Spark's
-    * opaque schema-inference failure (a snapshot whose data never had a single row
-    * carries no schema; callers must get it from the producing pipeline). */
-  private def emptyCommitted(spark: SparkSession, outDir: String): DataFrame =
-    try readBack(spark, outDir).limit(0)
-    catch {
-      case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalStateException(
-          s"snapshot at $outDir has a valid manifest but zero data files in every " +
-            "bucket — an all-empty snapshot carries no schema to read back; take " +
-            "the schema from the producing pipeline instead", e)
-    }
 
   // ---- table state ------------------------------------------------------------------
   //
@@ -309,12 +299,13 @@ object SnapshotSink {
   /** One state record. `head` is 0 until the first commit to main. `batchBases` is
     * the ledger of [[allocateGeneration]]: batch id -> allocated composite base, so
     * a re-delivered batch reuses its allocation (a crash between allocation and
-    * data commit leaves a reservation the re-delivery fills in). `schemas` is
-    * [[TableSnapshot]]'s schema history.
+    * data commit leaves a reservation the re-delivery fills in). `schemas` is the
+    * table's schema history, recorded by every commit and read by every scan
+    * ([[TableSnapshot.recordSchema]]).
     *
-    * `compactedIds` are the ids a [[rewrite]] replaced (compaction, takedown,
-    * merge), recorded in the publish that commits the rewrite, before their bytes
-    * are GC'd. [[commitStreamBatch]] skips them: a batch replayed after an
+    * `compactedIds` are the stream-batch ids a [[rewrite]] replaced (compaction,
+    * takedown, merge), recorded in the publish that commits the rewrite, before
+    * their bytes are GC'd. [[commitStreamBatch]] skips them: a batch replayed after an
     * ill-timed rewrite (crash between sink commit and checkpoint advance, then
     * compact or takedown while the stream is down) would otherwise RE-COMMIT them
     * — every row duplicated and takedown-deleted documents RESURRECTED
@@ -430,7 +421,7 @@ object SnapshotSink {
     allocated
   }
 
-  /** Composite ids [[compact]] merged away (see [[TableState]]). */
+  /** Stream-batch ids a [[rewrite]] replaced (see [[TableState]]). */
   private[graft] def readCompactedIds(out: Path): Set[Long] =
     readState(out).compactedIds.toSet
 
@@ -562,14 +553,14 @@ object SnapshotSink {
     readEntries(spark, outDir, readManifestAt(spark, outDir, v), s"snapshot version $v")
 
   /** Scan exactly the data files `entries` list — the one manifest-resolved scan of
-    * every read and rewrite. The `basePath` option keeps the `bucket` partition
-    * column; `mergeSchema` unions per-file schemas ([[TableSnapshot]]'s add-column
-    * evolution). `what` names the read in the loud failure when any listed file was
-    * reclaimed. Falls back to an empty frame in the committed schema when the
-    * entries list no files (all-empty buckets). */
+    * every read and rewrite — with the table's recorded schema
+    * ([[TableSnapshot.tableSchema]]): no inference job, an added column reads NULL
+    * from files written before it, and the `basePath` option keeps the `bucket`
+    * partition column. `what` names the read in the loud failure when any listed
+    * file was reclaimed. Entries that list no files (all-empty buckets) read as a
+    * zero-row frame. */
   private[sources] def readEntries(spark: SparkSession, outDir: String,
-      entries: Seq[ManifestEntry], what: String,
-      mergeSchema: Boolean = false): DataFrame = {
+      entries: Seq[ManifestEntry], what: String): DataFrame = {
     val out = Paths.get(outDir)
     val files = entries.flatMap(e => e.files.map(f => bucketDir(out, e.bucket).resolve(f)))
     val missing = files.filterNot(Files.isRegularFile(_))
@@ -578,9 +569,9 @@ object SnapshotSink {
         "were reclaimed (compaction GC / vacuum / bucket invalidation — the " +
         "expireSnapshots analogue); time travel reaches only versions whose files " +
         s"are retained. First missing: ${missing.head}")
-    if (files.isEmpty) emptyCommitted(spark, outDir)
-    else spark.read.option("basePath", out.resolve("data").toString)
-      .option("mergeSchema", mergeSchema).parquet(files.map(_.toString): _*)
+    spark.read.schema(TableSnapshot.tableSchema(out))
+      .option("basePath", out.resolve("data").toString)
+      .parquet(files.map(_.toString): _*)
   }
 
   /** Prune manifest history to the newest `keepLast` versions, and every state
@@ -904,21 +895,19 @@ object SnapshotSink {
     * [[rewrite]] of the buckets that hold a match, keeping every row where
     * `matches` is not true (NULL-id bystanders included). */
   private[sources] def takedown(spark: SparkSession, out: Path, nBuckets: Int,
-      io: CommitIo, bases: Set[Long], matches: Column,
-      mergeSchema: Boolean = false): DeleteReport = {
+      io: CommitIo, bases: Set[Long], matches: Column): DeleteReport = {
     val (head, existing) = canonicalBase(out, None, nBuckets)
     val affected = existing.filter(e => bases(e.bucket % nBuckets) && e.rows > 0)
     val hits: Map[Long, Long] =
       if (affected.isEmpty) Map.empty
-      else readEntries(spark, out.toString, affected, "takedown source", mergeSchema)
-        .filter(matches).groupBy(col("bucket").cast("long")).count()
+      else readEntries(spark, out.toString, affected, "takedown source")
+        .filter(matches).groupBy(col("bucket")).count()
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val matched = affected.filter(e => hits.contains(e.bucket))
     val rewritten =
       if (matched.isEmpty) Seq.empty
       else rewrite(spark, out, io, nBuckets, existing, matched, movesHead(head),
-        takedown = true, mergeSchema = mergeSchema)(
-        _.map(_.filter(!coalesce(matches, lit(false)))))
+        takedown = true)(_.filter(!coalesce(matches, lit(false))))
     DeleteReport(hits.values.sum, rewritten)
   }
 
@@ -1002,12 +991,13 @@ object SnapshotSink {
       toBranch: Option[String]): UpsertReport = {
     val out = Paths.get(outDir)
     val (baseVersion, existing) = canonicalBase(out, toBranch, nBuckets)
-    val committedCols = readCommittedAt(spark, outDir, baseVersion)
-      .drop("bucket").columns
-    require(updates.columns.sorted.sameElements(committedCols.sorted),
-      s"updates schema ${updates.columns.sorted.mkString("(", ",", ")")} must match " +
-        s"the committed table ${committedCols.sorted.mkString("(", ",", ")")}")
     require(!updates.columns.contains("bucket"), "updates must not carry `bucket`")
+    // names AND types against the recorded schema, before any Spark job: a
+    // retyped column would commit files no scan can read with that schema
+    def cols(schema: StructType) = TableSnapshot.dataColumns(schema)
+      .map(f => s"${f.name}:${f.dataType.sql}").sorted.mkString("(", ",", ")")
+    val (got, want) = (cols(updates.schema), cols(TableSnapshot.tableSchema(out)))
+    require(got == want, s"updates schema $got must match the committed table $want")
     val entryOfBase = existing.map(e => (e.bucket % nBuckets) -> e).toMap
 
     // ONE distributed job discovers the affected buckets; only <= nBuckets bucket
@@ -1039,13 +1029,12 @@ object SnapshotSink {
       // and distinct docs of each. Update doc_ids are never null (refused above),
       // and a semi join never matches a null key, so countDistinct sees no nulls
       // it would skip.
-      stat = cur.fold(updSide)(_.join(updIds, Seq("doc_id"), "left_semi")
-          .select(lit(0).as("side"), col("doc_id")).unionByName(updSide))
+      stat = cur.join(updIds, Seq("doc_id"), "left_semi")
+        .select(lit(0).as("side"), col("doc_id")).unionByName(updSide)
         .agg(count(when(hit, lit(1))), countDistinct(when(hit, col("doc_id"))),
           count(when(upd, lit(1))), countDistinct(when(upd, col("doc_id"))))
         .head()
-      Some(cur.fold(updRows)(
-        _.join(updIds, Seq("doc_id"), "left_anti").unionByName(updRows)))
+      cur.join(updIds, Seq("doc_id"), "left_anti").unionByName(updRows)
     }
     UpsertReport(stat.getLong(1), stat.getLong(3) - stat.getLong(1), stat.getLong(0),
       stat.getLong(2), rewritten)
@@ -1082,6 +1071,7 @@ object SnapshotSink {
     // (the ledger is branch-agnostic), so batches, branch merges, and compactions
     // still share one strictly-increasing id space.
     val (baseVersion, existing) = baseManifest(out, toBranch)
+    TableSnapshot.recordSchema(out, flat.schema)(readState(out))
     // Composite base comes from the ledger, NOT batchId*nBuckets: compact() writes
     // its canonical generation at max+1, which is exactly the id range
     // `batchId * nBuckets` would hand the NEXT micro-batch — the skip-verify would
@@ -1108,7 +1098,7 @@ object SnapshotSink {
     val withBucket = flat
       .withColumn("bucket", lit(base) + bucketOf(col("doc_id"), nBuckets))
       .filter(col("bucket").isin(todo: _*))
-    commitWaveFlat(spark, out, Some(withBucket), todo, kept, System.nanoTime(),
+    commitWaveFlat(spark, out, withBucket, todo, kept, System.nanoTime(),
       toBranch.fold(movesHead(baseVersion) _)(advancesBranch), io = io)
     todo
   }
@@ -1128,8 +1118,7 @@ object SnapshotSink {
    * rewritten in place — and the state publish is the atomic swap (source entries
    * out, merged entries in). Source directories are deleted only AFTER that publish,
    * so a crash at any point leaves a fully readable snapshot; the worst case is
-   * orphan directories, which [[vacuum]] removes (and which MUST be removed before
-   * [[readBack]], which scans the whole data directory, is trusted again).
+   * orphan directories, which no manifest-resolved read sees and [[vacuum]] removes.
    * Source directories a live BRANCH still reads are kept (the same referenced set
    * as [[vacuum]]), and a branch forked at the pre-compaction HEAD has its fork
    * base moved to the compacted HEAD — compaction changes no row, so the branch
@@ -1200,14 +1189,15 @@ object SnapshotSink {
    * state publish that retires it.
    *
    *   1. allocate a fresh generation ([[allocateGeneration]]);
-   *   2. scan `replaced`'s manifest-listed files (None when they list none) and
-   *      apply `transform`, whose rows keep their old or base `bucket` id;
+   *   2. scan `replaced`'s manifest-listed files and apply `transform`, whose rows
+   *      keep their old or base `bucket` id;
    *   3. re-key every row to `gen * nBuckets + base`;
    *   4. commit ONE wave ([[commitWaveFlat]]) on top of `base` minus `replaced` —
    *      with `preservesRows`, every new bucket's staged rows must equal what its
    *      source entries recorded before anything publishes;
-   *   5. one state publish: `commit` moves the ref and the replaced ids join the
-   *      compacted ids, so a re-delivered stream batch never re-commits them;
+   *   5. one state publish: `commit` moves the ref and the replaced ids of stream
+   *      batches join the compacted ids, so a re-delivered batch never re-commits
+   *      them;
    *   6. GC the replaced directories: all of them for a `takedown` (deletion is
    *      physical), else those no live ref reads ([[referencedBuckets]]).
    *
@@ -1216,24 +1206,26 @@ object SnapshotSink {
    */
   private[sources] def rewrite(spark: SparkSession, out: Path, io: CommitIo,
       nBuckets: Int, base: Seq[ManifestEntry], replaced: Seq[ManifestEntry],
-      commit: Commit, takedown: Boolean = false, mergeSchema: Boolean = false,
-      preservesRows: Boolean = false, layout: Seq[Column] = Seq.empty)(
-      transform: Option[DataFrame] => Option[DataFrame]): Seq[Long] = {
+      commit: Commit, takedown: Boolean = false, preservesRows: Boolean = false,
+      layout: Seq[Column] = Seq.empty)(
+      transform: DataFrame => DataFrame): Seq[Long] = {
     val t0 = System.nanoTime()
     val genBase = allocateGeneration(out, io, None, base, nBuckets)
     val newId = replaced.map(_.bucket % nBuckets).distinct.sorted.map(b => b -> (genBase + b))
-    val scan = Option.when(replaced.exists(_.files.nonEmpty))(
-      readEntries(spark, out.toString, replaced, "rewrite source", mergeSchema))
-    val rows = transform(scan).map(_.withColumn("bucket",
-      rekey(pmod(col("bucket").cast("long"), lit(nBuckets.toLong)), newId)))
+    val rows = transform(readEntries(spark, out.toString, replaced, "rewrite source"))
+      .withColumn("bucket", rekey(pmod(col("bucket"), lit(nBuckets.toLong)), newId))
     val replacedIds = replaced.map(_.bucket)
     val expectRows =
       if (!preservesRows) Map.empty[Long, Long]
       else replaced.groupMapReduce(e => genBase + e.bucket % nBuckets)(_.rows)(_ + _)
     commitWaveFlat(spark, out, rows, newId.map(_._2),
       base.filterNot(e => replacedIds.contains(e.bucket)), t0,
-      v => s => commit(v)(s).copy(
-        compactedIds = (s.compactedIds ++ replacedIds).distinct.sorted),
+      v => s => {
+        // only a stream batch's allocation (ledger key >= 0) is ever re-delivered
+        val streamed = s.batchBases.collect { case (k, b) if k >= 0 => b }.toSet
+        commit(v)(s).copy(compactedIds = (s.compactedIds ++
+          replacedIds.filter(id => streamed(id - id % nBuckets))).distinct.sorted)
+      },
       io = io, expectRows = expectRows,
       layoutExprs = Option.when(layout.nonEmpty)(col("bucket") +: layout))
     val live =
@@ -1247,9 +1239,8 @@ object SnapshotSink {
   /** Delete `bucket=*` data directories no live ref reads — orphans left by a
     * [[rewrite]] that crashed or lost its commit (its fresh generation), by a crash
     * between a rewrite's commit and its GC, or by any abandoned write. The manifest
-    * is the source of truth (Iceberg semantics), but [[readBack]] scans the whole
-    * data directory, so orphans must be vacuumed after a crashed rewrite before
-    * readBack is trusted again. Returns the removed directory names. */
+    * is the source of truth (Iceberg semantics), so no read ever sees an orphan;
+    * vacuum only reclaims its bytes. Returns the removed directory names. */
   def vacuum(spark: SparkSession, outDir: String): Seq[String] = {
     val out = Paths.get(outDir)
     val referenced = referencedBuckets(spark, outDir, readManifest(spark, outDir))
@@ -1308,18 +1299,19 @@ object SnapshotSink {
 
   /**
    * The shared wave-commit body (batch [[run]] waves, streaming micro-batches and
-   * every [[rewrite]]): write `flat` (which must carry the `bucket` ids to commit;
-   * None stages nothing) to staging with the north rule's range layout, derive
+   * every [[rewrite]]): write `flat` (which must carry the `bucket` ids to commit)
+   * to staging with the north rule's range layout, derive
    * lineage metrics by RE-READING the staged parquet, publish each bucket, hash the
    * wave's files in one distributed job, publish the next manifest version and
    * commit it with the caller's state edit `commit` (which names the ref that
-   * moves). Returns (updated manifest, rows committed this wave, the published
-   * version).
+   * moves) in the same state publish that records `flat`'s schema
+   * ([[TableSnapshot.recordSchema]]). Returns (updated manifest, rows committed
+   * this wave, the published version).
    */
   private[sources] def commitWaveFlat(
       spark: SparkSession,
       out: Path,
-      flat: Option[DataFrame],
+      flat: DataFrame,
       wave: Seq[Long],
       manifest0: Seq[ManifestEntry],
       t0: Long,
@@ -1340,25 +1332,22 @@ object SnapshotSink {
     // salting). `layoutExprs` overrides with COMPUTED layout keys (a z-order curve
     // from [[compact]]'s layout parameter): the expression is a shuffle key only —
     // nothing derived is persisted into the data files.
-    flat.foreach(f =>
-      f.repartitionByRange(layoutExprs.getOrElse(rewriteLayout(f).map(col)): _*)
-        .write.partitionBy("bucket").mode("overwrite").parquet(staging.toString))
+    flat.repartitionByRange(layoutExprs.getOrElse(rewriteLayout(flat).map(col)): _*)
+      .write.partitionBy("bucket").mode("overwrite").parquet(staging.toString)
 
     // verify + lineage by re-reading what was written (write-path corruption
-    // surfaces here, not at some later consumer). An all-empty wave writes no
-    // partition dirs at all (Spark emits only _SUCCESS) — re-reading would throw
-    // schema-inference errors, so record zero-metrics entries instead: an empty
+    // surfaces here, not at some later consumer), with the staged frame's own
+    // schema — nothing is inferred. An all-empty wave writes no partition dirs at
+    // all (Spark emits only _SUCCESS), so it records zero-metrics entries: an empty
     // bucket is a legal committed state (resume of an empty bucket, re-delivered
     // stream batch whose rows all verified elsewhere).
     val metrics: Map[Long, WaveMetrics] =
       if (listPartitionDirs(staging).isEmpty) Map.empty
       else {
-        // partition-column type is INFERRED from the directory names (int for small
-        // batch ids, long once composite stream ids grow) — normalize to long
-        val staged = spark.read.parquet(staging.toString)
+        val staged = spark.read.schema(flat.schema).parquet(staging.toString)
         if (hasSpanMetrics(staged))
           staged
-            .groupBy(col("bucket").cast("long").as("bucket"))
+            .groupBy(col("bucket"))
             .agg(SpanMetricsAgg.spanMetrics(
               col("kind"), col("ok"), col("error"), col("text"),
               col("n_words"), col("conf_sum")).as("m"))
@@ -1370,7 +1359,7 @@ object SnapshotSink {
               confSum = r.getDouble(7))).toMap
         else
           staged
-            .groupBy(col("bucket").cast("long").as("bucket"))
+            .groupBy(col("bucket"))
             .agg(count(lit(1)).as("rows"))
             .collect()
             .map(r => r.getLong(0) -> WaveMetrics(rows = r.getLong(1))).toMap
@@ -1446,7 +1435,8 @@ object SnapshotSink {
         wall_ms = wallMs)).sortBy(_.bucket)
       waveRows += m.rows
     }
-    (manifest, waveRows, writeManifest(out, manifest, io, commit))
+    (manifest, waveRows, writeManifest(out, manifest, io,
+      v => s => commit(v)(TableSnapshot.recordSchema(out, flat.schema)(s))))
   }
 
   private[sources] def bucketDir(out: Path, bucket: Long): Path =

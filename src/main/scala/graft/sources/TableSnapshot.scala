@@ -19,8 +19,10 @@ import org.apache.spark.sql.types.{LongType, StructType}
  * leave the signatures outside the lineage story. Committing them here gives (a)
  * durability — a rerun SKIPS verified buckets and reads committed parquet instead of
  * recomputing md5-heavy signatures over the corpus, (b) the same two-tier
- * verification and invalidate->heal resume as extraction, and (c) manifest lineage
- * (row counts, per-file hashes) for every derived table.
+ * verification and invalidate->heal resume as extraction (one shared resume and wave
+ * body, [[SnapshotSink.commitBuckets]]), (c) manifest lineage (row counts, per-file
+ * hashes) for every derived table, and (d) a recorded schema that every read —
+ * [[SnapshotSink.readCommitted]] and its time-travel forms — scans with.
  *
  * The input must carry a `bucket` column in [0, nBuckets) — callers derive it from a
  * HASH of the id (never `id % n`: a modulus-sampled input would populate only
@@ -31,7 +33,8 @@ import org.apache.spark.sql.types.{LongType, StructType}
  */
 object TableSnapshot {
 
-  /** Commit (or resume) `df` into `outDir`; one wave per `waveSize` buckets.
+  /** Commit (or resume) `df` into `outDir`; one wave per `waveSize` buckets — the
+    * resume and wave body of [[SnapshotSink.run]], over a plain bucket filter.
     * Returns the same report shape as the extraction sink. */
   def run(
       df: DataFrame,
@@ -41,43 +44,8 @@ object TableSnapshot {
       deepVerify: Boolean = true,
       io: CommitIo = PosixCommitIo): SnapshotSink.SnapshotReport = {
     require(df.columns.contains("bucket"), "TableSnapshot input needs a `bucket` column")
-    val spark = df.sparkSession
-    val out = Paths.get(outDir)
-    Files.createDirectories(out.resolve("data"))
-    recordSchema(out, df.schema, io)
-
-    val (head0, existing) = SnapshotSink.baseManifest(out)
-    val (valid, invalid) = SnapshotSink.verifyEntries(spark, out, existing, deepVerify)
-    val mustBeNonEmpty = invalid.filter(_.rows > 0).map(_.bucket).toSet
-    var manifest = valid.sortBy(_.bucket)
-    // a [[deleteIds]] rewrite moves a bucket to a composite id `gen * nBuckets +
-    // base`; resume keys on the base, as [[SnapshotSink.run]] does
-    val idOfBase = existing.map(e => (e.bucket % nBuckets) -> e.bucket).toMap
-      .withDefault(identity)
-    val committed = valid.map(_.bucket).toSet
-    val todo = (0L until nBuckets).filterNot(b => committed(idOfBase(b)))
-    todo.foreach(b => SnapshotSink.deleteRecursively(
-      SnapshotSink.bucketDir(out, idOfBase(b))))
-
-    val processed = Seq.newBuilder[Long]
-    var totalRows = 0L
-    var head = head0
-    todo.grouped(waveSize).foreach { wave =>
-      val t0 = System.nanoTime()
-      val ids = wave.map(idOfBase)
-      val waveDf = df.filter(col("bucket").isin(wave.map(_.toInt): _*))
-        .withColumn("bucket", SnapshotSink.rekey(col("bucket"), wave.zip(ids)))
-      val (newManifest, waveRows, v) = SnapshotSink.commitWaveFlat(
-        spark, out, Some(waveDf), ids, manifest, t0, SnapshotSink.movesHead(head),
-        expectNonEmpty = mustBeNonEmpty.intersect(ids.toSet), io = io)
-      manifest = newManifest
-      head = v
-      processed ++= ids
-      totalRows += waveRows
-    }
-    SnapshotSink.deleteRecursively(out.resolve("staging"))
-    SnapshotSink.SnapshotReport(processed.result(), valid.map(_.bucket).sorted,
-      invalid.map(_.bucket).sorted, totalRows)
+    SnapshotSink.commitBuckets(Paths.get(outDir), nBuckets, waveSize, deepVerify, io)(
+      wave => df.filter(col("bucket").isin(wave: _*)))
   }
 
   /**
@@ -90,8 +58,8 @@ object TableSnapshot {
    * in committed derived tables; this rewrites exactly the buckets that can contain
    * the ids (routed by the SAME `pmod(hash(id), nBuckets)` the writers use,
    * computed by one tiny literal-Dataset job — no table scan) to a fresh
-   * generation, and leaves untouched buckets' bytes untouched. The scan unions
-   * per-file schemas, so buckets committed under different schema versions
+   * generation, and leaves untouched buckets' bytes untouched. The scan reads with
+   * the recorded schema, so buckets committed under different schema versions
    * rewrite in one wave.
    *
    * Same heal caveat as extraction takedown: a later invalidate->resume re-derives
@@ -110,8 +78,7 @@ object TableSnapshot {
     // the routing below hashes LONG ids; Murmur3 hashes Int and Long DIFFERENTLY,
     // so an INT-typed id column would route to the wrong buckets and this would
     // return a success-shaped DeleteReport(0, Nil) while the rows persist — refuse
-    val idType = schemaHistory(outDir).lastOption
-      .map(v => StructType.fromDDL(v.ddl)(idCol).dataType)
+    val idType = tableSchema(Paths.get(outDir)).find(_.name == idCol).map(_.dataType)
     require(idType.contains(LongType),
       s"deleteIds routes buckets via hash(BIGINT); committed `$idCol` is " +
         s"${idType.getOrElse("absent")} — pass ids in the column's own type family " +
@@ -122,19 +89,7 @@ object TableSnapshot {
       .select(pmod(hash(col("value")), lit(nBuckets)).cast("long").as("b"))
       .distinct().collect().map(_.getLong(0)).toSet
     SnapshotSink.takedown(spark, Paths.get(outDir), nBuckets, io, bases,
-      col(idCol).isInCollection(ids), mergeSchema = true)
-  }
-
-  /** Read the committed table back (original schema + bucket partition column)
-    * through HEAD's manifest, so a crashed rewrite's unreferenced directories are
-    * never read. `mergeSchema` unions the per-file schemas, so after an add-column
-    * evolution ([[recordSchema]]) buckets committed under an older schema version
-    * surface the new columns as NULL — the Iceberg add-column default — without
-    * any rewrite. */
-  def readBack(spark: SparkSession, outDir: String): DataFrame = {
-    val (v, entries) = SnapshotSink.baseManifest(Paths.get(outDir))
-    SnapshotSink.readEntries(spark, outDir, entries, s"HEAD (version $v)",
-      mergeSchema = true)
+      col(idCol).isInCollection(ids))
   }
 
   /** True iff `outDir` holds a FULLY committed table: a manifest with exactly one
@@ -167,20 +122,24 @@ object TableSnapshot {
     val withBucket =
       df.withColumn("bucket", pmod(hash(col(keyCol)), lit(nBuckets)).cast("int"))
     run(withBucket, outDir, nBuckets, deepVerify = deepVerify)
-    readBack(df.sparkSession, outDir).drop("bucket")
+    SnapshotSink.readCommitted(df.sparkSession, outDir).drop("bucket")
   }
 
   // ---- schema evolution ---------------------------------------------------------
   //
   // Iceberg-style table-level schema history (in the state record, as a list of
-  // {version, ddl}): every commit records the writer's schema; an ADD-COLUMN
-  // evolution (all previously-recorded columns still present with identical types —
-  // nullability aside, which parquet's reader widens anyway) appends a new version,
-  // and old buckets keep their files (new columns read back NULL via mergeSchema).
+  // {version, ddl}): every commit — batch, stream and derived-table — records the
+  // writer's schema, and every scan reads with the newest version, so no reader
+  // ever infers a schema from data files. An ADD-COLUMN evolution (all
+  // previously-recorded columns still present with identical types) appends a new
+  // version, and old buckets keep their files: the new columns read back NULL.
   // Anything else — dropped column, retyped column — is REFUSED loudly: those need
-  // an explicit rewrite (the [[SnapshotSink.compact]]-shaped action), never a silent
-  // half-schema table. Resume composes: healing an old bucket under the evolved
-  // schema rewrites just that bucket in the new shape, which mergeSchema also reads.
+  // an explicit rewrite (the [[SnapshotSink.compact]]-shaped action), never a
+  // silent half-schema table. Resume composes: healing an old bucket under the
+  // evolved schema rewrites just that bucket in the new shape. `bucket` is the
+  // partition column, INT or BIGINT by writer: it takes no part in the record,
+  // and scans type it BIGINT. Nullability takes no part either: a frame read
+  // back from parquet is all-nullable, and must not count as a change.
 
   final case class SchemaVersion(version: Long, ddl: String)
 
@@ -188,25 +147,44 @@ object TableSnapshot {
   def schemaHistory(outDir: String): Seq[SchemaVersion] =
     SnapshotSink.readState(Paths.get(outDir)).schemas
 
-  private def recordSchema(out: Path, schema: StructType, io: CommitIo): Unit = {
-    val ddl = schema.toDDL
-    SnapshotSink.updateState(out, io) { s =>
-      s.schemas.lastOption match {
-        case Some(head) if head.ddl == ddl => s // unchanged — common case
-        case last =>
-          last.foreach { head =>
-            val prev = StructType.fromDDL(head.ddl)
-            val cur = schema.fields.map(f => f.name -> f.dataType).toMap
-            val broken = prev.fields.filter(f => !cur.get(f.name).contains(f.dataType))
-            require(broken.isEmpty,
-              s"incompatible schema change for committed table $out: column(s) " +
-                broken.map(f => s"${f.name}:${f.dataType.sql}").mkString("[", ", ", "]") +
-                " dropped or retyped vs recorded schema version " + head.version +
-                " — add-column evolution only; drops/retypes need an explicit rewrite")
-          }
-          s.copy(schemas =
-            s.schemas :+ SchemaVersion(last.map(_.version).getOrElse(0L) + 1, ddl))
-      }
+  /** `schema` as recorded and compared: every column but `bucket`, all nullable. */
+  private[sources] def dataColumns(schema: StructType): StructType =
+    StructType(schema.filter(_.name != "bucket")).toNullable
+
+  /** The schema every scan of `out` reads with: the newest recorded version's
+    * columns, then `bucket` BIGINT. A table without one is refused, never inferred. */
+  private[sources] def tableSchema(out: Path): StructType =
+    SnapshotSink.readState(out).schemas.lastOption.fold(throw unrecorded(out))(v =>
+      dataColumns(StructType.fromDDL(v.ddl)).add("bucket", LongType))
+
+  private def unrecorded(out: Path) = new IllegalStateException(
+    s"$out has no recorded schema: it was committed before every table recorded " +
+      "its schema, or never committed — rebuild it (delete the directory and re-run " +
+      "its writer)")
+
+  /** The state edit that records `schema` as the table's newest schema version,
+    * unless it equals the newest one. Refuses a non-add-column change, and a
+    * committed table without a recorded schema. Every commit applies it in the
+    * state publish that commits ([[SnapshotSink.commitWaveFlat]]); writers also
+    * apply it to the current state first, to refuse before writing anything. */
+  private[sources] def recordSchema(out: Path, schema: StructType)(
+      s: SnapshotSink.TableState): SnapshotSink.TableState = {
+    val cur = dataColumns(schema)
+    s.schemas.lastOption.map(v => v -> dataColumns(StructType.fromDDL(v.ddl))) match {
+      case None if s.head != 0L => throw unrecorded(out)
+      case Some((_, prev)) if prev.toDDL == cur.toDDL => s // unchanged — common case
+      case last =>
+        last.foreach { case (head, prev) =>
+          val types = cur.fields.map(f => f.name -> f.dataType).toMap
+          val broken = prev.fields.filter(f => !types.get(f.name).contains(f.dataType))
+          require(broken.isEmpty,
+            s"incompatible schema change for committed table $out: column(s) " +
+              broken.map(f => s"${f.name}:${f.dataType.sql}").mkString("[", ", ", "]") +
+              " dropped or retyped vs recorded schema version " + head.version +
+              " — add-column evolution only; drops/retypes need an explicit rewrite")
+        }
+        s.copy(schemas =
+          s.schemas :+ SchemaVersion(last.map(_._1.version).getOrElse(0L) + 1, cur.toDDL))
     }
   }
 }

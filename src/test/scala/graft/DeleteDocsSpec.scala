@@ -1,12 +1,9 @@
 package graft
 
 import java.nio.file.Paths
-import java.util.concurrent.atomic.AtomicInteger
 
 import graft.operators.ExtractPipeline
 import graft.sources.{Interleave, SnapshotSink, TableSnapshot}
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -34,7 +31,7 @@ class DeleteDocsSpec extends AnyFunSuite {
   private def docs: DataFrame = Interleave.docs(spark, sfDir)
 
   private def docIdsInBucket(out: String, b: Long, n: Int): Seq[String] =
-    SnapshotSink.readBack(spark, out)
+    SnapshotSink.readCommitted(spark, out)
       .filter(col("bucket") === b && col("doc_id").isNotNull)
       .select(col("doc_id")).distinct()
       .orderBy(col("doc_id")).limit(n)
@@ -53,10 +50,10 @@ class DeleteDocsSpec extends AnyFunSuite {
     val out = tmpDir("cow")
     SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB)
     val before = byBase(out)
-    val rowsBefore = SnapshotSink.readBack(spark, out).count()
+    val rowsBefore = SnapshotSink.readCommitted(spark, out).count()
 
     val victims = docIdsInBucket(out, 2L, 2) ++ docIdsInBucket(out, 5L, 1)
-    val victimRows = SnapshotSink.readBack(spark, out)
+    val victimRows = SnapshotSink.readCommitted(spark, out)
       .filter(col("doc_id").isInCollection(victims)).count()
     assert(victimRows > 0)
 
@@ -74,28 +71,12 @@ class DeleteDocsSpec extends AnyFunSuite {
       assert(after(b).files !== before(b).files, s"bucket $b must be rewritten")
       assert(after(b).rows < before(b).rows)
     }
-    val back = SnapshotSink.readBack(spark, out)
+    val back = SnapshotSink.readCommitted(spark, out)
     assert(back.count() === rowsBefore - victimRows)
     assert(back.filter(col("doc_id").isInCollection(victims)).count() === 0L)
     // the rewritten snapshot still verifies end-to-end (resume = full no-op)
     val resume = SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB)
     assert(resume.processed.isEmpty && resume.invalidated.isEmpty)
-  }
-
-  /** `body`'s result and the Spark jobs submitted while it ran (listener events
-    * drained both sides). */
-  private def withJobCount[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerDrain(sc)
-    sc.addSparkListener(listener)
-    val result =
-      try { val r = body; ListenerDrain(sc); r }
-      finally sc.removeSparkListener(listener)
-    (result, jobs.get)
   }
 
   test("a multi-bucket takedown is one version; bystanders survive; unmatched buckets stay") {
@@ -142,8 +123,8 @@ class DeleteDocsSpec extends AnyFunSuite {
     SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB)
     val one = docIdsInBucket(out, 0L, 1)
     val four = Seq(2L, 3L, 5L, 7L).flatMap(b => docIdsInBucket(out, b, 1))
-    val (r1, jobs1) = withJobCount(SnapshotSink.deleteDocs(spark, out, one, NB))
-    val (r4, jobs4) = withJobCount(SnapshotSink.deleteDocs(spark, out, four, NB))
+    val (r1, jobs1) = JobCount(spark)(SnapshotSink.deleteDocs(spark, out, one, NB))
+    val (r4, jobs4) = JobCount(spark)(SnapshotSink.deleteDocs(spark, out, four, NB))
     assert(r1.rewrittenBuckets.map(_ % NB) === Seq(0L) &&
       r4.rewrittenBuckets.map(_ % NB) === Seq(2L, 3L, 5L, 7L))
     assert(jobs1 > 0 && jobs4 === jobs1,
@@ -174,14 +155,14 @@ class DeleteDocsSpec extends AnyFunSuite {
   test("deleting every doc of a bucket leaves a legal empty bucket") {
     val out = tmpDir("empty")
     SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB)
-    val all = SnapshotSink.readBack(spark, out)
+    val all = SnapshotSink.readCommitted(spark, out)
       .filter(col("bucket") === 6).select(col("doc_id")).distinct()
       .collect().map(_.getString(0)).toSeq
     val report = SnapshotSink.deleteDocs(spark, out, all, NB)
     assert(report.rewrittenBuckets === Seq(NB + 6L))
     val entry = byBase(out)(6L)
     assert(entry.bucket === NB + 6L && entry.rows === 0L && entry.files.isEmpty)
-    assert(SnapshotSink.readBack(spark, out)
+    assert(SnapshotSink.readCommitted(spark, out)
       .filter(pmod(col("bucket"), lit(NB)) === 6).count() === 0L)
   }
 

@@ -39,7 +39,7 @@ class PqStoreSpec extends AnyFunSuite {
     assert(canon(Similarity.pqEncode(emb, store = Some(dir))) === encodePlain)
     assert(TableSnapshot.isCommitted(spark, dir, Similarity.PqStoreBuckets))
     // committed frame round-trips the training output exactly
-    assert(canon(TableSnapshot.readBack(spark, dir).drop("bucket")
+    assert(canon(SnapshotSink.readCommitted(spark, dir).drop("bucket")
       .orderBy("sub", "cell", "dim")) === canon(Similarity.pqTrain(emb)))
 
     // subsequent consumers read back (probe true) and agree byte-for-byte

@@ -9,9 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /**
  * Schema evolution on the committed table store (Iceberg add-column parity):
  * the table's state record keeps an append-only schema history; an add-column commit leaves
- * old buckets' files untouched (new columns read back NULL via mergeSchema); a
- * dropped/retyped column is refused loudly. Resume composes with evolution: an
- * invalidated old-schema bucket heals in the new shape.
+ * old buckets' files untouched (new columns read back NULL through the recorded schema
+ * every scan reads with); a dropped/retyped column is refused loudly. Resume composes
+ * with evolution: an invalidated old-schema bucket heals in the new shape.
  */
 class SchemaEvolutionSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -53,7 +53,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
 
     // read-side semantics: every row present; lang is NULL exactly on the
     // old-schema buckets and populated on the healed one
-    val back = TableSnapshot.readBack(spark, dir)
+    val back = SnapshotSink.readCommitted(spark, dir)
     assert(back.columns.contains("lang"))
     assert(back.count() === 40L)
     val byBucket = back.groupBy(col("bucket").cast("int").as("b"))
@@ -84,6 +84,6 @@ class SchemaEvolutionSpec extends AnyFunSuite {
 
     // the refused commits must not have touched history or data
     assert(TableSnapshot.schemaHistory(dir).map(_.version) === Seq(1L))
-    assert(TableSnapshot.readBack(spark, dir).count() === 40L)
+    assert(SnapshotSink.readCommitted(spark, dir).count() === 40L)
   }
 }

@@ -71,7 +71,7 @@ class SignatureStoreSpec extends AnyFunSuite {
     assert(healed.processed === Seq(victim))
 
     // and the healed table is byte-equal in content to a fresh derivation
-    val back = TableSnapshot.readBack(spark, dir).drop("bucket")
+    val back = SnapshotSink.readCommitted(spark, dir).drop("bucket")
     assert(back.count() === bands.count())
     assert(back.exceptAll(bands.drop("bucket")).count() === 0)
   }
@@ -98,7 +98,7 @@ class SignatureStoreSpec extends AnyFunSuite {
   test("takedown cascade: deleteIds removes a doc's signatures, bucket-granular") {
     val dir = freshDir("takedown")
     Dedup.committedBands(docs, dir) // initial commit
-    val before = TableSnapshot.readBack(spark, dir)
+    val before = SnapshotSink.readCommitted(spark, dir)
     val beforeCount = before.count() // eager: file listings go stale after rewrite
     val allIds = before.select(col("doc_id")).distinct()
       .collect().map(_.getLong(0)).toSet
@@ -122,7 +122,7 @@ class SignatureStoreSpec extends AnyFunSuite {
     assert(report.deletedRows === victims.size * 4L, "4 band rows per doc")
     assert(report.rewrittenBuckets.map(_ % Dedup.SigBuckets).toSet.subsetOf(victimBuckets))
 
-    val after = TableSnapshot.readBack(spark, dir)
+    val after = SnapshotSink.readCommitted(spark, dir)
     assert(after.filter(col("doc_id").isInCollection(victims)).count() === 0L)
     // bystanders intact: exactly the non-victim rows remain
     assert(after.count() === beforeCount - victims.size * 4L)
@@ -136,7 +136,7 @@ class SignatureStoreSpec extends AnyFunSuite {
         pmod(hash(col("doc_id")), lit(Dedup.SigBuckets)).cast("int")),
       dir, Dedup.SigBuckets)
     assert(again.processed.isEmpty, "post-delete manifest must verify clean")
-    assert(TableSnapshot.readBack(spark, dir)
+    assert(SnapshotSink.readCommitted(spark, dir)
       .filter(col("doc_id").isInCollection(victims)).count() === 0L,
       "a verifying resume must not resurrect deleted ids")
   }

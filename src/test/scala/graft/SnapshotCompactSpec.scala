@@ -16,9 +16,11 @@ import org.scalatest.funsuite.AnyFunSuite
  * The scale problem under test: a production stream at, say, one micro-batch per
  * minute accumulates ~half a million bucket directories a year
  * (`batchId * nBuckets + bucket`, [[SnapshotSink.commitStreamBatch]]); every
- * readBack lists and opens all of them. Compaction must collapse that to
- * `nBuckets` directories without losing a row, without breaking verification, and
- * without disabling the heal-from-source resume.
+ * manifest-resolved read ([[SnapshotSink.readCommitted]]) lists and opens the
+ * files of all of them. Compaction must collapse that to `nBuckets` directories
+ * without losing a row, without breaking verification, and without disabling the
+ * heal-from-source resume. Orphan directories are never read; [[SnapshotSink.vacuum]]
+ * reclaims their bytes.
  */
 class SnapshotCompactSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -104,7 +106,7 @@ class SnapshotCompactSpec extends AnyFunSuite {
     commitAsStream(out, 3)
     val before = SnapshotSink.readManifest(spark, out)
     assert(before.size === 3 * NB) // three batches' composite entries
-    val beforeRows = canon(SnapshotSink.readBack(spark, out))
+    val beforeRows = canon(SnapshotSink.readCommitted(spark, out))
 
     val rep = SnapshotSink.compact(spark, out, nBuckets = NB)
     assert(!rep.noop)
@@ -115,7 +117,7 @@ class SnapshotCompactSpec extends AnyFunSuite {
     assert(after.size === NB)
     assert(after.map(_.bucket).sorted === (0 until NB).map(rep.generation * NB + _))
     // content identical row-for-row; per-base metrics equal the sum of the sources
-    assert(canon(SnapshotSink.readBack(spark, out)) === beforeRows)
+    assert(canon(SnapshotSink.readCommitted(spark, out)) === beforeRows)
     val srcByBase = before.groupBy(_.bucket % NB)
     after.foreach { e =>
       val srcs = srcByBase(e.bucket % NB)
@@ -142,7 +144,7 @@ class SnapshotCompactSpec extends AnyFunSuite {
     (0 until 2).foreach(b => SnapshotSink.commitStreamBatch(batch(b), out, b.toLong, NB))
     val rep = SnapshotSink.compact(spark, out, nBuckets = NB)
     assert(rep.generation === 2L)
-    val rowsAfterCompact = SnapshotSink.readBack(spark, out).count()
+    val rowsAfterCompact = SnapshotSink.readCommitted(spark, out).count()
 
     // foreachBatch hands the NEXT batch id = 2 — numerically the id range the
     // compacted generation occupies under batchId*nBuckets addressing. The sidecar
@@ -151,7 +153,7 @@ class SnapshotCompactSpec extends AnyFunSuite {
     assert(committed.nonEmpty,
       "post-compaction micro-batch swallowed by the skip-verify — permanent loss")
     assert(committed.forall(_ >= 3L * NB), "batch must land past the compacted generation")
-    assert(SnapshotSink.readBack(spark, out).count()
+    assert(SnapshotSink.readCommitted(spark, out).count()
       === rowsAfterCompact + batch(2).count())
     // re-delivery of the same batch id is still idempotent (sidecar lookup)
     assert(SnapshotSink.commitStreamBatch(batch(2), out, 2L, NB).isEmpty)
@@ -193,7 +195,7 @@ class SnapshotCompactSpec extends AnyFunSuite {
     commitAsStream(out, 2)
     val gen = SnapshotSink.compact(spark, out, NB).generation
     val victim = gen * NB + 5
-    val pre = canon(SnapshotSink.readBack(spark, out))
+    val pre = canon(SnapshotSink.readCommitted(spark, out))
     val preEntry = SnapshotSink.readManifest(spark, out).find(_.bucket == victim).get
     SnapshotSink.deleteRecursively(Paths.get(out, "data", s"bucket=$victim"))
 
@@ -202,7 +204,7 @@ class SnapshotCompactSpec extends AnyFunSuite {
     // exactly the victim re-extracted, committed back under its generation id
     assert(report.invalidated === Seq(victim))
     assert(report.processed === Seq(victim))
-    assert(canon(SnapshotSink.readBack(spark, out)) === pre)
+    assert(canon(SnapshotSink.readCommitted(spark, out)) === pre)
     val healed = SnapshotSink.readManifest(spark, out).find(_.bucket == victim).get
     assert(healed.rows === preEntry.rows)
     assert(healed.n_words === preEntry.n_words)
@@ -212,7 +214,7 @@ class SnapshotCompactSpec extends AnyFunSuite {
     val out = tmpDir("vacuum")
     commitAsStream(out, 2)
     SnapshotSink.compact(spark, out, NB)
-    val pre = canon(SnapshotSink.readBack(spark, out))
+    val pre = canon(SnapshotSink.readCommitted(spark, out))
     // simulate a crash between a wave's manifest swap and its source GC: an
     // unreferenced bucket directory holding REAL parquet (a stale pre-compaction
     // copy of bucket 0's data)
@@ -224,15 +226,17 @@ class SnapshotCompactSpec extends AnyFunSuite {
     Files.list(src).iterator().asScala.filter(Files.isRegularFile(_))
       .foreach(p => Files.copy(p, orphan.resolve(p.getFileName.toString)))
 
-    // directory-scan read double-counts the orphan; the manifest-resolved read
-    // (Iceberg semantics: the manifest IS the table) is already exact
-    assert(canon(SnapshotSink.readBack(spark, out)).size > pre.size)
+    // the orphan is on disk, but the manifest-resolved read (Iceberg semantics:
+    // the manifest IS the table) is already exact
+    def bucketDirs = Files.list(Paths.get(out, "data")).iterator().asScala
+      .map(_.getFileName.toString).toSeq.sorted
+    assert(bucketDirs.contains("bucket=999") && bucketDirs.size === NB + 1)
     assert(canon(SnapshotSink.readCommitted(spark, out)) === pre)
 
     val removed = SnapshotSink.vacuum(spark, out)
     assert(removed === Seq("bucket=999"))
-    assert(!Files.exists(orphan))
-    assert(canon(SnapshotSink.readBack(spark, out)) === pre)
+    assert(!bucketDirs.contains("bucket=999") && bucketDirs.size === NB)
+    assert(canon(SnapshotSink.readCommitted(spark, out)) === pre)
     assert(SnapshotSink.vacuum(spark, out).isEmpty) // nothing left to remove
   }
 
@@ -293,6 +297,11 @@ class SnapshotCompactSpec extends AnyFunSuite {
     assert(after.map(_.bucket) === (0 until NB).map(2L * NB + _))
     assert(after.forall(e => e.rows === 0L && e.files.isEmpty))
     assert(SnapshotSink.verifySnapshot(spark, out) === Seq.empty)
+    // no data file anywhere, yet the read has the schema the stream committed
+    val back = SnapshotSink.readCommitted(spark, out)
+    assert(back.count() === 0L)
+    def typed(df: DataFrame) = df.schema.map(f => f.name -> f.dataType.catalogString)
+    assert(typed(back) === typed(none) :+ ("bucket" -> "bigint"))
     // a resume finds every (empty) bucket committed and extracts nothing
     val report = SnapshotSink.run(Interleave.materializedDocsBucketed(spark, sfDir, NB),
       out, nBuckets = NB)

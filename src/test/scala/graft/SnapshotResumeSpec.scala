@@ -52,7 +52,7 @@ class SnapshotResumeSpec extends AnyFunSuite {
     assert(report.skipped.isEmpty)
 
     val direct = canon(ExtractPipeline.extractFlat(docs))
-    val snap = canon(SnapshotSink.readBack(spark, out))
+    val snap = canon(SnapshotSink.readCommitted(spark, out))
     assert(snap === direct)
 
     val manifest = SnapshotSink.readManifest(spark, out)
@@ -82,7 +82,7 @@ class SnapshotResumeSpec extends AnyFunSuite {
     assert(dirs.result().sorted === (0 until NB).map(b => s"bucket=$b"))
     assert(manifests.get() === 2 * math.ceil(NB / 3.0).toInt)
     // and the protocol's own verification still holds end to end
-    assert(canon(SnapshotSink.readBack(spark, out)) ===
+    assert(canon(SnapshotSink.readCommitted(spark, out)) ===
       canon(ExtractPipeline.extractFlat(docs)))
   }
 
@@ -102,7 +102,7 @@ class SnapshotResumeSpec extends AnyFunSuite {
     committed.foreach(b => assert(bucketBytes(out, b) === before(b), s"bucket $b"))
 
     val direct = canon(ExtractPipeline.extractFlat(docs))
-    assert(canon(SnapshotSink.readBack(spark, out)) === direct)
+    assert(canon(SnapshotSink.readCommitted(spark, out)) === direct)
     assert(SnapshotSink.readManifest(spark, out).map(_.bucket).sorted === (0 until NB))
   }
 
@@ -122,7 +122,7 @@ class SnapshotResumeSpec extends AnyFunSuite {
     assert(rerun.invalidated === Seq(victim))
     assert(rerun.processed === Seq(victim))
     assert(rerun.skipped.sorted === (0 until NB).filterNot(_ == victim))
-    assert(canon(SnapshotSink.readBack(spark, out))
+    assert(canon(SnapshotSink.readCommitted(spark, out))
       === canon(ExtractPipeline.extractFlat(docs)))
   }
 
@@ -133,7 +133,7 @@ class SnapshotResumeSpec extends AnyFunSuite {
     // the partitioned layout produces the identical committed table
     val report = SnapshotSink.run(bdocs, out, nBuckets = NB, waveSize = 3)
     assert(report.processed.sorted === (0 until NB))
-    assert(canon(SnapshotSink.readBack(spark, out))
+    assert(canon(SnapshotSink.readCommitted(spark, out))
       === canon(ExtractPipeline.extractFlat(docs)))
 
     // invalidate one bucket; resume re-extracts ONLY it
@@ -205,7 +205,7 @@ class SnapshotResumeSpec extends AnyFunSuite {
       s"need a mostly multi-file-per-bucket layout for a pruning claim, " +
         s"got $filesPerBucket")
 
-    val all = SnapshotSink.readBack(spark, out)
+    val all = SnapshotSink.readCommitted(spark, out)
     val total = all.count()
     val hi = "doc-0000000000050" // first ~10% of the 500-doc corpus
     val q = all.filter(col("doc_id") <= hi)
@@ -245,7 +245,7 @@ class SnapshotResumeSpec extends AnyFunSuite {
     assert(manifest.map(_.bucket).sorted === (0 until NB))
     assert(manifest.count(_.n_spans > 0) === 2)
     assert(manifest.count(_.n_spans == 0) === NB - 2)
-    assert(canon(SnapshotSink.readBack(spark, out))
+    assert(canon(SnapshotSink.readCommitted(spark, out))
       === canon(ExtractPipeline.extractFlat(two)))
     // idempotent resume over the mostly-empty snapshot
     val again = SnapshotSink.run(two, out, nBuckets = NB, waveSize = 3)
@@ -310,7 +310,7 @@ class SnapshotResumeSpec extends AnyFunSuite {
     // a CORRECT resume afterwards heals the snapshot
     val healed = SnapshotSink.run(bdocs, out, nBuckets = NB, waveSize = NB)
     assert(healed.processed === Seq(victim))
-    assert(canon(SnapshotSink.readBack(spark, out))
+    assert(canon(SnapshotSink.readCommitted(spark, out))
       === canon(ExtractPipeline.extractFlat(docs)))
   }
 

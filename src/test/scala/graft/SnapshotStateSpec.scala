@@ -2,16 +2,14 @@ package graft
 
 import java.io.IOException
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
 import graft.operators.ExtractPipeline
 import graft.sources.{CommitIo, Interleave, PosixCommitIo, SnapshotSink}
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -190,21 +188,57 @@ class SnapshotStateSpec extends AnyFunSuite {
     SnapshotSink.run(docs, out, nBuckets = NB, waveSize = 4) // v1, v2
     SnapshotSink.tag(out, "t", 1L)
     SnapshotSink.branch(out, "b", 2L)
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerDrain(sc)
-    sc.addSparkListener(listener)
-    try {
+    val (_, jobs) = JobCount(spark) {
       assert(SnapshotSink.readManifest(spark, out).size === NB)
       assert(SnapshotSink.readManifestAt(spark, out, 1L).size === 4)
       assert(SnapshotSink.tags(out) === Map("t" -> 1L))
       assert(SnapshotSink.branches(out) === Map("b" -> 2L))
-      ListenerDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get === 0)
+    }
+    assert(jobs === 0)
+  }
+
+  test("building a manifest-resolved read runs no Spark job: the schema is recorded") {
+    val out = tmpDir("readnojob")
+    SnapshotSink.run(docs, out, nBuckets = NB, waveSize = 4) // v1, v2
+    SnapshotSink.branch(out, "b", 2L)
+    val files = SnapshotSink.readManifest(spark, out).map(_.files.size).sum
+    // above 32 files Spark lists them with a job of its own
+    assert(files <= 32, s"$files files")
+    val (reads, jobs) = JobCount(spark) {
+      Seq(SnapshotSink.readCommitted(spark, out),
+        SnapshotSink.readCommittedAt(spark, out, 1L),
+        SnapshotSink.readChangesBetween(spark, out, 1L, 2L),
+        SnapshotSink.readCommittedAtBranch(spark, out, "b"))
+    }
+    assert(jobs === 0)
+    val rows = SnapshotSink.readManifest(spark, out).map(_.rows).sum
+    val v1Rows = SnapshotSink.readManifestAt(spark, out, 1L).map(_.rows).sum
+    assert(reads.map(_.count()) === Seq(rows, v1Rows, rows - v1Rows, rows))
+    assert(reads.forall(_.schema("bucket").dataType == LongType))
+  }
+
+  test("a committed table without a recorded schema is refused, naming the rebuild") {
+    val out = tmpDir("noschema")
+    SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB)
+    val victim = docIdsInBucket(out, 1L, 1)
+    SnapshotSink.updateState(Paths.get(out), PosixCommitIo)(_.copy(schemas = Seq.empty))
+    Seq[() => Any](
+      () => SnapshotSink.readCommitted(spark, out),
+      () => SnapshotSink.upsertDocs(spark, out, updateRows(victim), NB),
+      () => SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB)).foreach { op =>
+      val ex = intercept[IllegalStateException](op())
+      assert(ex.getMessage.contains("no recorded schema") &&
+        ex.getMessage.contains("rebuild"), ex.getMessage)
+    }
+  }
+
+  test("a batch table's takedowns and merges record no compacted ids") {
+    val out = tmpDir("compactedids")
+    SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB)
+    SnapshotSink.upsertDocs(spark, out, updateRows(docIdsInBucket(out, 2L, 1)), NB)
+    SnapshotSink.deleteDocs(spark, out, docIdsInBucket(out, 5L, 2), NB)
+    // no stream batch was ever allocated here, so none can be re-delivered
+    assert(SnapshotSink.readCompactedIds(Paths.get(out)) === Set.empty[Long])
   }
 
   test("every kind of write leaves only manifest versions and state records in the root") {

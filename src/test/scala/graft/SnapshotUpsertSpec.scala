@@ -31,7 +31,7 @@ class SnapshotUpsertSpec extends AnyFunSuite {
   private def docs: DataFrame = Interleave.docs(spark, sfDir)
 
   private def docIdsInBucket(out: String, b: Long, n: Int): Seq[String] =
-    SnapshotSink.readBack(spark, out)
+    SnapshotSink.readCommitted(spark, out)
       .filter(col("bucket") === b).select(col("doc_id")).distinct()
       .orderBy(col("doc_id")).limit(n)
       .collect().map(_.getString(0)).toSeq
@@ -65,10 +65,10 @@ class SnapshotUpsertSpec extends AnyFunSuite {
     val out = tmpDir("merge")
     SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB)
     val before = byBase(out)
-    val rowsBefore = SnapshotSink.readBack(spark, out).count()
+    val rowsBefore = SnapshotSink.readCommitted(spark, out).count()
 
     val victims = docIdsInBucket(out, 2L, 2) ++ docIdsInBucket(out, 5L, 1)
-    val victimRows = SnapshotSink.readBack(spark, out)
+    val victimRows = SnapshotSink.readCommitted(spark, out)
       .filter(col("doc_id").isInCollection(victims)).count()
     assert(victimRows > 3L, "victims should carry several spans each")
 
@@ -182,7 +182,7 @@ class SnapshotUpsertSpec extends AnyFunSuite {
     (0L until NB).filterNot(report.rewrittenBuckets.map(_ % NB).contains).foreach { b =>
       assert(after(b) === before(b), s"derived bucket $b must be byte-identical")
     }
-    val back = TableSnapshot.readBack(spark, out)
+    val back = SnapshotSink.readCommitted(spark, out)
     assert(back.filter(col("doc_id").isInCollection(touched)).count() === 0L)
     assert(back.count() === 62L)
     // the rewritten table resumes as a no-op: its composite ids key on the base
@@ -196,7 +196,7 @@ class SnapshotUpsertSpec extends AnyFunSuite {
     import spark.implicits._
     val derived = (0L until 64L).map(i => (i, s"sig-$i")).toDF("doc_id", "sig")
     TableSnapshot.runHashBucketed(derived, "doc_id", out, NB)
-    def rows = TableSnapshot.readBack(spark, out).select(col("doc_id"), col("sig"))
+    def rows = SnapshotSink.readCommitted(spark, out).select(col("doc_id"), col("sig"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
     val head = SnapshotSink.readState(Paths.get(out)).head
     val before = rows
@@ -229,6 +229,22 @@ class SnapshotUpsertSpec extends AnyFunSuite {
         updateRows(Seq("doc-0000000000001")).drop("conf_sum"), NB)
     }
     assert(exSchema.getMessage.contains("schema"))
+
+    // same names, one retyped column: refused against the recorded schema before
+    // any Spark job, so no file the table's scans cannot read is ever committed
+    val versions = SnapshotSink.versions(out)
+    val retyped = updateRows(Seq("doc-0000000000001"))
+      .withColumn("offset", col("offset").cast("string"))
+    SnapshotSink.branch(out, "wap", versions.last)
+    val (exTypes, jobs) = JobCount(spark) {
+      Seq(intercept[IllegalArgumentException](
+          SnapshotSink.upsertDocs(spark, out, retyped, NB)),
+        intercept[IllegalArgumentException](
+          SnapshotSink.upsertDocsToBranch(spark, out, "wap", retyped, NB)))
+    }
+    exTypes.foreach(ex => assert(ex.getMessage.contains("offset:STRING"), ex.getMessage))
+    assert(jobs === 0)
+    assert(SnapshotSink.versions(out) === versions)
 
     val outStream = tmpDir("refuse-stream")
     val flat = ExtractPipeline.extractFlat(docs)

@@ -63,7 +63,7 @@ class StreamingExtractSpec extends AnyFunSuite {
     val manifest = SnapshotSink.readManifest(spark, out)
     assert(manifest.nonEmpty)
     val batch = canon(ExtractPipeline.extractFlat(docs))
-    assert(canon(SnapshotSink.readBack(spark, out)) === batch)
+    assert(canon(SnapshotSink.readCommitted(spark, out)) === batch)
     assert(manifest.map(_.n_spans).sum === batch.size)
     assert(manifest.forall(_.engine_version.nonEmpty))
 
@@ -87,7 +87,7 @@ class StreamingExtractSpec extends AnyFunSuite {
     SnapshotSink.deleteRecursively(Paths.get(out, "data", s"bucket=$victim"))
     assert(SnapshotSink.commitStreamBatch(flat0, out, batchId = 0L) === Seq(victim))
     ids.tail.foreach(b => assert(bytes(b) === before(b), s"bucket $b"))
-    assert(canon(SnapshotSink.readBack(spark, out)) === batch)
+    assert(canon(SnapshotSink.readCommitted(spark, out)) === batch)
 
     // deep-verify parity with the batch path (ADVICE r3): in-place corruption that
     // PRESERVES file size passes the metadata tier; the re-delivered batch must still
@@ -104,7 +104,7 @@ class StreamingExtractSpec extends AnyFunSuite {
     raw(raw.length / 2) = (raw(raw.length / 2) ^ 0x01).toByte
     java.nio.file.Files.write(dataFile, raw) // same size, different bytes
     assert(SnapshotSink.commitStreamBatch(flat0, out, batchId = 0L) === Seq(deepVictim))
-    assert(canon(SnapshotSink.readBack(spark, out)) === batch)
+    assert(canon(SnapshotSink.readCommitted(spark, out)) === batch)
   }
 
   test("drain's compactThreshold hook collapses settled batches into one generation") {
@@ -126,7 +126,6 @@ class StreamingExtractSpec extends AnyFunSuite {
     assert(manifest.size === 8) // 16 composite entries compacted to one generation
     assert(manifest.map(_.bucket % 8).sorted === (0L until 8L))
     assert(manifest.map(_.bucket / 8).distinct.size === 1)
-    assert(canon(SnapshotSink.readBack(spark, out)) === batchTotal)
     assert(canon(SnapshotSink.readCommitted(spark, out)) === batchTotal)
 
     // a THIRD drain after the compaction: the stream's next batchId is numerically
