@@ -62,7 +62,7 @@ object Scaling {
             if d % graft.functions.OracleSql.TakedownMod ==
               graft.functions.OracleSql.TakedownRes
           } yield f"doc-${r * 10000000L + d}%013d").take(1000).toSeq
-          SnapshotSink.deleteDocs(spark, out.toString, victims, nb)
+          SnapshotSink.deleteDocs(spark, out.toString, victims)
         case "changes" =>
           SnapshotSink.readChangesBetween(spark, out.toString, 1L, 2L)
             .write.format("noop").mode("overwrite").save()

@@ -389,7 +389,7 @@ object SparkEntry {
       .filter(pmod(col("doc_id"), lit(OracleSql.TakedownMod)) === OracleSql.TakedownRes)
       .select(format_string("doc-%013d", col("doc_id")))
       .collect().map(_.getString(0)).toSeq
-    val report = SnapshotSink.deleteDocs(s, out.toString, victims, nb)
+    val report = SnapshotSink.deleteDocs(s, out.toString, victims)
     val rw = report.rewrittenBuckets.map(java.lang.Long.valueOf)
     SnapshotSink.lineage(s, out.toString)
       .select(pmod(col("bucket"), lit(nb.toLong)).cast("int").as("bucket"),
@@ -460,8 +460,7 @@ object SparkEntry {
     SnapshotSink.deleteRecursively(out)
     SnapshotSink.run(Interleave.materializedDocsBucketed(s, dir, nb), out.toString,
       nBuckets = nb, waveSize = nb)
-    val report = SnapshotSink.upsertDocs(s, out.toString,
-      upsertUpdateSet(s, dir), nb)
+    val report = SnapshotSink.upsertDocs(s, out.toString, upsertUpdateSet(s, dir))
     // rewritten buckets land at a fresh generation: group by base id
     val rwBases = report.rewrittenBuckets.map(b => java.lang.Long.valueOf(b % nb))
     contentAgg(SnapshotSink.readCommitted(s, out.toString),
@@ -492,7 +491,7 @@ object SparkEntry {
       nBuckets = nb, waveSize = nb) // v1
     SnapshotSink.branch(out.toString, "audit", 1L)
     val report = SnapshotSink.upsertDocsToBranch(s, out.toString, "audit",
-      upsertUpdateSet(s, dir), nb)
+      upsertUpdateSet(s, dir))
     require(SnapshotSink.branches(out.toString)("audit") > 1L,
       "branch pointer must advance past the base version after a branch merge")
     require(report.rewrittenBuckets.forall(_ >= nb),
@@ -542,7 +541,7 @@ object SparkEntry {
           docs.filter(pmod(hash(col("doc_id")), lit(nBatches)) === b)),
         out.toString, b.toLong, nb)
     }
-    SnapshotSink.compact(s, out.toString, nb, layout = layout)
+    SnapshotSink.compact(s, out.toString, layout = layout)
     SnapshotSink.lineage(s, out.toString)
       .select(pmod(col("bucket"), lit(nb.toLong)).cast("int").as("bucket"),
         floor(col("bucket") / nb).cast("int").as("generation"),

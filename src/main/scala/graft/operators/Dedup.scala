@@ -98,7 +98,7 @@ object Dedup {
     * [[BandWidth]], [[ShingleN]], the signature hash, or the committed-table
     * metadata layout; part of the committed signature directory key so stale
     * tables can never be read. */
-  val SigFormatVersion = 2
+  val SigFormatVersion = 3
 
   /** Bucket count for the committed signature table (more than the extraction
     * sink's default: signatures are cheap to re-derive per bucket, so finer resume
@@ -204,7 +204,7 @@ object Dedup {
   /** Window-hash table format version — part of the committed directory key
     * (bump with any change to [[graft.functions.WindowHashesExpr.WindowN]], the
     * window hash, or the committed-table metadata layout). */
-  val WinFormatVersion = 2
+  val WinFormatVersion = 3
 
   /** [[windowDup]] over a window-hash table committed through the snapshot
     * protocol (same contract as [[committedBands]]: reruns skip verified buckets

@@ -514,7 +514,7 @@ object Similarity {
     * (TableSnapshot's staleness contract); bump with any change to the PQ
     * geometry, training constants, the codebook schema, or the committed-table
     * metadata layout. */
-  val PqFormatVersion = 2
+  val PqFormatVersion = 3
 
   /** Bucket count for the committed-embeddings snapshot the incremental
     * re-embedding consumer (`reembed_incremental`) diffs over; the bucket key is
@@ -541,7 +541,7 @@ object Similarity {
     case None => pqTrain(emb, initMod, iters)
     case Some(dir) =>
       val spark = emb.sparkSession
-      if (graft.sources.TableSnapshot.isCommitted(spark, dir, PqStoreBuckets))
+      if (graft.sources.TableSnapshot.isCommitted(spark, dir))
         graft.sources.SnapshotSink.readCommitted(spark, dir).drop("bucket")
       else graft.sources.TableSnapshot.runHashBucketed(
         pqTrain(emb, initMod, iters), "sub", dir, PqStoreBuckets)

@@ -156,7 +156,7 @@ object TextAnalysis {
   /** tf-table format version — part of the committed-table directory key (see
     * [[graft.sources.TableSnapshot]]'s staleness contract); bump with any change to
     * tokenization, the tf schema, or the committed-table metadata layout. */
-  val TfFormatVersion = 2
+  val TfFormatVersion = 3
 
   /** Terms kept per document by [[topTerms]] (oracle-interpolated). */
   val TopTermsK = 3
@@ -277,7 +277,7 @@ object TextAnalysis {
     * discipline — bump the version with any change to trigram extraction, the
     * smoothing formula, or the committed-table metadata layout). The model is tiny
     * (charset-bounded), so few buckets. */
-  val LmFormatVersion = 2
+  val LmFormatVersion = 3
   val LmBuckets = 4
 
   /** Character trigrams of the text, all occurrences in order. Spark's

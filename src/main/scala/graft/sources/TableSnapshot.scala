@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -35,7 +35,8 @@ object TableSnapshot {
 
   /** Commit (or resume) `df` into `outDir`; one wave per `waveSize` buckets — the
     * resume and wave body of [[SnapshotSink.run]], over a plain bucket filter.
-    * Returns the same report shape as the extraction sink. */
+    * The first commit records `nBuckets`; a different count is refused before any
+    * Spark job. Returns the same report shape as the extraction sink. */
   def run(
       df: DataFrame,
       outDir: String,
@@ -44,7 +45,9 @@ object TableSnapshot {
       deepVerify: Boolean = true,
       io: CommitIo = PosixCommitIo): SnapshotSink.SnapshotReport = {
     require(df.columns.contains("bucket"), "TableSnapshot input needs a `bucket` column")
-    SnapshotSink.commitBuckets(Paths.get(outDir), nBuckets, waveSize, deepVerify, io)(
+    val out = Paths.get(outDir)
+    recordLayout(out, df.schema, nBuckets)(SnapshotSink.readState(out))
+    SnapshotSink.commitBuckets(df.sparkSession, out, nBuckets, waveSize, deepVerify, io)(
       wave => df.filter(col("bucket").isin(wave: _*)))
   }
 
@@ -66,49 +69,50 @@ object TableSnapshot {
    * the bucket FROM ITS SOURCE — cascade order is source corpus first, derived
    * tables second (and fingerprint-keyed derived dirs of a superseded corpus should
    * be dropped wholesale, which their corpus-identity keying makes safe).
+   *
+   * Routes with the table's recorded bucket count, so no caller can route to a
+   * count the table was not written with.
    */
   def deleteIds(
       spark: SparkSession,
       outDir: String,
       ids: Seq[Long],
       idCol: String = "doc_id",
-      nBuckets: Int = SnapshotSink.DefaultBuckets,
       io: CommitIo = PosixCommitIo): SnapshotSink.DeleteReport = {
     require(ids.nonEmpty, "deleteIds needs at least one id")
     // the routing below hashes LONG ids; Murmur3 hashes Int and Long DIFFERENTLY,
     // so an INT-typed id column would route to the wrong buckets and this would
     // return a success-shaped DeleteReport(0, Nil) while the rows persist — refuse
-    val idType = tableSchema(Paths.get(outDir)).find(_.name == idCol).map(_.dataType)
+    val out = Paths.get(outDir)
+    val idType = tableSchema(out).find(_.name == idCol).map(_.dataType)
     require(idType.contains(LongType),
       s"deleteIds routes buckets via hash(BIGINT); committed `$idCol` is " +
         s"${idType.getOrElse("absent")} — pass ids in the column's own type family " +
         "(extend deleteIds) or rewrite")
     // route ids -> buckets with the writers' own hash (Spark Murmur3), driver-side
     import spark.implicits._
-    val bases = ids.toDS()
-      .select(pmod(hash(col("value")), lit(nBuckets)).cast("long").as("b"))
-      .distinct().collect().map(_.getLong(0)).toSet
-    SnapshotSink.takedown(spark, Paths.get(outDir), nBuckets, io, bases,
+    val base = SnapshotSink.canonicalBase(out, None)
+    SnapshotSink.takedown(spark, out, io, base, ids.toDS()
+      .select(pmod(hash(col("value")), lit(base.nBuckets)).cast("long").as("b"))
+      .distinct().collect().map(_.getLong(0)).toSet,
       col(idCol).isInCollection(ids))
   }
 
   /** True iff `outDir` holds a FULLY committed table: a manifest with exactly one
-    * entry per base bucket in [0, nBuckets) whose entries all pass the metadata
-    * verification tier. The skip-construction probe for derived tables whose
-    * CONSTRUCTION is itself expensive driver-side work (trained model state):
+    * entry per base bucket in [0, nBuckets), the recorded count, whose entries all
+    * pass the metadata verification tier. The skip-construction probe for derived
+    * tables whose CONSTRUCTION is itself expensive driver-side work (trained model state):
     * [[runHashBucketed]] can lazily filter an ordinary plan down to invalid
     * buckets, but a codebook frame cannot be built lazily — its construction runs
     * the training — so the caller asks first and only trains when this is false.
     * Metadata tier only, by the same read-path contract as [[runHashBucketed]]'s
     * default. */
-  def isCommitted(spark: SparkSession, outDir: String, nBuckets: Int): Boolean = {
+  def isCommitted(spark: SparkSession, outDir: String): Boolean = {
     val out = Paths.get(outDir)
-    if (!Files.exists(out.resolve("data"))) return false
     val entries = SnapshotSink.readManifest(spark, outDir)
-    if (entries.map(_.bucket % nBuckets).sorted != (0L until nBuckets)) return false
-    val (_, invalid) = SnapshotSink.verifyEntries(spark, out, entries,
-      deepVerify = false)
-    invalid.isEmpty
+    lazy val nBuckets = bucketCount(out) // a table without entries needs none
+    entries.nonEmpty && entries.map(_.bucket % nBuckets).sorted == (0L until nBuckets) &&
+      SnapshotSink.verifyEntries(spark, out, entries, deepVerify = false)._2.isEmpty
   }
 
   /** The shared derived-table commit shape (dedup signatures, window hashes, tf):
@@ -125,12 +129,15 @@ object TableSnapshot {
     SnapshotSink.readCommitted(df.sparkSession, outDir).drop("bucket")
   }
 
-  // ---- schema evolution ---------------------------------------------------------
+  // ---- recorded layout: schema evolution and the bucket count ----------------------
   //
   // Iceberg-style table-level schema history (in the state record, as a list of
   // {version, ddl}): every commit — batch, stream and derived-table — records the
   // writer's schema, and every scan reads with the newest version, so no reader
-  // ever infers a schema from data files. An ADD-COLUMN evolution (all
+  // ever infers a schema from data files. The same edit records the bucket count,
+  // the table's partition spec: set by the commit that creates the table, read by
+  // every takedown, merge and compaction, and never changed — a creating writer
+  // with another count is refused. An ADD-COLUMN evolution (all
   // previously-recorded columns still present with identical types) appends a new
   // version, and old buckets keep their files: the new columns read back NULL.
   // Anything else — dropped column, retyped column — is REFUSED loudly: those need
@@ -154,24 +161,36 @@ object TableSnapshot {
   /** The schema every scan of `out` reads with: the newest recorded version's
     * columns, then `bucket` BIGINT. A table without one is refused, never inferred. */
   private[sources] def tableSchema(out: Path): StructType =
-    SnapshotSink.readState(out).schemas.lastOption.fold(throw unrecorded(out))(v =>
-      dataColumns(StructType.fromDDL(v.ddl)).add("bucket", LongType))
+    SnapshotSink.readState(out).schemas.lastOption.fold(throw unrecorded(out, "schema"))(
+      v => dataColumns(StructType.fromDDL(v.ddl)).add("bucket", LongType))
 
-  private def unrecorded(out: Path) = new IllegalStateException(
-    s"$out has no recorded schema: it was committed before every table recorded " +
-      "its schema, or never committed — rebuild it (delete the directory and re-run " +
+  /** The bucket count every takedown, merge and compaction of `out` routes with. A
+    * table without one is refused, never inferred from its manifest. */
+  private[sources] def bucketCount(out: Path): Int =
+    Some(SnapshotSink.readState(out).nBuckets).filter(_ > 0)
+      .getOrElse(throw unrecorded(out, "bucket count"))
+
+  private def unrecorded(out: Path, what: String) = new IllegalStateException(
+    s"$out has no recorded $what: it was committed before every table recorded " +
+      s"its $what, or never committed — rebuild it (delete the directory and re-run " +
       "its writer)")
 
-  /** The state edit that records `schema` as the table's newest schema version,
-    * unless it equals the newest one. Refuses a non-add-column change, and a
-    * committed table without a recorded schema. Every commit applies it in the
-    * state publish that commits ([[SnapshotSink.commitWaveFlat]]); writers also
-    * apply it to the current state first, to refuse before writing anything. */
-  private[sources] def recordSchema(out: Path, schema: StructType)(
-      s: SnapshotSink.TableState): SnapshotSink.TableState = {
+  /** The one layout edit: it records `nBuckets` and records `schema` as the table's
+    * newest schema version, unless it equals the newest one. Refuses a count other
+    * than the recorded one, a non-add-column change, and a committed table without
+    * a recorded count or schema. Every commit applies it in the state publish that
+    * commits ([[SnapshotSink.commitWaveFlat]]); writers also apply it to the
+    * current state first, to refuse before writing anything. */
+  private[sources] def recordLayout(out: Path, schema: StructType, nBuckets: Int)(
+      s0: SnapshotSink.TableState): SnapshotSink.TableState = {
+    if (s0.nBuckets == 0 && s0.head != 0L) throw unrecorded(out, "bucket count")
+    require(s0.nBuckets == 0 || s0.nBuckets == nBuckets,
+      s"$out records ${s0.nBuckets} buckets; a write with nBuckets = $nBuckets would " +
+        "route rows to buckets no other write of this table reads — refused")
+    val s = s0.copy(nBuckets = nBuckets)
     val cur = dataColumns(schema)
     s.schemas.lastOption.map(v => v -> dataColumns(StructType.fromDDL(v.ddl))) match {
-      case None if s.head != 0L => throw unrecorded(out)
+      case None if s.head != 0L => throw unrecorded(out, "schema")
       case Some((_, prev)) if prev.toDDL == cur.toDDL => s // unchanged — common case
       case last =>
         last.foreach { case (head, prev) =>

@@ -81,7 +81,7 @@ object StreamingExtract {
     // against, and the re-delivered batch would re-commit rows the new generation
     // already holds (see [[graft.sources.SnapshotSink.compact]]'s scaladoc).
     if (graft.sources.SnapshotSink.readManifest(spark, outDir).size > compactThreshold)
-      graft.sources.SnapshotSink.compact(spark, outDir, nBuckets)
+      graft.sources.SnapshotSink.compact(spark, outDir)
   }
 
   /**

@@ -57,7 +57,7 @@ class DeleteDocsSpec extends AnyFunSuite {
       .filter(col("doc_id").isInCollection(victims)).count()
     assert(victimRows > 0)
 
-    val report = SnapshotSink.deleteDocs(spark, out, victims, NB)
+    val report = SnapshotSink.deleteDocs(spark, out, victims)
     // rewrites land at a fresh generation: new ids, same bases
     assert(report.rewrittenBuckets === Seq(NB + 2L, NB + 5L))
     assert(report.deletedRows === victimRows)
@@ -100,7 +100,7 @@ class DeleteDocsSpec extends AnyFunSuite {
       .filter(col("doc_id").isInCollection(victims)).count()
     assert(victimRows > 0L)
 
-    val report = SnapshotSink.deleteDocs(spark, out, victims :+ absent, NB)
+    val report = SnapshotSink.deleteDocs(spark, out, victims :+ absent)
     assert(report === SnapshotSink.DeleteReport(victimRows, rewrite.map(NB + _)))
     assert(SnapshotSink.versions(out).last === v0 + 1, "a takedown publishes one version")
 
@@ -123,8 +123,8 @@ class DeleteDocsSpec extends AnyFunSuite {
     SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB)
     val one = docIdsInBucket(out, 0L, 1)
     val four = Seq(2L, 3L, 5L, 7L).flatMap(b => docIdsInBucket(out, b, 1))
-    val (r1, jobs1) = JobCount(spark)(SnapshotSink.deleteDocs(spark, out, one, NB))
-    val (r4, jobs4) = JobCount(spark)(SnapshotSink.deleteDocs(spark, out, four, NB))
+    val (r1, jobs1) = JobCount(spark)(SnapshotSink.deleteDocs(spark, out, one))
+    val (r4, jobs4) = JobCount(spark)(SnapshotSink.deleteDocs(spark, out, four))
     assert(r1.rewrittenBuckets.map(_ % NB) === Seq(0L) &&
       r4.rewrittenBuckets.map(_ % NB) === Seq(2L, 3L, 5L, 7L))
     assert(jobs1 > 0 && jobs4 === jobs1,
@@ -138,12 +138,12 @@ class DeleteDocsSpec extends AnyFunSuite {
 
     // absent id: no rewrite, nothing deleted, manifest untouched
     val noop = SnapshotSink.deleteDocs(spark, out,
-      Seq(f"doc-${9999999999999L}%013d"), NB)
+      Seq(f"doc-${9999999999999L}%013d"))
     assert(noop === SnapshotSink.DeleteReport(0L, Seq.empty))
     assert(SnapshotSink.versions(out).last === v1)
 
     val victim = docIdsInBucket(out, 3L, 1)
-    SnapshotSink.deleteDocs(spark, out, victim, NB)
+    SnapshotSink.deleteDocs(spark, out, victim)
     assert(SnapshotSink.versions(out).last === v1 + 1)
     // the pre-delete version referenced bucket 3's old files — now reclaimed
     val ex = intercept[IllegalArgumentException] {
@@ -158,7 +158,7 @@ class DeleteDocsSpec extends AnyFunSuite {
     val all = SnapshotSink.readCommitted(spark, out)
       .filter(col("bucket") === 6).select(col("doc_id")).distinct()
       .collect().map(_.getString(0)).toSeq
-    val report = SnapshotSink.deleteDocs(spark, out, all, NB)
+    val report = SnapshotSink.deleteDocs(spark, out, all)
     assert(report.rewrittenBuckets === Seq(NB + 6L))
     val entry = byBase(out)(6L)
     assert(entry.bucket === NB + 6L && entry.rows === 0L && entry.files.isEmpty)
@@ -173,14 +173,14 @@ class DeleteDocsSpec extends AnyFunSuite {
     val head = SnapshotSink.readState(Paths.get(out)).head
     val before = logical(out)
     intercept[PublishFault.Injected] {
-      SnapshotSink.deleteDocs(spark, out, victims, NB, io = PublishFault.atManifest)
+      SnapshotSink.deleteDocs(spark, out, victims, io = PublishFault.atManifest)
     }
     // HEAD has not moved and every file it lists is still there
     assert(SnapshotSink.readState(Paths.get(out)).head === head)
     assert(logical(out) === before)
     assert(SnapshotSink.verifySnapshot(spark, out) === Seq.empty)
 
-    val report = SnapshotSink.deleteDocs(spark, out, victims, NB)
+    val report = SnapshotSink.deleteDocs(spark, out, victims)
     val expected = before.filterNot(r => victims.contains(r._1))
     assert(report.deletedRows === (before.size - expected.size).toLong)
     assert(logical(out) === expected)
@@ -194,7 +194,7 @@ class DeleteDocsSpec extends AnyFunSuite {
     SnapshotSink.commitStreamBatch(flat.limit(0), out, batchId = 1L, NB)
     val victim = f"doc-${0L}%013d"
     val ex = intercept[IllegalArgumentException] {
-      SnapshotSink.deleteDocs(spark, out, Seq(victim), NB)
+      SnapshotSink.deleteDocs(spark, out, Seq(victim))
     }
     assert(ex.getMessage.contains("compact"))
   }

@@ -35,9 +35,9 @@ class PqStoreSpec extends AnyFunSuite {
     val ivfpqPlain = canon(Similarity.ivfPqTopK(emb))
 
     // first stored call trains + commits
-    assert(!TableSnapshot.isCommitted(spark, dir, Similarity.PqStoreBuckets))
+    assert(!TableSnapshot.isCommitted(spark, dir))
     assert(canon(Similarity.pqEncode(emb, store = Some(dir))) === encodePlain)
-    assert(TableSnapshot.isCommitted(spark, dir, Similarity.PqStoreBuckets))
+    assert(TableSnapshot.isCommitted(spark, dir))
     // committed frame round-trips the training output exactly
     assert(canon(SnapshotSink.readCommitted(spark, dir).drop("bucket")
       .orderBy("sub", "cell", "dim")) === canon(Similarity.pqTrain(emb)))
@@ -53,8 +53,8 @@ class PqStoreSpec extends AnyFunSuite {
     val victim = java.nio.file.Files.list(b0).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
     java.nio.file.Files.write(victim, Array[Byte](1, 2, 3))
-    assert(!TableSnapshot.isCommitted(spark, dir, Similarity.PqStoreBuckets))
+    assert(!TableSnapshot.isCommitted(spark, dir))
     assert(canon(Similarity.pqEncode(emb, store = Some(dir))) === encodePlain)
-    assert(TableSnapshot.isCommitted(spark, dir, Similarity.PqStoreBuckets))
+    assert(TableSnapshot.isCommitted(spark, dir))
   }
 }

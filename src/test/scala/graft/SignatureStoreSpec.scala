@@ -118,7 +118,7 @@ class SignatureStoreSpec extends AnyFunSuite {
       }
     val bytesBefore = untouched.map(e => e.bucket -> fileBytes(e)).toMap
 
-    val report = TableSnapshot.deleteIds(spark, dir, victims, "doc_id", Dedup.SigBuckets)
+    val report = TableSnapshot.deleteIds(spark, dir, victims, "doc_id")
     assert(report.deletedRows === victims.size * 4L, "4 band rows per doc")
     assert(report.rewrittenBuckets.map(_ % Dedup.SigBuckets).toSet.subsetOf(victimBuckets))
 

@@ -84,7 +84,7 @@ class SnapshotBranchSpec extends AnyFunSuite {
     SnapshotSink.branch(out, "audit", 1L)
     val victims = docIdsInBucket(out, 2L, 1) ++ docIdsInBucket(out, 5L, 1)
     val report = SnapshotSink.upsertDocsToBranch(spark, out, "audit",
-      updateRows(victims :+ InsertId), NB)
+      updateRows(victims :+ InsertId))
     assert(report.matchedDocs === 2L && report.insertedDocs === 1L)
     // rewrites landed at a fresh generation, never at the base ids
     assert(report.rewrittenBuckets.forall(_ >= NB))
@@ -137,7 +137,7 @@ class SnapshotBranchSpec extends AnyFunSuite {
     SnapshotSink.branch(out, "audit", 1L)
     val victims = Seq(0L, 3L, 6L, 7L).flatMap(b => docIdsInBucket(out, b, 1))
     val report = SnapshotSink.upsertDocsToBranch(spark, out, "audit",
-      updateRows(victims :+ InsertId), NB)
+      updateRows(victims :+ InsertId))
     assert(report.rewrittenBuckets.map(_ % NB).sorted === Seq(0L, 1L, 3L, 6L, 7L))
     assert(SnapshotSink.versions(out) === Seq(1L, 2L))
     assert(SnapshotSink.branches(out)("audit") === 2L)
@@ -149,7 +149,7 @@ class SnapshotBranchSpec extends AnyFunSuite {
     SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB) // v1 = HEAD
     SnapshotSink.branch(out, "audit", 1L)
     SnapshotSink.upsertDocsToBranch(spark, out, "audit",
-      updateRows(docIdsInBucket(out, 2L, 1)), NB) // v2 on the branch; HEAD stays v1
+      updateRows(docIdsInBucket(out, 2L, 1))) // v2 on the branch; HEAD stays v1
     // keepLast = 1 would keep only v2 — but v1 is HEAD's version
     assert(SnapshotSink.expireVersions(out, keepLast = 1) === Seq.empty)
     assert(SnapshotSink.versions(out) === Seq(1L, 2L))
@@ -179,7 +179,7 @@ class SnapshotBranchSpec extends AnyFunSuite {
     val full = contentOf(SnapshotSink.readCommitted(spark, out))
     SnapshotSink.branch(out, "pinned", SnapshotSink.versions(out).last)
 
-    val comp = SnapshotSink.compact(spark, out, NB)
+    val comp = SnapshotSink.compact(spark, out)
     assert(!comp.noop)
     assert(contentOf(SnapshotSink.readCommitted(spark, out)) === full)
     // the branch still reads the pre-compaction stream generations
@@ -206,7 +206,7 @@ class SnapshotBranchSpec extends AnyFunSuite {
     val updates = updateRows(victims :+ InsertId) // 4 base buckets: 0, 1, 3, 6
 
     intercept[PublishFault.Injected] {
-      SnapshotSink.upsertDocsToBranch(spark, out, "wip", updates, NB,
+      SnapshotSink.upsertDocsToBranch(spark, out, "wip", updates,
         io = PublishFault.atManifest)
     }
     // neither pointer moved; main's bytes and both refs' content intact
@@ -218,7 +218,7 @@ class SnapshotBranchSpec extends AnyFunSuite {
     assert(SnapshotSink.verifySnapshotAtBranch(spark, out, "wip") === Seq.empty)
 
     // healing = re-running (a fresh generation; the partial one becomes orphans)
-    val report = SnapshotSink.upsertDocsToBranch(spark, out, "wip", updates, NB)
+    val report = SnapshotSink.upsertDocsToBranch(spark, out, "wip", updates)
     assert(report.matchedDocs === 3L && report.insertedDocs === 1L)
     val br = SnapshotSink.readCommittedAtBranch(spark, out, "wip")
     victims.foreach { id =>
@@ -232,7 +232,7 @@ class SnapshotBranchSpec extends AnyFunSuite {
     SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB) // v1
     SnapshotSink.branch(out, "keep", 1L)
     val victims = docIdsInBucket(out, 2L, 1)
-    SnapshotSink.upsertDocsToBranch(spark, out, "keep", updateRows(victims), NB)
+    SnapshotSink.upsertDocsToBranch(spark, out, "keep", updateRows(victims))
     val bv = SnapshotSink.branches(out)("keep")
     val brContent = contentOf(SnapshotSink.readCommittedAtBranch(spark, out, "keep"))
 
@@ -305,12 +305,12 @@ class SnapshotBranchSpec extends AnyFunSuite {
     SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB) // v1
     SnapshotSink.branch(out, "stale", 1L)
     val brVictim = docIdsInBucket(out, 2L, 1)
-    SnapshotSink.upsertDocsToBranch(spark, out, "stale", updateRows(brVictim), NB)
+    SnapshotSink.upsertDocsToBranch(spark, out, "stale", updateRows(brVictim))
 
     // main takes its own commit after the fork — publishing "stale" now would
     // silently discard it
     val mainVictim = docIdsInBucket(out, 5L, 1)
-    SnapshotSink.upsertDocs(spark, out, updateRows(mainVictim), NB)
+    SnapshotSink.upsertDocs(spark, out, updateRows(mainVictim))
     val mainContent = contentOf(SnapshotSink.readCommitted(spark, out))
     val ex = intercept[IllegalStateException] {
       SnapshotSink.fastForward(spark, out, "stale")
@@ -321,7 +321,7 @@ class SnapshotBranchSpec extends AnyFunSuite {
     // recovery: re-branch from the CURRENT head and re-apply, then publish
     val head = SnapshotSink.versions(out).last
     SnapshotSink.branch(out, "rebased", head)
-    SnapshotSink.upsertDocsToBranch(spark, out, "rebased", updateRows(brVictim), NB)
+    SnapshotSink.upsertDocsToBranch(spark, out, "rebased", updateRows(brVictim))
     SnapshotSink.fastForward(spark, out, "rebased")
     val merged = SnapshotSink.readCommitted(spark, out)
     (brVictim ++ mainVictim).foreach { id =>
@@ -332,7 +332,7 @@ class SnapshotBranchSpec extends AnyFunSuite {
     // the publish advanced the branch's base: a further branch commit
     // fast-forwards again without re-branching
     SnapshotSink.upsertDocsToBranch(spark, out, "rebased",
-      updateRows(docIdsInBucket(out, 6L, 1)), NB)
+      updateRows(docIdsInBucket(out, 6L, 1)))
     SnapshotSink.fastForward(spark, out, "rebased")
   }
 
@@ -342,11 +342,11 @@ class SnapshotBranchSpec extends AnyFunSuite {
     SnapshotSink.branch(out, "wip", 1L)
     // the branch rewrites bucket 2's family; bucket 5 stays SHARED with main
     SnapshotSink.upsertDocsToBranch(spark, out, "wip",
-      updateRows(docIdsInBucket(out, 2L, 1)), NB)
+      updateRows(docIdsInBucket(out, 2L, 1)))
 
     // right-to-be-forgotten on main: victim lives in bucket 5 (shared)
     val victim = docIdsInBucket(out, 5L, 1)
-    SnapshotSink.deleteDocs(spark, out, victim, NB)
+    SnapshotSink.deleteDocs(spark, out, victim)
 
     // main reads on without the victim; the branch's manifest still references
     // bucket 5's RECLAIMED pre-takedown files, so the branch read fails LOUDLY
@@ -372,14 +372,15 @@ class SnapshotBranchSpec extends AnyFunSuite {
     SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB) // v1
     SnapshotSink.branch(out, "dev", 1L)
     val v1 = docIdsInBucket(out, 2L, 1)
-    SnapshotSink.upsertDocsToBranch(spark, out, "dev", updateRows(v1), NB)
+    SnapshotSink.upsertDocsToBranch(spark, out, "dev", updateRows(v1))
     val gen1 = SnapshotSink.lineageAtBranch(spark, out, "dev")
       .agg(max(col("bucket"))).head.getLong(0) / NB
     // second merge on the SAME branch builds on the first's manifest and must
-    // allocate a HIGHER generation (the sidecar reservation is consulted even
-    // though generation 1's entries are in no MAIN manifest)
+    // pick a HIGHER generation (the base manifest — the branch head's — and the
+    // data directories are consulted, though generation 1's entries are in no
+    // MAIN manifest and the first merge's reservation left with its commit)
     val v2 = docIdsInBucket(out, 5L, 1)
-    SnapshotSink.upsertDocsToBranch(spark, out, "dev", updateRows(v2), NB)
+    SnapshotSink.upsertDocsToBranch(spark, out, "dev", updateRows(v2))
     val gen2 = SnapshotSink.lineageAtBranch(spark, out, "dev")
       .agg(max(col("bucket"))).head.getLong(0) / NB
     assert(gen2 > gen1)

@@ -72,8 +72,8 @@ class SnapshotCompactSpec extends AnyFunSuite {
     val prev = spark.conf.get(coalesceKey)
     spark.conf.set(coalesceKey, "false")
     try {
-      SnapshotSink.compact(spark, outD, NB)
-      SnapshotSink.compact(spark, outZ, NB,
+      SnapshotSink.compact(spark, outD)
+      SnapshotSink.compact(spark, outZ,
         layout = Seq(Layout.zval(Layout.langIdx(col("lang")),
           Layout.clamp16(col("offset")))))
     } finally spark.conf.set(coalesceKey, prev)
@@ -108,7 +108,7 @@ class SnapshotCompactSpec extends AnyFunSuite {
     assert(before.size === 3 * NB) // three batches' composite entries
     val beforeRows = canon(SnapshotSink.readCommitted(spark, out))
 
-    val rep = SnapshotSink.compact(spark, out, nBuckets = NB)
+    val rep = SnapshotSink.compact(spark, out)
     assert(!rep.noop)
     assert(rep.generation === 3L) // batch ids 0..2 occupied generations 0..2
     assert(rep.mergedEntries === 3 * NB)
@@ -142,7 +142,7 @@ class SnapshotCompactSpec extends AnyFunSuite {
     def batch(i: Int) = flat.filter(pmod(hash(col("doc_id")), lit(3)) === i)
     // batches 0 and 1 drain; the checkpoint advances; compaction runs (generation 2)
     (0 until 2).foreach(b => SnapshotSink.commitStreamBatch(batch(b), out, b.toLong, NB))
-    val rep = SnapshotSink.compact(spark, out, nBuckets = NB)
+    val rep = SnapshotSink.compact(spark, out)
     assert(rep.generation === 2L)
     val rowsAfterCompact = SnapshotSink.readCommitted(spark, out).count()
 
@@ -181,19 +181,19 @@ class SnapshotCompactSpec extends AnyFunSuite {
     val out = tmpDir("noop")
     SnapshotSink.run(Interleave.docs(spark, sfDir), out, nBuckets = NB)
     val manifest = SnapshotSink.readManifest(spark, out)
-    assert(SnapshotSink.compact(spark, out, NB).noop)
+    assert(SnapshotSink.compact(spark, out).noop)
     assert(SnapshotSink.readManifest(spark, out) === manifest)
 
     val out2 = tmpDir("noop2")
     commitAsStream(out2, 2)
-    assert(!SnapshotSink.compact(spark, out2, NB).noop)
-    assert(SnapshotSink.compact(spark, out2, NB).noop) // second call: already canonical
+    assert(!SnapshotSink.compact(spark, out2).noop)
+    assert(SnapshotSink.compact(spark, out2).noop) // second call: already canonical
   }
 
   test("batch resume heals an invalidated bucket AT ITS COMPACTED ID from the source") {
     val out = tmpDir("heal")
     commitAsStream(out, 2)
-    val gen = SnapshotSink.compact(spark, out, NB).generation
+    val gen = SnapshotSink.compact(spark, out).generation
     val victim = gen * NB + 5
     val pre = canon(SnapshotSink.readCommitted(spark, out))
     val preEntry = SnapshotSink.readManifest(spark, out).find(_.bucket == victim).get
@@ -213,7 +213,7 @@ class SnapshotCompactSpec extends AnyFunSuite {
   test("vacuum removes orphan directories; readCommitted never saw them") {
     val out = tmpDir("vacuum")
     commitAsStream(out, 2)
-    SnapshotSink.compact(spark, out, NB)
+    SnapshotSink.compact(spark, out)
     val pre = canon(SnapshotSink.readCommitted(spark, out))
     // simulate a crash between a wave's manifest swap and its source GC: an
     // unreferenced bucket directory holding REAL parquet (a stale pre-compaction
@@ -248,14 +248,14 @@ class SnapshotCompactSpec extends AnyFunSuite {
     val compacted = SnapshotSink.readCompactedIds(path)
     val before = canon(SnapshotSink.readCommitted(spark, out))
     intercept[PublishFault.Injected] {
-      SnapshotSink.compact(spark, out, NB, io = PublishFault.atManifest)
+      SnapshotSink.compact(spark, out, io = PublishFault.atManifest)
     }
     assert(SnapshotSink.readState(path).head === head)
     assert(SnapshotSink.readCompactedIds(path) === compacted)
     assert(canon(SnapshotSink.readCommitted(spark, out)) === before)
     assert(SnapshotSink.verifySnapshot(spark, out) === Seq.empty)
 
-    val rep = SnapshotSink.compact(spark, out, NB)
+    val rep = SnapshotSink.compact(spark, out)
     assert(!rep.noop && SnapshotSink.readManifest(spark, out).size === NB)
     assert(canon(SnapshotSink.readCommitted(spark, out)) === before)
     assert(SnapshotSink.verifySnapshot(spark, out) === Seq.empty)
@@ -277,7 +277,7 @@ class SnapshotCompactSpec extends AnyFunSuite {
     val versions = SnapshotSink.versions(out)
     val compacted = SnapshotSink.readCompactedIds(path)
 
-    val ex = intercept[IllegalArgumentException](SnapshotSink.compact(spark, out, NB))
+    val ex = intercept[IllegalArgumentException](SnapshotSink.compact(spark, out))
     assert(ex.getMessage.contains("row mismatch"))
     // checked before any publish: HEAD, history and the compacted ids are unchanged
     assert(SnapshotSink.readState(path).head === v)
@@ -291,7 +291,7 @@ class SnapshotCompactSpec extends AnyFunSuite {
     val none = ExtractPipeline.extractFlat(Interleave.docs(spark, sfDir)).limit(0)
     SnapshotSink.commitStreamBatch(none, out, 0L, NB)
     SnapshotSink.commitStreamBatch(none, out, 1L, NB)
-    val rep = SnapshotSink.compact(spark, out, NB)
+    val rep = SnapshotSink.compact(spark, out)
     assert(!rep.noop && rep.generation === 2L && rep.rows === 0L)
     val after = SnapshotSink.readManifest(spark, out)
     assert(after.map(_.bucket) === (0 until NB).map(2L * NB + _))
@@ -316,7 +316,7 @@ class SnapshotCompactSpec extends AnyFunSuite {
     val victim = Paths.get(out, "data", s"bucket=${entry.bucket}", entry.files.head)
     Files.write(victim, Array[Byte](0))
     val ex = intercept[IllegalArgumentException] {
-      SnapshotSink.compact(spark, out, NB)
+      SnapshotSink.compact(spark, out)
     }
     assert(ex.getMessage.contains("refusing to compact"))
   }

@@ -85,7 +85,7 @@ class SnapshotRestoreSpec extends AnyFunSuite {
     SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB) // v1
     val victim = docs.select(col("doc_id")).orderBy(col("doc_id"))
       .limit(1).collect().head.getString(0)
-    SnapshotSink.deleteDocs(spark, out, Seq(victim), NB) // v2: victim's bucket rewritten
+    SnapshotSink.deleteDocs(spark, out, Seq(victim)) // v2: victim's bucket rewritten
 
     val ex = intercept[IllegalStateException] {
       SnapshotSink.restore(spark, out, toVersion = 1L)

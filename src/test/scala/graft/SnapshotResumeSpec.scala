@@ -88,8 +88,11 @@ class SnapshotResumeSpec extends AnyFunSuite {
 
   test("crash mid-run -> resume processes ONLY uncommitted buckets, committed bytes untouched") {
     val out = tmpDir("crash")
-    intercept[SnapshotSink.InjectedCrash] {
-      SnapshotSink.run(docs, out, nBuckets = NB, waveSize = 3, crashAfterWaves = 1)
+    // the second wave's manifest publish fails: its directories are published
+    // but no version lists them
+    intercept[PublishFault.Injected] {
+      SnapshotSink.run(docs, out, nBuckets = NB, waveSize = 3,
+        io = PublishFault.atManifestNumber(2))
     }
     val committed = SnapshotSink.readManifest(spark, out).map(_.bucket).sorted
     assert(committed.size === 3) // exactly one wave landed

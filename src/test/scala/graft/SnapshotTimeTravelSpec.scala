@@ -139,7 +139,7 @@ class SnapshotTimeTravelSpec extends AnyFunSuite {
     SnapshotSink.commitStreamBatch(flat, out, batchId = 0L, NB) // v1: ids 0..7
     val vBefore = SnapshotSink.versions(out).last
     SnapshotSink.commitStreamBatch(flat.limit(0), out, batchId = 1L, NB) // v2: empty batch
-    val report = SnapshotSink.compact(spark, out, NB)
+    val report = SnapshotSink.compact(spark, out)
     assert(!report.noop)
     val vAfter = SnapshotSink.versions(out).last
     val changed = SnapshotSink.changedBuckets(spark, out, vBefore, vAfter)

@@ -1,11 +1,18 @@
 package graft
 
 import java.nio.file.Paths
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import graft.operators.ExtractPipeline
 import graft.sources.{Interleave, SnapshotSink, TableSnapshot}
+import org.apache.spark.ListenerDrain
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{ExpandExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -73,7 +80,7 @@ class SnapshotUpsertSpec extends AnyFunSuite {
     assert(victimRows > 3L, "victims should carry several spans each")
 
     val report = SnapshotSink.upsertDocs(spark, out,
-      updateRows(victims :+ InsertId), NB)
+      updateRows(victims :+ InsertId))
     // rewrites land at a fresh generation: new ids, same bases
     assert(report.rewrittenBuckets === Seq(1L, 2L, 5L).map(NB + _))
     assert(report.matchedDocs === 3L)
@@ -119,7 +126,7 @@ class SnapshotUpsertSpec extends AnyFunSuite {
     val head = SnapshotSink.readState(Paths.get(outCrash)).head
     val before = logicalRows(outCrash)
     intercept[PublishFault.Injected] {
-      SnapshotSink.upsertDocs(spark, outCrash, updates, NB, io = PublishFault.atManifest)
+      SnapshotSink.upsertDocs(spark, outCrash, updates, io = PublishFault.atManifest)
     }
     // HEAD has not moved and every file it lists is still there
     assert(SnapshotSink.readState(Paths.get(outCrash)).head === head)
@@ -127,9 +134,9 @@ class SnapshotUpsertSpec extends AnyFunSuite {
     assert(SnapshotSink.verifySnapshot(spark, outCrash) === Seq.empty)
 
     // heal = re-run the same merge, at a fresh generation
-    val report = SnapshotSink.upsertDocs(spark, outCrash, updates, NB)
+    val report = SnapshotSink.upsertDocs(spark, outCrash, updates)
     assert(report.rewrittenBuckets.map(_ % NB) === Seq(0L, 1L, 3L, 6L))
-    SnapshotSink.upsertDocs(spark, outCtl, updates, NB)
+    SnapshotSink.upsertDocs(spark, outCtl, updates)
     assert(logicalRows(outCrash) === logicalRows(outCtl),
       "crash+re-run must converge to the never-crashed result")
   }
@@ -139,24 +146,51 @@ class SnapshotUpsertSpec extends AnyFunSuite {
     SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB)
     val v0 = SnapshotSink.versions(out).last
     val victims = Seq(0L, 2L, 5L, 7L).flatMap(b => docIdsInBucket(out, b, 1))
-    val report = SnapshotSink.upsertDocs(spark, out, updateRows(victims :+ InsertId), NB)
+    val report = SnapshotSink.upsertDocs(spark, out, updateRows(victims :+ InsertId))
     assert(report.rewrittenBuckets.map(_ % NB) === Seq(0L, 1L, 2L, 5L, 7L))
     assert(report.matchedDocs === 4L && report.insertedDocs === 1L)
     assert(SnapshotSink.versions(out) === Seq(v0, v0 + 1))
     assert(SnapshotSink.verifySnapshot(spark, out) === Seq.empty)
     // an empty update set publishes nothing
-    assert(SnapshotSink.upsertDocs(spark, out, updateRows(victims).limit(0), NB)
+    assert(SnapshotSink.upsertDocs(spark, out, updateRows(victims).limit(0))
       .rewrittenBuckets.isEmpty)
     assert(SnapshotSink.versions(out) === Seq(v0, v0 + 1))
+  }
+
+  test("a merge plans no Expand: its report aggregate generates the same code every call") {
+    val out = tmpDir("noexpand")
+    SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB)
+    val updates = updateRows(docIdsInBucket(out, 2L, 2) :+ InsertId)
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    val report =
+      try {
+        val r = SnapshotSink.upsertDocs(spark, out, updates)
+        ListenerDrain(spark.sparkContext)
+        r
+      } finally spark.listenerManager.unregister(listener)
+    assert((report.matchedDocs, report.insertedDocs) === ((2L, 1L)))
+    val helper = new AdaptiveSparkPlanHelper {}
+    val executed = plans.asScala.toSeq
+    assert(executed.nonEmpty)
+    executed.foreach { p =>
+      assert(helper.collectWithSubqueries(p) { case e: ExpandExec => e }.isEmpty, p)
+    }
   }
 
   test("re-running the same merge is idempotent in content") {
     val out = tmpDir("idem")
     SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB)
     val updates = updateRows(docIdsInBucket(out, 4L, 2))
-    SnapshotSink.upsertDocs(spark, out, updates, NB)
+    SnapshotSink.upsertDocs(spark, out, updates)
     val once = logicalRows(out)
-    val again = SnapshotSink.upsertDocs(spark, out, updates, NB)
+    val again = SnapshotSink.upsertDocs(spark, out, updates)
     assert(again.matchedDocs === 2L && again.insertedDocs === 0L)
     assert(logicalRows(out) === once)
   }
@@ -171,10 +205,10 @@ class SnapshotUpsertSpec extends AnyFunSuite {
     val before = byBase(out)
     val v0 = SnapshotSink.versions(out).last
     // an id no bucket holds publishes nothing
-    assert(TableSnapshot.deleteIds(spark, out, Seq(1000L), "doc_id", NB) ===
+    assert(TableSnapshot.deleteIds(spark, out, Seq(1000L), "doc_id") ===
       SnapshotSink.DeleteReport(0L, Seq.empty))
     assert(SnapshotSink.versions(out).last === v0)
-    val report = TableSnapshot.deleteIds(spark, out, touched, "doc_id", NB)
+    val report = TableSnapshot.deleteIds(spark, out, touched, "doc_id")
     assert(report.deletedRows === 2L)
     assert(report.rewrittenBuckets.nonEmpty && report.rewrittenBuckets.forall(_ >= NB))
     assert(SnapshotSink.versions(out).last === v0 + 1, "one version per takedown")
@@ -186,7 +220,7 @@ class SnapshotUpsertSpec extends AnyFunSuite {
     assert(back.filter(col("doc_id").isInCollection(touched)).count() === 0L)
     assert(back.count() === 62L)
     // the rewritten table resumes as a no-op: its composite ids key on the base
-    assert(TableSnapshot.isCommitted(spark, out, NB))
+    assert(TableSnapshot.isCommitted(spark, out))
     assert(TableSnapshot.runHashBucketed(derived, "doc_id", out, NB).count() === 62L)
     assert(SnapshotSink.versions(out).last === v0 + 1)
   }
@@ -202,14 +236,14 @@ class SnapshotUpsertSpec extends AnyFunSuite {
     val before = rows
     val touched = Seq(5L, 17L, 40L)
     intercept[PublishFault.Injected] {
-      TableSnapshot.deleteIds(spark, out, touched, "doc_id", NB,
+      TableSnapshot.deleteIds(spark, out, touched, "doc_id",
         io = PublishFault.atManifest)
     }
     assert(SnapshotSink.readState(Paths.get(out)).head === head)
     assert(rows === before)
     assert(SnapshotSink.verifySnapshot(spark, out) === Seq.empty)
 
-    assert(TableSnapshot.deleteIds(spark, out, touched, "doc_id", NB).deletedRows === 3L)
+    assert(TableSnapshot.deleteIds(spark, out, touched, "doc_id").deletedRows === 3L)
     assert(rows === before.filterNot(r => touched.contains(r._1)))
     assert(SnapshotSink.verifySnapshot(spark, out) === Seq.empty)
   }
@@ -220,13 +254,13 @@ class SnapshotUpsertSpec extends AnyFunSuite {
     val nullId = updateRows(Seq("doc-0000000000001"))
       .withColumn("doc_id", lit(null).cast("string"))
     val exNull = intercept[IllegalArgumentException] {
-      SnapshotSink.upsertDocs(spark, out, nullId, NB)
+      SnapshotSink.upsertDocs(spark, out, nullId)
     }
     assert(exNull.getMessage.contains("NULL doc_id"))
 
     val exSchema = intercept[IllegalArgumentException] {
       SnapshotSink.upsertDocs(spark, out,
-        updateRows(Seq("doc-0000000000001")).drop("conf_sum"), NB)
+        updateRows(Seq("doc-0000000000001")).drop("conf_sum"))
     }
     assert(exSchema.getMessage.contains("schema"))
 
@@ -238,9 +272,9 @@ class SnapshotUpsertSpec extends AnyFunSuite {
     SnapshotSink.branch(out, "wap", versions.last)
     val (exTypes, jobs) = JobCount(spark) {
       Seq(intercept[IllegalArgumentException](
-          SnapshotSink.upsertDocs(spark, out, retyped, NB)),
+          SnapshotSink.upsertDocs(spark, out, retyped)),
         intercept[IllegalArgumentException](
-          SnapshotSink.upsertDocsToBranch(spark, out, "wap", retyped, NB)))
+          SnapshotSink.upsertDocsToBranch(spark, out, "wap", retyped)))
     }
     exTypes.foreach(ex => assert(ex.getMessage.contains("offset:STRING"), ex.getMessage))
     assert(jobs === 0)
@@ -252,7 +286,7 @@ class SnapshotUpsertSpec extends AnyFunSuite {
     SnapshotSink.commitStreamBatch(flat.limit(0), outStream, batchId = 1L, NB)
     val exCanon = intercept[IllegalArgumentException] {
       SnapshotSink.upsertDocs(spark, outStream,
-        updateRows(Seq("doc-0000000000001")), NB)
+        updateRows(Seq("doc-0000000000001")))
     }
     assert(exCanon.getMessage.contains("compact"))
   }

@@ -50,12 +50,12 @@ class StreamingTakedownSpec extends AnyFunSuite {
     val flatA1 = ExtractPipeline.extractFlat(halfA1)
 
     // ---- stream settles; operator compacts, then takes down victims ------------
-    assert(!SnapshotSink.compact(spark, out, NB).noop)
+    assert(!SnapshotSink.compact(spark, out).noop)
     assert(SnapshotSink.readCompactedIds(Paths.get(out)) === (0L until 2 * NB).toSet)
     val victims = SnapshotSink.readCommitted(spark, out)
       .select(col("doc_id")).distinct().orderBy(col("doc_id")).limit(3)
       .collect().map(_.getString(0)).toSeq
-    val del = SnapshotSink.deleteDocs(spark, out, victims, NB)
+    val del = SnapshotSink.deleteDocs(spark, out, victims)
     assert(del.deletedRows > 0L)
     val postTakedown = canon(SnapshotSink.readCommitted(spark, out))
     assert(!postTakedown.exists(r => victims.exists(r.startsWith)))
@@ -97,7 +97,7 @@ class StreamingTakedownSpec extends AnyFunSuite {
     val victims = SnapshotSink.readCommitted(spark, out)
       .select(col("doc_id")).distinct().orderBy(col("doc_id")).limit(2)
       .collect().map(_.getString(0)).toSeq
-    assert(SnapshotSink.deleteDocs(spark, out, victims, NB).deletedRows > 0L)
+    assert(SnapshotSink.deleteDocs(spark, out, victims).deletedRows > 0L)
     val postTakedown = canon(SnapshotSink.readCommitted(spark, out))
 
     // the takedown moved the victims' buckets to a fresh generation; their old
@@ -129,7 +129,7 @@ class StreamingTakedownSpec extends AnyFunSuite {
       docs.filter(key < 50).withColumn("doc_id",
         format_string(s"doc-%0${Interleave.DocIdDigits}d", key + 800000)))
 
-    SnapshotSink.compact(spark, out, NB) // compacts generations 0 and 1 only
+    SnapshotSink.compact(spark, out) // compacts generations 0 and 1 only
     // the compacted log must hold those generations' ids, NOT batch 2's reservation
     val compacted = SnapshotSink.readCompactedIds(Paths.get(out))
     assert(compacted === (0L until 2 * NB).toSet)
