@@ -32,8 +32,9 @@ object Scaling {
     * `extractAndReassemble` is `reassembleSorted(extractFlat)`).
     * The PROTOCOL family (commit/takedown/changes) times the snapshot-commit
     * pipeline instead — the commit-heavy queries' cost shape (VERDICT r4 #7):
-    * extraction -> staged write -> re-read metrics -> publish -> distributed hash
-    * -> manifest republish, plus the takedown rewrite / changelog read on top.
+    * extraction -> staged write (metrics observed) -> footer check -> publish ->
+    * distributed hash -> manifest republish, plus the takedown rewrite /
+    * changelog read on top.
     * Differences between adjacent protocol rows attribute the delete/diff cost;
     * the gap to 'full' attributes the commit machinery itself. */
   def runPhase(spark: SparkSession, sfDir: String, replicate: Int, phase: String): Unit = {

@@ -1,8 +1,13 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.util.regex.Pattern.quote
+
+import scala.jdk.CollectionConverters._
+
 import graft.functions.{OracleSql, OracleSqlDedup, OracleSqlMedia, OracleSqlRef, OracleSqlSim}
 import graft.operators.{Dedup, ExtractPipeline, Similarity, TextAnalysis}
-import graft.sources.Interleave
+import graft.sources.{Interleave, SnapshotSink}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -76,17 +81,28 @@ object SparkEntry {
     s.read.parquet(s"$dir/documents.parquet")
 
   /** Committed-derived-table location (the `neardup_pairs` signature table, the
-    * `top_terms` tf table): keyed by corpus identity (source-parquet fingerprint)
-    * AND the table's format version, so a changed corpus or algorithm change can
-    * never serve stale rows — the staleness contract [[graft.sources.TableSnapshot]]
-    * documents. A repeat run over the same corpus resumes: verified buckets are read
-    * back, not recomputed. */
-  private def derivedDir(dir: String, tag: String, version: Int): String = {
-    val fp = Interleave.sourceFingerprint(
-      java.nio.file.Paths.get(dir, "documents.parquet"))
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft-$tag-" + dir.replaceAll("[^a-z0-9.]", "-")
-        + s"-v$version-$fp").toString
+    * `top_terms` tf table, the PQ codebook): keyed by corpus identity (the
+    * fingerprint of `source`, the table's own input parquet) AND the table's format
+    * version, so a changed corpus or algorithm change can never serve stale rows —
+    * the staleness contract [[graft.sources.TableSnapshot]] documents. A repeat run
+    * over the same corpus resumes: verified buckets are read back, not recomputed.
+    * The same table's directories of OTHER format versions are superseded copies no
+    * build of this version reads, so they are deleted here; other tags' and other
+    * corpora's directories are left alone. */
+  private[graft] def derivedDir(dir: String, tag: String, version: Int,
+      source: String = "documents.parquet"): String = {
+    val fp = Interleave.sourceFingerprint(Paths.get(dir, source))
+    val root = Paths.get(sys.props("java.io.tmpdir"))
+    val prefix = s"graft-$tag-" + dir.replaceAll("[^a-z0-9.]", "-") + "-v"
+    val superseded = (quote(prefix) + "(\\d+)" + quote(s"-$fp")).r
+    val listing = Files.list(root)
+    try listing.iterator().asScala.foreach { p =>
+      p.getFileName.toString match {
+        case superseded(v) if v != version.toString => SnapshotSink.deleteRecursively(p)
+        case _ =>
+      }
+    } finally listing.close()
+    root.resolve(s"$prefix$version-$fp").toString
   }
 
   private def sigDirFor(dir: String): String =
@@ -102,13 +118,8 @@ object SparkEntry {
 
   /** Committed PQ codebook (model state under the same protocol as data state);
     * keyed on the EMBEDDINGS parquet fingerprint — the codebook's actual source. */
-  private def pqDirFor(dir: String): String = {
-    val fp = Interleave.sourceFingerprint(
-      java.nio.file.Paths.get(dir, "embeddings.parquet"))
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft-pqcb-" + dir.replaceAll("[^a-z0-9.]", "-")
-        + s"-v${Similarity.PqFormatVersion}-$fp").toString
-  }
+  private def pqDirFor(dir: String): String =
+    derivedDir(dir, "pqcb", Similarity.PqFormatVersion, "embeddings.parquet")
 
   private def embeddings(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/embeddings.parquet")

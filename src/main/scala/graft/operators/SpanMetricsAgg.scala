@@ -76,3 +76,60 @@ object SpanMetricsAgg extends Aggregator[SpanMetricsIn, SpanMetricsBuf, SpanMetr
   /** Column-form entry point: spanMetrics(kind, ok, error, text, n_words, conf_sum). */
   lazy val spanMetrics: UserDefinedFunction = udaf(SpanMetricsAgg)
 }
+
+/**
+ * [[SpanMetricsAgg]] applied per bucket inside ONE aggregate, whose result maps
+ * each bucket id to its metrics. A single aggregate is what `Dataset.observe` takes,
+ * so a commit gets every bucket's lineage metrics from the write itself rather than
+ * from a grouped re-read of what it wrote. A task's buffer holds one
+ * [[SpanMetricsBuf]] per bucket it saw, updated in place.
+ */
+abstract class PerBucketMetrics[IN]
+    extends Aggregator[IN, Map[Long, SpanMetricsBuf], Map[Long, SpanMetrics]] {
+  import org.apache.spark.sql.Encoder
+  import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+
+  protected def bucket(in: IN): Long
+  protected def add(b: SpanMetricsBuf, in: IN): Unit
+
+  def zero: Map[Long, SpanMetricsBuf] = Map.empty
+
+  def reduce(m: Map[Long, SpanMetricsBuf], in: IN): Map[Long, SpanMetricsBuf] = {
+    val k = bucket(in)
+    m.get(k) match {
+      case Some(b) => add(b, in); m
+      case None => val b = SpanMetricsAgg.zero; add(b, in); m.updated(k, b)
+    }
+  }
+
+  def merge(a: Map[Long, SpanMetricsBuf],
+      b: Map[Long, SpanMetricsBuf]): Map[Long, SpanMetricsBuf] =
+    b.foldLeft(a) { case (acc, (k, buf)) =>
+      acc.get(k) match {
+        case Some(x) => SpanMetricsAgg.merge(x, buf); acc
+        case None => acc.updated(k, buf)
+      }
+    }
+
+  def finish(m: Map[Long, SpanMetricsBuf]): Map[Long, SpanMetrics] =
+    m.map { case (k, b) => k -> SpanMetricsAgg.finish(b) }
+
+  def bufferEncoder: Encoder[Map[Long, SpanMetricsBuf]] =
+    ExpressionEncoder[Map[Long, SpanMetricsBuf]]()
+  def outputEncoder: Encoder[Map[Long, SpanMetrics]] =
+    ExpressionEncoder[Map[Long, SpanMetrics]]()
+}
+
+/** Input: (bucket, struct(kind, ok, error, text, n_words, conf_sum)). */
+object BucketSpanMetricsAgg extends PerBucketMetrics[(Long, SpanMetricsIn)] {
+  protected def bucket(in: (Long, SpanMetricsIn)): Long = in._1
+  protected def add(b: SpanMetricsBuf, in: (Long, SpanMetricsIn)): Unit =
+    SpanMetricsAgg.reduce(b, in._2)
+}
+
+/** Input: the bucket alone; `n_spans` counts rows, every other field stays 0 — the
+  * form for tables without span columns. */
+object BucketRowsAgg extends PerBucketMetrics[Long] {
+  protected def bucket(in: Long): Long = in
+  protected def add(b: SpanMetricsBuf, in: Long): Unit = b.nSpans += 1
+}

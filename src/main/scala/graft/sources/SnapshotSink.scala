@@ -6,8 +6,9 @@ import scala.annotation.tailrec
 import scala.jdk.CollectionConverters._
 import scala.util.matching.Regex
 
-import graft.operators.{EngineConfig, ExtractPipeline, SpanMetricsAgg}
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import graft.operators.{BucketRowsAgg, BucketSpanMetricsAgg, EngineConfig, ExtractPipeline,
+  SpanMetrics, SpanMetricsAgg}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.json4s.{DefaultFormats, Formats}
@@ -28,9 +29,11 @@ import org.json4s.jackson.Serialization
  *   2. stream to a temp location                 (languages.py:146-163)
  *        -> each wave writes parquet to `<out>/staging/<its own dir>/bucket=<b>`;
  *   3. verify content hash                       (languages.py:168-169)
- *        -> lineage metrics are computed by RE-READING the staged parquet (write-path
- *           corruption surfaces here, not at some later consumer), and the manifest
- *           records an md5 over the bucket's data files;
+ *        -> lineage metrics are OBSERVED on the staged write itself, and every staged
+ *           file's parquet footer row count must equal them before anything
+ *           publishes (write-path loss or duplication surfaces here, at metadata
+ *           cost, not at some later consumer); the manifest records an md5 over the
+ *           bucket's data files — the one pass that reads the written bytes;
  *   4. atomic rename to the final name           (languages.py:174-175)
  *        -> publish of the bucket directory, then of the next manifest version and
  *           the state record naming it HEAD, all through the [[CommitIo]] seam
@@ -50,9 +53,9 @@ import org.json4s.jackson.Serialization
  * the corpus, not all of it. Unpartitioned inputs (live synthesis) fall back to the
  * post-scan filter.
  *
- * Per-bucket lineage = one [[graft.operators.SpanMetricsAgg]] pass (custom Aggregator,
- * map-side partials) + engine version (the F1/F2 version-introspection analogues,
- * uiucprescon/ocr/utils.cpp:4-6) + wall time.
+ * Per-bucket lineage = [[graft.operators.SpanMetricsAgg]] per bucket, observed on
+ * the write ([[graft.operators.PerBucketMetrics]]) + engine version (the F1/F2
+ * version-introspection analogues, uiucprescon/ocr/utils.cpp:4-6) + wall time.
  */
 object SnapshotSink {
 
@@ -1048,13 +1051,14 @@ object SnapshotSink {
 
   /**
    * Streaming entry point: commit ONE micro-batch of already-extracted flat spans
-   * through the SAME wave-commit protocol as the batch sink (staging write ->
-   * re-read metrics -> atomic per-bucket publish -> distributed hash -> manifest
-   * republish). Manifest/bucket ids are `allocatedGeneration * nBuckets + bucket`
-   * (Long arithmetic — no lifetime cap from Int overflow): the generation comes
-   * from the ledger ([[allocateGeneration]]), NOT batchId itself, so batches and
-   * compaction rewrites share one strictly-increasing id space (generation ==
-   * batchId for a fresh sequential stream); a RE-DELIVERED batchId (foreachBatch
+   * through the SAME wave-commit protocol as the batch sink (staging write with
+   * observed metrics -> footer row check -> atomic per-bucket publish ->
+   * distributed hash -> manifest republish). Manifest/bucket ids are
+   * `allocatedGeneration * nBuckets + bucket` (Long arithmetic — no lifetime cap
+   * from Int overflow): the generation comes from the ledger
+   * ([[allocateGeneration]]), NOT batchId itself, so batches and compaction
+   * rewrites share one strictly-increasing id space (generation == batchId for a
+   * fresh sequential stream); a RE-DELIVERED batchId (foreachBatch
    * replays the last uncommitted batch after a crash) resolves to its recorded
    * allocation, finds its ids already committed and verifying, and skips them — the
    * streaming form of resume's committed-bucket skip (StreamingExtractSpec). The
@@ -1304,21 +1308,16 @@ object SnapshotSink {
 
   // ---- protocol internals -------------------------------------------------------
 
-  /** Per-bucket lineage metrics recorded in a wave commit. Extraction waves fill all
-    * fields from [[SpanMetricsAgg]]; generic table commits ([[TableSnapshot]]) carry
-    * row counts only, zeros elsewhere — one manifest format for both. */
-  private[sources] final case class WaveMetrics(
-      rows: Long, nMedia: Long = 0L, nText: Long = 0L, nErr: Long = 0L,
-      ocrChars: Long = 0L, nWords: Long = 0L, confSum: Double = 0.0)
-
   /**
    * The shared wave-commit body (batch [[run]] waves, streaming micro-batches and
    * every [[rewrite]]): write `flat` (which must carry the `bucket` ids to commit)
-   * to this commit's own staging directory with the north rule's range layout, derive
-   * lineage metrics by RE-READING the staged parquet, publish each bucket, hash the
-   * wave's files in one distributed job, publish the next manifest version and
-   * commit it with the caller's state edit `commit` (which names the ref that
-   * moves) in the same state publish that records `flat`'s schema and `nBuckets`
+   * to this commit's own staging directory with the north rule's range layout,
+   * observing each bucket's lineage metrics in the same pass ([[observedMetrics]]),
+   * check every staged file's footer row count against them, publish each bucket,
+   * hash the wave's files in one distributed job — the one pass that reads the
+   * written bytes — publish the next manifest version and commit it with the
+   * caller's state edit `commit` (which names the ref that moves) in the same state
+   * publish that records `flat`'s schema and `nBuckets`
    * ([[TableSnapshot.recordLayout]]). Returns (updated manifest, rows committed
    * this wave, the published version).
    */
@@ -1350,38 +1349,20 @@ object SnapshotSink {
       // salting). `layoutExprs` overrides with COMPUTED layout keys (a z-order curve
       // from [[compact]]'s layout parameter): the expression is a shuffle key only —
       // nothing derived is persisted into the data files.
+      //
+      // The lineage metrics are observed ABOVE the range exchange, so they run once,
+      // in the write's result stage: below it, the range-sampling job runs them too
+      // and every row counts twice (the footer check below refuses exactly that),
+      // and a retried map stage could count rows again. An all-empty wave
+      // writes no partition dirs at all (Spark emits only _SUCCESS) and observes no
+      // bucket, so it records zero-metrics entries: an empty bucket is a legal
+      // committed state (resume of an empty bucket, re-delivered stream batch whose
+      // rows all verified elsewhere).
+      val obs = Observation()
       flat.repartitionByRange(layoutExprs.getOrElse(rewriteLayout(flat).map(col)): _*)
+        .observe(obs, bucketMetrics(flat).as("m"))
         .write.partitionBy("bucket").mode("overwrite").parquet(staging.toString)
-
-      // verify + lineage by re-reading what was written (write-path corruption
-      // surfaces here, not at some later consumer), with the staged frame's own
-      // schema — nothing is inferred. An all-empty wave writes no partition dirs at
-      // all (Spark emits only _SUCCESS), so it records zero-metrics entries: an empty
-      // bucket is a legal committed state (resume of an empty bucket, re-delivered
-      // stream batch whose rows all verified elsewhere).
-      val metrics: Map[Long, WaveMetrics] =
-        if (listPartitionDirs(staging).isEmpty) Map.empty
-        else {
-          val staged = spark.read.schema(flat.schema).parquet(staging.toString)
-          if (hasSpanMetrics(staged))
-            staged
-              .groupBy(col("bucket"))
-              .agg(SpanMetricsAgg.spanMetrics(
-                col("kind"), col("ok"), col("error"), col("text"),
-                col("n_words"), col("conf_sum")).as("m"))
-              .select(col("bucket"), col("m.*"))
-              .collect()
-              .map(r => r.getLong(0) -> WaveMetrics(
-                rows = r.getLong(1), nMedia = r.getLong(2), nText = r.getLong(3),
-                nErr = r.getLong(4), ocrChars = r.getLong(5), nWords = r.getLong(6),
-                confSum = r.getDouble(7))).toMap
-          else
-            staged
-              .groupBy(col("bucket"))
-              .agg(count(lit(1)).as("rows"))
-              .collect()
-              .map(r => r.getLong(0) -> WaveMetrics(rows = r.getLong(1))).toMap
-        }
+      val metrics = observedMetrics(obs)
       // Stray-bucket gate: every staged bucket id must belong to the committing
       // wave. flat's `bucket` is recomputed from doc_id here, so if the INPUT's
       // bucket column (which selected the wave's documents) disagrees with
@@ -1391,6 +1372,20 @@ object SnapshotSink {
       require(stray.isEmpty,
         s"staged bucket ids $stray fall outside the committing wave $wave — the " +
           "input's `bucket` column disagrees with bucketOf(doc_id, nBuckets)")
+      // Write-path check, at metadata cost: the rows each staged bucket's parquet
+      // footers record must be the rows the write observed, so a dropped,
+      // duplicated or unreadable file surfaces here, before anything publishes.
+      val footers = listPartitionDirs(staging).map { d =>
+        d.getFileName.toString.stripPrefix("bucket=").toLong ->
+          listDataFiles(d).map(ParquetFooter.numRows).sum
+      }.toMap
+      (footers.keySet ++ metrics.keySet).foreach { b =>
+        val (inFiles, seen) =
+          (footers.getOrElse(b, 0L), metrics.get(b).fold(0L)(_.n_spans))
+        require(inFiles == seen,
+          s"staged bucket $b: its parquet footers record $inFiles rows but the " +
+            s"write observed $seen — nothing was published")
+      }
       // Refuse the silent-loss shape BEFORE anything publishes: a re-extracted bucket
       // whose prior manifest entry had rows > 0 staging ZERO rows means the resume
       // filter selected nothing — a wrong (but in-range) input bucket column, or the
@@ -1406,7 +1401,7 @@ object SnapshotSink {
       // A row-preserving rewrite (compaction) reconciles per bucket here, before any
       // publish: a lost or duplicated row leaves HEAD where it was.
       expectRows.foreach { case (b, n) =>
-        val staged = metrics.get(b).fold(0L)(_.rows)
+        val staged = metrics.get(b).fold(0L)(_.n_spans)
         require(staged == n,
           s"row mismatch for bucket $b: staged $staged rows but the source manifest " +
             s"entries recorded $n — nothing was published")
@@ -1439,24 +1434,24 @@ object SnapshotSink {
     var waveRows = 0L
     wave.foreach { b =>
       val stats = waveStats.getOrElse(s"bucket=$b", Seq.empty)
-      val m = metrics.getOrElse(b, WaveMetrics(rows = 0L))
+      val m = metrics.getOrElse(b, SpanMetricsAgg.finish(SpanMetricsAgg.zero))
       manifest = (manifest :+ ManifestEntry(
         bucket = b,
-        rows = m.rows,
+        rows = m.n_spans,
         content_hash = combinedHash(stats),
         files = stats.map(_._1),
         file_sizes = stats.map(_._2),
         file_hashes = stats.map(_._3),
         engine_version = graft.operators.DeterministicOcrEngine.Version,
-        n_spans = m.rows,
-        n_media = m.nMedia,
-        n_text = m.nText,
-        n_err = m.nErr,
-        ocr_chars = m.ocrChars,
-        n_words = m.nWords,
-        conf_sum = m.confSum,
+        n_spans = m.n_spans,
+        n_media = m.n_media,
+        n_text = m.n_text,
+        n_err = m.n_err,
+        ocr_chars = m.ocr_chars,
+        n_words = m.n_words,
+        conf_sum = m.conf_sum,
         wall_ms = wallMs)).sortBy(_.bucket)
-      waveRows += m.rows
+      waveRows += m.n_spans
     }
     (manifest, waveRows, writeManifest(out, manifest, io,
       v => s => commit(v)(TableSnapshot.recordLayout(out, flat.schema, nBuckets)(s))))
@@ -1551,9 +1546,30 @@ object SnapshotSink {
       Seq("bucket", "doc_id", "offset")
     else "bucket" +: df.columns.find(_ != "bucket").toSeq
 
-  private def hasSpanMetrics(df: DataFrame): Boolean =
-    Seq("kind", "ok", "error", "text", "n_words", "conf_sum")
-      .forall(df.columns.contains)
+  private val SpanMetricColumns = Seq("kind", "ok", "error", "text", "n_words", "conf_sum")
+
+  /** The one aggregate a commit observes on its write: bucket id -> lineage metrics,
+    * [[SpanMetricsAgg]] per bucket for span tables, else the row count alone
+    * (generic [[TableSnapshot]] tables), zeros elsewhere — one manifest format for
+    * both. A NULL bucket counts under -1, which the stray-bucket gate refuses. */
+  private def bucketMetrics(flat: DataFrame): Column = {
+    val b = coalesce(col("bucket").cast("long"), lit(-1L))
+    if (SpanMetricColumns.forall(flat.columns.contains))
+      udaf(BucketSpanMetricsAgg).apply(b, struct(SpanMetricColumns.map(col): _*))
+    else udaf(BucketRowsAgg).apply(b)
+  }
+
+  /** The per-bucket metrics `obs` saw on the write that just returned; refuses when
+    * the write reported none, never reading that as an empty wave. */
+  private def observedMetrics(obs: Observation): Map[Long, SpanMetrics] =
+    obs.get.get("m") match {
+      case Some(m: scala.collection.Map[_, _]) => m.map { case (b: Long, r: Row) =>
+        b -> SpanMetrics(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5), r.getDouble(6), r.getDouble(7))
+      }.toMap
+      case other => throw new IllegalStateException(
+        s"the staged write reported no lineage metrics (observed $other)")
+    }
 
   /** md5 over the sorted "name:size:md5" lines — one digest per bucket. */
   private def combinedHash(stats: Seq[(String, Long, String)]): String = {

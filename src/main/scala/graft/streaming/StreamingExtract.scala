@@ -38,8 +38,8 @@ object StreamingExtract {
    * [[drainOnce]] with LINEAGE PARITY: every micro-batch commits through the same
    * snapshot protocol as the batch sink
    * ([[graft.sources.SnapshotSink.commitStreamBatch]] via `foreachBatch`) — staged
-   * write, re-read metrics, atomic per-bucket publish, distributed file hashing,
-   * manifest republish. Batch and streaming output thus share ONE manifest format
+   * write with observed metrics, footer row check, atomic per-bucket publish,
+   * distributed file hashing, manifest republish. Batch and streaming output thus share ONE manifest format
    * and ONE verification path; a crash between the sink commit and the checkpoint
    * advance re-delivers the batch, whose already-committed buckets verify and are
    * SKIPPED (exactly-once without relying on the parquet sink's log).

@@ -14,8 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * ids become `gen * NB + base`), untouched buckets stay byte-identical, deletion
  * is physical (pre-delete versions referencing the rewritten bucket expire
  * loudly), a takedown is one atomic commit whose job count does not grow with the
- * buckets it rewrites, a takedown that fails at its commit point leaves every
- * live byte in place, and non-canonical manifests are refused.
+ * buckets it rewrites and which never scans its own staged files, a takedown that
+ * fails at its commit point leaves every live byte in place, and non-canonical
+ * manifests are refused.
  */
 class DeleteDocsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -123,12 +124,20 @@ class DeleteDocsSpec extends AnyFunSuite {
     SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB)
     val one = docIdsInBucket(out, 0L, 1)
     val four = Seq(2L, 3L, 5L, 7L).flatMap(b => docIdsInBucket(out, b, 1))
-    val (r1, jobs1) = JobCount(spark)(SnapshotSink.deleteDocs(spark, out, one))
-    val (r4, jobs4) = JobCount(spark)(SnapshotSink.deleteDocs(spark, out, four))
+    val (r1, jobs1, scans1) =
+      JobCount.withScans(spark)(SnapshotSink.deleteDocs(spark, out, one))
+    val (r4, jobs4, scans4) =
+      JobCount.withScans(spark)(SnapshotSink.deleteDocs(spark, out, four))
     assert(r1.rewrittenBuckets.map(_ % NB) === Seq(0L) &&
       r4.rewrittenBuckets.map(_ % NB) === Seq(2L, 3L, 5L, 7L))
-    assert(jobs1 > 0 && jobs4 === jobs1,
+    // the grouped match count (2 jobs), the staged write (range sample, shuffle map
+    // stage, write) and the md5 hash job: the lineage metrics are observed during
+    // the write, so no job reads the staged files back (that grouped re-read was
+    // 2 more jobs)
+    assert(jobs1 === 6 && jobs4 === jobs1,
       s"1-bucket takedown ran $jobs1 jobs, 4-bucket takedown $jobs4")
+    val staged = (scans1 ++ scans4).filter(_.contains(s"$out/staging/"))
+    assert(scans1.nonEmpty && staged.isEmpty, s"a commit scanned its staging: $staged")
   }
 
   test("deletion is physical: pre-delete versions expire loudly; absent ids are free") {
