@@ -224,13 +224,13 @@ object SparkEntry {
   /** Manifest TIME TRAVEL under the DuckDB gate: a 2-wave commit publishes immutable
     * manifest history versions 1 and 2 ([[graft.sources.SnapshotSink.versions]]); for
     * each, the query reads BOTH the historical manifest (`rows_` = its recorded total)
-    * and the version-resolved data scan
-    * ([[graft.sources.SnapshotSink.readCommittedAt]], `rows_read`) — so a history
-    * publish that skips a wave, mis-numbers versions, or resolves a version to the
-    * wrong file set hash-mismatches against the oracle's wave arithmetic
+    * and the version-resolved data scan ([[graft.sources.SnapshotSink.readCommitted]]
+    * at the version, `rows_read`) — so a history publish that skips a wave,
+    * mis-numbers versions, or resolves a version to the wrong file set
+    * hash-mismatches against the oracle's wave arithmetic
     * (version v = buckets 0 .. nb/2*v-1, ascending wave order). */
   private def snapshotTimetravel(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.SnapshotSink
+    import graft.sources.SnapshotSink, SnapshotSink.Version
     val nb = SnapshotSink.DefaultBuckets
     val out = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), "graft-snaptravel-query-" + dir.replaceAll("[^a-z0-9.]", "-"))
@@ -238,8 +238,8 @@ object SparkEntry {
     SnapshotSink.run(Interleave.materializedDocsBucketed(s, dir, nb), out.toString,
       nBuckets = nb, waveSize = nb / 2)
     val rows = SnapshotSink.versions(out.toString).map { v =>
-      val entries = SnapshotSink.readManifestAt(s, out.toString, v)
-      val readRows = SnapshotSink.readCommittedAt(s, out.toString, v).count()
+      val entries = SnapshotSink.readManifest(s, out.toString, Version(v))
+      val readRows = SnapshotSink.readCommitted(s, out.toString, Version(v)).count()
       (v.toInt, entries.size, entries.map(_.rows).sum, readRows,
         entries.map(_.n_err).sum)
     }
@@ -260,7 +260,7 @@ object SparkEntry {
     * contract (restore AFTER a physical takedown must throw, never resurrect) is
     * SnapshotRestoreSpec's subject — file-reclaim timing can't be oracle-predicted. */
   private def snapshotRestore(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.SnapshotSink
+    import graft.sources.SnapshotSink, SnapshotSink.Version
     val nb = SnapshotSink.DefaultBuckets
     val out = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), "graft-snaprestore-query-" + dir.replaceAll("[^a-z0-9.]", "-"))
@@ -269,8 +269,8 @@ object SparkEntry {
       nBuckets = nb, waveSize = nb / 2)
     SnapshotSink.restore(s, out.toString, toVersion = 1L)
     val rows = SnapshotSink.versions(out.toString).map { v =>
-      val entries = SnapshotSink.readManifestAt(s, out.toString, v)
-      val readRows = SnapshotSink.readCommittedAt(s, out.toString, v).count()
+      val entries = SnapshotSink.readManifest(s, out.toString, Version(v))
+      val readRows = SnapshotSink.readCommitted(s, out.toString, Version(v)).count()
       (v.toInt, entries.size, entries.map(_.rows).sum, readRows,
         entries.map(_.n_err).sum)
     }
@@ -290,7 +290,7 @@ object SparkEntry {
     * retention pass that drops the wrong version, ignores a tag, or corrupts a
     * surviving manifest hash-mismatches against the oracle's wave arithmetic. */
   private def snapshotExpire(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.SnapshotSink
+    import graft.sources.SnapshotSink, SnapshotSink.Version
     val nb = SnapshotSink.DefaultBuckets
     val out = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), "graft-snapexpire-query-" + dir.replaceAll("[^a-z0-9.]", "-"))
@@ -303,11 +303,11 @@ object SparkEntry {
     val rows = (1L to 4L).map { v =>
       val (live, nBuckets, rowsTotal) =
         try {
-          val es = SnapshotSink.readManifestAt(s, out.toString, v)
+          val es = SnapshotSink.readManifest(s, out.toString, Version(v))
           (1, es.size, es.map(_.rows).sum)
         } catch { case _: IllegalArgumentException => (0, 0, 0L) }
       val readRows =
-        if (live == 1) SnapshotSink.readCommittedAt(s, out.toString, v).count() else 0L
+        if (live == 1) SnapshotSink.readCommitted(s, out.toString, Version(v)).count() else 0L
       (v.toInt, if (tagged(v)) 1 else 0, live, nBuckets, rowsTotal, readRows)
     }
     import s.implicits._
@@ -327,7 +327,7 @@ object SparkEntry {
     * the rolled-back-from version; history numbering is untouched) are asserted
     * in-query so a regression fails the run instead of silently passing. */
   private def snapshotVacuum(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.SnapshotSink
+    import graft.sources.SnapshotSink, SnapshotSink.Version
     val nb = SnapshotSink.DefaultBuckets
     val out = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), "graft-snapvacuum-query-" + dir.replaceAll("[^a-z0-9.]", "-"))
@@ -340,14 +340,14 @@ object SparkEntry {
     require(SnapshotSink.versions(out.toString) == Seq(1L, 2L, 3L),
       "vacuum must reclaim data only — never rewrite manifest history")
     val v2Expired =
-      try { SnapshotSink.readCommittedAt(s, out.toString, 2L).count(); false }
+      try { SnapshotSink.readCommitted(s, out.toString, Version(2L)).count(); false }
       catch { case _: IllegalArgumentException => true }
     require(v2Expired, "version 2 must be EXPIRED once its exclusive buckets are reclaimed")
     // bounded driver-side state: nb rows of manifest metadata + nb head counts
     val head = SnapshotSink.readCommitted(s, out.toString)
       .groupBy(col("bucket").cast("int").as("bucket")).count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val rows = SnapshotSink.readManifestAt(s, out.toString, 2L).sortBy(_.bucket).map { e =>
+    val rows = SnapshotSink.readManifest(s, out.toString, Version(2L)).sortBy(_.bucket).map { e =>
       (e.bucket.toInt, e.rows, e.n_err,
         if (removed(e.bucket)) 1 else 0, head.getOrElse(e.bucket.toInt, 0L))
     }

@@ -177,8 +177,9 @@ object OracleSql {
     * base buckets in ascending wave order. `n_buckets` is the protocol arithmetic
     * (manifest entries exist even for empty buckets), `rows_` is the manifest total
     * for the version, and `rows_read` is the row count of the version-resolved DATA
-    * scan ([[graft.sources.SnapshotSink.readCommittedAt]]) — a time-travel read
-    * serving a different set of files than the version's manifest hash-mismatches. */
+    * scan ([[graft.sources.SnapshotSink.readCommitted]] at the version) — a
+    * time-travel read serving a different set of files than the version's manifest
+    * hash-mismatches. */
   val snapshotTimetravel: String =
     s"""$extractionCtes,
        |per_bucket AS (

@@ -208,7 +208,7 @@ object SnapshotSink {
       waveSize: Int, deepVerify: Boolean, io: CommitIo)(
       rowsOf: Seq[Int] => DataFrame): SnapshotReport = {
     Files.createDirectories(out.resolve("data"))
-    val (head0, existing) = baseManifest(out)
+    val (head0, existing) = resolve(out, Head)
     val (valid, invalid) = verifyEntries(spark, out, existing, deepVerify)
     // Generation-aware resume: a rewritten or COMPACTED snapshot's entries live at
     // `gen*nBuckets + base` ([[compact]]). Whenever each base bucket appears at most
@@ -269,14 +269,22 @@ object SnapshotSink {
       invalid.map(_.bucket).sorted, totalRows)
   }
 
+  /** The ref a read resolves ([[resolve]]): main's HEAD, a history version
+    * ([[versions]]), a tag ([[tag]]) or a branch head ([[branch]]). */
+  sealed trait Ref
+  case object Head extends Ref
+  final case class Version(v: Long) extends Ref
+  final case class Tag(name: String) extends Ref
+  final case class Branch(name: String) extends Ref
+
   /** Manifest-resolved read (Iceberg semantics: the manifest IS the table): scan
-    * exactly the data files HEAD's manifest lists, with the recorded schema, so
+    * exactly the data files the manifest of `at` lists, with the recorded schema, so
     * orphan directories — a crashed rewrite's fresh generation, an abandoned write —
-    * are invisible without any vacuum. Fails loudly when a listed file is missing
-    * ([[readEntries]]). */
-  def readCommitted(spark: SparkSession, outDir: String): DataFrame = {
-    val (v, entries) = baseManifest(Paths.get(outDir))
-    readEntries(spark, outDir, entries, s"HEAD (version $v)")
+    * are invisible without any vacuum. Fails loudly when a listed file was reclaimed
+    * — the version is EXPIRED ([[readEntries]]) — never returning a short table. */
+  def readCommitted(spark: SparkSession, outDir: String, at: Ref = Head): DataFrame = {
+    val (v, entries) = resolve(Paths.get(outDir), at)
+    readEntries(spark, outDir, entries, s"snapshot version $v ($at)")
   }
 
   // ---- table state ------------------------------------------------------------------
@@ -434,38 +442,48 @@ object SnapshotSink {
   private[graft] def readCompactedIds(out: Path): Set[Long] =
     readState(out).compactedIds.toSet
 
-  /** Audit entry point: run the two verification tiers over the ENTIRE manifest
-    * and return the bucket ids that FAIL (empty = every committed byte verifies).
-    * Deep mode re-hashes all data files in one distributed job — the post-incident
-    * check an operator runs after takedowns, compactions, or stream restarts. */
+  /** Audit entry point: run the two verification tiers over the ENTIRE manifest of
+    * `at` and return the bucket ids that FAIL (empty = every committed byte
+    * verifies). Deep mode re-hashes all data files in one distributed job — the
+    * post-incident check an operator runs after takedowns, compactions, or stream
+    * restarts, and, at a [[Branch]], the audit step of write-audit-publish before
+    * [[fastForward]] publishes the staged result to main. */
   def verifySnapshot(spark: SparkSession, outDir: String,
-      deepVerify: Boolean = true): Seq[Long] = {
+      deepVerify: Boolean = true, at: Ref = Head): Seq[Long] = {
     val out = Paths.get(outDir)
-    val (_, invalid) = verifyEntries(spark, out, readManifest(spark, outDir), deepVerify)
+    val (_, invalid) = verifyEntries(spark, out, resolve(out, at)._2, deepVerify)
     invalid.map(_.bucket).sorted
   }
 
-  /** [[verifySnapshot]] against a named BRANCH's manifest — the audit step of
-    * write-audit-publish: run it (with the branch reads) on the staged result
-    * before [[fastForward]] publishes it to main. */
-  def verifySnapshotAtBranch(spark: SparkSession, outDir: String, name: String,
-      deepVerify: Boolean = true): Seq[Long] = {
-    val out = Paths.get(outDir)
-    val entries = readManifestAt(spark, outDir, resolveBranch(outDir, name))
-    val (_, invalid) = verifyEntries(spark, out, entries, deepVerify)
-    invalid.map(_.bucket).sorted
+  /** The manifest of `at` (HEAD's is empty before the first commit to main). */
+  def readManifest(spark: SparkSession, outDir: String, at: Ref = Head)
+      : Seq[ManifestEntry] =
+    resolve(Paths.get(outDir), at)._2
+
+  /** The one resolver of every read and write: the version `ref` names and its
+    * manifest, read once. Reads the state record for HEAD, a tag or a branch only,
+    * and lists the table root only to name what is available in a failure: an
+    * unknown tag or branch, or a version not in history. HEAD before the first
+    * commit resolves to version 0 with no entries. */
+  private def resolve(out: Path, ref: Ref): (Long, Seq[ManifestEntry]) = {
+    val v = ref match {
+      case Head => readState(out).head
+      case Version(v) => v
+      case Tag(name) =>
+        val tags = readState(out).tags
+        tags.getOrElse(name, throw new IllegalArgumentException(s"no tag '$name' under " +
+          s"$out — available: [${tags.keys.toSeq.sorted.mkString(", ")}]"))
+      case Branch(name) => branchRef(readState(out), out, name).version
+    }
+    v -> (if (ref == Head && v == 0L) Seq.empty else manifestAt(out, v))
   }
 
-  /** HEAD's manifest (empty before the first commit to main). */
-  def readManifest(spark: SparkSession, outDir: String): Seq[ManifestEntry] =
-    baseManifest(Paths.get(outDir))._2
-
-  /** The version a write builds on — the named branch's head, else HEAD (0 before
-    * the first commit) — and its manifest. */
-  private[sources] def baseManifest(out: Path, branch: Option[String] = None)
-      : (Long, Seq[ManifestEntry]) = {
-    val v = branch.fold(readState(out).head)(resolveBranch(out.toString, _))
-    v -> (if (v == 0L) Seq.empty else manifestAt(out, v))
+  /** What a write to the named branch (None: main) builds on — the ref's manifest —
+    * and the state edit that commits its result to that ref. */
+  private def writeBase(out: Path, toBranch: Option[String])
+      : (Seq[ManifestEntry], Commit) = {
+    val (v, entries) = resolve(out, toBranch.fold[Ref](Head)(Branch))
+    entries -> toBranch.fold(movesHead(v) _)(advancesBranch)
   }
 
   /** One entry per base bucket: true for batch snapshots and after any rewrite;
@@ -473,23 +491,23 @@ object SnapshotSink {
   private def isCanonical(entries: Seq[ManifestEntry], nBuckets: Int): Boolean =
     entries.map(_.bucket % nBuckets).distinct.size == entries.size
 
-  /** What a row-level rewrite builds on: a committed version, its manifest and
-    * the table's recorded bucket count. */
+  /** What a row-level rewrite builds on: a committed manifest, the state edit that
+    * commits the rewrite to the same ref, and the table's recorded bucket count. */
   private[sources] final case class Canonical(
-      version: Long, entries: Seq[ManifestEntry], nBuckets: Int)
+      commit: Commit, entries: Seq[ManifestEntry], nBuckets: Int)
 
-  /** [[baseManifest]] for a row-level rewrite, which must find a committed,
+  /** [[writeBase]] for a row-level rewrite, which must find a committed,
     * canonical manifest under the recorded bucket count: a document's rows may
     * straddle generations mid-stream. */
-  private[sources] def canonicalBase(out: Path, branch: Option[String]): Canonical = {
-    val (v, entries) = baseManifest(out, branch)
+  private[sources] def canonicalBase(out: Path, toBranch: Option[String]): Canonical = {
+    val (entries, commit) = writeBase(out, toBranch)
     require(entries.nonEmpty, s"no committed snapshot under $out")
     val nBuckets = TableSnapshot.bucketCount(out)
     require(isCanonical(entries, nBuckets),
       "manifest is not canonical (multiple generations per base bucket — an " +
         "un-compacted stream): run compact() first, a document's rows may " +
         "straddle generations")
-    Canonical(v, entries, nBuckets)
+    Canonical(commit, entries, nBuckets)
   }
 
   /** `base` (a base bucket id) re-keyed to its manifest id: one map lookup shared
@@ -503,31 +521,48 @@ object SnapshotSink {
   private def manifestAt(out: Path, v: Long): Seq[ManifestEntry] = {
     val p = versionPath(out, v)
     require(Files.exists(p),
-      s"no manifest version $v under $out — available: " +
+      s"no manifest version $v under $out — not in history, available: " +
         s"[${versions(out.toString).mkString(", ")}]")
     Files.readAllLines(p).asScala.toSeq.filter(_.nonEmpty)
       .map(Serialization.read[ManifestEntry](_))
   }
 
-  /** Manifest as a DataFrame (the lineage/metrics table surfaced to queries). */
-  def lineage(spark: SparkSession, outDir: String): DataFrame = {
+  /** The manifest of `at` as a DataFrame (the lineage/metrics table surfaced to
+    * queries). */
+  def lineage(spark: SparkSession, outDir: String, at: Ref = Head): DataFrame = {
     val enc = Encoders.product[ManifestEntry]
-    spark.createDataset(readManifest(spark, outDir))(enc).toDF()
+    spark.createDataset(readManifest(spark, outDir, at))(enc).toDF()
   }
+
+  // Per-ref forms still called by perfbench, which compiles against this source tree
+  // and names them; they go with its next change (ROADMAP #6). build.sbt turns a
+  // call from src/ into a compile error.
+  @deprecated("use readCommitted(spark, outDir, Version(v))", "0.1.0")
+  def readCommittedAt(spark: SparkSession, outDir: String, v: Long): DataFrame =
+    readCommitted(spark, outDir, Version(v))
+  @deprecated("use readManifest(spark, outDir, Version(v))", "0.1.0")
+  def readManifestAt(spark: SparkSession, outDir: String, v: Long): Seq[ManifestEntry] =
+    readManifest(spark, outDir, Version(v))
+  @deprecated("use readCommitted(spark, outDir, Branch(name))", "0.1.0")
+  def readCommittedAtBranch(spark: SparkSession, outDir: String, name: String): DataFrame =
+    readCommitted(spark, outDir, Branch(name))
+  @deprecated("use verifySnapshot(spark, outDir, at = Branch(name))", "0.1.0")
+  def verifySnapshotAtBranch(spark: SparkSession, outDir: String, name: String)
+      : Seq[Long] = verifySnapshot(spark, outDir, at = Branch(name))
 
   // ---- time travel ------------------------------------------------------------------
   //
   // Every commit ([[writeManifest]]) publishes an IMMUTABLE manifest version
   // `manifest-v%06d.json` and then the state record that names it HEAD (or a branch
   // head) — the Iceberg metadata-version sequence, with the same retention contract:
-  // a historical version stays READABLE ([[readCommittedAt]]) for as long as the data
-  // files it references are retained. The protocol's eager GC points — every
-  // [[rewrite]]'s post-commit delete of the directories it replaced, [[vacuum]], and
-  // [[run]]'s invalidated-bucket delete — are the `expireSnapshots` analogue: they
-  // reclaim bytes and thereby expire every version that referenced them. Reading an
-  // expired version fails LOUDLY with the missing-file count, never silently short.
-  // History files themselves are O(bytes-of-metadata); [[expireVersions]] prunes
-  // them when a bounded history is wanted.
+  // a historical version stays READABLE ([[readCommitted]] at a [[Version]]) for as
+  // long as the data files it references are retained. The protocol's eager GC
+  // points — every [[rewrite]]'s post-commit delete of the directories it replaced,
+  // [[vacuum]], and [[run]]'s invalidated-bucket delete — are the `expireSnapshots`
+  // analogue: they reclaim bytes and thereby expire every version that referenced
+  // them. Reading an expired version fails LOUDLY with the missing-file count, never
+  // silently short. History files themselves are O(bytes-of-metadata);
+  // [[expireVersions]] prunes them when a bounded history is wanted.
 
   private val VersionFileRe = "manifest-v(\\d+)\\.json".r
 
@@ -543,23 +578,6 @@ object SnapshotSink {
       case re(n) => Some(n.toLong)
       case _ => None
     }).sorted
-
-  /** The manifest as of history version `v` (1-based, [[versions]]). */
-  def readManifestAt(spark: SparkSession, outDir: String, v: Long): Seq[ManifestEntry] =
-    manifestAt(Paths.get(outDir), v)
-
-  /** [[lineage]] as of history version `v`. */
-  def lineageAt(spark: SparkSession, outDir: String, v: Long): DataFrame = {
-    val enc = Encoders.product[ManifestEntry]
-    spark.createDataset(readManifestAt(spark, outDir, v))(enc).toDF()
-  }
-
-  /** Time-travel read ([[readCommitted]] at history version `v`): scan exactly the
-    * data files that manifest version listed. Fails loudly when the version has been
-    * EXPIRED — any referenced file reclaimed by compaction GC, [[vacuum]], or an
-    * invalidated-bucket rebuild — rather than returning a silently short table. */
-  def readCommittedAt(spark: SparkSession, outDir: String, v: Long): DataFrame =
-    readEntries(spark, outDir, readManifestAt(spark, outDir, v), s"snapshot version $v")
 
   /** Scan exactly the data files `entries` list — the one manifest-resolved scan of
     * every read and rewrite — with the table's recorded schema
@@ -626,7 +644,7 @@ object SnapshotSink {
     * references has been physically reclaimed (a [[deleteDocs]] takedown rewrite,
     * compaction GC, [[vacuum]]): a takedown is deliberately unrecoverable, so a
     * rollback can never resurrect deleted bytes — the same contract as
-    * [[readCommittedAt]]'s expired-version guard, checked against recorded sizes
+    * [[readCommitted]]'s expired-version guard, checked against recorded sizes
     * (and, with `deepVerify`, a distributed re-hash of every referenced byte).
     * Also refuses when another writer moved HEAD while the restore ran.
     *
@@ -652,9 +670,6 @@ object SnapshotSink {
     * `commit` — the shared body of [[restore]] and [[fastForward]]. */
   private def republish(spark: SparkSession, out: Path, toVersion: Long,
       deepVerify: Boolean, io: CommitIo)(commit: Commit): RestoreReport = {
-    val hist = versions(out.toString)
-    require(hist.contains(toVersion),
-      s"cannot restore to version $toVersion — not in history [${hist.mkString(", ")}]")
     val entries = manifestAt(out, toVersion)
     val (valid, invalid) = verifyEntries(spark, out, entries, deepVerify)
     if (invalid.nonEmpty)
@@ -680,35 +695,33 @@ object SnapshotSink {
   /** Current tags, name -> version (empty if none). */
   def tags(outDir: String): Map[String, Long] = readState(Paths.get(outDir)).tags
 
-  /** Create or move the named tag to history version `v` (which must exist NOW —
-    * a tag can never be born dangling; it can only dangle later if the version's
-    * data files are reclaimed, and then reads fail loudly like any expired read). */
+  /** Create or move the named tag to history version `v`, which must be readable
+    * NOW ([[requireReadable]]) — a tag can never be born dangling; it can only
+    * dangle later if the version's data files are reclaimed, and then reads fail
+    * loudly like any expired read. */
   def tag(outDir: String, name: String, v: Long,
       io: CommitIo = PosixCommitIo): Unit = {
     require(TagNameRe.matches(name),
       s"tag name '$name' must match ${TagNameRe.regex}")
-    require(versions(outDir).contains(v),
-      s"cannot tag version $v — not in history [${versions(outDir).mkString(", ")}]")
-    updateState(Paths.get(outDir), io)(s => s.copy(tags = s.tags + (name -> v)))
+    val out = Paths.get(outDir)
+    requireReadable(out, v, "tag")
+    updateState(out, io)(s => s.copy(tags = s.tags + (name -> v)))
   }
 
   /** Remove the named tag (idempotent), releasing its expiration pin. */
   def dropTag(outDir: String, name: String, io: CommitIo = PosixCommitIo): Unit =
     updateState(Paths.get(outDir), io)(s => s.copy(tags = s.tags - name))
 
-  private def resolveTag(outDir: String, name: String): Long =
-    tags(outDir).getOrElse(name,
-      throw new IllegalArgumentException(
-        s"no tag '$name' under $outDir — available: " +
-          s"[${tags(outDir).keys.toSeq.sorted.mkString(", ")}]"))
-
-  /** [[readCommittedAt]] resolved through a named tag. */
-  def readCommittedAtTag(spark: SparkSession, outDir: String, name: String): DataFrame =
-    readCommittedAt(spark, outDir, resolveTag(outDir, name))
-
-  /** [[lineageAt]] resolved through a named tag. */
-  def lineageAtTag(spark: SparkSession, outDir: String, name: String): DataFrame =
-    lineageAt(spark, outDir, resolveTag(outDir, name))
+  /** Refuse a new tag or branch at version `v` unless its manifest is in history
+    * and every entry passes the metadata tier ([[fastVerify]]): a ref born over
+    * reclaimed bytes would fail every read through it. Driver-side file checks
+    * only, no Spark job. */
+  private def requireReadable(out: Path, v: Long, what: String): Unit = {
+    val gone = manifestAt(out, v).filterNot(fastVerify(out, _)).map(_.bucket)
+    require(gone.isEmpty,
+      s"cannot $what version $v: it is EXPIRED — bucket(s) " +
+        s"[${gone.sorted.mkString(", ")}] reference reclaimed or altered data files")
+  }
 
   // ---- named refs (branches) ----------------------------------------------------
   //
@@ -740,9 +753,8 @@ object SnapshotSink {
       io: CommitIo = PosixCommitIo): Unit = {
     require(TagNameRe.matches(name),
       s"branch name '$name' must match ${TagNameRe.regex}")
-    require(versions(outDir).contains(v),
-      s"cannot branch at version $v — not in history [${versions(outDir).mkString(", ")}]")
     val out = Paths.get(outDir)
+    requireReadable(out, v, "branch at")
     updateState(out, io)(s =>
       s.copy(branches = s.branches + (name -> BranchRef(v, resolvedHead(out, s)))))
   }
@@ -764,22 +776,11 @@ object SnapshotSink {
     s.head
   }
 
-  private def branchRef(s: TableState, outDir: String, name: String): BranchRef =
+  private def branchRef(s: TableState, out: Path, name: String): BranchRef =
     s.branches.getOrElse(name,
       throw new IllegalArgumentException(
-        s"no branch '$name' under $outDir — available: " +
+        s"no branch '$name' under $out — available: " +
           s"[${s.branches.keys.toSeq.sorted.mkString(", ")}]"))
-
-  private def resolveBranch(outDir: String, name: String): Long =
-    branchRef(readState(Paths.get(outDir)), outDir, name).version
-
-  /** [[readCommittedAt]] resolved through a named branch. */
-  def readCommittedAtBranch(spark: SparkSession, outDir: String, name: String): DataFrame =
-    readCommittedAt(spark, outDir, resolveBranch(outDir, name))
-
-  /** [[lineageAt]] resolved through a named branch. */
-  def lineageAtBranch(spark: SparkSession, outDir: String, name: String): DataFrame =
-    lineageAt(spark, outDir, resolveBranch(outDir, name))
 
   /** FAST-FORWARD main onto the named branch: republish the branch's manifest as a
     * NEW HEAD version (the [[restore]] machinery — metadata-only, loud when any
@@ -799,7 +800,7 @@ object SnapshotSink {
       deepVerify: Boolean = false, io: CommitIo = PosixCommitIo): RestoreReport = {
     val out = Paths.get(outDir)
     val s0 = readState(out)
-    val BranchRef(bv, base) = branchRef(s0, outDir, name)
+    val BranchRef(bv, base) = branchRef(s0, out, name)
     val head = resolvedHead(out, s0)
     if (head != base)
       throw new IllegalStateException(
@@ -823,27 +824,27 @@ object SnapshotSink {
     * Buckets present in `fromV` but absent from `toV` (compaction rewrote them to a
     * new generation id) are NOT returned — the new generation's ids are. */
   def changedBuckets(spark: SparkSession, outDir: String,
-      fromV: Long, toV: Long): Seq[Long] = {
-    require(fromV <= toV, s"fromV $fromV must be <= toV $toV")
-    def key(e: ManifestEntry) = (e.files, e.file_sizes, e.file_hashes)
-    val before = readManifestAt(spark, outDir, fromV).map(e => e.bucket -> key(e)).toMap
-    readManifestAt(spark, outDir, toV)
-      .filter(e => !before.get(e.bucket).contains(key(e)))
-      .map(_.bucket).sorted
-  }
+      fromV: Long, toV: Long): Seq[Long] =
+    changedEntries(Paths.get(outDir), fromV, toV).map(_.bucket).sorted
 
   /** Incremental read (the changelog consumer's scan): the rows of exactly the
     * buckets [[changedBuckets]] reports between `fromV` and `toV`, resolved through
     * version `toV`'s manifest. At 100 TB this is what a downstream pipeline
     * (re-embedding, re-indexing, derived-table refresh) consumes after a resume or
     * a late-arriving stream batch — O(changed buckets) bytes, never a full-table
-    * re-read. Same expiration contract as [[readCommittedAt]]. */
+    * re-read. Same expiration contract as [[readCommitted]]. */
   def readChangesBetween(spark: SparkSession, outDir: String,
-      fromV: Long, toV: Long): DataFrame = {
-    val changed = changedBuckets(spark, outDir, fromV, toV).toSet
-    readEntries(spark, outDir,
-      readManifestAt(spark, outDir, toV).filter(e => changed(e.bucket)),
+      fromV: Long, toV: Long): DataFrame =
+    readEntries(spark, outDir, changedEntries(Paths.get(outDir), fromV, toV),
       s"incremental read $fromV -> $toV")
+
+  /** The entries of version `toV` whose recorded files differ from `fromV`'s —
+    * each of the two manifests read once. */
+  private def changedEntries(out: Path, fromV: Long, toV: Long): Seq[ManifestEntry] = {
+    require(fromV <= toV, s"fromV $fromV must be <= toV $toV")
+    def key(e: ManifestEntry) = (e.files, e.file_sizes, e.file_hashes)
+    val before = manifestAt(out, fromV).map(e => e.bucket -> key(e)).toMap
+    manifestAt(out, toV).filter(e => !before.get(e.bucket).contains(key(e)))
   }
 
   /** Outcome of a [[deleteDocs]] takedown: rows actually removed and the new ids of
@@ -872,7 +873,7 @@ object SnapshotSink {
    *
    * Deletion is PHYSICAL by design: once the new version is HEAD, the replaced
    * buckets' directories are deleted even when a live branch still reads them,
-   * which EXPIRES every history version that referenced them ([[readCommittedAt]]
+   * which EXPIRES every history version that referenced them ([[readCommitted]]
    * then fails loudly) — for a takedown that is the point; the bytes must actually
    * go away, not linger behind a time-travel read. Manifest history retains only
    * file NAMES and digests of the old state. The id list is driver-side
@@ -907,7 +908,7 @@ object SnapshotSink {
     * row where `matches` is not true (NULL-id bystanders included). */
   private[sources] def takedown(spark: SparkSession, out: Path, io: CommitIo,
       base: Canonical, bases: Set[Long], matches: Column): DeleteReport = {
-    val Canonical(head, existing, nBuckets) = base
+    val Canonical(commit, existing, nBuckets) = base
     val affected = existing.filter(e => bases(e.bucket % nBuckets) && e.rows > 0)
     val hits: Map[Long, Long] =
       if (affected.isEmpty) Map.empty
@@ -917,7 +918,7 @@ object SnapshotSink {
     val matched = affected.filter(e => hits.contains(e.bucket))
     val rewritten =
       if (matched.isEmpty) Seq.empty
-      else rewrite(spark, out, io, existing, matched, nBuckets, movesHead(head),
+      else rewrite(spark, out, io, existing, matched, nBuckets, commit,
         takedown = true)(_.filter(!coalesce(matches, lit(false))))
     DeleteReport(hits.values.sum, rewritten)
   }
@@ -982,8 +983,8 @@ object SnapshotSink {
     * bit-for-bit untouched: the base manifest is the branch head's, the publish
     * advances the branch pointer by one version instead of HEAD, and the replaced
     * directories stay (main still reads them).
-    * Audit the staged result with [[readCommittedAtBranch]] / [[verifySnapshot]],
-    * then publish with [[fastForward]]. */
+    * Audit the staged result with [[readCommitted]] and [[verifySnapshot]] at the
+    * [[Branch]], then publish with [[fastForward]]. */
   def upsertDocsToBranch(
       spark: SparkSession,
       outDir: String,
@@ -999,7 +1000,7 @@ object SnapshotSink {
       io: CommitIo,
       toBranch: Option[String]): UpsertReport = {
     val out = Paths.get(outDir)
-    val Canonical(baseVersion, existing, nBuckets) = canonicalBase(out, toBranch)
+    val Canonical(commit, existing, nBuckets) = canonicalBase(out, toBranch)
     require(!updates.columns.contains("bucket"), "updates must not carry `bucket`")
     // names AND types against the recorded schema, before any Spark job: a
     // retyped column would commit files no scan can read with that schema
@@ -1029,8 +1030,7 @@ object SnapshotSink {
     val updSide = updates.select(lit(1).as("side"), col("doc_id"))
     val updRows = updates.withColumn("bucket", baseCol)
     var stat: Row = null
-    val rewritten = rewrite(spark, out, io, existing, affected, nBuckets,
-      toBranch.fold(movesHead(baseVersion) _)(advancesBranch)) { cur =>
+    val rewritten = rewrite(spark, out, io, existing, affected, nBuckets, commit) { cur =>
       // report counters over the rewrite's own scan of the committed rows being
       // replaced (side 0) and the update rows (side 1): each doc's rows of each
       // side, then the totals — replaced rows, docs with a replaced row, update
@@ -1081,7 +1081,7 @@ object SnapshotSink {
     // main is untouched until [[fastForward]]. Generation allocation is unchanged
     // (the ledger is branch-agnostic), so batches, branch merges, and compactions
     // still share one strictly-increasing id space.
-    val (baseVersion, existing) = baseManifest(out, toBranch)
+    val (existing, commit) = writeBase(out, toBranch)
     TableSnapshot.recordLayout(out, flat.schema, nBuckets)(readState(out))
     // Composite base comes from the ledger, NOT batchId*nBuckets: compact() writes
     // its canonical generation at max+1, which is exactly the id range
@@ -1110,7 +1110,7 @@ object SnapshotSink {
       .withColumn("bucket", lit(base) + bucketOf(col("doc_id"), nBuckets))
       .filter(col("bucket").isin(todo: _*))
     commitWaveFlat(spark, out, withBucket, todo, kept, nBuckets, System.nanoTime(),
-      toBranch.fold(movesHead(baseVersion) _)(advancesBranch), io = io)
+      commit, io = io)
     todo
   }
 
@@ -1167,7 +1167,7 @@ object SnapshotSink {
       io: CommitIo = PosixCommitIo,
       layout: Seq[Column] = Seq.empty): CompactReport = {
     val out = Paths.get(outDir)
-    val (head, existing) = baseManifest(out)
+    val (head, existing) = resolve(out, Head)
     lazy val nBuckets = TableSnapshot.bucketCount(out) // an empty table needs none
     if (existing.isEmpty || isCanonical(existing, nBuckets))
       return CompactReport(
@@ -1281,7 +1281,7 @@ object SnapshotSink {
   private def referencedBuckets(spark: SparkSession, outDir: String,
       head: Seq[ManifestEntry]): Set[Long] =
     (head ++ branches(outDir).values.toSeq.distinct
-      .flatMap(v => readManifestAt(spark, outDir, v)))
+      .flatMap(manifestAt(Paths.get(outDir), _)))
       .map(_.bucket).toSet
 
   /** The two verification tiers shared by batch [[run]] and [[commitStreamBatch]]:

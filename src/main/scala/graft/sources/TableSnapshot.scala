@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.{LongType, StructType}
  * verification and invalidate->heal resume as extraction (one shared resume and wave
  * body, [[SnapshotSink.commitBuckets]]), (c) manifest lineage (row counts, per-file
  * hashes) for every derived table, and (d) a recorded schema that every read —
- * [[SnapshotSink.readCommitted]] and its time-travel forms — scans with.
+ * [[SnapshotSink.readCommitted]], at any ref — scans with.
  *
  * The input must carry a `bucket` column in [0, nBuckets) — callers derive it from a
  * HASH of the id (never `id % n`: a modulus-sampled input would populate only

@@ -1,9 +1,12 @@
 package graft
 
-import java.nio.file.Paths
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import graft.operators.ExtractPipeline
 import graft.sources.{Interleave, SnapshotSink, TableSnapshot}
+import graft.sources.SnapshotSink.Version
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * only the requested ids' buckets are rewritten (to a fresh generation, so their
  * ids become `gen * NB + base`), untouched buckets stay byte-identical, deletion
  * is physical (pre-delete versions referencing the rewritten bucket expire
- * loudly), a takedown is one atomic commit whose job count does not grow with the
+ * loudly, and no tag or branch is born over them), a takedown is one atomic commit whose job count does not grow with the
  * buckets it rewrites and which never scans its own staged files, a takedown that
  * fails at its commit point leaves every live byte in place, and non-canonical
  * manifests are refused.
@@ -156,9 +159,39 @@ class DeleteDocsSpec extends AnyFunSuite {
     assert(SnapshotSink.versions(out).last === v1 + 1)
     // the pre-delete version referenced bucket 3's old files — now reclaimed
     val ex = intercept[IllegalArgumentException] {
-      SnapshotSink.readCommittedAt(spark, out, v1).count()
+      SnapshotSink.readCommitted(spark, out, Version(v1)).count()
     }
     assert(ex.getMessage.contains("EXPIRED"))
+  }
+
+  test("a tag or branch is never born over reclaimed bytes: refs and state stay") {
+    val out = tmpDir("deadref")
+    SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB)
+    val v1 = SnapshotSink.versions(out).last
+    SnapshotSink.deleteDocs(spark, out, docIdsInBucket(out, 3L, 1))
+    // v1's manifest is still in history, but bucket 3's files it lists are gone
+    assert(SnapshotSink.versions(out).contains(v1))
+    def listing = {
+      val st = Files.list(Paths.get(out))
+      try st.iterator().asScala.map(_.getFileName.toString).toSeq.sorted finally st.close()
+    }
+    val (state0, files0) = (SnapshotSink.readState(Paths.get(out)), listing)
+    Seq[() => Unit](() => SnapshotSink.tag(out, "t", v1),
+      () => SnapshotSink.branch(out, "b", v1)).foreach { op =>
+      val ex = intercept[IllegalArgumentException](op())
+      assert(ex.getMessage.contains("EXPIRED") && ex.getMessage.contains("[3]"),
+        ex.getMessage)
+    }
+    assert(SnapshotSink.tags(out) === Map.empty)
+    assert(SnapshotSink.branches(out) === Map.empty)
+    assert(SnapshotSink.readState(Paths.get(out)) === state0)
+    assert(listing === files0)
+    // HEAD's version holds every byte it lists: both refs land there
+    val head = SnapshotSink.versions(out).last
+    SnapshotSink.tag(out, "t", head)
+    SnapshotSink.branch(out, "b", head)
+    assert(SnapshotSink.tags(out) === Map("t" -> head))
+    assert(SnapshotSink.branches(out) === Map("b" -> head))
   }
 
   test("deleting every doc of a bucket leaves a legal empty bucket") {

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.operators.ExtractPipeline
 import graft.sources.{Interleave, SnapshotSink}
+import graft.sources.SnapshotSink.Branch
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -97,7 +98,7 @@ class SnapshotBranchSpec extends AnyFunSuite {
     assert(mainDirState(out) === mainBytes)
 
     // AUDIT: the branch reads back as the merged table
-    val br = SnapshotSink.readCommittedAtBranch(spark, out, "audit")
+    val br = SnapshotSink.readCommitted(spark, out, Branch("audit"))
     victims.foreach { id =>
       val rows = br.filter(col("doc_id") === id).select(col("text")).collect()
       assert(rows.map(_.getString(0)).toSeq === Seq(s"upd:$id"))
@@ -141,7 +142,7 @@ class SnapshotBranchSpec extends AnyFunSuite {
     assert(report.rewrittenBuckets.map(_ % NB).sorted === Seq(0L, 1L, 3L, 6L, 7L))
     assert(SnapshotSink.versions(out) === Seq(1L, 2L))
     assert(SnapshotSink.branches(out)("audit") === 2L)
-    assert(SnapshotSink.verifySnapshotAtBranch(spark, out, "audit") === Seq.empty)
+    assert(SnapshotSink.verifySnapshot(spark, out, at = Branch("audit")) === Seq.empty)
   }
 
   test("retention never expires HEAD's version; a HEAD with no version is refused") {
@@ -153,7 +154,7 @@ class SnapshotBranchSpec extends AnyFunSuite {
     // keepLast = 1 would keep only v2 — but v1 is HEAD's version
     assert(SnapshotSink.expireVersions(out, keepLast = 1) === Seq.empty)
     assert(SnapshotSink.versions(out) === Seq(1L, 2L))
-    val br = contentOf(SnapshotSink.readCommittedAtBranch(spark, out, "audit"))
+    val br = contentOf(SnapshotSink.readCommitted(spark, out, Branch("audit")))
     SnapshotSink.fastForward(spark, out, "audit")
     assert(contentOf(SnapshotSink.readCommitted(spark, out)) === br)
 
@@ -183,8 +184,8 @@ class SnapshotBranchSpec extends AnyFunSuite {
     assert(!comp.noop)
     assert(contentOf(SnapshotSink.readCommitted(spark, out)) === full)
     // the branch still reads the pre-compaction stream generations
-    assert(contentOf(SnapshotSink.readCommittedAtBranch(spark, out, "pinned")) === full)
-    assert(SnapshotSink.verifySnapshotAtBranch(spark, out, "pinned") === Seq.empty)
+    assert(contentOf(SnapshotSink.readCommitted(spark, out, Branch("pinned"))) === full)
+    assert(SnapshotSink.verifySnapshot(spark, out, at = Branch("pinned")) === Seq.empty)
     // compaction changed no row, so main has taken no commit the branch lacks
     SnapshotSink.fastForward(spark, out, "pinned")
     assert(contentOf(SnapshotSink.readCommitted(spark, out)) === full)
@@ -214,13 +215,13 @@ class SnapshotBranchSpec extends AnyFunSuite {
     assert(SnapshotSink.branches(out)("wip") === 1L)
     assert(mainDirState(out) === mainBytes)
     assert(contentOf(SnapshotSink.readCommitted(spark, out)) === mainContent)
-    assert(contentOf(SnapshotSink.readCommittedAtBranch(spark, out, "wip")) === mainContent)
-    assert(SnapshotSink.verifySnapshotAtBranch(spark, out, "wip") === Seq.empty)
+    assert(contentOf(SnapshotSink.readCommitted(spark, out, Branch("wip"))) === mainContent)
+    assert(SnapshotSink.verifySnapshot(spark, out, at = Branch("wip")) === Seq.empty)
 
     // healing = re-running (a fresh generation; the partial one becomes orphans)
     val report = SnapshotSink.upsertDocsToBranch(spark, out, "wip", updates)
     assert(report.matchedDocs === 3L && report.insertedDocs === 1L)
-    val br = SnapshotSink.readCommittedAtBranch(spark, out, "wip")
+    val br = SnapshotSink.readCommitted(spark, out, Branch("wip"))
     victims.foreach { id =>
       assert(br.filter(col("doc_id") === id).count() === 1L)
     }
@@ -234,17 +235,17 @@ class SnapshotBranchSpec extends AnyFunSuite {
     val victims = docIdsInBucket(out, 2L, 1)
     SnapshotSink.upsertDocsToBranch(spark, out, "keep", updateRows(victims))
     val bv = SnapshotSink.branches(out)("keep")
-    val brContent = contentOf(SnapshotSink.readCommittedAtBranch(spark, out, "keep"))
+    val brContent = contentOf(SnapshotSink.readCommitted(spark, out, Branch("keep")))
 
     // vacuum with the branch live reclaims NOTHING: every generation is referenced
     // (base dirs by HEAD, the branch generation by the branch head)
     assert(SnapshotSink.vacuum(spark, out) === Seq.empty)
-    assert(contentOf(SnapshotSink.readCommittedAtBranch(spark, out, "keep"))
+    assert(contentOf(SnapshotSink.readCommitted(spark, out, Branch("keep")))
       === brContent)
 
     // retention cannot expire a branch-pinned version
     assert(!SnapshotSink.expireVersions(out, keepLast = 1).contains(bv))
-    assert(contentOf(SnapshotSink.readCommittedAtBranch(spark, out, "keep"))
+    assert(contentOf(SnapshotSink.readCommitted(spark, out, Branch("keep")))
       === brContent)
 
     // dropping the branch releases both pins: its exclusive generation becomes
@@ -280,7 +281,7 @@ class SnapshotBranchSpec extends AnyFunSuite {
     assert(mainDirState(out) === seedBytes)
     // the branch holds seed + streamed = the full corpus extraction
     val full = contentOf(graft.operators.ExtractPipeline.extractFlat(docs))
-    assert(contentOf(SnapshotSink.readCommittedAtBranch(spark, out, "ingest"))
+    assert(contentOf(SnapshotSink.readCommitted(spark, out, Branch("ingest")))
       === full)
 
     // a re-delivered micro-batch finds its buckets committed ON THE BRANCH and
@@ -289,11 +290,11 @@ class SnapshotBranchSpec extends AnyFunSuite {
       spark.read.parquet(table))
     assert(SnapshotSink.commitStreamBatch(flat0, out, batchId = 0L,
       toBranch = Some("ingest")) === Seq.empty)
-    assert(contentOf(SnapshotSink.readCommittedAtBranch(spark, out, "ingest"))
+    assert(contentOf(SnapshotSink.readCommitted(spark, out, Branch("ingest")))
       === full)
 
     // audit (the A in WAP): the staged branch verifies end to end — both tiers
-    assert(SnapshotSink.verifySnapshotAtBranch(spark, out, "ingest") === Seq.empty)
+    assert(SnapshotSink.verifySnapshot(spark, out, at = Branch("ingest")) === Seq.empty)
 
     // publish: main becomes the audited full table
     SnapshotSink.fastForward(spark, out, "ingest")
@@ -351,15 +352,15 @@ class SnapshotBranchSpec extends AnyFunSuite {
     // main reads on without the victim; the branch's manifest still references
     // bucket 5's RECLAIMED pre-takedown files, so the branch read fails LOUDLY
     // (takedown is unrecoverable on every ref — a branch can never resurrect
-    // deleted bytes; same contract as restore/readCommittedAt)
+    // deleted bytes; same contract as restore and a version read)
     assert(SnapshotSink.readCommitted(spark, out)
       .filter(col("doc_id").isInCollection(victim)).count() === 0L)
     intercept[Exception] {
-      SnapshotSink.readCommittedAtBranch(spark, out, "wip")
+      SnapshotSink.readCommitted(spark, out, Branch("wip"))
         .filter(col("doc_id").isInCollection(victim)).count()
     }
     // and the branch AUDIT flags exactly the takedown-rewritten shared bucket
-    assert(SnapshotSink.verifySnapshotAtBranch(spark, out, "wip") === Seq(5L))
+    assert(SnapshotSink.verifySnapshot(spark, out, at = Branch("wip")) === Seq(5L))
     // publishing the stale branch is refused twice over: main advanced past the
     // fork (lost-update guard) AND the target references reclaimed bytes
     intercept[IllegalStateException] {
@@ -373,7 +374,7 @@ class SnapshotBranchSpec extends AnyFunSuite {
     SnapshotSink.branch(out, "dev", 1L)
     val v1 = docIdsInBucket(out, 2L, 1)
     SnapshotSink.upsertDocsToBranch(spark, out, "dev", updateRows(v1))
-    val gen1 = SnapshotSink.lineageAtBranch(spark, out, "dev")
+    val gen1 = SnapshotSink.lineage(spark, out, Branch("dev"))
       .agg(max(col("bucket"))).head.getLong(0) / NB
     // second merge on the SAME branch builds on the first's manifest and must
     // pick a HIGHER generation (the base manifest — the branch head's — and the
@@ -381,11 +382,11 @@ class SnapshotBranchSpec extends AnyFunSuite {
     // MAIN manifest and the first merge's reservation left with its commit)
     val v2 = docIdsInBucket(out, 5L, 1)
     SnapshotSink.upsertDocsToBranch(spark, out, "dev", updateRows(v2))
-    val gen2 = SnapshotSink.lineageAtBranch(spark, out, "dev")
+    val gen2 = SnapshotSink.lineage(spark, out, Branch("dev"))
       .agg(max(col("bucket"))).head.getLong(0) / NB
     assert(gen2 > gen1)
     // both merges are present in the branch read
-    val br = SnapshotSink.readCommittedAtBranch(spark, out, "dev")
+    val br = SnapshotSink.readCommitted(spark, out, Branch("dev"))
     (v1 ++ v2).foreach { id =>
       assert(br.filter(col("doc_id") === id).select(col("text"))
         .head.getString(0) === s"upd:$id")
@@ -395,7 +396,7 @@ class SnapshotBranchSpec extends AnyFunSuite {
       SnapshotSink.branch(out, "nope", 99L)
     }.getMessage.contains("not in history"))
     assert(intercept[IllegalArgumentException] {
-      SnapshotSink.readCommittedAtBranch(spark, out, "ghost")
+      SnapshotSink.readCommitted(spark, out, Branch("ghost"))
     }.getMessage.contains("no branch"))
   }
 }

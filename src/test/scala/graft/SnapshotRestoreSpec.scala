@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import graft.sources.{Interleave, SnapshotSink}
+import graft.sources.SnapshotSink.Version
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -52,8 +53,8 @@ class SnapshotRestoreSpec extends AnyFunSuite {
   test("restore is a metadata-only rollback; history keeps every version readable") {
     val out = tmpDir("basic")
     SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB / 2) // v1, v2
-    val v1Content = contentOf(SnapshotSink.readCommittedAt(spark, out, 1L))
-    val v2Content = contentOf(SnapshotSink.readCommittedAt(spark, out, 2L))
+    val v1Content = contentOf(SnapshotSink.readCommitted(spark, out, Version(1L)))
+    val v2Content = contentOf(SnapshotSink.readCommitted(spark, out, Version(2L)))
     val filesBefore = dataState(out)
 
     val report = SnapshotSink.restore(spark, out, toVersion = 1L)
@@ -64,10 +65,10 @@ class SnapshotRestoreSpec extends AnyFunSuite {
     assert(dataState(out) === filesBefore)
     // HEAD now reads exactly v1's rows; the restored version is v1's manifest
     assert(contentOf(SnapshotSink.readCommitted(spark, out)) === v1Content)
-    assert(SnapshotSink.readManifestAt(spark, out, 3L) ===
-      SnapshotSink.readManifestAt(spark, out, 1L))
+    assert(SnapshotSink.readManifest(spark, out, Version(3L)) ===
+      SnapshotSink.readManifest(spark, out, Version(1L)))
     // the rolled-back-FROM version is auditable history, not erased
-    assert(contentOf(SnapshotSink.readCommittedAt(spark, out, 2L)) === v2Content)
+    assert(contentOf(SnapshotSink.readCommitted(spark, out, Version(2L))) === v2Content)
 
     // restore FORWARD again (undo the rollback): just another restore
     val fwd = SnapshotSink.restore(spark, out, toVersion = 2L)
@@ -135,12 +136,12 @@ class SnapshotRestoreSpec extends AnyFunSuite {
     val removed = SnapshotSink.vacuum(spark, out).sorted
     assert(removed === (NB / 2 until NB).map(b => s"bucket=$b"))
     assert(intercept[IllegalArgumentException] {
-      SnapshotSink.readCommittedAt(spark, out, 2L)
+      SnapshotSink.readCommitted(spark, out, Version(2L))
     }.getMessage.contains("EXPIRED"))
     val head = SnapshotSink.readCommitted(spark, out)
     assert(head.count() ===
       SnapshotSink.readManifest(spark, out).map(_.rows).sum)
     assert(contentOf(head) ===
-      contentOf(SnapshotSink.readCommittedAt(spark, out, 3L)))
+      contentOf(SnapshotSink.readCommitted(spark, out, Version(3L))))
   }
 }

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.operators.ExtractPipeline
 import graft.sources.{CommitIo, Interleave, PosixCommitIo, SnapshotSink}
+import graft.sources.SnapshotSink.{Branch, Head, Tag, Version}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -155,7 +156,7 @@ class SnapshotStateSpec extends AnyFunSuite {
     assert(winner === 4L)
     assert(head(out) === winner)
     assert(SnapshotSink.readManifest(spark, out) ===
-      SnapshotSink.readManifestAt(spark, out, winner))
+      SnapshotSink.readManifest(spark, out, Version(winner)))
     assert(SnapshotSink.readManifest(spark, out).size === NB)
     assert(textOf(out, victim.head) === Seq(s"upd:${victim.head}"))
   }
@@ -218,9 +219,15 @@ class SnapshotStateSpec extends AnyFunSuite {
     SnapshotSink.branch(out, "b", 2L)
     val (_, jobs) = JobCount(spark) {
       assert(SnapshotSink.readManifest(spark, out).size === NB)
-      assert(SnapshotSink.readManifestAt(spark, out, 1L).size === 4)
+      assert(SnapshotSink.readManifest(spark, out, Version(1L)).size === 4)
       assert(SnapshotSink.tags(out) === Map("t" -> 1L))
       assert(SnapshotSink.branches(out) === Map("b" -> 2L))
+      // every ref kind, for the manifest and for the lineage frame over it
+      Seq(Head -> NB, Version(1L) -> 4, Tag("t") -> 4, Branch("b") -> NB).foreach {
+        case (at, n) =>
+          assert(SnapshotSink.readManifest(spark, out, at).size === n, at)
+          assert(SnapshotSink.lineage(spark, out, at).collect().length === n, at)
+      }
     }
     assert(jobs === 0)
   }
@@ -229,19 +236,23 @@ class SnapshotStateSpec extends AnyFunSuite {
     val out = tmpDir("readnojob")
     SnapshotSink.run(docs, out, nBuckets = NB, waveSize = 4) // v1, v2
     SnapshotSink.branch(out, "b", 2L)
+    SnapshotSink.tag(out, "t", 1L)
     val files = SnapshotSink.readManifest(spark, out).map(_.files.size).sum
     // above 32 files Spark lists them with a job of its own
     assert(files <= 32, s"$files files")
     val (reads, jobs) = JobCount(spark) {
       Seq(SnapshotSink.readCommitted(spark, out),
-        SnapshotSink.readCommittedAt(spark, out, 1L),
+        SnapshotSink.readCommitted(spark, out, Version(1L)),
         SnapshotSink.readChangesBetween(spark, out, 1L, 2L),
-        SnapshotSink.readCommittedAtBranch(spark, out, "b"))
+        SnapshotSink.readCommitted(spark, out, Branch("b")),
+        SnapshotSink.readCommitted(spark, out, Head),
+        SnapshotSink.readCommitted(spark, out, Tag("t")))
     }
     assert(jobs === 0)
     val rows = SnapshotSink.readManifest(spark, out).map(_.rows).sum
-    val v1Rows = SnapshotSink.readManifestAt(spark, out, 1L).map(_.rows).sum
-    assert(reads.map(_.count()) === Seq(rows, v1Rows, rows - v1Rows, rows))
+    val v1Rows = SnapshotSink.readManifest(spark, out, Version(1L)).map(_.rows).sum
+    assert(reads.map(_.count()) ===
+      Seq(rows, v1Rows, rows - v1Rows, rows, rows, v1Rows))
     assert(reads.forall(_.schema("bucket").dataType == LongType))
   }
 
@@ -299,7 +310,7 @@ class SnapshotStateSpec extends AnyFunSuite {
       SnapshotSink.readManifest(spark, out).map(_.rows).sum)
     assert(SnapshotSink.verifySnapshot(spark, out) === Seq.empty)
     // the branch's rewrite of bucket 6 holds the update
-    val b6 = SnapshotSink.readManifestAt(spark, out, SnapshotSink.branches(out)("b"))
+    val b6 = SnapshotSink.readManifest(spark, out, Version(SnapshotSink.branches(out)("b")))
       .find(_.bucket % NB == 6L).get
     assert(b6.bucket >= NB)
     assert(spark.read.parquet(Paths.get(out, "data", s"bucket=${b6.bucket}").toString)

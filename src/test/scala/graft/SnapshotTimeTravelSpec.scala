@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import graft.sources.{Interleave, SnapshotSink, TableSnapshot}
+import graft.sources.SnapshotSink.{Branch, Tag, Version}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,11 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /**
  * Manifest time travel (Iceberg metadata-version parity): every manifest publish also
  * writes an immutable `manifest-v%06d.json` history file, and a historical version is
- * readable — metadata ([[SnapshotSink.readManifestAt]]) and data
- * ([[SnapshotSink.readCommittedAt]]) — until the protocol's GC points (compaction
- * source delete, vacuum, invalidated-bucket rebuild: the `expireSnapshots` analogue)
- * reclaim the files it references, after which the read fails LOUDLY, never silently
- * short. The oracle-gated form is `SparkEntry.snapshot_timetravel`; this spec covers
+ * readable — metadata ([[SnapshotSink.readManifest]]) and data
+ * ([[SnapshotSink.readCommitted]]), at a [[SnapshotSink.Version]] — until the
+ * protocol's GC points (compaction source delete, vacuum, invalidated-bucket rebuild:
+ * the `expireSnapshots` analogue) reclaim the files it references, after which the
+ * read fails LOUDLY, never silently short. The oracle-gated form is `SparkEntry.snapshot_timetravel`; this spec covers
  * the behaviors the flat query can't express (expiration, resume history, pruning).
  */
 class SnapshotTimeTravelSpec extends AnyFunSuite {
@@ -39,15 +40,15 @@ class SnapshotTimeTravelSpec extends AnyFunSuite {
 
     // HEAD == the last history version, and versions grow monotonically
     val head = SnapshotSink.readManifest(spark, out)
-    assert(SnapshotSink.readManifestAt(spark, out, 3L) === head)
-    val sizes = (1L to 3L).map(SnapshotSink.readManifestAt(spark, out, _).size)
+    assert(SnapshotSink.readManifest(spark, out, Version(3L)) === head)
+    val sizes = (1L to 3L).map(v => SnapshotSink.readManifest(spark, out, Version(v)).size)
     assert(sizes === Seq(3, 6, 8))
 
     // the version-resolved DATA scan matches each version's manifest exactly:
     // row count AND the bucket set (append-only history => all versions readable)
     (1L to 3L).foreach { v =>
-      val entries = SnapshotSink.readManifestAt(spark, out, v)
-      val got = SnapshotSink.readCommittedAt(spark, out, v)
+      val entries = SnapshotSink.readManifest(spark, out, Version(v))
+      val got = SnapshotSink.readCommitted(spark, out, Version(v))
       assert(got.count() === entries.map(_.rows).sum)
       assert(got.select(col("bucket").cast("long")).distinct()
         .collect().map(_.getLong(0)).sorted.toSeq ===
@@ -59,7 +60,7 @@ class SnapshotTimeTravelSpec extends AnyFunSuite {
     val out = tmpDir("resume")
     SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB)
     assert(SnapshotSink.versions(out) === Seq(1L))
-    val before = SnapshotSink.readCommittedAt(spark, out, 1L).count()
+    val before = SnapshotSink.readCommitted(spark, out, Version(1L)).count()
 
     // invalidate one bucket and resume: one new wave commit => version 2
     SnapshotSink.deleteRecursively(Paths.get(out, "data", "bucket=2"))
@@ -68,16 +69,16 @@ class SnapshotTimeTravelSpec extends AnyFunSuite {
     assert(SnapshotSink.versions(out) === Seq(1L, 2L))
 
     // version 2 is the healed table, same totals
-    assert(SnapshotSink.readCommittedAt(spark, out, 2L).count() === before)
+    assert(SnapshotSink.readCommitted(spark, out, Version(2L)).count() === before)
 
     // version 1 referenced the ORIGINAL bucket-2 files, which the rebuild replaced —
     // the expireSnapshots analogue. The read must fail loudly, not return short.
     val ex = intercept[IllegalArgumentException] {
-      SnapshotSink.readCommittedAt(spark, out, 1L)
+      SnapshotSink.readCommitted(spark, out, Version(1L))
     }
     assert(ex.getMessage.contains("EXPIRED"))
     // ... while its METADATA stays readable (lineage history survives data GC)
-    assert(SnapshotSink.readManifestAt(spark, out, 1L).size === NB)
+    assert(SnapshotSink.readManifest(spark, out, Version(1L)).size === NB)
   }
 
   test("expireVersions prunes history files, keeps HEAD, and refuses negatives") {
@@ -89,11 +90,11 @@ class SnapshotTimeTravelSpec extends AnyFunSuite {
     assert(SnapshotSink.versions(out) === Seq(3L, 4L))
     // HEAD untouched; the surviving versions still resolve
     assert(SnapshotSink.readManifest(spark, out).size === NB)
-    assert(SnapshotSink.readCommittedAt(spark, out, 4L).count() ===
+    assert(SnapshotSink.readCommitted(spark, out, Version(4L)).count() ===
       SnapshotSink.readManifest(spark, out).map(_.rows).sum)
     // a pruned version is a clean miss with the available list in the message
     val ex = intercept[IllegalArgumentException] {
-      SnapshotSink.readManifestAt(spark, out, 1L)
+      SnapshotSink.readManifest(spark, out, Version(1L))
     }
     assert(ex.getMessage.contains("no manifest version 1"))
     assert(intercept[IllegalArgumentException] {
@@ -163,19 +164,34 @@ class SnapshotTimeTravelSpec extends AnyFunSuite {
     assert(SnapshotSink.tags(out) === Map("run-7" -> 1L, "prod" -> 3L))
 
     // tag-resolved reads == version-resolved reads (metadata and data)
-    assert(SnapshotSink.lineageAtTag(spark, out, "run-7").count() === 3L)
-    assert(SnapshotSink.readCommittedAtTag(spark, out, "run-7").count() ===
-      SnapshotSink.readCommittedAt(spark, out, 1L).count())
+    assert(SnapshotSink.lineage(spark, out, Tag("run-7")).count() === 3L)
+    assert(SnapshotSink.readCommitted(spark, out, Tag("run-7")).count() ===
+      SnapshotSink.readCommitted(spark, out, Version(1L)).count())
     val ex = intercept[IllegalArgumentException] {
-      SnapshotSink.readCommittedAtTag(spark, out, "nope")
+      SnapshotSink.readCommitted(spark, out, Tag("nope"))
     }
     assert(ex.getMessage.contains("prod") && ex.getMessage.contains("run-7"))
+    // a tag and a branch at v1 resolve each of the four reads to v1's result
+    SnapshotSink.branch(out, "b", 1L)
+    def rowsOf(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val v1 = Version(1L)
+    Seq(Tag("run-7"), Branch("b")).foreach { at =>
+      assert(SnapshotSink.readManifest(spark, out, at) ===
+        SnapshotSink.readManifest(spark, out, v1))
+      assert(rowsOf(SnapshotSink.lineage(spark, out, at)) ===
+        rowsOf(SnapshotSink.lineage(spark, out, v1)))
+      assert(rowsOf(SnapshotSink.readCommitted(spark, out, at)) ===
+        rowsOf(SnapshotSink.readCommitted(spark, out, v1)))
+      assert(SnapshotSink.verifySnapshot(spark, out, at = at) ===
+        SnapshotSink.verifySnapshot(spark, out, at = v1))
+    }
+    SnapshotSink.dropBranch(out, "b") // its pin would keep v1 through the expiry below
 
     // expiration keeps tagged versions: keepLast=1 would drop v1 and v2, but
     // run-7 pins v1 — only the untagged v2 goes
     assert(SnapshotSink.expireVersions(out, keepLast = 1) === Seq(2L))
     assert(SnapshotSink.versions(out) === Seq(1L, 3L))
-    assert(SnapshotSink.readCommittedAtTag(spark, out, "run-7").count() > 0)
+    assert(SnapshotSink.readCommitted(spark, out, Tag("run-7")).count() > 0)
 
     // retag moves the pointer; dropTag releases the pin and the next expire
     // reclaims the version
