@@ -26,21 +26,25 @@ object Bench {
       case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
       case None => SparkEntry.queries
     }
-    val results = selected.map { case (name, fn) =>
-      val secs = (1 to 2).map { _ =>
+    // a query that throws is listed under "failed" and left out of `queries` and
+    // `total`: the seconds until its failure would read as a speed-up
+    val timed = selected.map { case (name, fn) =>
+      name -> (try Some((1 to 2).map { _ =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        fn(spark, sfDir).count()
         (System.nanoTime() - t0) / 1e9
-      }.min
-      name -> secs
+      }.min) catch { case _: Throwable => None })
     }
+    val results = timed.collect { case (name, Some(secs)) => name -> secs }
+    val failed = timed.collect { case (name, None) => "\"" + name + "\"" }
+      .toSeq.sorted.mkString("[", ",", "]")
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
 
     if (only.isDefined) {
       println(s"""{"metric":"only","value":$total,"unit":"sec","queries":$qs,""" +
-        s""""sf":"$sfDir","cpus":$cpus}""")
+        s""""failed":$failed,"sf":"$sfDir","cpus":$cpus}""")
       spark.stop()
       return
     }
@@ -58,8 +62,8 @@ object Bench {
     val docsPerSec = nDocs / flagshipSecs
 
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""sf":"$sfDir","flagship_docs":$nDocs,"flagship_secs":$flagshipSecs,""" +
-      s""""docs_per_sec":$docsPerSec,"cpus":$cpus}""")
+      s""""failed":$failed,"sf":"$sfDir","flagship_docs":$nDocs,""" +
+      s""""flagship_secs":$flagshipSecs,"docs_per_sec":$docsPerSec,"cpus":$cpus}""")
     spark.stop()
   }
 }

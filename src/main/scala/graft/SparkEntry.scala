@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 import graft.functions.{OracleSql, OracleSqlDedup, OracleSqlMedia, OracleSqlRef, OracleSqlSim}
 import graft.operators.{Dedup, ExtractPipeline, Similarity, TextAnalysis}
 import graft.sources.{Interleave, SnapshotSink}
+import graft.sources.SnapshotSink.Version
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -135,30 +136,62 @@ object SparkEntry {
     * store). Output = the changed buckets' codes, bucket-stamped. */
   private def reembedIncremental(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.PortableHash
-    import graft.sources.{SnapshotSink, TableSnapshot}
+    import graft.sources.TableSnapshot
     val nb = Similarity.ReembedBuckets
-    val out = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-reembed-query-" + dir.replaceAll("[^a-z0-9.]", "-"))
-    SnapshotSink.deleteRecursively(out)
+    val out = freshDir("reembed", dir)
     val emb = embeddings(s, dir)
     val bucketCol = pmod(
       PortableHash.md5u32(concat(lit("rb:"), col("vec_id"))), lit(nb.toLong))
-    TableSnapshot.run(emb.withColumn("bucket", bucketCol.cast("int")),
-      out.toString, nb, waveSize = nb / 2)
+    TableSnapshot.run(emb.withColumn("bucket", bucketCol.cast("int")), out, nb,
+      waveSize = nb / 2)
     // codebook = the committed full-corpus model (same store as pq_encode/pq_topk);
     // train-if-absent BEFORE restricting the input, so query ordering can never
     // commit a subset-trained codebook under the shared key
     Similarity.pqCodebook(emb, Some(pqDirFor(dir)))
-    val changed = SnapshotSink.readChangesBetween(s, out.toString, 1L, 2L)
+    val changed = SnapshotSink.readChangesBetween(s, out, 1L, 2L)
     Similarity.pqEncode(changed.drop("bucket"), store = Some(pqDirFor(dir)))
       .withColumn("bucket", bucketCol.cast("int"))
       .select(col("bucket"), col("vec_id"), col("sub"), col("code"), col("d2"))
       .orderBy(col("vec_id"), col("sub"))
   }
 
+  /** A fresh directory for one gate's table: `graft-<tag>-query-` plus the corpus
+    * directory, emptied. */
+  private def freshDir(tag: String, dir: String): String = {
+    val out = Paths.get(sys.props("java.io.tmpdir"),
+      s"graft-$tag-query-" + dir.replaceAll("[^a-z0-9.]", "-"))
+    SnapshotSink.deleteRecursively(out)
+    out.toString
+  }
+
+  /** The snapshot gates' table: the bucket-partitioned corpus extracted and
+    * committed into [[freshDir]]`(tag, dir)` in waves of `waveSize` of
+    * [[SnapshotSink.DefaultBuckets]] buckets, one history version per wave. */
+  private def committedSnapshot(s: SparkSession, dir: String, tag: String,
+      waveSize: Int): String = {
+    val nb = SnapshotSink.DefaultBuckets
+    val out = freshDir(tag, dir)
+    SnapshotSink.run(Interleave.materializedDocsBucketed(s, dir, nb), out,
+      nBuckets = nb, waveSize = waveSize)
+    out
+  }
+
+  /** Per history version of `out`: its manifest's bucket count, recorded rows and
+    * errors, and the rows the version-resolved data scan reads. */
+  private def versionRows(s: SparkSession, out: String): DataFrame = {
+    val rows = SnapshotSink.versions(out).map { v =>
+      val entries = SnapshotSink.readManifest(s, out, Version(v))
+      val readRows = SnapshotSink.readCommitted(s, out, Version(v)).count()
+      (v.toInt, entries.size, entries.map(_.rows).sum, readRows,
+        entries.map(_.n_err).sum)
+    }
+    import s.implicits._
+    rows.toDF("version", "n_buckets", "rows_", "rows_read", "n_err")
+      .orderBy(col("version"))
+  }
+
   private def spanMetrics(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.SpanMetricsAgg
-    import graft.sources.SnapshotSink
     ExtractPipeline.extractFlat(Interleave.docs(s, dir))
       .withColumn("bucket",
         SnapshotSink.bucketOf(col("doc_id"), SnapshotSink.DefaultBuckets))
@@ -175,22 +208,14 @@ object SparkEntry {
     * returned lineage's integer columns are DuckDB-verified. Runs over the
     * bucket-PARTITIONED corpus layout so each wave's input filter prunes at the scan
     * (PartitionFilters — the production resume path, SnapshotResumeSpec). */
-  private def snapshotLineage(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.SnapshotSink
-    val nb = SnapshotSink.DefaultBuckets
-    val out = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-snapshot-query-" + dir.replaceAll("[^a-z0-9.]", "-"))
-    SnapshotSink.deleteRecursively(out)
-    SnapshotSink.run(Interleave.materializedDocsBucketed(s, dir, nb), out.toString,
-      nBuckets = nb, waveSize = 4)
-    SnapshotSink.lineage(s, out.toString)
+  private def snapshotLineage(s: SparkSession, dir: String): DataFrame =
+    SnapshotSink.lineage(s, committedSnapshot(s, dir, "snapshot", waveSize = 4))
       // manifest bucket ids are Long (streaming composite-id headroom); batch ids
       // are tiny — surface as INT to match the oracle's CAST(... AS INT)
       .select(col("bucket").cast("int").as("bucket"), col("rows").as("rows_"),
         col("n_spans"), col("n_media"),
         col("n_text"), col("n_err"), col("ocr_chars"), col("n_words"))
       .orderBy(col("bucket"))
-  }
 
   /** Resume under the driver's gate (the north rule's marquee feature): commit the
     * full snapshot, delete ONE bucket's committed data, resume, and emit per-bucket
@@ -200,21 +225,18 @@ object SparkEntry {
     * counts — a protocol regression (re-extracting everything, or failing to
     * invalidate) flips flags or counts and hash-mismatches. */
   private def snapshotResume(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.SnapshotSink
     val nb = SnapshotSink.DefaultBuckets
-    val out = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-snapresume-query-" + dir.replaceAll("[^a-z0-9.]", "-"))
-    SnapshotSink.deleteRecursively(out)
+    val out = freshDir("snapresume", dir)
     val docs = Interleave.materializedDocsBucketed(s, dir, nb)
     // waveSize=nb: the initial commit is one wave (half the job count) — wave
     // granularity itself is already demonstrated by snapshot_lineage (waveSize=4);
     // THIS query's subject is the invalidate->resume cycle
-    SnapshotSink.run(docs, out.toString, nBuckets = nb, waveSize = nb)
+    SnapshotSink.run(docs, out, nBuckets = nb, waveSize = nb)
     SnapshotSink.deleteRecursively(
-      out.resolve("data").resolve(s"bucket=${OracleSql.ResumeVictim}"))
-    val report = SnapshotSink.run(docs, out.toString, nBuckets = nb, waveSize = nb)
+      Paths.get(out, "data", s"bucket=${OracleSql.ResumeVictim}"))
+    val report = SnapshotSink.run(docs, out, nBuckets = nb, waveSize = nb)
     val re = report.processed.map(java.lang.Long.valueOf)
-    SnapshotSink.lineage(s, out.toString)
+    SnapshotSink.lineage(s, out)
       .select(col("bucket").cast("int").as("bucket"), col("rows").as("rows_"),
         col("n_spans"), col("n_err"),
         when(col("bucket").isInCollection(re), 1).otherwise(0).as("re_extracted"))
@@ -229,24 +251,9 @@ object SparkEntry {
     * mis-numbers versions, or resolves a version to the wrong file set
     * hash-mismatches against the oracle's wave arithmetic
     * (version v = buckets 0 .. nb/2*v-1, ascending wave order). */
-  private def snapshotTimetravel(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.SnapshotSink, SnapshotSink.Version
-    val nb = SnapshotSink.DefaultBuckets
-    val out = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-snaptravel-query-" + dir.replaceAll("[^a-z0-9.]", "-"))
-    SnapshotSink.deleteRecursively(out)
-    SnapshotSink.run(Interleave.materializedDocsBucketed(s, dir, nb), out.toString,
-      nBuckets = nb, waveSize = nb / 2)
-    val rows = SnapshotSink.versions(out.toString).map { v =>
-      val entries = SnapshotSink.readManifest(s, out.toString, Version(v))
-      val readRows = SnapshotSink.readCommitted(s, out.toString, Version(v)).count()
-      (v.toInt, entries.size, entries.map(_.rows).sum, readRows,
-        entries.map(_.n_err).sum)
-    }
-    import s.implicits._
-    rows.toDF("version", "n_buckets", "rows_", "rows_read", "n_err")
-      .orderBy(col("version"))
-  }
+  private def snapshotTimetravel(s: SparkSession, dir: String): DataFrame =
+    versionRows(s, committedSnapshot(s, dir, "snaptravel",
+      waveSize = SnapshotSink.DefaultBuckets / 2))
 
   /** ROLLBACK under the DuckDB gate: the same 2-wave commit as
     * [[snapshotTimetravel]] (versions 1 and 2), then
@@ -260,23 +267,10 @@ object SparkEntry {
     * contract (restore AFTER a physical takedown must throw, never resurrect) is
     * SnapshotRestoreSpec's subject — file-reclaim timing can't be oracle-predicted. */
   private def snapshotRestore(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.SnapshotSink, SnapshotSink.Version
-    val nb = SnapshotSink.DefaultBuckets
-    val out = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-snaprestore-query-" + dir.replaceAll("[^a-z0-9.]", "-"))
-    SnapshotSink.deleteRecursively(out)
-    SnapshotSink.run(Interleave.materializedDocsBucketed(s, dir, nb), out.toString,
-      nBuckets = nb, waveSize = nb / 2)
-    SnapshotSink.restore(s, out.toString, toVersion = 1L)
-    val rows = SnapshotSink.versions(out.toString).map { v =>
-      val entries = SnapshotSink.readManifest(s, out.toString, Version(v))
-      val readRows = SnapshotSink.readCommitted(s, out.toString, Version(v)).count()
-      (v.toInt, entries.size, entries.map(_.rows).sum, readRows,
-        entries.map(_.n_err).sum)
-    }
-    import s.implicits._
-    rows.toDF("version", "n_buckets", "rows_", "rows_read", "n_err")
-      .orderBy(col("version"))
+    val out = committedSnapshot(s, dir, "snaprestore",
+      waveSize = SnapshotSink.DefaultBuckets / 2)
+    SnapshotSink.restore(s, out, toVersion = 1L)
+    versionRows(s, out)
   }
 
   /** History RETENTION under the DuckDB gate: a 4-wave commit publishes versions
@@ -290,24 +284,19 @@ object SparkEntry {
     * retention pass that drops the wrong version, ignores a tag, or corrupts a
     * surviving manifest hash-mismatches against the oracle's wave arithmetic. */
   private def snapshotExpire(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.SnapshotSink, SnapshotSink.Version
-    val nb = SnapshotSink.DefaultBuckets
-    val out = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-snapexpire-query-" + dir.replaceAll("[^a-z0-9.]", "-"))
-    SnapshotSink.deleteRecursively(out)
-    SnapshotSink.run(Interleave.materializedDocsBucketed(s, dir, nb), out.toString,
-      nBuckets = nb, waveSize = nb / 4) // versions 1..4
-    SnapshotSink.tag(out.toString, "pinned", 1L)
-    SnapshotSink.expireVersions(out.toString, keepLast = 2)
-    val tagged = SnapshotSink.tags(out.toString).values.toSet
+    val out = committedSnapshot(s, dir, "snapexpire",
+      waveSize = SnapshotSink.DefaultBuckets / 4) // versions 1..4
+    SnapshotSink.tag(out, "pinned", 1L)
+    SnapshotSink.expireVersions(out, keepLast = 2)
+    val tagged = SnapshotSink.tags(out).values.toSet
     val rows = (1L to 4L).map { v =>
       val (live, nBuckets, rowsTotal) =
         try {
-          val es = SnapshotSink.readManifest(s, out.toString, Version(v))
+          val es = SnapshotSink.readManifest(s, out, Version(v))
           (1, es.size, es.map(_.rows).sum)
         } catch { case _: IllegalArgumentException => (0, 0, 0L) }
       val readRows =
-        if (live == 1) SnapshotSink.readCommitted(s, out.toString, Version(v)).count() else 0L
+        if (live == 1) SnapshotSink.readCommitted(s, out, Version(v)).count() else 0L
       (v.toInt, if (tagged(v)) 1 else 0, live, nBuckets, rowsTotal, readRows)
     }
     import s.implicits._
@@ -327,27 +316,22 @@ object SparkEntry {
     * the rolled-back-from version; history numbering is untouched) are asserted
     * in-query so a regression fails the run instead of silently passing. */
   private def snapshotVacuum(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.SnapshotSink, SnapshotSink.Version
-    val nb = SnapshotSink.DefaultBuckets
-    val out = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-snapvacuum-query-" + dir.replaceAll("[^a-z0-9.]", "-"))
-    SnapshotSink.deleteRecursively(out)
-    SnapshotSink.run(Interleave.materializedDocsBucketed(s, dir, nb), out.toString,
-      nBuckets = nb, waveSize = nb / 2) // v1, v2
-    SnapshotSink.restore(s, out.toString, toVersion = 1L) // v3 = v1's file set
-    val removed = SnapshotSink.vacuum(s, out.toString)
+    val out = committedSnapshot(s, dir, "snapvacuum",
+      waveSize = SnapshotSink.DefaultBuckets / 2) // v1, v2
+    SnapshotSink.restore(s, out, toVersion = 1L) // v3 = v1's file set
+    val removed = SnapshotSink.vacuum(s, out)
       .map(_.stripPrefix("bucket=").toLong).toSet
-    require(SnapshotSink.versions(out.toString) == Seq(1L, 2L, 3L),
+    require(SnapshotSink.versions(out) == Seq(1L, 2L, 3L),
       "vacuum must reclaim data only — never rewrite manifest history")
     val v2Expired =
-      try { SnapshotSink.readCommitted(s, out.toString, Version(2L)).count(); false }
+      try { SnapshotSink.readCommitted(s, out, Version(2L)).count(); false }
       catch { case _: IllegalArgumentException => true }
     require(v2Expired, "version 2 must be EXPIRED once its exclusive buckets are reclaimed")
     // bounded driver-side state: nb rows of manifest metadata + nb head counts
-    val head = SnapshotSink.readCommitted(s, out.toString)
+    val head = SnapshotSink.readCommitted(s, out)
       .groupBy(col("bucket").cast("int").as("bucket")).count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val rows = SnapshotSink.readManifest(s, out.toString, Version(2L)).sortBy(_.bucket).map { e =>
+    val rows = SnapshotSink.readManifest(s, out, Version(2L)).sortBy(_.bucket).map { e =>
       (e.bucket.toInt, e.rows, e.n_err,
         if (removed(e.bucket)) 1 else 0, head.getOrElse(e.bucket.toInt, 0L))
     }
@@ -363,20 +347,13 @@ object SparkEntry {
     * counts — a diff that leaks unchanged buckets, drops changed ones, or resolves
     * the wrong files hash-mismatches. The healed-bucket (re-extraction) diff case is
     * covered by SnapshotTimeTravelSpec, where the protocol can be crashed mid-flight. */
-  private def snapshotChanges(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.SnapshotSink
-    val nb = SnapshotSink.DefaultBuckets
-    val out = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-snapchanges-query-" + dir.replaceAll("[^a-z0-9.]", "-"))
-    SnapshotSink.deleteRecursively(out)
-    SnapshotSink.run(Interleave.materializedDocsBucketed(s, dir, nb), out.toString,
-      nBuckets = nb, waveSize = nb / 2)
-    SnapshotSink.readChangesBetween(s, out.toString, 1L, 2L)
+  private def snapshotChanges(s: SparkSession, dir: String): DataFrame =
+    SnapshotSink.readChangesBetween(s, committedSnapshot(s, dir, "snapchanges",
+        waveSize = SnapshotSink.DefaultBuckets / 2), 1L, 2L)
       .groupBy(col("bucket").cast("int").as("bucket"))
       .agg(count(lit(1)).as("rows_"),
         sum(when(col("error").isNotNull, 1L).otherwise(0L)).as("n_err"))
       .orderBy(col("bucket"))
-  }
 
   /** TAKEDOWN under the DuckDB gate: full commit, then
     * [[graft.sources.SnapshotSink.deleteDocs]] of the deterministic victim set
@@ -387,22 +364,17 @@ object SparkEntry {
     * misses a victim's rows, or loses bystander rows hash-mismatches. A rewritten
     * bucket lands at a fresh generation, so rows are grouped by base id. */
   private def snapshotTakedown(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.SnapshotSink
     val nb = SnapshotSink.DefaultBuckets
-    val out = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-snaptakedown-query-" + dir.replaceAll("[^a-z0-9.]", "-"))
-    SnapshotSink.deleteRecursively(out)
-    SnapshotSink.run(Interleave.materializedDocsBucketed(s, dir, nb), out.toString,
-      nBuckets = nb, waveSize = nb)
+    val out = committedSnapshot(s, dir, "snaptakedown", waveSize = nb)
     // victim list is driver-side by design (deleteDocs scaladoc: the takedown form
     // is a bounded id list); the selector keeps it tiny at any SF used for the gate
     val victims = documents(s, dir)
       .filter(pmod(col("doc_id"), lit(OracleSql.TakedownMod)) === OracleSql.TakedownRes)
       .select(format_string("doc-%013d", col("doc_id")))
       .collect().map(_.getString(0)).toSeq
-    val report = SnapshotSink.deleteDocs(s, out.toString, victims)
+    val report = SnapshotSink.deleteDocs(s, out, victims)
     val rw = report.rewrittenBuckets.map(java.lang.Long.valueOf)
-    SnapshotSink.lineage(s, out.toString)
+    SnapshotSink.lineage(s, out)
       .select(pmod(col("bucket"), lit(nb.toLong)).cast("int").as("bucket"),
         col("rows").as("rows_"),
         col("n_err"),
@@ -410,16 +382,6 @@ object SparkEntry {
       .orderBy(col("bucket"))
   }
 
-  /** Row-level UPSERT/MERGE under the DuckDB gate (the daily-crawl ingest op): full
-    * commit, then [[graft.sources.SnapshotSink.upsertDocs]] of an update set =
-    * (re-crawled victims' REVISED extraction — numeric id % [[OracleSql.UpsertMod]]
-    * == [[OracleSql.UpsertRes]], their new doc shape is text spans only with
-    * 'v2:'-prefixed content) + ([[OracleSql.UpsertNewDocs]] brand-new documents —
-    * the insert half of MERGE). The output aggregates the READ-BACK committed
-    * table per bucket INCLUDING a content digest over (doc_id, offset, text), so
-    * the oracle verifies the merged bytes: replace-not-append (victims' media
-    * spans must be gone), bystander preservation, insert placement, and
-    * `rewritten` = 1 exactly on buckets that received an update. */
   /** The MERGE update set both [[snapshotUpsert]] and [[snapshotBranch]] commit:
     * victims' revised extraction ('v2:'-prefixed text spans only — re-crawl
     * semantics) plus [[OracleSql.UpsertNewDocs]] brand-new documents. */
@@ -463,18 +425,23 @@ object SparkEntry {
           x => concat_ws(":", x.getField("doc_id"), x.getField("offset"),
             x.getField("t"))), "|")).as("content_md5"))
 
+  /** Row-level UPSERT/MERGE under the DuckDB gate (the daily-crawl ingest op): full
+    * commit, then [[graft.sources.SnapshotSink.upsertDocs]] of an update set =
+    * (re-crawled victims' REVISED extraction — numeric id % [[OracleSql.UpsertMod]]
+    * == [[OracleSql.UpsertRes]], their new doc shape is text spans only with
+    * 'v2:'-prefixed content) + ([[OracleSql.UpsertNewDocs]] brand-new documents —
+    * the insert half of MERGE). The output aggregates the READ-BACK committed
+    * table per bucket INCLUDING a content digest over (doc_id, offset, text), so
+    * the oracle verifies the merged bytes: replace-not-append (victims' media
+    * spans must be gone), bystander preservation, insert placement, and
+    * `rewritten` = 1 exactly on buckets that received an update. */
   private def snapshotUpsert(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.SnapshotSink
     val nb = SnapshotSink.DefaultBuckets
-    val out = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-snapupsert-query-" + dir.replaceAll("[^a-z0-9.]", "-"))
-    SnapshotSink.deleteRecursively(out)
-    SnapshotSink.run(Interleave.materializedDocsBucketed(s, dir, nb), out.toString,
-      nBuckets = nb, waveSize = nb)
-    val report = SnapshotSink.upsertDocs(s, out.toString, upsertUpdateSet(s, dir))
+    val out = committedSnapshot(s, dir, "snapupsert", waveSize = nb)
+    val report = SnapshotSink.upsertDocs(s, out, upsertUpdateSet(s, dir))
     // rewritten buckets land at a fresh generation: group by base id
     val rwBases = report.rewrittenBuckets.map(b => java.lang.Long.valueOf(b % nb))
-    contentAgg(SnapshotSink.readCommitted(s, out.toString),
+    contentAgg(SnapshotSink.readCommitted(s, out),
         pmod(col("bucket").cast("long"), lit(nb.toLong)).cast("int"))
       .withColumn("rewritten",
         when(col("bucket").cast("long").isInCollection(rwBases), 1).otherwise(0))
@@ -493,26 +460,20 @@ object SparkEntry {
     * composite ids collapse under pmod). In-query louds pin what the flat table
     * can't: the branch pointer advanced and every rewrite landed off-generation. */
   private def snapshotBranch(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.SnapshotSink
     val nb = SnapshotSink.DefaultBuckets
-    val out = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-snapbranch-query-" + dir.replaceAll("[^a-z0-9.]", "-"))
-    SnapshotSink.deleteRecursively(out)
-    SnapshotSink.run(Interleave.materializedDocsBucketed(s, dir, nb), out.toString,
-      nBuckets = nb, waveSize = nb) // v1
-    SnapshotSink.branch(out.toString, "audit", 1L)
-    val report = SnapshotSink.upsertDocsToBranch(s, out.toString, "audit",
-      upsertUpdateSet(s, dir))
-    require(SnapshotSink.branches(out.toString)("audit") > 1L,
+    val out = committedSnapshot(s, dir, "snapbranch", waveSize = nb) // v1
+    SnapshotSink.branch(out, "audit", 1L)
+    val report = SnapshotSink.upsertDocsToBranch(s, out, "audit", upsertUpdateSet(s, dir))
+    require(SnapshotSink.branches(out)("audit") > 1L,
       "branch pointer must advance past the base version after a branch merge")
     require(report.rewrittenBuckets.forall(_ >= nb),
       "branch rewrites must land at a fresh generation, never at the base ids")
-    val phase0 = contentAgg(SnapshotSink.readCommitted(s, out.toString),
+    val phase0 = contentAgg(SnapshotSink.readCommitted(s, out),
         col("bucket").cast("int"))
       .withColumn("phase", lit(0)).withColumn("rewritten", lit(0))
     val rwBases = report.rewrittenBuckets.map(b => java.lang.Long.valueOf(b % nb))
-    SnapshotSink.fastForward(s, out.toString, "audit")
-    val phase1 = contentAgg(SnapshotSink.readCommitted(s, out.toString),
+    SnapshotSink.fastForward(s, out, "audit")
+    val phase1 = contentAgg(SnapshotSink.readCommitted(s, out),
         pmod(col("bucket").cast("long"), lit(nb.toLong)).cast("int"))
       .withColumn("phase", lit(1))
       .withColumn("rewritten",
@@ -535,11 +496,8 @@ object SparkEntry {
   private def snapshotCompact(s: SparkSession, dir: String,
       tag: String = "snapcompact",
       layout: Seq[org.apache.spark.sql.Column] = Seq.empty): DataFrame = {
-    import graft.sources.SnapshotSink
     val nb = SnapshotSink.DefaultBuckets
-    val out = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft-$tag-query-" + dir.replaceAll("[^a-z0-9.]", "-"))
-    SnapshotSink.deleteRecursively(out)
+    val out = freshDir(tag, dir)
     val docs = Interleave.materializedDocs(s, dir)
     val nBatches = OracleSql.CompactBatches
     (0 until nBatches).foreach { b =>
@@ -550,10 +508,10 @@ object SparkEntry {
       SnapshotSink.commitStreamBatch(
         ExtractPipeline.extractFlat(
           docs.filter(pmod(hash(col("doc_id")), lit(nBatches)) === b)),
-        out.toString, b.toLong, nb)
+        out, b.toLong, nb)
     }
-    SnapshotSink.compact(s, out.toString, layout = layout)
-    SnapshotSink.lineage(s, out.toString)
+    SnapshotSink.compact(s, out, layout = layout)
+    SnapshotSink.lineage(s, out)
       .select(pmod(col("bucket"), lit(nb.toLong)).cast("int").as("bucket"),
         floor(col("bucket") / nb).cast("int").as("generation"),
         col("rows").as("rows_"), col("n_spans"), col("n_err"))

@@ -324,15 +324,6 @@ object OracleSql {
   val UpsertNewDocs = 3
   val UpsertNewSpans = 2
 
-  /** Mirror of SparkEntry.snapshotUpsert: after a full commit and
-    * [[graft.sources.SnapshotSink.upsertDocs]] of (victims' revised extraction +
-    * new documents), the committed table must hold EXACTLY the merged row set:
-    * non-victim rows untouched, victims' rows replaced by their kt text spans
-    * ('v2:' prefix — so a merge that appends instead of replacing flips rows_ and
-    * n_media; one that loses bystanders flips content_md5), inserted docs present,
-    * and `rewritten` = 1 precisely on buckets containing a victim or an insert.
-    * content_md5 digests (doc_id:offset:text) in (doc_id, offset) order per bucket,
-    * putting the merged BYTES (not just counts) under the gate. */
   /** The merge result + touched-bucket CTEs shared by `snapshotUpsert` and
     * `snapshotBranch` (both commit the same update set — one in place, one staged
     * on a branch and fast-forwarded). */
@@ -376,6 +367,15 @@ object OracleSql {
        |             '|' ORDER BY doc_id, "offset")) AS content_md5
        |  FROM $src GROUP BY 1""".stripMargin
 
+  /** Mirror of SparkEntry.snapshotUpsert: after a full commit and
+    * [[graft.sources.SnapshotSink.upsertDocs]] of (victims' revised extraction +
+    * new documents), the committed table must hold EXACTLY the merged row set:
+    * non-victim rows untouched, victims' rows replaced by their kt text spans
+    * ('v2:' prefix — so a merge that appends instead of replacing flips rows_ and
+    * n_media; one that loses bystanders flips content_md5), inserted docs present,
+    * and `rewritten` = 1 precisely on buckets containing a victim or an insert.
+    * content_md5 digests (doc_id:offset:text) in (doc_id, offset) order per bucket,
+    * putting the merged BYTES (not just counts) under the gate. */
   val snapshotUpsert: String =
     s"""$extractionCtes,
        |$upsertMergeCtes,

@@ -115,20 +115,12 @@ object Dedup {
    * hash-derived (never `doc_id % n` — modulus-sampled inputs would populate only
    * gcd residues). `sigDir` MUST be keyed by corpus identity + [[SigFormatVersion]]
    * by the caller (see [[graft.SparkEntry]]): a reused directory over a changed
-   * corpus serves stale signatures with a valid manifest.
-   *
-   * `deepVerify` defaults to FALSE on this read path (Iceberg read semantics: the
-   * manifest is the source of truth; the names+sizes metadata tier still runs on
-   * every read, so truncation/replacement heals). Re-hashing every committed byte
-   * before every query is O(table bytes) hidden cost per query at 100 TB — the deep
-   * tier is the explicit AUDIT knob (pass true, or run `TableSnapshot.run` with its
-   * default), not a per-read default. Size-preserving in-place corruption is what
-   * it catches; SignatureStoreSpec exercises both tiers.
+   * corpus serves stale signatures with a valid manifest. Verification runs the
+   * metadata tier of [[graft.sources.TableSnapshot.runHashBucketed]]'s read path.
    */
-  def committedBands(docs: DataFrame, sigDir: String,
-      nBuckets: Int = SigBuckets, deepVerify: Boolean = false): DataFrame =
-    graft.sources.TableSnapshot.runHashBucketed(
-      minhashBands(docs), "doc_id", sigDir, nBuckets, deepVerify)
+  def committedBands(docs: DataFrame, sigDir: String): DataFrame =
+    graft.sources.TableSnapshot.runHashBucketed(minhashBands(docs), "doc_id", sigDir,
+      SigBuckets)
 
   /** [[neardupPairs]] over a COMMITTED signature table — the standing production
     * form (registered as the `neardup_pairs` query). */
@@ -209,13 +201,12 @@ object Dedup {
   /** [[windowDup]] over a window-hash table committed through the snapshot
     * protocol (same contract as [[committedBands]]: reruns skip verified buckets
     * and read parquet instead of re-hashing every window; executor loss costs a
-    * bucket re-derive; the table has manifest lineage; metadata-tier verification
-    * on the read path, deep hash as the explicit audit). `whDir` MUST be keyed by
-    * corpus identity + [[WinFormatVersion]] by the caller. */
-  def windowDupCommitted(docs: DataFrame, whDir: String,
-      nBuckets: Int = SigBuckets, deepVerify: Boolean = false): DataFrame =
+    * bucket re-derive; the table has manifest lineage; the same read-path
+    * verification tier). `whDir` MUST be keyed by corpus identity +
+    * [[WinFormatVersion]] by the caller. */
+  def windowDupCommitted(docs: DataFrame, whDir: String): DataFrame =
     windowDupFrom(graft.sources.TableSnapshot.runHashBucketed(
-      windowHashes(docs), "doc_id", whDir, nBuckets, deepVerify))
+      windowHashes(docs), "doc_id", whDir, SigBuckets))
 
   private def windowDupFrom(wh: DataFrame): DataFrame = {
     val nWin = wh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))

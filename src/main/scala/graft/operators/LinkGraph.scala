@@ -77,14 +77,6 @@ object LinkGraph {
     spark.createDataFrame(ck.rdd, ck.schema)
   }
 
-  /**
-   * Exact-integer PageRank over the synthesized graph; emits the top [[PrTopK]]
-   * vertices as (doc_id, n_out, n_in, rank_e12).
-   *
-   * The id space must be contiguous 0..N-1 (the synthesizer's % N target rule);
-   * asserted with one bounded aggregate, failing loudly on a gapped corpus instead
-   * of silently pointing edges at missing vertices.
-   */
   /** Validating vertex count, shared by BOTH pagerank entry points: doc_ids must
     * be exactly 0..N-1. One tiny driver-side aggregate; count_distinct is
     * load-bearing, not belt-and-braces: with count alone, {0,1,1,3} passes
@@ -102,6 +94,14 @@ object LinkGraph {
     n
   }
 
+  /**
+   * Exact-integer PageRank over the synthesized graph; emits the top [[PrTopK]]
+   * vertices as (doc_id, n_out, n_in, rank_e12).
+   *
+   * The id space must be contiguous 0..N-1 (the synthesizer's % N target rule);
+   * asserted with one bounded aggregate, failing loudly on a gapped corpus instead
+   * of silently pointing edges at missing vertices.
+   */
   def pagerank(documents: DataFrame): DataFrame = {
     val docs = documents.select(col("doc_id"))
     val n = validatedVertexCount(docs)
@@ -157,18 +157,6 @@ object LinkGraph {
       .limit(PrTopK)
   }
 
-  /**
-   * ANCHOR-HREF LINK EXTRACTION over the interleaved corpus's text spans — the
-   * real edge source: every text span carries `<a href="uK">` markup (the
-   * boilerplate archetype links to the hub docs u0/u1; content spans to the doc
-   * itself), and this operator turns the raw markup into the numeric
-   * (src, dst, n_anchors) web graph. Shuffle story: one regexp scan per span
-   * (embarrassingly parallel), then ONE (src, dst) aggregation; hub targets with
-   * in-degree O(N) are exactly what map-side partial aggregation flattens.
-   *
-   * Input is the FLAT span table ([[graft.sources.Interleave.spansFlat]] shape) so
-   * the scan enjoys the same nested-pruning discipline as extraction.
-   */
   /** One row per anchor occurrence (multi-edges preserved — the rank loop's
     * weighted-by-multiplicity input). */
   private def anchorEdgesRaw(spansFlat: DataFrame): DataFrame =
@@ -181,6 +169,18 @@ object LinkGraph {
           lit("href=\"u(\\d+)\""), lit(1))).as("t"))
       .select(col("src"), col("t").cast("long").as("dst"))
 
+  /**
+   * ANCHOR-HREF LINK EXTRACTION over the interleaved corpus's text spans — the
+   * real edge source: every text span carries `<a href="uK">` markup (the
+   * boilerplate archetype links to the hub docs u0/u1; content spans to the doc
+   * itself), and this operator turns the raw markup into the numeric
+   * (src, dst, n_anchors) web graph. Shuffle story: one regexp scan per span
+   * (embarrassingly parallel), then ONE (src, dst) aggregation; hub targets with
+   * in-degree O(N) are exactly what map-side partial aggregation flattens.
+   *
+   * Input is the FLAT span table ([[graft.sources.Interleave.spansFlat]] shape) so
+   * the scan enjoys the same nested-pruning discipline as extraction.
+   */
   def anchorEdges(spansFlat: DataFrame): DataFrame =
     anchorEdgesRaw(spansFlat)
       .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("n_anchors"))

@@ -84,6 +84,12 @@ object Similarity {
     * comfortably inside codegen limits; anything larger takes the broadcast path. */
   val LitDimCap = 4096
 
+  /** Hard ceiling for the broadcast fallback: ~0.5 GB of 64-dim quantized vectors.
+    * A dimension larger than this is a miswired call (e.g. the scan side passed as
+    * the dim) — fail fast with a clear message instead of OOMing the driver during
+    * broadcast build (the guard litDim used to carry, re-established post-refactor). */
+  val BroadcastDimCap = 1000000
+
   /** Fan the (id, q, n2) `dim` rows out against every row of `base` — the
     * cross-product primitive behind brute-force scoring and IVF assignment/probing.
     *
@@ -96,12 +102,6 @@ object Similarity {
     * every task binary, and a single-valued equi-key keeps the plan a
     * BroadcastHashJoin (still no BNLJ). These are model/workload dimensions (query
     * batch, IVF codebook): bounded by construction, never corpus-sized. */
-  /** Hard ceiling for the broadcast fallback: ~0.5 GB of 64-dim quantized vectors.
-    * A dimension larger than this is a miswired call (e.g. the scan side passed as
-    * the dim) — fail fast with a clear message instead of OOMing the driver during
-    * broadcast build (the guard litDim used to carry, re-established post-refactor). */
-  val BroadcastDimCap = 1000000
-
   private def fanOut(base: DataFrame, dim0: DataFrame,
       idName: String, qName: String, n2Name: String): DataFrame = {
     // one evaluation of the dim plan serves the cap probe, the size guard, AND the

@@ -186,8 +186,8 @@ object TextAnalysis {
       .agg(count(lit(1)).as("tf"))
     val tf = tfStore match {
       // metadata-tier verification only on this READ path (runHashBucketed's
-      // default: the deep re-hash of every committed byte is an explicit audit,
-      // not a per-query cost)
+      // tier: the deep re-hash of every committed byte is the verifySnapshot
+      // audit, not a per-query cost)
       case Some(dir) =>
         graft.sources.TableSnapshot.runHashBucketed(tfRaw, "doc_id", dir, TfBuckets)
       case None => tfRaw.localCheckpoint(eager = false)

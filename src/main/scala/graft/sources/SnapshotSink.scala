@@ -132,7 +132,6 @@ object SnapshotSink {
       nBuckets: Int = DefaultBuckets,
       waveSize: Int = 4,
       config: EngineConfig = EngineConfig.default,
-      deepVerify: Boolean = true,
       io: CommitIo = PosixCommitIo): SnapshotReport = {
     val bucketed = docs.columns.contains("bucket")
     // The filter sits on the INPUT side of the pipeline: a resumed job never pays
@@ -188,7 +187,8 @@ object SnapshotSink {
             "an in-range wrong bucket column would silently mis-route documents")
       }
     }
-    commitBuckets(docs.sparkSession, out, nBuckets, waveSize, deepVerify, io)(rowsOf)
+    commitBuckets(docs.sparkSession, out, nBuckets, waveSize, deepVerify = true, io)(
+      rowsOf)
   }
 
   /**
@@ -197,8 +197,8 @@ object SnapshotSink {
    * caller has checked their schema and `nBuckets` against the recorded ones
    * ([[TableSnapshot.recordLayout]]), which each wave's commit records.
    *
-   *   1. idempotent skip via content hash: verify HEAD's entries (the name+size
-   *      check is driver-side METADATA only; the byte-level hash runs as ONE batched
+   *   1. idempotent skip: verify HEAD's entries at the caller's tier
+   *      ([[verifyEntries]]; the deep tier's byte-level hash runs as ONE batched
    *      distributed job over every fast-passing bucket — at 100 TB the driver never
    *      re-reads committed data and the job count stays O(1), not O(buckets));
    *   2. commit every base bucket without a valid entry in waves of `waveSize`, one
@@ -442,16 +442,15 @@ object SnapshotSink {
   private[graft] def readCompactedIds(out: Path): Set[Long] =
     readState(out).compactedIds.toSet
 
-  /** Audit entry point: run the two verification tiers over the ENTIRE manifest of
+  /** Audit entry point: run both verification tiers over the ENTIRE manifest of
     * `at` and return the bucket ids that FAIL (empty = every committed byte
-    * verifies). Deep mode re-hashes all data files in one distributed job — the
-    * post-incident check an operator runs after takedowns, compactions, or stream
-    * restarts, and, at a [[Branch]], the audit step of write-audit-publish before
-    * [[fastForward]] publishes the staged result to main. */
-  def verifySnapshot(spark: SparkSession, outDir: String,
-      deepVerify: Boolean = true, at: Ref = Head): Seq[Long] = {
+    * verifies) — the post-incident check an operator runs after takedowns,
+    * compactions, or stream restarts, and the deep check before a ref moves: at a
+    * [[Version]] before [[restore]], at a [[Branch]] before [[fastForward]] (the
+    * audit step of write-audit-publish). */
+  def verifySnapshot(spark: SparkSession, outDir: String, at: Ref = Head): Seq[Long] = {
     val out = Paths.get(outDir)
-    val (_, invalid) = verifyEntries(spark, out, resolve(out, at)._2, deepVerify)
+    val (_, invalid) = verifyEntries(spark, out, resolve(out, at)._2, deepVerify = true)
     invalid.map(_.bucket).sorted
   }
 
@@ -644,13 +643,10 @@ object SnapshotSink {
     * references has been physically reclaimed (a [[deleteDocs]] takedown rewrite,
     * compaction GC, [[vacuum]]): a takedown is deliberately unrecoverable, so a
     * rollback can never resurrect deleted bytes — the same contract as
-    * [[readCommitted]]'s expired-version guard, checked against recorded sizes
-    * (and, with `deepVerify`, a distributed re-hash of every referenced byte).
-    * Also refuses when another writer moved HEAD while the restore ran.
+    * [[readCommitted]]'s expired-version guard, checked against recorded names
+    * and sizes. Also refuses when another writer moved HEAD while the restore ran.
     *
-    * Scale shape: O(metadata) driver work; `deepVerify` adds ONE batched
-    * distributed hash job over the restored file set (the commit-time verify tier
-    * — executors stream bytes, the driver sees digests).
+    * Scale shape: O(metadata) driver work, no Spark job.
     *
     * Interaction with GC: after a rollback, buckets introduced after `toVersion`
     * are unreferenced by HEAD; [[vacuum]] would reclaim them and EXPIRE the
@@ -660,18 +656,17 @@ object SnapshotSink {
       spark: SparkSession,
       outDir: String,
       toVersion: Long,
-      deepVerify: Boolean = false,
       io: CommitIo = PosixCommitIo): RestoreReport = {
     val out = Paths.get(outDir)
-    republish(spark, out, toVersion, deepVerify, io)(movesHead(readState(out).head))
+    republish(out, toVersion, io)(movesHead(readState(out).head))
   }
 
   /** Republish version `toVersion`'s manifest as a new version committed by
     * `commit` — the shared body of [[restore]] and [[fastForward]]. */
-  private def republish(spark: SparkSession, out: Path, toVersion: Long,
-      deepVerify: Boolean, io: CommitIo)(commit: Commit): RestoreReport = {
+  private def republish(out: Path, toVersion: Long, io: CommitIo)(
+      commit: Commit): RestoreReport = {
     val entries = manifestAt(out, toVersion)
-    val (valid, invalid) = verifyEntries(spark, out, entries, deepVerify)
+    val (valid, invalid) = entries.partition(fastVerify(out, _))
     if (invalid.nonEmpty)
       throw new IllegalStateException(
         s"version $toVersion is EXPIRED: ${invalid.size} of ${entries.size} buckets " +
@@ -784,7 +779,7 @@ object SnapshotSink {
 
   /** FAST-FORWARD main onto the named branch: republish the branch's manifest as a
     * NEW HEAD version (the [[restore]] machinery — metadata-only, loud when any
-    * referenced byte was reclaimed, optional distributed deep-hash).
+    * referenced file was reclaimed).
     *
     * Refuses ([[IllegalStateException]]) when main's HEAD advanced past the
     * branch's recorded fork base — publishing then would silently DISCARD every
@@ -797,7 +792,7 @@ object SnapshotSink {
     * semantics) — drop it with [[dropBranch]] once merged, releasing its vacuum
     * pin. */
   def fastForward(spark: SparkSession, outDir: String, name: String,
-      deepVerify: Boolean = false, io: CommitIo = PosixCommitIo): RestoreReport = {
+      io: CommitIo = PosixCommitIo): RestoreReport = {
     val out = Paths.get(outDir)
     val s0 = readState(out)
     val BranchRef(bv, base) = branchRef(s0, out, name)
@@ -808,7 +803,7 @@ object SnapshotSink {
           s"forked at version $base — publishing would discard main's commits " +
           s"since the fork; re-branch from the current HEAD and re-apply, or use " +
           "restore() to overwrite explicitly")
-    republish(spark, out, bv, deepVerify, io) { v => s =>
+    republish(out, bv, io) { v => s =>
       val moved = movesHead(head)(v)(s)
       moved.copy(branches =
         moved.branches.updatedWith(name)(_.map(_.copy(base = v))))
@@ -1062,16 +1057,15 @@ object SnapshotSink {
    * replays the last uncommitted batch after a crash) resolves to its recorded
    * allocation, finds its ids already committed and verifying, and skips them — the
    * streaming form of resume's committed-bucket skip (StreamingExtractSpec). The
-   * skip check runs the SAME two verification tiers as the batch [[run]]:
-   * names+sizes metadata, then (deepVerify=true, the default) the distributed
-   * per-file md5 job — so in-place corruption with preserved sizes re-extracts
+   * skip check runs the SAME two verification tiers as the batch [[run]]
+   * ([[verifyEntries]]), so in-place corruption with preserved sizes re-extracts
    * instead of being silently skipped, on both paths alike (ADVICE r3). Returns the
    * composite ids actually committed. The first batch of a fresh table records
    * `nBuckets`; a batch with a different count is refused before any Spark job.
    */
   def commitStreamBatch(
       flat: DataFrame, outDir: String, batchId: Long,
-      nBuckets: Int = DefaultBuckets, deepVerify: Boolean = true,
+      nBuckets: Int = DefaultBuckets,
       io: CommitIo = PosixCommitIo, toBranch: Option[String] = None): Seq[Long] = {
     val spark = flat.sparkSession
     val out = Paths.get(outDir)
@@ -1094,7 +1088,7 @@ object SnapshotSink {
     val base = allocateGeneration(out, io, Some(batchId), existing, nBuckets)
     val ids = (base until base + nBuckets)
     val (valid, _) = verifyEntries(spark, out,
-      existing.filter(e => ids.contains(e.bucket)), deepVerify)
+      existing.filter(e => ids.contains(e.bucket)), deepVerify = true)
     val committed = valid.map(_.bucket).toSet
     // compacted-away ids are ALSO committed state (their rows live on in the
     // canonical generation): a re-delivery arriving after an ill-timed compaction
@@ -1163,7 +1157,6 @@ object SnapshotSink {
   def compact(
       spark: SparkSession,
       outDir: String,
-      deepVerify: Boolean = true,
       io: CommitIo = PosixCommitIo,
       layout: Seq[Column] = Seq.empty): CompactReport = {
     val out = Paths.get(outDir)
@@ -1173,7 +1166,7 @@ object SnapshotSink {
       return CompactReport(
         existing.map(_.bucket / nBuckets).maxOption.getOrElse(0L),
         Seq.empty, 0L, 0L, noop = true)
-    val (_, invalid) = verifyEntries(spark, out, existing, deepVerify)
+    val (_, invalid) = verifyEntries(spark, out, existing, deepVerify = true)
     require(invalid.isEmpty,
       s"refusing to compact: bucket(s) ${invalid.map(_.bucket).sorted} fail " +
         "verification — heal them first (re-deliver the stream batch / re-run the " +
@@ -1284,10 +1277,19 @@ object SnapshotSink {
       .flatMap(manifestAt(Paths.get(outDir), _)))
       .map(_.bucket).toSet
 
-  /** The two verification tiers shared by batch [[run]] and [[commitStreamBatch]]:
-    * tier 1 = driver-side names+sizes metadata ([[fastVerify]]); tier 2 (deep) =
-    * ONE batched distributed job re-hashing every tier-1-passing bucket's bytes and
-    * comparing per-file md5s + the combined digest. Returns (valid, invalid). */
+  /** The two verification tiers. Tier 1, the metadata tier, checks names and sizes
+    * on the driver ([[fastVerify]]); tier 2, the deep tier, adds ONE batched
+    * distributed job re-hashing every tier-1-passing bucket's bytes and comparing
+    * per-file md5s + the combined digest. Returns (valid, invalid).
+    *
+    * Each operation's tier is fixed. Deep: the resume skip of [[run]] and
+    * [[TableSnapshot.run]], the re-delivery skip of [[commitStreamBatch]],
+    * [[compact]]'s refusal and the [[verifySnapshot]] audit. Metadata only: ref
+    * moves and ref births ([[restore]], [[fastForward]], [[tag]], [[branch]]) and
+    * the read-path resume of [[TableSnapshot.runHashBucketed]] and
+    * [[TableSnapshot.isCommitted]] (Iceberg read semantics: the manifest is the
+    * source of truth). A deep check before a ref move is the audit:
+    * [[verifySnapshot]] at the [[Version]] or [[Branch]] first. */
   private[sources] def verifyEntries(
       spark: SparkSession, out: Path, entries: Seq[ManifestEntry],
       deepVerify: Boolean): (Seq[ManifestEntry], Seq[ManifestEntry]) = {
@@ -1462,12 +1464,11 @@ object SnapshotSink {
 
   /**
    * Verification tier 1: names + sizes — pure filesystem METADATA, O(files), driver
-   * side, no byte reads. Tier 2 (deep, see run()) recomputes per-file md5s in ONE
+   * side, no byte reads. Tier 2 (deep) recomputes per-file md5s in ONE
    * batched distributed binaryFile job over all tier-1-passing buckets and compares
-   * against the recorded `file_hashes` — catches same-size in-place corruption. At
-   * 100 TB a resume that trusts the manifest runs with deepVerify=false (Iceberg
-   * semantics: the manifest is the source of truth); deep=true re-proves every
-   * committed byte without ever pulling data through the driver.
+   * against the recorded `file_hashes` — catches same-size in-place corruption
+   * without ever pulling data through the driver. Which operation runs which tier:
+   * [[verifyEntries]].
    */
   private def fastVerify(out: Path, e: ManifestEntry): Boolean = {
     // A manifest line with null or length-skewed parallel arrays (an older format

@@ -34,21 +34,21 @@ import org.apache.spark.sql.types.{LongType, StructType}
 object TableSnapshot {
 
   /** Commit (or resume) `df` into `outDir`; one wave per `waveSize` buckets — the
-    * resume and wave body of [[SnapshotSink.run]], over a plain bucket filter.
-    * The first commit records `nBuckets`; a different count is refused before any
-    * Spark job. Returns the same report shape as the extraction sink. */
+    * resume and wave body of [[SnapshotSink.run]], over a plain bucket filter, with
+    * its deep resume check. The first commit records `nBuckets`; a different count
+    * is refused before any Spark job. Returns the same report shape as the
+    * extraction sink. */
   def run(
       df: DataFrame,
       outDir: String,
       nBuckets: Int = SnapshotSink.DefaultBuckets,
       waveSize: Int = SnapshotSink.DefaultBuckets,
-      deepVerify: Boolean = true,
       io: CommitIo = PosixCommitIo): SnapshotSink.SnapshotReport = {
     require(df.columns.contains("bucket"), "TableSnapshot input needs a `bucket` column")
     val out = Paths.get(outDir)
     recordLayout(out, df.schema, nBuckets)(SnapshotSink.readState(out))
-    SnapshotSink.commitBuckets(df.sparkSession, out, nBuckets, waveSize, deepVerify, io)(
-      wave => df.filter(col("bucket").isin(wave: _*)))
+    SnapshotSink.commitBuckets(df.sparkSession, out, nBuckets, waveSize,
+      deepVerify = true, io)(wave => df.filter(col("bucket").isin(wave: _*)))
   }
 
   /**
@@ -105,8 +105,7 @@ object TableSnapshot {
     * [[runHashBucketed]] can lazily filter an ordinary plan down to invalid
     * buckets, but a codebook frame cannot be built lazily — its construction runs
     * the training — so the caller asks first and only trains when this is false.
-    * Metadata tier only, by the same read-path contract as [[runHashBucketed]]'s
-    * default. */
+    * Metadata tier only, the read-path tier of [[runHashBucketed]]. */
   def isCommitted(spark: SparkSession, outDir: String): Boolean = {
     val out = Paths.get(outDir)
     val entries = SnapshotSink.readManifest(spark, outDir)
@@ -119,13 +118,16 @@ object TableSnapshot {
     * hash-bucket `df` on `keyCol`, commit under the snapshot protocol, read back
     * without the bucket column. Single-sourced so the contract — bucket key is
     * HASH-derived, never `key % n` (a modulus-sampled input would populate only
-    * gcd residues); metadata-tier verification by default on read paths with the
-    * deep hash as the explicit audit knob — cannot drift between the callers. */
-  def runHashBucketed(df: DataFrame, keyCol: String, outDir: String, nBuckets: Int,
-      deepVerify: Boolean = false): DataFrame = {
-    val withBucket =
-      df.withColumn("bucket", pmod(hash(col(keyCol)), lit(nBuckets)).cast("int"))
-    run(withBucket, outDir, nBuckets, deepVerify = deepVerify)
+    * gcd residues); the metadata tier on this read path, with
+    * [[SnapshotSink.verifySnapshot]] as the deep audit — cannot drift between the
+    * callers. */
+  def runHashBucketed(df: DataFrame, keyCol: String, outDir: String, nBuckets: Int)
+      : DataFrame = {
+    val out = Paths.get(outDir)
+    val rows = df.withColumn("bucket", pmod(hash(col(keyCol)), lit(nBuckets)).cast("int"))
+    recordLayout(out, rows.schema, nBuckets)(SnapshotSink.readState(out))
+    SnapshotSink.commitBuckets(df.sparkSession, out, nBuckets, SnapshotSink.DefaultBuckets,
+      deepVerify = false, PosixCommitIo)(wave => rows.filter(col("bucket").isin(wave: _*)))
     SnapshotSink.readCommitted(df.sparkSession, outDir).drop("bucket")
   }
 
@@ -202,8 +204,7 @@ object TableSnapshot {
               " dropped or retyped vs recorded schema version " + head.version +
               " — add-column evolution only; drops/retypes need an explicit rewrite")
         }
-        s.copy(schemas =
-          s.schemas :+ SchemaVersion(last.map(_._1.version).getOrElse(0L) + 1, cur.toDDL))
+        s.copy(schemas = s.schemas :+ SchemaVersion(last.fold(1L)(_._1.version + 1), cur.toDDL))
     }
   }
 }

@@ -48,13 +48,14 @@ object StreamingExtract {
    * more than this many entries is compacted into one canonical generation
    * ([[graft.sources.SnapshotSink.compact]]) — the maintenance knob bounding a
    * long-running stream's directory count. Default never compacts.
+   *
+   * `toBranch`: streaming write-audit-publish — every micro-batch commits to the
+   * named BRANCH ([[graft.sources.SnapshotSink.commitStreamBatch]]'s branch mode):
+   * main's HEAD and bytes are untouched while the drain runs, the staged result
+   * audits through the branch reads, and
+   * [[graft.sources.SnapshotSink.fastForward]] publishes it. Auto-compaction is
+   * refused with a branch (compact() operates on HEAD — fast-forward first).
    */
-  /** `toBranch`: streaming write-audit-publish — every micro-batch commits to the
-    * named BRANCH ([[graft.sources.SnapshotSink.commitStreamBatch]]'s branch mode):
-    * main's HEAD and bytes are untouched while the drain runs, the staged result
-    * audits through the branch reads, and
-    * [[graft.sources.SnapshotSink.fastForward]] publishes it. Auto-compaction is
-    * refused with a branch (compact() operates on HEAD — fast-forward first). */
   def drainOnceCommitted(spark: SparkSession, tableDir: String, outDir: String,
       checkpointDir: String, nBuckets: Int = graft.sources.SnapshotSink.DefaultBuckets,
       compactThreshold: Int = Int.MaxValue, toBranch: Option[String] = None): Unit = {

@@ -81,7 +81,7 @@ class SignatureStoreSpec extends AnyFunSuite {
     val before = pairSet(Dedup.neardupPairsCommitted(docs, dir))
     // truncate one committed signature file: the names+sizes tier that runs on
     // EVERY read must invalidate and re-derive that bucket (the deep byte-hash
-    // tier is the explicit audit knob, not a per-read default)
+    // tier is the verifySnapshot audit, not a per-read cost)
     val victim = SnapshotSink.readManifest(spark, dir).find(_.rows > 0).get
     Files.write(
       Paths.get(dir, "data", s"bucket=${victim.bucket}", victim.files.head),
@@ -93,6 +93,25 @@ class SignatureStoreSpec extends AnyFunSuite {
         pmod(hash(col("doc_id")), lit(Dedup.SigBuckets)).cast("int")),
       dir, Dedup.SigBuckets)
     assert(again.processed.isEmpty)
+
+    // a same-size byte flip passes the metadata tier: the read path commits nothing
+    // (the flipped table is never collected — its pages would fail to read)
+    val flipped = SnapshotSink.readManifest(spark, dir).find(_.rows > 0).get
+    val flipFile = Paths.get(dir, "data", s"bucket=${flipped.bucket}", flipped.files.head)
+    val raw = Files.readAllBytes(flipFile)
+    raw(raw.length / 2) = (raw(raw.length / 2) ^ 0x01).toByte
+    Files.write(flipFile, raw)
+    val versions = SnapshotSink.versions(dir)
+    val manifest = SnapshotSink.readManifest(spark, dir)
+    Dedup.committedBands(docs, dir)
+    assert(SnapshotSink.versions(dir) === versions)
+    assert(SnapshotSink.readManifest(spark, dir) === manifest)
+    // ... and the deep tier of TableSnapshot.run invalidates exactly that bucket
+    val deep = TableSnapshot.run(
+      Dedup.minhashBands(docs).withColumn("bucket",
+        pmod(hash(col("doc_id")), lit(Dedup.SigBuckets)).cast("int")),
+      dir, Dedup.SigBuckets)
+    assert(deep.invalidated === Seq(flipped.bucket))
   }
 
   test("takedown cascade: deleteIds removes a doc's signatures, bucket-granular") {

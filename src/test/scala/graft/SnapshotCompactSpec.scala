@@ -311,9 +311,23 @@ class SnapshotCompactSpec extends AnyFunSuite {
   test("compact refuses a snapshot with failed verification (corruption not baked in)") {
     val out = tmpDir("refuse")
     commitAsStream(out, 2)
-    // in-place corruption: truncate one committed data file (size changes -> tier-1)
     val entry = SnapshotSink.readManifest(spark, out).find(_.rows > 0).get
     val victim = Paths.get(out, "data", s"bucket=${entry.bucket}", entry.files.head)
+    // same-size byte flip: only the deep tier sees it, and compact runs it
+    val raw = Files.readAllBytes(victim)
+    val flipped = raw.clone()
+    flipped(raw.length / 2) = (raw(raw.length / 2) ^ 0x01).toByte
+    Files.write(victim, flipped)
+    val head = SnapshotSink.readState(Paths.get(out)).head
+    val versions = SnapshotSink.versions(out)
+    val flipEx = intercept[IllegalArgumentException] {
+      SnapshotSink.compact(spark, out)
+    }
+    assert(flipEx.getMessage.contains("refusing to compact"))
+    assert(SnapshotSink.readState(Paths.get(out)).head === head)
+    assert(SnapshotSink.versions(out) === versions)
+    Files.write(victim, raw)
+    // in-place corruption: truncate one committed data file (size changes -> tier-1)
     Files.write(victim, Array[Byte](0))
     val ex = intercept[IllegalArgumentException] {
       SnapshotSink.compact(spark, out)

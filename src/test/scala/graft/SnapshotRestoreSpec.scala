@@ -18,8 +18,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * files were physically reclaimed (takedown rewrite, vacuum) — a rollback can
  * never resurrect deleted bytes. The oracle-gated form is
  * `SparkEntry.snapshot_restore`; this spec covers what the flat query can't
- * express: byte-identity of the data directory, tamper detection via deepVerify,
- * tag preservation, and the vacuum/GC interplay.
+ * express: byte-identity of the data directory, tamper detection by the
+ * verifySnapshot audit at the version, tag preservation, and the vacuum/GC
+ * interplay.
  */
 class SnapshotRestoreSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -99,7 +100,7 @@ class SnapshotRestoreSpec extends AnyFunSuite {
       .filter(col("doc_id") === victim).head(1).nonEmpty)
   }
 
-  test("deepVerify catches a same-size byte flip that the metadata tier cannot") {
+  test("restore publishes a same-size byte flip; verifySnapshot at v1 names it") {
     val out = tmpDir("tamper")
     SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB) // v1
     // flip one byte in place in some committed data file: sizes (tier 1) still match
@@ -114,13 +115,12 @@ class SnapshotRestoreSpec extends AnyFunSuite {
     bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0xff.toByte).toByte
     Files.write(f, bytes)
 
-    // tier 1 (names+sizes) passes — the tampered rollback would publish
+    // tier 1 (names+sizes) passes — the tampered rollback publishes
     assert(SnapshotSink.restore(spark, out, toVersion = 1L).newVersion === 2L)
-    // the deep tier re-hashes every referenced byte distributedly and refuses
-    val ex = intercept[IllegalStateException] {
-      SnapshotSink.restore(spark, out, toVersion = 1L, deepVerify = true)
-    }
-    assert(ex.getMessage.contains("EXPIRED"))
+    // the audit re-hashes every byte the version references distributedly and
+    // names the flipped bucket
+    val bucket = f.getParent.getFileName.toString.stripPrefix("bucket=").toLong
+    assert(SnapshotSink.verifySnapshot(spark, out, at = Version(1L)) === Seq(bucket))
   }
 
   test("restore leaves tags alone; vacuum after rollback expires the abandoned wave") {

